@@ -6,10 +6,18 @@ The reference pipeline was written for Arc on Spark 3.0, whose
 Spark 4 removed that rule — the comparison is now a hard
 DATATYPE_MISMATCH — so running the reference's SQL unchanged needs the
 coercion reproduced at the engine boundary.
+
+It also owns the one predicate form both table formats skip data with:
+a SQL condition reduces to a Kleene scope tree
+(:func:`condition_scope_tree`), a declarative filter list builds the
+same tree (:func:`filters_tree`), and each format evaluates the tree per
+file (:func:`eval_scope_tree` + :func:`stats_value_set`, literals cast
+by :func:`prune_coerce`) to prune scans and scope commit conflicts.
 """
 
 from __future__ import annotations
 
+import datetime
 import re
 
 _RHS = re.compile(r"(=|<>|!=)(\s*)(true|false)\b", re.IGNORECASE)
@@ -136,16 +144,17 @@ def coerce_predicate_for_types(pred: str, dtypes: dict[str, str]) -> str:
     )
 
 
-def split_top_and(cond: str) -> list[str] | None:
-    """Split a SQL boolean expression into its TOP-LEVEL ``AND``
-    conjuncts (string literals and parenthesized groups opaque).
-    Returns None when a top-level ``OR`` exists — the expression is
-    then a disjunction and no conjunct is individually implied.
+def _split_top(cond: str, word: str) -> list[str] | None:
+    """Split a SQL boolean expression at its TOP-LEVEL ``word`` (``AND``
+    or ``OR``; string literals and parenthesized groups opaque).
+    Returns None when malformed or when the other connective appears at
+    the top level — the expression is then not a ``word`` chain.
 
-    BETWEEN-aware: the ``AND`` that closes a same-depth ``BETWEEN``
-    is part of that predicate, not a conjunction boundary — splitting
-    there would orphan the upper bound as a pseudo-conjunct (``x
-    BETWEEN 1 AND b = 3`` must never yield an implied ``b = 3``)."""
+    BETWEEN-aware: the ``AND`` that closes a same-depth ``BETWEEN`` is
+    part of that predicate — it neither splits nor aborts, so ``x
+    BETWEEN 1 AND b = 3`` never yields an implied ``b = 3`` and ``p =
+    'A' OR x BETWEEN 1 AND 2`` splits into its two operands."""
+    other = "OR" if word == "AND" else "AND"
     parts: list[str] = []
     depth = 0
     start = 0
@@ -154,9 +163,11 @@ def split_top_and(cond: str) -> list[str] | None:
     up = cond.upper()
     pending_between = 0  # BETWEENs at depth 0 awaiting their AND
 
-    def _bound(j: int, ln: int) -> bool:
-        before = cond[j - 1] if j > 0 else " "
-        after = cond[j + ln] if j + ln < n else " "
+    def _at(kw: str) -> bool:
+        if depth or not up.startswith(kw, i):
+            return False
+        before = cond[i - 1] if i > 0 else " "
+        after = cond[i + len(kw)] if i + len(kw) < n else " "
         return (not (before.isalnum() or before in "_.")
                 and not (after.isalnum() or after in "_."))
 
@@ -179,24 +190,35 @@ def split_top_and(cond: str) -> list[str] | None:
             depth -= 1
             if depth < 0:
                 return None  # malformed — refuse to extract anything
-        elif depth == 0 and up.startswith("BETWEEN", i) and _bound(i, 7):
+        elif _at("BETWEEN"):
             pending_between += 1
             i += 7
             continue
-        elif depth == 0 and up.startswith("AND", i) and _bound(i, 3):
-            if pending_between:
-                pending_between -= 1
-                i += 3
-                continue
-            parts.append(cond[start:i])
-            start = i + 3
+        elif pending_between and _at("AND"):
+            pending_between -= 1
             i += 3
             continue
-        elif depth == 0 and up.startswith("OR", i) and _bound(i, 2):
+        elif _at(word):
+            parts.append(cond[start:i])
+            start = i = i + len(word)
+            continue
+        elif _at(other):
             return None
         i += 1
     parts.append(cond[start:])
     return parts
+
+
+def split_top_and(cond: str) -> list[str] | None:
+    """Top-level ``AND`` conjuncts, or None when a top-level ``OR``
+    makes the expression a disjunction (see :func:`_split_top`)."""
+    return _split_top(cond, "AND")
+
+
+def _split_top_or(cond: str) -> list[str] | None:
+    """Top-level ``OR`` operands, or None when a top-level AND makes
+    the expression a conjunction (see :func:`_split_top`)."""
+    return _split_top(cond, "OR")
 
 
 _TRIPLE_LIT = (r"(?:DATE\s*)?'(?:[^']|'')*'"
@@ -254,9 +276,9 @@ def _make_col_resolver(t_cols: list[str], alias: str | None):
 
 
 def _extract_triple(s: str, _col) -> tuple | None:
-    """One comparison ATOM as ``(col, op, literal)`` — the four shapes
-    condition_implied_triples documents — or None. ``_col`` is a
-    resolver from :func:`_make_col_resolver`."""
+    """One comparison ATOM as ``(col, op, literal)`` — ``[alias.]col op
+    literal`` (either side), ``IS [NOT] NULL`` or ``IN (literals)`` —
+    or None. ``_col`` is a resolver from :func:`_make_col_resolver`."""
     m = _TRIPLE_CMP.match(s)
     if m:
         c = _col(m.group(1), m.group(2))
@@ -305,68 +327,6 @@ def _shed_parens(s: str) -> str:
             break
         s = inner.strip()
     return s
-
-
-def _split_top_or(cond: str) -> list[str] | None:
-    """Top-level ``OR`` operands (string literals and parens opaque);
-    None when malformed or when a top-level AND makes the expression a
-    conjunction instead.
-
-    BETWEEN-aware like :func:`split_top_and`: the ``AND`` that closes
-    a same-depth ``BETWEEN`` is part of that predicate — it must
-    neither abort the OR split nor end an operand, so
-    ``p = 'A' OR x BETWEEN 1 AND 2`` splits into its two operands."""
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    i = 0
-    n = len(cond)
-    up = cond.upper()
-    pending_between = 0  # BETWEENs at depth 0 awaiting their AND
-
-    def _bound(j: int, ln: int) -> bool:
-        before = cond[j - 1] if j > 0 else " "
-        after = cond[j + ln] if j + ln < n else " "
-        return (not (before.isalnum() or before in "_.")
-                and not (after.isalnum() or after in "_."))
-
-    while i < n:
-        c = cond[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if cond[j] == "'":
-                    if j + 1 < n and cond[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        elif depth == 0 and up.startswith("BETWEEN", i) and _bound(i, 7):
-            pending_between += 1
-            i += 7
-            continue
-        elif depth == 0 and up.startswith("AND", i) and _bound(i, 3):
-            if pending_between:
-                pending_between -= 1
-                i += 3
-                continue
-            return None
-        elif depth == 0 and up.startswith("OR", i) and _bound(i, 2):
-            parts.append(cond[start:i])
-            start = i + 2
-            i += 2
-            continue
-        i += 1
-    parts.append(cond[start:])
-    return parts
 
 
 # --- scope-tree evaluation (shared by the Delta bridge and the native
@@ -480,6 +440,69 @@ def stats_value_set(op: str, lit, lo, hi, nulls, num) -> frozenset:
     return frozenset(out) or frozenset("U")
 
 
+# schema type names (Spark's JSON schema, which is also Delta's
+# schemaString) whose stats/partition values prune safely.
+# Deliberately absent: timestamps (footer-stat formats vary across
+# writers — ISO-with-zone vs naive — and a wrong lexicographic compare
+# would DROP FILES; the residual Spark filter still applies, the file
+# just isn't skipped) and decimals (float coercion could mis-prune at
+# the boundary).
+_PRUNE_INT = ("byte", "short", "integer", "long")
+_PRUNE_FLOAT = ("float", "double")
+# the plain spellings whose Python parse equals Spark's cast of the
+# string to the column type; anything else coerces to None
+_INT_TEXT = re.compile(r"\s*[+-]?\d+\s*")
+_FLOAT_TEXT = re.compile(r"\s*[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?\s*")
+_DATE_TEXT = re.compile(r"\d{4}-\d{2}-\d{2}")
+
+
+def prune_coerce(typ: str | None, v):
+    """Coerce a stats bound, partition value or predicate literal to the
+    single comparable Python type for the column type ``typ`` — the
+    value Spark compares after casting the literal to the column's type
+    (``'05' = 5`` on a string column is a NUMERIC comparison, TRUE) — or
+    None when that can't be reproduced exactly, which makes the
+    evaluator keep the file. So numbers never coerce to strings, strings
+    coerce to numbers and dates only in their plain spellings, and a
+    non-integral number stays a float against an integer column (Spark
+    widens the column; Python compares int with float exactly)."""
+    if v is None or isinstance(v, bool) and typ != "boolean":
+        return None
+    if typ in _PRUNE_INT:
+        if isinstance(v, str):
+            return int(v) if _INT_TEXT.fullmatch(v) else None
+        if isinstance(v, float):
+            return v if v == v else None  # NaN orders above all in Spark
+        return v if isinstance(v, int) else None
+    if typ in _PRUNE_FLOAT:
+        if isinstance(v, str):
+            v = float(v) if _FLOAT_TEXT.fullmatch(v) else None
+        elif isinstance(v, (int, float)):
+            v = float(v)
+        else:
+            return None
+        return v if v == v else None
+    if typ == "string":
+        return v if isinstance(v, str) else None
+    if typ == "date":
+        if isinstance(v, datetime.datetime):
+            return None  # Spark widens the date column to a timestamp
+        if isinstance(v, datetime.date):
+            return v.isoformat()
+        if isinstance(v, str) and _DATE_TEXT.fullmatch(v):
+            try:
+                return datetime.date.fromisoformat(v).isoformat()
+            except ValueError:
+                return None
+        return None
+    if typ == "boolean":
+        if isinstance(v, bool):
+            return v
+        if isinstance(v, str) and v.lower() in ("true", "false"):
+            return v.lower() == "true"
+    return None
+
+
 def eval_scope_tree(tree, atom_fn) -> bool:
     """True unless the tree PROVES no row of the file can satisfy the
     predicate. ``atom_fn(col, op, lit) -> frozenset`` supplies each
@@ -507,13 +530,22 @@ def condition_scope_tree(cond: str, scope_cols: list[str],
                          alias: str | None):
     """Reduce a SQL condition to the boolean expression it implies over
     the SCOPABLE columns (those a file-level evaluator can decide from
-    partition values or min/max/null stats) — the fallback read
-    footprint for predicate shapes :func:`condition_implied_triples`
-    cannot take (top-level ORs, NOTs over conjuncts), so a MERGE whose
-    ON is ``(t.p = 'A' AND …) OR (t.p = 'A' AND …)`` still commutes
-    with a concurrent append to partition B — and, via the stats lane
-    of the evaluators, an unpartitioned ``(t.k < 5 AND …) OR (t.k < 9
-    AND …)`` commutes with an append whose files hold only k ≥ 9.
+    partition values or min/max/null stats) — the read footprint both
+    table formats prune scans and scope commit conflicts with. Beyond
+    plain conjunctions it keeps top-level ORs and NOTs, so a MERGE
+    whose ON is ``(t.p = 'A' AND …) OR (t.p = 'A' AND …)`` still
+    commutes with a concurrent append to partition B — and, via the
+    stats lane of the evaluators, an unpartitioned ``(t.k < 5 AND …)
+    OR (t.k < 9 AND …)`` commutes with an append whose files hold only
+    k ≥ 9.
+
+    ``alias``: required qualifier for merge ON conditions (the target
+    relation's alias — unqualified and source-qualified refs carry no
+    information); None for single-table predicates, where only BARE
+    refs resolve — a qualified ref there is struct-field access
+    (``s.flag``, never attributable to a top-level ``flag``) or an
+    unresolvable table alias. Names resolve case-insensitively to the
+    schema's own spelling.
 
     Soundness: every atom that is not a scope-column comparison of a
     triple shape is replaced by TRUE at positive polarity and FALSE
@@ -599,44 +631,74 @@ def condition_scope_tree(cond: str, scope_cols: list[str],
     return None if tree == ("const", True) else tree
 
 
-def condition_implied_triples(cond: str, t_cols: list[str],
-                              alias: str | None) -> list[tuple]:
-    """Extract the single-table ``(column, op, literal)`` conjuncts a
-    SQL condition PROVABLY implies — the loser's read footprint for
-    predicate-scoped optimistic concurrency (and for driver-side file
-    pruning). Conservative by construction: only TOP-LEVEL ``AND``
-    conjuncts of the shape ``[alias.]col op literal`` / ``IS [NOT]
-    NULL`` / ``IN (literals)`` are taken; anything else (ORs,
-    functions, column-to-column comparisons, sub-selects) is skipped —
-    skipping only WIDENS the declared footprint, never narrows it.
+# --- filter lists: the declarative conjunction grammar shared by
+# read_delta(where=), delete_delta/update_delta list predicates,
+# VersionedTable.read/prune_files(filters=) and DeltaLakeExtract
+# options.filters. A list prunes through the same scope tree a SQL
+# condition reduces to, and applies row-level as one Spark Column. ----
 
-    ``alias``: required qualifier for merge ON conditions (the target
-    relation's alias — an unqualified or source-qualified ref is
-    skipped); None for single-table predicates, where only BARE column
-    refs are taken — a qualified ref there is either struct-field
-    access (``s.flag``, which must never be attributed to a top-level
-    ``flag``) or an unresolvable table alias, and both are skipped.
-    Column names resolve case-insensitively to the LOGICAL schema
-    names (what the stats pruners expect)."""
-    conjuncts = split_top_and(cond)
-    if conjuncts is None:
-        return []
-    # shared resolver: with alias, only `alias.col` resolves; without,
-    # only BARE refs — a qualified ref there is struct-field access
-    # (`s.flag`, which must never be attributed to a top-level `flag`:
-    # silently wrong DELETEs) or an unresolvable table alias
-    _col = _make_col_resolver(t_cols, alias)
-    out: list[tuple] = []
-    for raw in conjuncts:
-        s = raw.strip()
-        while (s.startswith("(") and s.endswith(")")
-               and split_top_and(s[1:-1]) is not None):
-            s = s[1:-1].strip()  # shed redundant wrapping parens
-        t = _extract_triple(s, _col)
-        if t is not None:
-            out.append(t)
-            continue
-        bt = _extract_between(s, _col)
-        if bt is not None:
-            out.extend(bt)
-    return out
+FILTER_OPS = ("=", "<", "<=", ">", ">=", "in", "is null", "is not null")
+
+
+def normalize_filters(filters) -> list[tuple]:
+    """Validate a conjunction of ``(column, op, literal)`` conjuncts, op
+    in :data:`FILTER_OPS` (``in`` takes a list; the null tests may omit
+    the literal). Raises VersionedTableError on a malformed conjunct."""
+    from sql_based_etl_spark.tables.versioned import VersionedTableError
+
+    norm = []
+    for t in filters:
+        t = tuple(t)
+        if len(t) == 2 and t[1] in ("is null", "is not null"):
+            t = (t[0], t[1], None)
+        if (len(t) != 3 or t[1] not in FILTER_OPS
+                or t[1] == "in" and not isinstance(t[2], (list, tuple))):
+            raise VersionedTableError(
+                f"malformed filter conjunct {t!r} — want "
+                f"(column, op, literal) with op in {FILTER_OPS}")
+        norm.append(t)
+    return norm
+
+
+def filters_tree(filters: list[tuple]):
+    """The scope tree of a normalized conjunction."""
+    return ("and", [("atom", t) for t in filters])
+
+
+def filters_column(filters: list[tuple]):
+    """The Spark Column of a normalized conjunction."""
+    from pyspark.sql import functions as F
+
+    cond = None
+    for c, op, lit in filters:
+        col = F.col(c)
+        if op == "is null":
+            e = col.isNull()
+        elif op == "is not null":
+            e = col.isNotNull()
+        elif op == "in":
+            e = col.isin(list(lit))
+        else:
+            e = {"=": col == F.lit(lit), "<": col < F.lit(lit),
+                 "<=": col <= F.lit(lit), ">": col > F.lit(lit),
+                 ">=": col >= F.lit(lit)}[op]
+        cond = e if cond is None else cond & e
+    return cond
+
+
+def filters_sql(filters: list[tuple]) -> str:
+    """A normalized conjunction rendered as SQL (commit-log display)."""
+    def _lit(v):
+        if isinstance(v, str):
+            return "'" + v.replace("'", "''") + "'"
+        return str(v)
+
+    parts = []
+    for c, op, lit in filters:
+        if op in ("is null", "is not null"):
+            parts.append(f"{c} {op}")
+        elif op == "in":
+            parts.append(f"{c} in ({', '.join(_lit(x) for x in lit)})")
+        else:
+            parts.append(f"{c} {op} {_lit(lit)}")
+    return " AND ".join(parts)

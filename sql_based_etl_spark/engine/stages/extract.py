@@ -5,33 +5,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from sql_based_etl_spark.engine.pipeline import PipelineContext
+from sql_based_etl_spark.engine.sql_compat import (
+    filters_column,
+    normalize_filters,
+)
 from sql_based_etl_spark.tables.versioned import VersionedTable
 
-
-def _filters_to_column(filters):
-    """``options.filters`` conjuncts as one Spark Column — the residual
-    predicate the delta-spark library route applies (its own file
-    skipping derives from the filter; the bridge and VersionedTable
-    routes prune driver-side from stats instead)."""
-    from pyspark.sql import functions as F
-
-    cond = None
-    for f in filters:
-        c, op = f[0], f[1]
-        lit = f[2] if len(f) > 2 else None
-        col = F.col(c)
-        if op == "is null":
-            e = col.isNull()
-        elif op == "is not null":
-            e = col.isNotNull()
-        elif op == "in":
-            e = col.isin(list(lit))
-        else:
-            e = {"=": col == F.lit(lit), "<": col < F.lit(lit),
-                 "<=": col <= F.lit(lit), ">": col > F.lit(lit),
-                 ">=": col >= F.lit(lit)}[op]
-        cond = e if cond is None else cond & e
-    return cond
 
 _DELIMITERS = {"Comma": ",", "Tab": "\t", "Pipe": "|", "Semicolon": ";"}
 
@@ -97,9 +76,11 @@ def versioned_table_extract(ctx: PipelineContext, conf: dict) -> DataFrame:
     ``options.versionAsOf`` (absolute), or ``options.timestampAsOf``
     (Delta parity — epoch seconds or ISO string, newest commit at or
     before that instant). ``options.filters`` — a list of
-    ``[column, op, value]`` conjuncts — enables manifest-stats data
-    skipping: files whose min/max range can't match are never opened
-    (the predicate is still applied row-level afterwards).
+    ``[column, op, value]`` conjuncts, op one of ``= < <= > >= in``
+    or ``is null`` / ``is not null`` (engine/sql_compat.py:
+    normalize_filters) — enables data skipping: files whose stats
+    can't match are never opened (the predicate is still applied
+    row-level afterwards).
 
     Interop: when ``inputURI`` holds a REAL Delta table (a
     ``_delta_log`` directory exists), the stage routes to delta-spark
@@ -111,10 +92,11 @@ def versioned_table_extract(ctx: PipelineContext, conf: dict) -> DataFrame:
     times, the Delta protocol's own rule; the delta-spark library has
     no relativeVersion, so it is resolved to a versionAsOf through the
     bridge's log listing first). ``filters`` works on all three routes
-    with identical semantics: VersionedTable prunes from manifest
-    stats, the bridge prunes driver-side from ``add.stats`` + partition
-    values (read_delta's ``where``), the library applies the predicate
-    and does its own stats skipping.
+    with one grammar and identical semantics: VersionedTable prunes
+    from manifest stats and the bridge from ``add.stats`` + partition
+    values (read_delta's ``where``), both through the filter list's
+    scope tree; the library applies the predicate and does its own
+    stats skipping.
 
     CDF: ``options.changesStartingVersion`` (+ optional
     ``changesEndingVersion``) returns the change feed instead of a
@@ -194,14 +176,14 @@ def versioned_table_extract(ctx: PipelineContext, conf: dict) -> DataFrame:
             if filters:
                 # same semantics as the bridge's where=: the library
                 # does its own stats skipping from the filter
-                df = df.filter(_filters_to_column(filters))
+                df = df.filter(filters_column(normalize_filters(filters)))
             return df
         return delta_interop.read_delta(
             ctx.spark, conf["inputURI"],
             version=int(version) if version is not None else None,
             timestamp=ts,
             relative_version=int(rel) if rel is not None else None,
-            where=[tuple(f) for f in filters] if filters else None,
+            where=filters or None,
         )
     t = VersionedTable(ctx.spark, conf["inputURI"])
     rel = opts.get("relativeVersion")
@@ -209,7 +191,7 @@ def versioned_table_extract(ctx: PipelineContext, conf: dict) -> DataFrame:
     return t.read(
         version=int(version) if version is not None else None,
         relative_version=int(rel) if rel is not None else None,
-        filters=[tuple(f) for f in filters] if filters else None,
+        filters=filters or None,
         timestamp=opts.get("timestampAsOf"),
     )
 

@@ -451,7 +451,7 @@ def q_delta_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunction prunes whole files driver-side from add.stats before
     the scan AND applies as the residual filter, so the aggregate must
     equal DuckDB running the same predicate over ``orders`` directly
-    (tables/delta_interop.py:_prune_adds_by_stats). A pruner that
+    (tables/delta_interop.py:_tree_may_match). A pruner that
     drops a file it shouldn't loses rows here; one that skips nothing
     still passes — correctness and the skipping are separately pinned
     (the skipping by tests/test_delta_interop.py's inputFiles

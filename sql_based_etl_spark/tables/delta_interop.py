@@ -914,16 +914,17 @@ def read_delta(spark: SparkSession, path: str, version: int | None = None,
     module docstring).
 
     ``where`` is a conjunction of ``(logical_column, op, literal)``
-    triples, op one of ``= < <= > >= "is null" "is not null"`` (the
-    null tests take ``None`` as the literal). Semantically identical to
-    ``read_delta(...).filter(...)``; operationally it ALSO prunes whole
-    files driver-side from each ``add``'s per-file ``stats`` JSON and
-    partition values before any data file is opened
-    (:func:`_prune_adds_by_stats`) — on a 100 TB table behind an object
-    store, a selective predicate touches only the files it can live in
-    instead of listing-and-scanning everything. The predicate is then
-    still applied as a Spark filter, so files kept conservatively
-    (missing stats, non-prunable types) never leak rows.
+    conjuncts, op one of ``= < <= > >= in "is null" "is not null"``
+    (engine/sql_compat.py:normalize_filters; the null tests may omit
+    the literal). Semantically identical to ``read_delta(...).filter(...)``;
+    operationally it ALSO prunes whole files driver-side from each
+    ``add``'s per-file ``stats`` JSON and partition values before any
+    data file is opened (:func:`_tree_may_match` over the conjunction's
+    scope tree) — on a 100 TB table behind an object store, a selective
+    predicate touches only the files it can live in instead of
+    listing-and-scanning everything. The predicate is then still
+    applied as a Spark filter, so files kept conservatively (missing
+    stats, non-prunable types) never leak rows.
     """
     selectors = [s for s in (version, timestamp, relative_version) if s is not None]
     if len(selectors) > 1:
@@ -932,69 +933,16 @@ def read_delta(spark: SparkSession, path: str, version: int | None = None,
             "relative_version"
         )
     if where:
-        where = _normalize_where(where)
+        where = normalize_filters(where)
     if timestamp is not None or relative_version is not None:
         version = _resolve_log_version(spark, path, timestamp, relative_version)
     meta, adds, _, _, _, _ = _replay_state(spark, path, version)
     if where:
-        adds = _prune_adds_by_stats(meta, adds, list(where))
+        adds = _prune_by_tree(meta, adds, filters_tree(where))
     df = _snapshot_df(spark, path, meta, adds)
     if where:
-        df = df.filter(_where_condition(where))
+        df = df.filter(filters_column(where))
     return df
-
-
-def _normalize_where(where: list[tuple]) -> list[tuple]:
-    """Validate/normalize the ``(column, op, literal)`` conjunction
-    grammar shared by :func:`read_delta` and :func:`delete_delta`."""
-    norm = []
-    for t in where:
-        if len(t) == 2 and t[1] in ("is null", "is not null"):
-            t = (t[0], t[1], None)  # null tests take no literal
-        if len(t) != 3 or t[1] not in _WHERE_OPS:
-            raise VersionedTableError(
-                f"malformed where conjunct {t!r} — want "
-                f"(column, op, literal) with op in {_WHERE_OPS}"
-            )
-        norm.append(tuple(t))
-    return norm
-
-
-def _where_condition(where: list[tuple]):
-    """The Spark Column for a normalized conjunction."""
-    cond = None
-    for c, op, lit in where:
-        col = F.col(c)
-        if op == "is null":
-            e = col.isNull()
-        elif op == "is not null":
-            e = col.isNotNull()
-        elif op == "in":
-            e = col.isin(list(lit))
-        else:
-            e = {"=": col == F.lit(lit), "<": col < F.lit(lit),
-                 "<=": col <= F.lit(lit), ">": col > F.lit(lit),
-                 ">=": col >= F.lit(lit)}[op]
-        cond = e if cond is None else cond & e
-    return cond
-
-
-def _where_sql(where: list[tuple]) -> str:
-    """Render a normalized conjunction as SQL (commitInfo display)."""
-    def _lit(v):
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return str(v)
-
-    parts = []
-    for c, op, lit in where:
-        if op in ("is null", "is not null"):
-            parts.append(f"{c} {op}")
-        elif op == "in":
-            parts.append(f"{c} in ({', '.join(_lit(x) for x in lit)})")
-        else:
-            parts.append(f"{c} {op} {_lit(lit)}")
-    return " AND ".join(parts)
 
 
 def _resolve_log_version(spark: SparkSession, path: str,
@@ -1875,23 +1823,21 @@ def _check_commit_conflict(winner: list[dict], version: int, operation: str,
                            read_paths, removed_paths, reads_table_data: bool,
                            txn_app_id: str | None, log_dir: str,
                            read_meta: dict | None = None,
-                           read_triples: list | None = None,
-                           read_part_tree=None) -> None:
+                           read_tree=None) -> None:
     """Classify ONE winner commit against the loser's declared
     footprint; raise the named conflict or return (commute).
 
-    ``read_triples`` (with ``read_meta``) scopes the append-conflict
-    rule to the loser's READ PREDICATE, Delta's own refinement: a
-    winner's added data file whose partition values / stats PROVE no
-    row can satisfy the predicate (:func:`_prune_adds_by_stats` — the
+    ``read_tree`` (with ``read_meta``) scopes the append-conflict rule
+    to the loser's READ PREDICATE, Delta's own refinement: a winner's
+    added data file whose partition values / stats PROVE no row can
+    satisfy the predicate's scope tree (:func:`_tree_may_match` — the
     same skipping the pruned read trusts) cannot change what the loser
-    read, so it commutes. Without triples (no pruning happened, or the
-    predicate had no extractable conjuncts) ANY concurrent data add
-    conflicts — the conservative rule. This is what lets the
-    reference's concurrent per-partition pipelines
-    (scd2-job-scheduler.yaml:15-48) merge partition A while an hourly
-    append lands in partition B, instead of serializing every merge
-    behind every append at 100 TB."""
+    read, so it commutes. Without a tree (the predicate says nothing
+    about any file-decidable column) ANY concurrent data add conflicts
+    — the conservative rule. This is what lets the reference's
+    concurrent per-partition pipelines (scd2-job-scheduler.yaml:15-48)
+    merge partition A while an hourly append lands in partition B,
+    instead of serializing every merge behind every append at 100 TB."""
     win_op = ""
     for a in winner:
         ci = a.get("commitInfo")
@@ -1929,21 +1875,12 @@ def _check_commit_conflict(winner: list[dict], version: int, operation: str,
             f"{ctx} that removed file(s) this operation read "
             f"(e.g. {sorted(hit)[0]!r})")
     if reads_table_data and win_added_dc:
-        if read_meta is not None and (read_triples or
-                                      read_part_tree is not None):
-            overlap = {a["add"]["path"]: a["add"] for a in winner
-                       if "add" in a and a["add"].get("dataChange", True)}
-            if read_triples:
-                overlap = _prune_adds_by_stats(read_meta, overlap,
-                                               list(read_triples))
-            if read_part_tree is not None:
-                # scope-tree fallback/refinement: files whose partition
-                # values OR stats envelope make the reduced predicate
-                # provably FALSE commute even when the predicate had no
-                # extractable conjuncts (OR/NOT shapes)
-                overlap = {p: a for p, a in overlap.items()
-                           if _tree_may_match(read_meta, a,
-                                              read_part_tree)}
+        if read_meta is not None and read_tree is not None:
+            overlap = _prune_by_tree(
+                read_meta,
+                {a["add"]["path"]: a["add"] for a in winner
+                 if "add" in a and a["add"].get("dataChange", True)},
+                read_tree)
             if not overlap:
                 return  # every added file provably outside the read
             raise ConcurrentAppendError(
@@ -1962,8 +1899,7 @@ def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
                 new_adds: list[dict] | None = None,
                 read_paths=frozenset(), removed_paths=frozenset(),
                 reads_table_data: bool = False,
-                read_triples: list | None = None,
-                read_part_tree=None,
+                read_tree=None,
                 txn_app_id: str | None = None,
                 ignore_conflicts: bool = False,
                 max_retries: int = 200) -> int:
@@ -2015,8 +1951,7 @@ def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
             _check_commit_conflict(winner, attempt, operation, read_paths,
                                    removed_paths, reads_table_data,
                                    txn_app_id, log_dir,
-                                   read_meta=meta, read_triples=read_triples,
-                                   read_part_tree=read_part_tree)
+                                   read_meta=meta, read_tree=read_tree)
         if attempt - first + 1 > max_retries:
             raise DeltaConcurrentModificationError(
                 f"{operation} at {log_dir}: exhausted {max_retries} "
@@ -2562,207 +2497,16 @@ def _evolve_mapped_meta(meta: dict, new_schema_json: dict) -> dict:
     return out
 
 
-_DELTA_STATS_SAFE = ("integer", "int", "bigint", "long", "smallint",
-                     "tinyint", "float", "double", "string", "boolean",
-                     "date")
-
-
-# comparison ops the stats pruner (and read_delta's `where` residual
-# filter) understand — the same set VersionedTable.read's `filters`
-# takes, so DeltaLakeExtract passes options.filters to either route
-# unchanged; the null tests take no literal
-_WHERE_OPS = ("=", "<", "<=", ">", ">=", "in", "is null", "is not null")
-
-# schemaString type names whose stats/partition values prune safely.
-# Deliberately absent: timestamps (footer-stat formats vary across
-# writers — ISO-with-zone vs naive — and a wrong lexicographic compare
-# would DROP FILES; the residual Spark filter still applies, the file
-# just isn't skipped) and decimals (float coercion could mis-prune at
-# the boundary).
-_PRUNE_INT = ("byte", "short", "integer", "long")
-_PRUNE_FLOAT = ("float", "double")
-_PRUNE_STR = ("string", "date")
-
-
-def _prune_coerce(typ: str, v):
-    """Coerce a stats / partitionValues / user literal to the single
-    comparable Python type for ``typ`` — or None when it can't be
-    compared safely (which makes the pruner keep the file)."""
-    import datetime
-    if v is None or isinstance(v, bool) and typ != "boolean":
-        return None
-    try:
-        if typ in _PRUNE_INT:
-            return int(v)
-        if typ in _PRUNE_FLOAT:
-            return float(v)
-        if typ in _PRUNE_STR:
-            if isinstance(v, (datetime.date, datetime.datetime)):
-                return v.isoformat()
-            return v if isinstance(v, str) else None
-        if typ == "boolean":
-            if isinstance(v, bool):
-                return v
-            return str(v).lower() == "true" if isinstance(v, str) else None
-    except (TypeError, ValueError):
-        return None
-    return None
-
-
-def _prune_adds_by_stats(meta: dict, adds: dict[str, dict],
-                         where: list[tuple]) -> dict[str, dict]:
-    """Driver-side file pruning for :func:`read_delta`'s ``where``:
-    drop every ``add`` whose per-file ``stats`` JSON (or partition
-    values) PROVE no row can satisfy the conjunction — the same
-    data-skipping a library reader derives from ``add.stats``, done
-    before a single data file is opened. At 100 TB this is the
-    difference between listing-and-scanning every object and touching
-    only the files a selective predicate can live in.
-
-    Soundness contract (why external writers' stats are safe to trust):
-    ``minValues[c]`` is a LOWER bound on the file's true min and
-    ``maxValues[c]`` an UPPER bound on its true max — exact for the
-    bridge's own footer-derived stats, and still bounds under the
-    library's string truncation (a truncated min is a prefix ≤ the
-    value; a truncated max gets its last char incremented). Files with
-    deletion vectors keep valid bounds too (stats describe a superset
-    of the live rows). Anything unprovable — missing stats, a column
-    the stats don't cover, a type outside the prune-safe set — keeps
-    the file; the residual Spark filter preserves semantics."""
-    schema = json.loads(meta["schemaString"])
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none")
-    info: dict[str, tuple[str, str | None]] = {}
-    for f in schema["fields"]:
-        md = f.get("metadata") or {}
-        phys = (md.get("delta.columnMapping.physicalName", f["name"])
-                if mode != "none" else f["name"])
-        typ = f["type"] if isinstance(f["type"], str) else None
-        info[f["name"]] = (phys, typ)
-    part_cols = set(meta.get("partitionColumns") or [])
-
-    def _op_holds(v, op: str, lit) -> bool:
-        if op == "=":
-            return v == lit
-        if op == "<":
-            return v < lit
-        if op == "<=":
-            return v <= lit
-        if op == ">":
-            return v > lit
-        return v >= lit  # ">="
-
-    def _may_match(a: dict) -> bool:
-        st = None
-        if a.get("stats"):
-            try:
-                st = json.loads(a["stats"])
-            except (TypeError, ValueError):
-                st = None
-        n = st.get("numRecords") if st else None
-        pv = a.get("partitionValues") or {}
-        for c, op, lit in where:
-            phys, typ = info.get(c, (c, None))
-            if c in part_cols:
-                raw = pv.get(phys)
-                isnull = raw is None or raw == "__HIVE_DEFAULT_PARTITION__"
-                if op == "is null":
-                    if not isnull:
-                        return False
-                elif op == "is not null":
-                    if isnull:
-                        return False
-                elif op == "in":
-                    if isnull:
-                        return False
-                    v = _prune_coerce(typ, raw)
-                    lits = [_prune_coerce(typ, x) for x in lit]
-                    if v is not None and None not in lits and v not in lits:
-                        return False
-                else:
-                    if isnull:
-                        return False  # NULL never satisfies a comparison
-                    v = _prune_coerce(typ, raw)
-                    li = _prune_coerce(typ, lit)
-                    if v is None or li is None:
-                        continue
-                    try:
-                        if not _op_holds(v, op, li):
-                            return False
-                    except TypeError:
-                        continue
-                continue
-            if st is None:
-                continue
-            nc = (st.get("nullCount") or {}).get(phys)
-            if op == "is null":
-                if nc == 0:
-                    return False
-                continue
-            if op == "is not null":
-                if n is not None and nc is not None and nc == n:
-                    return False
-                continue
-            if n is not None and nc is not None and nc == n:
-                return False  # every value NULL: no comparison matches
-            if typ == "boolean" and op not in ("=", "in"):
-                continue  # ordering on booleans: not worth proving
-            mn = _prune_coerce(typ, (st.get("minValues") or {}).get(phys))
-            mx = _prune_coerce(typ, (st.get("maxValues") or {}).get(phys))
-            # string maxValues hedge (same contract as stats_value_set):
-            # a >=32-char string may be a raw truncated prefix from a
-            # protocol-violating writer — weaken to the exclusive
-            # prefix-successor bound so pruning can never misfire
-            mx, mx_inc = _string_upper_bound(mx)
-            if op == "in":
-                lits = [_prune_coerce(typ, x) for x in lit]
-                if None in lits:
-                    continue
-                try:
-                    if mn is not None and mx is not None and \
-                            all(x < mn or (x > mx if mx_inc else x >= mx)
-                                for x in lits):
-                        return False
-                except TypeError:
-                    pass
-                continue
-            li = _prune_coerce(typ, lit)
-            if li is None:
-                continue
-            try:
-                if op in (">", ">=") and mx is not None:
-                    # exclusive bound: x < mx, so both > and >= prune
-                    # when mx <= lit
-                    if (mx < li or (op == ">" and mx == li)) if mx_inc \
-                            else mx <= li:
-                        return False
-                elif op in ("<", "<=") and mn is not None:
-                    if mn > li or (op == "<" and mn == li):
-                        return False
-                elif op == "=":
-                    if (mx is not None and
-                            (mx < li if mx_inc else mx <= li)) or \
-                       (mn is not None and mn > li):
-                        return False
-            except TypeError:
-                continue
-        return True
-
-    return {p: a for p, a in adds.items() if _may_match(a)}
-
-
-# _split_top_and / _condition_target_triples moved to
-# engine/sql_compat.py (round-11) so the native VersionedTable can use
-# the same read-footprint extraction without an import cycle; the
-# bridge keeps its internal names.
 from sql_based_etl_spark.engine.sql_compat import (  # noqa: E402
     KLEENE_ANY as _ANY,
-    condition_implied_triples as _condition_target_triples,
     condition_scope_tree as _condition_scope_tree,
     eval_scope_tree as _eval_scope_tree,
-    split_top_and as _split_top_and,
+    filters_column,
+    filters_sql,
+    filters_tree,
+    normalize_filters,
+    prune_coerce as _prune_coerce,
     stats_value_set as _stats_value_set,
-    string_upper_bound as _string_upper_bound,
 )
 
 
@@ -2786,24 +2530,30 @@ def _tree_column_info(schema_string: str,
 
 
 def _tree_may_match(meta: dict, add: dict, tree) -> bool:
-    """Kleene-set-evaluate a :func:`condition_scope_tree` reduction
-    against one add action. False ONLY when the reduced predicate
-    provably excludes every row of the file:
+    """Kleene-set-evaluate a scope tree (engine/sql_compat.py:
+    condition_scope_tree, or filters_tree of a filter list) against one
+    add action — the one data-skipping decision behind pruned reads,
+    MERGE/DELETE/UPDATE candidate scans and predicate-scoped OCC.
+    False ONLY when the predicate provably excludes every row of the
+    file:
 
     - PARTITION columns evaluate exactly (one value per file; a NULL
       partition value makes comparisons UNKNOWN — conservative);
-    - other columns evaluate from the add's ``stats`` envelope: the
-      non-null rows' possible truth values come from the min/max
-      bounds (``minValues`` is a lower bound on the true min,
-      ``maxValues`` an upper bound on the true max — the same contract
-      :func:`_prune_adds_by_stats` documents, valid under the
-      library's string truncation), and null rows contribute UNKNOWN
-      unless ``nullCount`` proves there are none. Missing stats / an
+    - other columns evaluate from the add's ``stats`` envelope:
+      ``minValues`` is a LOWER bound on the file's true min and
+      ``maxValues`` an UPPER bound on its true max — exact for the
+      bridge's own footer-derived stats, still bounds under the
+      library's string truncation (a truncated min is a prefix ≤ the
+      value; a truncated max gets its last char incremented), and
+      still bounds for files with deletion vectors (stats describe a
+      superset of the live rows). Null rows contribute UNKNOWN unless
+      ``nullCount`` proves there are none. Missing stats / an
       un-coercible type widen to no-information.
 
-    This is the OCC fallback (and scan pruner) for predicate shapes
-    the conjunct extractor can't take — ORs, NOTs over conjuncts —
-    on partitioned AND unpartitioned tables."""
+    Bounds, partition values and literals all pass through
+    :func:`_prune_coerce` with the column's logical type. A literal
+    that doesn't coerce keeps the file (partition lane) or leaves only
+    the null-count proof (stats lane)."""
     mode = (meta.get("configuration") or {}).get(
         "delta.columnMapping.mode", "none")
     info = _tree_column_info(meta["schemaString"], mode)
@@ -2834,6 +2584,12 @@ def _tree_may_match(meta: dict, add: dict, tree) -> bool:
 
     def _atom(c: str, op: str, lit) -> frozenset:
         phys, typ = info.get(c, (c, None))
+        if op == "in":
+            lit = [_prune_coerce(typ, x) for x in lit]
+            if None in lit:
+                lit = None
+        elif op not in ("is null", "is not null"):
+            lit = _prune_coerce(typ, lit)
         if c in part_cols:
             raw = pv.get(phys)
             isnull = raw is None or raw == "__HIVE_DEFAULT_PARTITION__"
@@ -2844,14 +2600,13 @@ def _tree_may_match(meta: dict, add: dict, tree) -> bool:
             if isnull:
                 return frozenset("U")  # SQL: NULL cmp anything → UNKNOWN
             v = _prune_coerce(typ, raw)
-            if v is None:
+            if v is None or lit is None:
                 return _ANY
             try:
                 return frozenset("T") if _cmp(op, v, lit) else frozenset("F")
             except TypeError:
                 return _ANY
-        # stats lane (shared subset-lattice analysis; bounds coerced
-        # through the column's logical type like _prune_adds_by_stats)
+        # stats lane (shared subset-lattice analysis)
         if st is None:
             return _ANY
         nulls = (st.get("nullCount") or {}).get(phys)
@@ -2859,11 +2614,20 @@ def _tree_may_match(meta: dict, add: dict, tree) -> bool:
         hi = (st.get("maxValues") or {}).get(phys)
         lov = _prune_coerce(typ, lo) if lo is not None else None
         hiv = _prune_coerce(typ, hi) if hi is not None else None
-        if (lo is None) != (lov is None) or (hi is None) != (hiv is None):
-            lov = hiv = None  # un-coercible bounds — no envelope proof
+        if ((lo is None) != (lov is None) or (hi is None) != (hiv is None)
+                or lit is None and op not in ("is null", "is not null")):
+            lov = hiv = None  # no envelope proof; null counts still count
         return _stats_value_set(op, lit, lov, hiv, nulls, num)
 
     return _eval_scope_tree(tree, _atom)
+
+
+def _prune_by_tree(meta: dict, adds: dict[str, dict],
+                   tree) -> dict[str, dict]:
+    """The adds a scope tree cannot exclude (all of them for None)."""
+    if tree is None:
+        return adds
+    return {k: a for k, a in adds.items() if _tree_may_match(meta, a, tree)}
 
 
 def _drop_empty_adds(adds: list[dict]) -> list[dict]:
@@ -4097,34 +3861,23 @@ def merge_delta(source: DataFrame, path: str, condition: str,
              "source": dict(source.dtypes)}
     condition = coerce_condition_for_types(condition, dtmap)
 
-    # Predicate-scoped read footprint (round-11): the ON condition's
-    # target-only conjuncts (`target.p = 'A' AND ...` →
-    # :func:`_condition_target_triples`) bound what this merge READ.
-    # They prune the matched-file scan driver-side (files provably
-    # outside the predicate are never opened — the partition-scoped
-    # merge of a 100 TB table scans one partition, not the table) and
-    # they scope OCC: a concurrent append to a DIFFERENT partition
-    # commutes instead of raising ConcurrentAppendError
-    # (delta-spark's own refinement; the reference's concurrent
-    # scheduled jobs, scd2-job-scheduler.yaml:15-48). A
-    # not-matched-by-source clause inspects EVERY target row — rows in
-    # pruned files would be silently kept alive — so it disables both.
-    read_triples: list[tuple] = []
-    part_tree = None
+    # Predicate-scoped read footprint: the ON condition reduced to what
+    # it implies over the file-decidable target columns (partition
+    # values + stats envelopes; `target.p = 'A' AND ...` pins p, ORs
+    # and NOTs keep their shape) bounds what this merge READ. It prunes
+    # the matched-file scan driver-side (files provably outside the
+    # predicate are never opened — the partition-scoped merge of a
+    # 100 TB table scans one partition, not the table) and scopes OCC:
+    # a concurrent append to a DIFFERENT partition commutes instead of
+    # raising ConcurrentAppendError (delta-spark's own refinement; the
+    # reference's concurrent scheduled jobs,
+    # scd2-job-scheduler.yaml:15-48). A not-matched-by-source clause
+    # inspects EVERY target row — rows in pruned files would be
+    # silently kept alive — so it disables both.
+    read_tree = None
     if not when_not_matched_by_source_delete:
-        read_triples = _condition_target_triples(condition, t_cols,
-                                                 "target")
-        # scope-tree fallback for shapes the conjunct extractor can't
-        # take (ORs, NOTs): the ON condition reduced to what it implies
-        # over the file-decidable columns (partition values + stats
-        # envelopes) — scopes BOTH the candidate scan and the
-        # append-conflict rule below
-        part_tree = _condition_scope_tree(condition, t_cols, "target")
-    scan_live = (_prune_adds_by_stats(meta, live, list(read_triples))
-                 if read_triples else live)
-    if part_tree is not None:
-        scan_live = {k: a for k, a in scan_live.items()
-                     if _tree_may_match(meta, a, part_tree)}
+        read_tree = _condition_scope_tree(condition, t_cols, "target")
+    scan_live = _prune_by_tree(meta, live, read_tree)
 
     def _norm_uri(p: str) -> str:
         u = urllib.parse.urlparse(p)
@@ -4372,10 +4125,10 @@ def merge_delta(source: DataFrame, path: str, condition: str,
                  "size": a.get("size"), "dataChange": False}}
         for a in cdc_adds
     )
-    # MERGE read the candidate files its ON-condition target conjuncts
-    # could touch (scan_live — all live files when no conjunct was
-    # extractable), so a concurrent data add conflicts only when it
-    # may intersect that read predicate; commitInfo-only and disjoint
+    # MERGE read the candidate files its ON condition's scope tree
+    # could touch (scan_live — all live files when the tree is
+    # vacuous), so a concurrent data add conflicts only when it may
+    # intersect that read predicate; commitInfo-only and disjoint
     # dataChange=false winners (vacuum, compact of untouched files)
     # commute
     next_v = _occ_commit(
@@ -4384,8 +4137,7 @@ def merge_delta(source: DataFrame, path: str, condition: str,
         read_paths=frozenset(a["path"] for a in scan_live.values()),
         removed_paths=frozenset(a["path"] for a in matched.values()),
         reads_table_data=True,
-        read_triples=(read_triples or None),
-        read_part_tree=part_tree)
+        read_tree=read_tree)
     if next_v == latest + 1:
         state = {k: a for k, a in live.items() if k not in matched}
         state.update({_fkey(a): a for a in new_adds})
@@ -4728,15 +4480,10 @@ def _merge_delete_dv(source: DataFrame, path: str, log_dir: str,
     if not live:
         return latest
     # same predicate-scoped footprint as the slow path: the ON
-    # condition's target conjuncts prune the scan and scope OCC (a
+    # condition's scope tree prunes the scan and scopes OCC (a
     # pure-delete merge has no by-source clause by definition)
-    read_triples = _condition_target_triples(condition, t_cols, "target")
-    part_tree = _condition_scope_tree(condition, t_cols, "target")
-    scan_live = (_prune_adds_by_stats(meta, live, list(read_triples))
-                 if read_triples else live)
-    if part_tree is not None:
-        scan_live = {k: a for k, a in scan_live.items()
-                     if _tree_may_match(meta, a, part_tree)}
+    read_tree = _condition_scope_tree(condition, t_cols, "target")
+    scan_live = _prune_by_tree(meta, live, read_tree)
     if not scan_live:
         return latest  # predicate provably matches no live file
     tagged = _snapshot_df(spark, path, meta, scan_live,
@@ -4810,8 +4557,7 @@ def _merge_delete_dv(source: DataFrame, path: str, log_dir: str,
         read_paths=frozenset(a["path"] for a in scan_live.values()),
         removed_paths=frozenset(a["path"] for a in matched.values()),
         reads_table_data=True,
-        read_triples=(read_triples or None),
-        read_part_tree=part_tree)
+        read_tree=read_tree)
     if next_v == latest + 1:
         state = {k: a for k, a in live.items() if k not in matched}
         state.update({_fkey(a): a for a in new_adds})
@@ -4837,12 +4583,13 @@ def delete_delta(spark: SparkSession, path: str,
 
     ``predicate`` is a Spark SQL string, or the same
     ``(column, op, literal)`` conjunction grammar as
-    ``read_delta(where=...)`` — the triples form ALSO prunes candidate
-    files driver-side from per-file stats/partition values before any
-    data file opens, so a selective delete on a stats-carrying (e.g.
-    z-ordered) 100 TB table scans only the files the predicate can
-    live in, exactly like the pruned read. Files kept conservatively
-    never mis-delete: the full predicate still gates every row.
+    ``read_delta(where=...)``. Either form ALSO prunes candidate files
+    driver-side from per-file stats/partition values before any data
+    file opens (:func:`_tree_may_match` over the predicate's scope
+    tree), so a selective delete on a stats-carrying (e.g. z-ordered)
+    100 TB table scans only the files the predicate can live in,
+    exactly like the pruned read. Files kept conservatively never
+    mis-delete: the full predicate still gates every row.
 
     Why DVs matter at 100 TB: a predicate deleting 0.1% of rows under
     copy-on-write rewrites every TOUCHED FILE end-to-end — data moved
@@ -4910,15 +4657,14 @@ def delete_delta(spark: SparkSession, path: str,
 
     path = path.rstrip("/")
     log_dir = f"{path}/_delta_log"
-    part_tree = None
     if isinstance(predicate, str):
-        triples = None
         cond = None  # built after the schema is known (dtype coercion)
         pred_str = predicate
     else:
-        triples = _normalize_where(predicate)
-        cond = _where_condition(triples)
-        pred_str = _where_sql(triples)
+        filters = normalize_filters(predicate)
+        cond = filters_column(filters)
+        pred_str = filters_sql(filters)
+        read_tree = filters_tree(filters)
     meta, live, latest, txns, proto, domains = _replay_state(spark, path)
     _check_writer_allowed(proto, meta, "delete")
     conf = meta.get("configuration") or {}
@@ -4972,25 +4718,18 @@ def delete_delta(spark: SparkSession, path: str,
             {f.name: f.dataType.simpleString() for f in schema.fields})
         cond = F.expr(pred_str)
         # string predicates get the same driver-side file pruning and
-        # OCC predicate scoping as the triples form: the top-level AND
-        # conjuncts that fit the (col, op, literal) grammar are each
-        # implied by the predicate, so pruning on them is sound and the
-        # full predicate still gates every row (round-11)
-        triples = _condition_target_triples(pred_str, t_cols, None) or None
-        # scope-tree fallback for OR/NOT shapes (see merge_delta)
-        part_tree = _condition_scope_tree(pred_str, t_cols, None)
+        # OCC predicate scoping as the list form, from the scope tree
+        # the predicate implies; the full predicate still gates every
+        # row
+        read_tree = _condition_scope_tree(pred_str, t_cols, None)
 
-    # triples: files provably excluded by stats/partition values
-    # never open — the candidate scan is proportional to matching
-    # files, not table size (the same _prune_adds_by_stats machinery
-    # the pruned read pins with an IO test)
-    scan_adds = (_prune_adds_by_stats(meta, live, list(triples))
-                 if triples else live)
-    if part_tree is not None:
-        scan_adds = {k: a for k, a in scan_adds.items()
-                     if _tree_may_match(meta, a, part_tree)}
-        if not scan_adds:
-            return latest  # predicate provably matches no live file
+    # files provably excluded by stats/partition values never open —
+    # the candidate scan is proportional to matching files, not table
+    # size (the same _tree_may_match the pruned read pins with an IO
+    # test)
+    scan_adds = _prune_by_tree(meta, live, read_tree)
+    if not scan_adds:
+        return latest  # predicate provably matches no live file
     tagged = _snapshot_df(spark, path, meta, scan_adds, tag_rows=True)
     # matched rows only (bounded by deleted rows), consumed by TWO
     # separate jobs — the bitmap-encode collect and the cdc staging —
@@ -5085,7 +4824,7 @@ def delete_delta(spark: SparkSession, path: str,
     # pruned set — files provably excluded contain no matching rows,
     # so a winner touching only those commutes); concurrent appends
     # conflict only when the added files may fall INSIDE the predicate
-    # (read_triples — an append to a different partition commutes)
+    # (its scope tree — an append to a different partition commutes)
     next_v = _occ_commit(
         spark, log_dir, latest, actions, operation="DELETE",
         meta=meta, proto=proto, domains=domains,
@@ -5093,8 +4832,7 @@ def delete_delta(spark: SparkSession, path: str,
         read_paths=frozenset(a["path"] for a in scan_adds.values()),
         removed_paths=frozenset(a["path"] for a in matched.values()),
         reads_table_data=True,
-        read_triples=(list(triples) if triples else None),
-        read_part_tree=part_tree)
+        read_tree=read_tree)
     if next_v == latest + 1:
         state = {k: a for k, a in live.items() if k not in matched}
         state.update({_fkey(a): a for a in new_adds})
@@ -5138,14 +4876,14 @@ def update_delta(spark: SparkSession, path: str,
     relation: SET expressions evaluate against each row's own
     PRE-update values.
 
-    Scale shape, same as DELETE's cow route: the predicate's implied
-    conjuncts (or the OR/NOT scope-tree fallback) prune the candidate
-    scan driver-side from per-file stats/partition values, a tagged
-    scan of the CANDIDATES finds the files actually holding matched
-    rows, and only those files rewrite — work is proportional to
-    touched files, never table size. ``predicate`` is a SQL string
+    Scale shape, same as DELETE's cow route: the predicate's scope
+    tree prunes the candidate scan driver-side from per-file
+    stats/partition values, a tagged scan of the CANDIDATES finds the
+    files actually holding matched rows, and only those files rewrite
+    — work is proportional to touched files, never table size.
+    ``predicate`` is a SQL string
     (BooleanEquality-coerced like MERGE/DELETE conditions) or the
-    ``read_delta``-style triples list; ``set`` maps column name → SQL
+    ``read_delta``-style filter list; ``set`` maps column name → SQL
     expression string (or Python literal). Rows where the predicate is
     NULL keep their values (SQL semantics); a no-match update commits
     NOTHING (current version returned — a byte-identical rewrite would
@@ -5168,7 +4906,7 @@ def update_delta(spark: SparkSession, path: str,
     rewrite materializes the DV (descriptor rides the tombstone).
 
     Concurrency: the read footprint is the pruned candidate set plus
-    the predicate's conjuncts/scope tree, so concurrent appends whose
+    the predicate's scope tree, so concurrent appends whose
     files provably fall OUTSIDE the predicate commute (the same
     partition/stats-scoped OCC as MERGE and DELETE).
 
@@ -5179,15 +4917,14 @@ def update_delta(spark: SparkSession, path: str,
 
     path = path.rstrip("/")
     log_dir = f"{path}/_delta_log"
-    part_tree = None
     if isinstance(predicate, str):
-        triples = None
         cond = None
         pred_str = predicate
     else:
-        triples = _normalize_where(predicate)
-        cond = _where_condition(triples)
-        pred_str = _where_sql(triples)
+        filters = normalize_filters(predicate)
+        cond = filters_column(filters)
+        pred_str = filters_sql(filters)
+        read_tree = filters_tree(filters)
     meta, live, latest, txns, proto, domains = _replay_state(spark, path)
     _check_writer_allowed(proto, meta, "update")
     conf = meta.get("configuration") or {}
@@ -5233,14 +4970,9 @@ def update_delta(spark: SparkSession, path: str,
 
         pred_str = coerce_predicate_for_types(pred_str, t_dtypes)
         cond = F.expr(pred_str)
-        triples = _condition_target_triples(pred_str, t_cols, None) or None
-        part_tree = _condition_scope_tree(pred_str, t_cols, None)
+        read_tree = _condition_scope_tree(pred_str, t_cols, None)
 
-    scan_adds = (_prune_adds_by_stats(meta, live, list(triples))
-                 if triples else live)
-    if part_tree is not None:
-        scan_adds = {k: a for k, a in scan_adds.items()
-                     if _tree_may_match(meta, a, part_tree)}
+    scan_adds = _prune_by_tree(meta, live, read_tree)
     if not scan_adds:
         return latest  # predicate provably matches no live file
 
@@ -5373,8 +5105,7 @@ def update_delta(spark: SparkSession, path: str,
         read_paths=frozenset(a["path"] for a in scan_adds.values()),
         removed_paths=frozenset(a["path"] for a in matched.values()),
         reads_table_data=True,
-        read_triples=(list(triples) if triples else None),
-        read_part_tree=part_tree)
+        read_tree=read_tree)
     if next_v == latest + 1:
         state = {k: a for k, a in live.items() if k not in matched}
         state.update({_fkey(a): a for a in new_adds})

@@ -345,19 +345,26 @@ def _stat_encode(v: object) -> object:
     return v
 
 
-_FILTER_OPS = ("=", "<", "<=", ">", ">=", "in")
-
-
-def _manifest_tree_may_match(fstats: dict | None, tree) -> bool:
+def _manifest_tree_may_match(fstats: dict | None, tree,
+                             types: dict[str, str]) -> bool:
     """Scope-tree evaluation over one file's manifest stats
     (``{rows, columns: {col: {min, max, nulls}}}``) — the native
     table's lane of the shared subset-lattice analysis (see
-    engine/sql_compat.py:eval_scope_tree): False only when the
-    reduced predicate provably excludes every row of the file.
-    Missing stats / columns keep the file."""
+    engine/sql_compat.py:eval_scope_tree), and its one data-skipping
+    decision for filtered reads, MERGE candidate scans and
+    predicate-scoped OCC: False only when the predicate provably
+    excludes every row of the file. Missing stats / columns keep the
+    file. ``types`` maps column → manifest schema type: literals coerce
+    to it as the bridge's do (sql_compat.prune_coerce), datetimes on
+    timestamp columns to the ISO text their stats hold; a literal that
+    won't coerce (a timestamp spelled as a string, which Spark would
+    cast) leaves only the null-count proof."""
+    import datetime as _dt
+
     from sql_based_etl_spark.engine.sql_compat import (
         KLEENE_ANY,
         eval_scope_tree,
+        prune_coerce,
         stats_value_set,
     )
 
@@ -366,44 +373,31 @@ def _manifest_tree_may_match(fstats: dict | None, tree) -> bool:
     cols = (fstats or {}).get("columns") or {}
     num = (fstats or {}).get("rows")
 
+    def _coerce(typ: str | None, v):
+        if typ is not None and typ.startswith("timestamp"):
+            return _stat_encode(v) if isinstance(v, _dt.datetime) else None
+        return prune_coerce(typ, v)
+
     def _atom(c: str, op: str, lit) -> frozenset:
         cs = cols.get(c)
         if cs is None:
             return KLEENE_ANY
+        lo, hi = cs.get("min"), cs.get("max")
         if op not in ("is null", "is not null"):
-            lit = ([_stat_encode(x) for x in lit] if op == "in"
-                   else _stat_encode(lit))
-        return stats_value_set(op, lit, cs.get("min"), cs.get("max"),
-                               cs.get("nulls"), num)
+            typ = types.get(c)
+            lit = ([_coerce(typ, x) for x in lit] if op == "in"
+                   else _coerce(typ, lit))
+            if lit is None or op == "in" and None in lit:
+                lo = hi = None
+        return stats_value_set(op, lit, lo, hi, cs.get("nulls"), num)
 
     return eval_scope_tree(tree, _atom)
 
 
-def _file_may_match(col_stats: dict | None, op: str, val: object) -> bool:
-    """Conservative driver-side prune test for one conjunct against one
-    file's stats. True = the file might contain matching rows (keep);
-    stats absent ⇒ keep. All supported ops are null-rejecting, so a
-    file whose column is entirely NULL (min is null) is safely pruned."""
-    if op not in _FILTER_OPS:
-        raise VersionedTableError(f"unsupported filter op {op!r}; use one of {_FILTER_OPS}")
-    if col_stats is None:
-        return True
-    lo, hi = col_stats.get("min"), col_stats.get("max")
-    if lo is None or hi is None:
-        return False  # no non-null values in this file
-    vals = [_stat_encode(v) for v in (val if op == "in" else [val])]
-    try:
-        if op == "=" or op == "in":
-            return any(lo <= v <= hi for v in vals)
-        if op == "<":
-            return lo < vals[0]
-        if op == "<=":
-            return lo <= vals[0]
-        if op == ">":
-            return hi > vals[0]
-        return hi >= vals[0]  # >=
-    except TypeError:
-        return True  # incomparable literal type — never prune on it
+def _schema_types(schema: dict) -> dict[str, str]:
+    """column → type name of a manifest's JSON schema (atomic types)."""
+    return {f["name"]: f["type"] for f in schema.get("fields", [])
+            if isinstance(f["type"], str)}
 
 
 def build_merge_annotated(
@@ -801,25 +795,30 @@ class VersionedTable:
         relative_version: int | None = None,
     ) -> list[str]:
         """Data skipping: the subset of a snapshot's files that might
-        contain rows matching ALL conjuncts ``(col, op, value)`` (ops:
-        ``= < <= > >= in``), decided from manifest stats alone — no
-        file is opened. Conservative: a file without stats for a
+        contain rows matching ALL conjuncts ``(col, op, value)`` (the
+        engine/sql_compat.py:normalize_filters grammar — ``= < <= > >=
+        in`` and the null tests), decided from manifest stats alone —
+        no file is opened. Conservative: a file without stats for a
         column is kept."""
+        from sql_based_etl_spark.engine.sql_compat import (
+            filters_tree,
+            normalize_filters,
+        )
+
         v = self.resolve_version(version, relative_version)
-        m = self.manifest(v)
+        return self._files_may_match(
+            v, filters_tree(normalize_filters(filters)))
+
+    def _files_may_match(self, version: int, tree) -> list[str]:
+        """The snapshot files a scope tree cannot exclude by their
+        manifest stats (every file for None)."""
+        m = self.manifest(version)
+        if tree is None:
+            return list(m["files"])
         stats = m.get("stats", {})
-        kept = []
-        for f in m["files"]:
-            fstats = stats.get(f)
-            if fstats and fstats.get("rows") == 0:
-                continue  # a zero-row file matches nothing
-            cols = fstats.get("columns", {}) if fstats else {}
-            if all(
-                _file_may_match(cols.get(c) if fstats else None, op, val)
-                for c, op, val in filters
-            ):
-                kept.append(f)
-        return kept
+        types = _schema_types(m["schema"])
+        return [f for f in m["files"]
+                if _manifest_tree_may_match(stats.get(f), tree, types)]
 
     def read(
         self,
@@ -830,10 +829,16 @@ class VersionedTable:
     ) -> DataFrame:
         from pyspark.sql.types import StructType
 
-        v = self.resolve_version(version, relative_version, timestamp)
-        rel = (
-            self.prune_files(filters, version=v) if filters else self.files(v)
+        from sql_based_etl_spark.engine.sql_compat import (
+            filters_column,
+            filters_tree,
+            normalize_filters,
         )
+
+        v = self.resolve_version(version, relative_version, timestamp)
+        filters = normalize_filters(filters) if filters else None
+        rel = self._files_may_match(
+            v, filters_tree(filters) if filters else None)
         schema = StructType.fromJson(self.manifest(v)["schema"])
         if not rel:
             df = self.spark.createDataFrame([], schema)
@@ -849,16 +854,8 @@ class VersionedTable:
         # residual filter: pruning is file-granular and conservative, so
         # the predicate is still applied row-level (and reaches the
         # parquet scan as a pushed filter for row-group skipping)
-        _COL_OPS = {
-            "=": lambda col, v: col == F.lit(v),
-            "<": lambda col, v: col < F.lit(v),
-            "<=": lambda col, v: col <= F.lit(v),
-            ">": lambda col, v: col > F.lit(v),
-            ">=": lambda col, v: col >= F.lit(v),
-            "in": lambda col, v: col.isin(list(v)),
-        }
-        for c, op, val in filters or []:
-            df = df.filter(_COL_OPS[op](F.col(c), val))
+        if filters:
+            df = df.filter(filters_column(filters))
         return df
 
     _ZORDER_BITS = 16
@@ -1068,7 +1065,6 @@ class VersionedTable:
     def _classify_winner(self, wv: int, operation: str,
                          read_files: set, removed_files: set,
                          reads_table_data: bool,
-                         read_triples: list | None = None,
                          read_tree=None) -> None:
         """Classify ONE winner manifest against the loser's declared
         footprint — raise the named conflict or return (commute). The
@@ -1107,34 +1103,18 @@ class VersionedTable:
             # removed (caught above when they overlap the loser's
             # footprint); any other data-adding winner may change what
             # a table-reading op's predicate matched — UNLESS the
-            # loser's read predicate (its ON-condition target
-            # conjuncts) provably excludes every added file by the
-            # winner's own manifest stats (the bridge's
-            # predicate-scoped rule, on manifests): a merge over
-            # k='A' commutes with an append whose files hold only
-            # k='B'. Missing stats keep the file → conflict.
-            if read_triples or read_tree is not None:
+            # loser's read predicate (its ON condition's scope tree)
+            # provably excludes every added file by the winner's own
+            # manifest stats (the bridge's predicate-scoped rule, on
+            # manifests): a merge over k='A' commutes with an append
+            # whose files hold only k='B'. Missing stats keep the file
+            # → conflict.
+            if read_tree is not None:
                 wstats = wm.get("stats", {})
-
-                def _may(f: str) -> bool:
-                    fs = wstats.get(f)
-                    if fs and fs.get("rows") == 0:
-                        return False  # a zero-row file matches nothing
-                    cols = fs.get("columns", {}) if fs else {}
-                    return all(
-                        _file_may_match(cols.get(c) if fs else None,
-                                        op, val)
-                        for c, op, val in (read_triples or []))
-
-                overlap = [f for f in win_added if _may(f)]
-                if read_tree is not None:
-                    # scope-tree fallback/refinement (OR/NOT shapes the
-                    # conjunct extractor can't take): files whose stats
-                    # envelope provably falsifies the whole reduced
-                    # predicate commute
-                    overlap = [f for f in overlap
-                               if _manifest_tree_may_match(
-                                   wstats.get(f), read_tree)]
+                types = _schema_types(wm["schema"])
+                overlap = [f for f in win_added
+                           if _manifest_tree_may_match(wstats.get(f),
+                                                       read_tree, types)]
                 if not overlap:
                     return
                 raise VersionedConcurrentAppendError(
@@ -1151,7 +1131,6 @@ class VersionedTable:
                            removed_files: list[str], new_files: list[str],
                            schema, new_stats: dict,
                            reads_table_data: bool, read_files: set,
-                           read_triples: list | None = None,
                            read_tree=None,
                            extra: dict | None = None,
                            max_retries: int = 200) -> int:
@@ -1193,7 +1172,7 @@ class VersionedTable:
             latest = self.versions()[-1]
             for wv in range(attempt, latest + 1):
                 self._classify_winner(wv, operation, read_files, removed,
-                                      reads_table_data, read_triples,
+                                      reads_table_data,
                                       read_tree=read_tree)
             base_v, attempt = latest, latest + 1
         raise VersionedConcurrentModificationError(
@@ -1618,43 +1597,24 @@ class VersionedTable:
         if matched_condition:
             matched_condition = coerce_condition_for_types(matched_condition, dtmap)
         all_files = self.files(cur_v)
-        # Predicate-scoped read footprint (round-11, the Delta bridge's
-        # rule on manifests): the ON condition's target-only conjuncts
-        # prune the matched-file scan via manifest stats (a merge whose
-        # ON pins a clustered key range opens only that range's files)
-        # and scope OCC — a racing append whose new files provably
-        # miss the predicate commutes. A by-source clause inspects
-        # every target row and disables both.
-        from sql_based_etl_spark.engine.sql_compat import (
-            condition_implied_triples,
-        )
-
+        # Predicate-scoped read footprint (the Delta bridge's rule on
+        # manifests): the ON condition reduced to its scope tree over
+        # the target columns prunes the matched-file scan via manifest
+        # stats (a merge whose ON pins a clustered key range opens only
+        # that range's files) and scopes OCC — a racing append whose
+        # new files provably miss the predicate commutes. A by-source
+        # clause inspects every target row and disables both.
         from sql_based_etl_spark.engine.sql_compat import (
             condition_scope_tree,
         )
 
-        read_triples: list[tuple] = []
         read_tree = None
         if not when_not_matched_by_source_delete:
             t_cols_all = [f["name"] for f in
                           self.manifest(cur_v)["schema"]["fields"]]
-            read_triples = [
-                t for t in condition_implied_triples(condition, t_cols_all,
-                                                     "target")
-                if t[1] in _FILTER_OPS  # manifest stats: no null tests
-            ]
-            # scope-tree fallback for OR/NOT shapes (the bridge's
-            # round-12 rule on manifests): the whole ON condition
-            # reduced to its stats-decidable implication
             read_tree = condition_scope_tree(condition, t_cols_all,
                                              "target")
-        scan_files = (self.prune_files(read_triples, version=cur_v)
-                      if read_triples else all_files)
-        if read_tree is not None and scan_files:
-            mstats = self.manifest(cur_v).get("stats", {})
-            scan_files = [f for f in scan_files
-                          if _manifest_tree_may_match(mstats.get(f),
-                                                      read_tree)]
+        scan_files = self._files_may_match(cur_v, read_tree)
         validated_in_scan = False
         if when_not_matched_by_source_delete:
             matched_files = list(all_files)  # clause touches every row
@@ -1719,7 +1679,6 @@ class VersionedTable:
         return self._commit_classified(
             cur_v, "MERGE", matched_files, new_files, target_full.schema,
             new_stats, reads_table_data=True, read_files=set(scan_files),
-            read_triples=(read_triples or None),
             read_tree=read_tree,
             extra={
                 "files_rewritten": len(matched_files),

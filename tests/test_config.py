@@ -331,11 +331,11 @@ def test_predicate_coercion_struct_field_access_untouched():
     struct-field access, not a table alias — `a.b = true` where `a` is
     a struct must not be coerced by the dtype of an unrelated
     top-level `b` (coercion), and `s.flag = 5` must not yield a
-    pruning triple attributed to top-level `flag` (triples — that
+    scope-tree atom attributed to top-level `flag` (pruning — that
     would prune files containing rows the DELETE should remove)."""
     from sql_based_etl_spark.engine.sql_compat import (
         coerce_predicate_for_types,
-        condition_implied_triples,
+        condition_scope_tree,
     )
 
     dt = {"a": "struct<b:boolean>", "b": "int", "flag": "int",
@@ -343,7 +343,8 @@ def test_predicate_coercion_struct_field_access_untouched():
     # struct access stays untouched; true alias still rewrites
     assert coerce_predicate_for_types("a.b = true", dt) == "a.b = true"
     assert coerce_predicate_for_types("t.b = true", dt) == "t.b = 1"
-    # single-table triples: qualified refs never extract
-    assert condition_implied_triples("s.flag = 5", list(dt), None) == []
-    assert condition_implied_triples(
-        "flag = 5 AND s.flag = 7", list(dt), None) == [("flag", "=", 5)]
+    # single-table scope tree: qualified refs never yield an atom
+    assert condition_scope_tree("s.flag = 5", list(dt), None) is None
+    assert condition_scope_tree(
+        "flag = 5 AND s.flag = 7", list(dt), None) == (
+            "atom", ("flag", "=", 5))

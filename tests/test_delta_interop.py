@@ -2876,12 +2876,17 @@ def test_read_delta_where_prunes_and_filters(spark, tmp_path):
         read_delta(spark, dp, where=[("region", "like", "u%")])
 
 
-def test_prune_adds_by_stats_soundness(spark):
-    """The pruner's conservative contract, directly: truncated string
-    bounds stay bounds, all-null columns kill comparisons, missing
-    stats / non-prunable types / DV'd files are KEPT, null tests use
+def test_stats_pruning_soundness(spark):
+    """The pruner's conservative contract, directly, for a filter list
+    through the scope-tree evaluator: truncated string bounds stay
+    bounds, all-null columns kill comparisons, missing stats /
+    non-prunable types / DV'd files are KEPT, null tests use
     nullCount."""
-    from sql_based_etl_spark.tables.delta_interop import _prune_adds_by_stats
+    from sql_based_etl_spark.engine.sql_compat import (
+        filters_tree,
+        normalize_filters,
+    )
+    from sql_based_etl_spark.tables.delta_interop import _prune_by_tree
 
     meta = {
         "schemaString": json.dumps({"type": "struct", "fields": [
@@ -2902,31 +2907,33 @@ def test_prune_adds_by_stats_soundness(spark):
                                    "sizeInBytes": 1, "cardinality": 1}
         return {path: a}
 
+    def kept(adds, filters):
+        return _prune_by_tree(meta, adds,
+                              filters_tree(normalize_filters(filters)))
+
     full = {"numRecords": 10, "minValues": {"id": 0, "s": "abc"},
             "maxValues": {"id": 5, "s": "abd"},  # library-truncated max
             "nullCount": {"id": 0, "s": 0}}
     adds = add("a", full)
     # inside the range: kept; outside: pruned
-    assert _prune_adds_by_stats(meta, adds, [("id", "<=", 0)])
-    assert not _prune_adds_by_stats(meta, adds, [("id", ">", 5)])
-    assert not _prune_adds_by_stats(meta, adds, [("id", "<", 0)])
+    assert kept(adds, [("id", "<=", 0)])
+    assert not kept(adds, [("id", ">", 5)])
+    assert not kept(adds, [("id", "<", 0)])
     # "abczzz" truncated to max "abd": a probe at "abczz" must be KEPT
-    assert _prune_adds_by_stats(meta, adds, [("s", "=", "abczz")])
-    assert not _prune_adds_by_stats(meta, adds, [("s", ">=", "abe")])
+    assert kept(adds, [("s", "=", "abczz")])
+    assert not kept(adds, [("s", ">=", "abe")])
     # all-null column: any comparison pruned, is-null kept, is-not-null pruned
     nulls = {"numRecords": 3, "minValues": {}, "maxValues": {},
              "nullCount": {"id": 3}}
-    assert not _prune_adds_by_stats(meta, add("b", nulls), [("id", "=", 1)])
-    assert _prune_adds_by_stats(meta, add("b", nulls), [("id", "is null", None)])
-    assert not _prune_adds_by_stats(
-        meta, add("b", nulls), [("id", "is not null", None)])
+    assert not kept(add("b", nulls), [("id", "=", 1)])
+    assert kept(add("b", nulls), [("id", "is null", None)])
+    assert not kept(add("b", nulls), [("id", "is not null", None)])
     # zero nulls: is-null pruned
-    assert not _prune_adds_by_stats(meta, adds, [("id", "is null", None)])
+    assert not kept(adds, [("id", "is null", None)])
     # missing stats, timestamp conjuncts, DV'd files: all conservatively kept
-    assert _prune_adds_by_stats(meta, add("c"), [("id", "=", 99)])
-    assert _prune_adds_by_stats(meta, adds, [("ts", ">=", "2025-01-01")])
-    assert _prune_adds_by_stats(
-        meta, add("d", full, dv=True), [("id", "=", 3)])
+    assert kept(add("c"), [("id", "=", 99)])
+    assert kept(adds, [("ts", ">=", "2025-01-01")])
+    assert kept(add("d", full, dv=True), [("id", "=", 3)])
 
 
 def test_extract_stage_filters_prune_on_bridge_route(spark, tmp_path):
@@ -2960,6 +2967,96 @@ def test_extract_stage_filters_prune_on_bridge_route(spark, tmp_path):
     assert sorted(r.id for r in few.collect()) == [5, 3999]
     none = read_delta(spark, d, where=[("id", "in", [99999])])
     assert none.count() == 0
+
+
+def test_extract_stage_null_filter_same_on_both_routes(spark, tmp_path):
+    """One filter grammar on every DeltaLakeExtract route: a null test
+    reads the same rows from a native VersionedTable and a bridge
+    Delta table holding the same data, and native pruning keeps exactly
+    the files whose manifest stats count nulls in the column."""
+    from sql_based_etl_spark.engine.pipeline import Pipeline
+    from sql_based_etl_spark.tables.delta_interop import write_delta
+
+    batches = [[(1, "a"), (2, "b")], [(3, None), (4, "d")],
+               [(5, "e"), (6, "f")], [(7, None), (8, None)]]
+    nat = VersionedTable(spark, str(tmp_path / "nat"))
+    dd = str(tmp_path / "dd")
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(rows, "id long, c string")
+        mode = "overwrite" if i == 0 else "append"
+        nat.write(df, mode=mode, num_partitions=1)
+        write_delta(df.coalesce(1), dd, mode=mode)
+
+    stats = nat.manifest(nat.resolve_version())["stats"]
+    with_nulls = sorted(f for f in nat.files()
+                        if stats[f]["columns"]["c"]["nulls"] > 0)
+    assert 0 < len(with_nulls) < len(nat.files())
+    assert sorted(nat.prune_files([("c", "is null")])) == with_nulls
+
+    got = {}
+    for name, uri in (("nat", nat.path), ("dd", dd)):
+        ctx = Pipeline(spark).run([
+            {"type": "DeltaLakeExtract", "inputURI": uri,
+             "outputView": f"nf_{name}",
+             "options": {"filters": [["c", "is null"]]}},
+        ])
+        got[name] = _ids(ctx.spark.table(f"nf_{name}"))
+    assert got["nat"] == got["dd"] == [3, 7, 8]
+
+
+# Spark casts a literal to the column's type in a comparison ('5' = 5
+# is TRUE on a string column, 5 = '5' on a long one), so a partition
+# pruned by comparing the raw literal would silently drop matching rows
+
+
+def _cross_type_table(spark, d: str, ptype: str) -> None:
+    from sql_based_etl_spark.tables.delta_interop import write_delta
+
+    cast = str if ptype == "string" else int
+    write_delta(spark.createDataFrame(
+        [(1, "a", cast(5)), (2, "b", cast(6)), (3, "c", cast(5))],
+        f"id long, v string, p {ptype}"),
+        d, mode="overwrite", partition_by=["p"])
+
+
+# (partition column type, SQL literal naming its '5'/5 partition)
+_CROSS_TYPE = [("string", "5"), ("long", "'5'")]
+
+
+@pytest.mark.parametrize("ptype,lit", _CROSS_TYPE)
+def test_delete_delta_cross_type_partition_literal(spark, tmp_path,
+                                                   ptype, lit):
+    from sql_based_etl_spark.tables.delta_interop import delete_delta
+
+    d = str(tmp_path / "t")
+    _cross_type_table(spark, d, ptype)
+    delete_delta(spark, d, f"p = {lit}")
+    assert _ids(read_delta(spark, d)) == [2]
+
+
+@pytest.mark.parametrize("ptype,lit", _CROSS_TYPE)
+def test_update_delta_cross_type_partition_literal(spark, tmp_path,
+                                                   ptype, lit):
+    from sql_based_etl_spark.tables.delta_interop import update_delta
+
+    d = str(tmp_path / "t")
+    _cross_type_table(spark, d, ptype)
+    update_delta(spark, d, f"p = {lit}", {"id": "id + 100"})
+    assert _ids(read_delta(spark, d)) == [2, 101, 103]
+
+
+@pytest.mark.parametrize("ptype,lit", _CROSS_TYPE)
+def test_merge_delta_cross_type_partition_literal(spark, tmp_path,
+                                                  ptype, lit):
+    from sql_based_etl_spark.tables.delta_interop import merge_delta
+
+    d = str(tmp_path / "t")
+    _cross_type_table(spark, d, ptype)
+    src = spark.createDataFrame([(1, "X"), (3, "Y")], "id long, v string")
+    merge_delta(src, d, f"target.id = source.id AND target.p = {lit}",
+                when_matched_update={"v": "source.v"})
+    got = sorted((r.id, r.v) for r in read_delta(spark, d).collect())
+    assert got == [(1, "X"), (2, "b"), (3, "Y")]
 
 
 def test_ict_tables_write_monotonic_timestamps(spark, tmp_path):
@@ -3943,7 +4040,7 @@ def test_v2_incremental_sidecars_reuse_and_reclaim(spark, tmp_path, monkeypatch)
 
 
 def test_delete_delta_triples_prune_candidate_files(spark, tmp_path):
-    """The triples predicate form prunes candidate files BEFORE any
+    """The filter-list predicate form prunes candidate files BEFORE any
     data file opens: after z-ordering (per-file stats), a range delete
     succeeds even when a non-candidate file's bytes are corrupted on
     disk — proof the scan never opened it — and the commit touches
@@ -6485,20 +6582,16 @@ def test_log_cleanup_zero_interval_property_not_defaulted(spark, tmp_path):
 
 
 def test_condition_scope_tree_shapes():
-    """The reducer extracts scope information from shapes the
-    conjunct extractor cannot take, and stays conservative (widening
-    toward no-information) everywhere else."""
+    """The reducer extracts scope information from OR/NOT shapes, not
+    only conjunctions, and stays conservative (widening toward
+    no-information) everywhere else."""
     from sql_based_etl_spark.engine.sql_compat import (
-        condition_implied_triples,
         condition_scope_tree as condition_partition_tree,
     )
 
-    cols = ["p", "id"]
-    # top-level OR: triples give nothing, the tree keeps the shared
-    # partition pin
+    # top-level OR: the tree keeps the shared partition pin
     cond = ("(target.p = 'A' AND target.x = source.x) "
             "OR (target.p = 'A' AND target.y = source.y)")
-    assert condition_implied_triples(cond, cols, "target") == []
     tree = condition_partition_tree(cond, ["p"], "target")
     assert tree == ("atom", ("p", "=", "A"))
     # OR across different partitions reduces to the disjunction

@@ -1,28 +1,24 @@
-"""Adversarial implication properties for the predicate helpers that
-gate OCC soundness and DELETE row selection (round-12, verdict #5).
+"""Adversarial implication properties for the predicate reduction that
+gates OCC soundness and DELETE row selection.
 
-The contract under test, for BOTH extractors:
-
-- ``condition_implied_triples(cond, cols, alias)``: every extracted
-  triple must be IMPLIED by the predicate — a row (or target/source
-  row pair) on which ``cond`` evaluates TRUE must evaluate every
-  triple strictly TRUE. A violation means the file pruner could drop a
-  file containing matching rows (silently wrong DELETEs) or OCC could
-  commute a conflicting append.
-- ``condition_scope_tree(cond, scope_cols, alias)``: a row on which
-  ``cond`` is TRUE must Kleene-evaluate the reduced tree to
-  not-False against a file containing that row — evaluated over BOTH
-  lanes at once (partition values for p/q, a single-row min/max/null
-  stats envelope for every other column), else a concurrent append
-  into a file the predicate can reach would commute.
+The contract under test: ``condition_scope_tree(cond, scope_cols,
+alias)`` — a row on which ``cond`` is TRUE must Kleene-evaluate the
+reduced tree to not-False against a file containing that row —
+evaluated over BOTH lanes at once (partition values for p/q/ds/np, a
+single-row min/max/null stats envelope for every other column), else a
+pruned scan could skip a file holding matching rows (silently wrong
+DELETEs) or a concurrent append into a file the predicate can reach
+would commute.
 
 Conditions are GENERATED (seeded, ≥100 Spark-valid shapes per mode)
 over the hazard inventory: nested structs, quoted identifiers
 containing dots and ``=``, NOT over conjuncts, BETWEEN (whose AND must
 never split), IN-lists, null-literal comparisons, col-to-col
-comparisons, function calls, and boolean-typed columns. Spark itself
-is the truth oracle: every condition and every extracted fact is
-evaluated as a column over a property table in one batched job.
+comparisons, function calls, boolean-typed columns, and cross-type
+literals (a number against a digit-valued string partition, a string
+against a long partition — Spark casts the literal to the column's
+type). Spark itself is the truth oracle: every condition is evaluated
+as a column over a property table in one batched job.
 """
 
 from __future__ import annotations
@@ -33,13 +29,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from sql_based_etl_spark.engine.sql_compat import (
-    condition_implied_triples,
     condition_scope_tree,
+    filters_tree,
 )
 from sql_based_etl_spark.tables.delta_interop import _tree_may_match
 
-PART_COLS = ["p", "q"]
-SCOPE_COLS = ["p", "q", "v", "id", "x", "flag"]
+# partition column → logical type; ds holds digit strings, np longs
+_PART_TYPES = {"p": "string", "q": "string", "ds": "string",
+               "np": "long"}
+PART_COLS = list(_PART_TYPES)
+SCOPE_COLS = ["p", "q", "ds", "np", "v", "id", "x", "flag"]
 _STAT_TYPES = {"v": "string", "id": "long", "x": "double",
                "flag": "boolean"}
 
@@ -52,25 +51,13 @@ def _lit_sql(v) -> str:
     return repr(v)
 
 
-def _triple_sql(t: tuple) -> str:
-    c, op, lit = t
-    col = f"`{c}`"
-    if op == "is null":
-        return f"{col} IS NULL"
-    if op == "is not null":
-        return f"{col} IS NOT NULL"
-    if op == "in":
-        return f"{col} IN ({', '.join(_lit_sql(x) for x in lit)})"
-    return f"{col} {op} {_lit_sql(lit)}"
-
-
 def _gen_atom(rng: random.Random, quals: list[str]) -> str:
     """One atom; quals are the relation prefixes to draw from
     ('' = bare)."""
     qual = rng.choice(quals)
     str_cols = ["p", "q", "v"]
     num_cols = ["id", "x"]
-    kind = rng.randrange(12)
+    kind = rng.randrange(14)
     if kind == 0:  # string comparison
         return f"{qual}{rng.choice(str_cols)} {rng.choice(['=', '<', '>='])} '{rng.choice('ABCDE')}'"
     if kind == 1:  # numeric comparison
@@ -98,6 +85,14 @@ def _gen_atom(rng: random.Random, quals: list[str]) -> str:
             else f"{qual}q = '{rng.choice('AB')}'"
     if kind == 10:  # null-literal comparison (always UNKNOWN)
         return f"{qual}{rng.choice(str_cols)} = NULL"
+    if kind == 12:  # number vs digit-valued string partition ('05' = 5)
+        if rng.random() < 0.3:
+            return f"{qual}ds IN ({rng.randrange(3, 8)}, {rng.randrange(3, 8)})"
+        return f"{qual}ds {rng.choice(['=', '<', '>='])} {rng.randrange(3, 8)}"
+    if kind == 13:  # string vs long partition (np = '3')
+        if rng.random() < 0.3:
+            return f"{qual}np IN ('{rng.randrange(0, 5)}', '{rng.randrange(0, 5)}')"
+        return f"{qual}np {rng.choice(['=', '<', '>='])} '{rng.randrange(0, 5)}'"
     # boolean column atom
     return f"{qual}flag" if rng.random() < 0.5 else f"{qual}flag = TRUE"
 
@@ -142,19 +137,22 @@ def _property_df(spark, rid_offset: int = 0):
         sp = rng.choice(["A", "B", None])
         px = rng.choice(["A", "B", None])
         ab = rng.choice([None, 0, 1, 2])
-        rows.append((i + rid_offset, p, q, v, idv, x, flag, (sflag, sp), px, ab))
+        ds = rng.choice(["3", "5", "05", "6", None])
+        np_ = rng.choice([None] + list(range(0, 5)))
+        rows.append((i + rid_offset, p, q, ds, np_, v, idv, x, flag,
+                     (sflag, sp), px, ab))
     return spark.createDataFrame(
         rows,
-        "rid long, p string, q string, v string, id long, x double, "
-        "flag boolean, s struct<flag: boolean, p: string>, "
-        "`p.x` string, `a=b` long")
+        "rid long, p string, q string, ds string, np long, v string, "
+        "id long, x double, flag boolean, "
+        "s struct<flag: boolean, p: string>, `p.x` string, `a=b` long")
 
 
 def _meta_for_tree() -> dict:
     import json
 
-    fields = [{"name": c, "type": "string", "nullable": True,
-               "metadata": {}} for c in PART_COLS]
+    fields = [{"name": c, "type": t, "nullable": True,
+               "metadata": {}} for c, t in _PART_TYPES.items()]
     fields += [{"name": c, "type": t, "nullable": True, "metadata": {}}
                for c, t in _STAT_TYPES.items()]
     return {
@@ -171,7 +169,7 @@ def _row_add(row) -> dict:
     sharpest file a sound evaluator must still keep."""
     import json
 
-    pv = {c: (row[c] if row[c] is not None
+    pv = {c: (str(row[c]) if row[c] is not None
               else "__HIVE_DEFAULT_PARTITION__") for c in PART_COLS}
     mins, maxs, nulls = {}, {}, {}
     for c in _STAT_TYPES:
@@ -222,13 +220,12 @@ def _batch_eval(df, exprs: dict[str, str]):
     return out
 
 
-def test_triples_and_tree_implied_single_table(spark):
+def test_scope_tree_implied_single_table(spark):
     """alias=None mode (DELETE predicates): ≥100 generated Spark-valid
-    shapes; every extracted triple and the partition reduction must be
-    implied by the predicate on every row."""
+    shapes; the scope reduction must keep every file holding a row the
+    predicate is TRUE on."""
     rng = random.Random(42)
     df = _property_df(spark).cache()
-    t_cols = ["p", "q", "v", "id", "x", "flag"]
 
     conds = []
     seen = set()
@@ -238,17 +235,9 @@ def test_triples_and_tree_implied_single_table(spark):
             seen.add(c)
             conds.append(c)
 
-    exprs: dict[str, str] = {}
-    facts: dict[str, list] = {}
-    trees: dict[str, object] = {}
-    for i, cond in enumerate(conds):
-        exprs[f"c{i}"] = cond
-        triples = condition_implied_triples(cond, t_cols, None)
-        facts[f"c{i}"] = triples
-        for j, t in enumerate(triples):
-            exprs[f"c{i}_t{j}"] = _triple_sql(t)
-        trees[f"c{i}"] = condition_scope_tree(cond, SCOPE_COLS, None)
-
+    exprs = {f"c{i}": cond for i, cond in enumerate(conds)}
+    trees = {f"c{i}": condition_scope_tree(cond, SCOPE_COLS, None)
+             for i, cond in enumerate(conds)}
     vals = _batch_eval(df, exprs)
     rows = df.select("rid", *SCOPE_COLS).orderBy("rid").collect()
     meta = _meta_for_tree()
@@ -259,20 +248,10 @@ def test_triples_and_tree_implied_single_table(spark):
         if name not in vals:
             continue  # Spark rejected the shape — not a production input
         valid += 1
-        cvals = vals[name]
-        for j, t in enumerate(facts[name]):
-            tname = f"{name}_t{j}"
-            assert tname in vals, f"triple SQL failed to eval: {t}"
-            for k, cv in enumerate(cvals):
-                if cv is True:
-                    assert vals[tname][k] is True, (
-                        f"UNSOUND triple: cond {cond!r} TRUE on row "
-                        f"{rows[k]} but extracted {t} is "
-                        f"{vals[tname][k]}")
         tree = trees[name]
         if tree is None:
             continue
-        for k, cv in enumerate(cvals):
+        for k, cv in enumerate(vals[name]):
             if cv is True:
                 assert _tree_may_match(meta, _row_add(rows[k]), tree), (
                     f"UNSOUND scope tree for {cond!r}: row {rows[k]} "
@@ -281,11 +260,11 @@ def test_triples_and_tree_implied_single_table(spark):
     assert valid >= 100, f"only {valid} Spark-valid shapes exercised"
 
 
-def test_triples_and_tree_implied_merge_alias(spark):
+def test_scope_tree_implied_merge_alias(spark):
     """alias='target' mode (MERGE ON conditions): the implication must
-    hold over target×source row PAIRS — only target-qualified facts may
-    be extracted, and they must hold whenever any pair satisfies the
-    full ON condition."""
+    hold over target×source row PAIRS — only target-qualified atoms may
+    reach the tree, and a target file must be kept whenever any pair
+    satisfies the full ON condition."""
     rng = random.Random(1337)
     tgt = _property_df(spark).alias("target")
     src = (_property_df(spark, rid_offset=1000)
@@ -295,7 +274,6 @@ def test_triples_and_tree_implied_merge_alias(spark):
         "prid", F.col("rid") * 10000 + F.col("srid")).cache()
     # _batch_eval orders by "rid"; give it the pair id
     pairs = pairs.drop("rid").withColumnRenamed("prid", "rid")
-    t_cols = ["p", "q", "v", "id", "x", "flag"]
 
     conds = []
     seen = set()
@@ -305,20 +283,9 @@ def test_triples_and_tree_implied_merge_alias(spark):
             seen.add(c)
             conds.append(c)
 
-    exprs: dict[str, str] = {}
-    facts: dict[str, list] = {}
-    trees: dict[str, object] = {}
-    for i, cond in enumerate(conds):
-        exprs[f"c{i}"] = cond
-        triples = condition_implied_triples(cond, t_cols, "target")
-        facts[f"c{i}"] = triples
-        for j, t in enumerate(triples):
-            c, op, lit = t
-            exprs[f"c{i}_t{j}"] = _triple_sql((f"target.{c}"
-                                               if False else c, op, lit)) \
-                .replace(f"`{c}`", f"target.`{c}`")
-        trees[f"c{i}"] = condition_scope_tree(cond, SCOPE_COLS, "target")
-
+    exprs = {f"c{i}": cond for i, cond in enumerate(conds)}
+    trees = {f"c{i}": condition_scope_tree(cond, SCOPE_COLS, "target")
+             for i, cond in enumerate(conds)}
     vals = _batch_eval(pairs, exprs)
     rows = pairs.select(
         "rid", *[F.col(f"target.{c}").alias(c) for c in SCOPE_COLS]
@@ -331,20 +298,10 @@ def test_triples_and_tree_implied_merge_alias(spark):
         if name not in vals:
             continue
         valid += 1
-        cvals = vals[name]
-        for j, t in enumerate(facts[name]):
-            tname = f"{name}_t{j}"
-            assert tname in vals, f"triple SQL failed to eval: {t}"
-            for k, cv in enumerate(cvals):
-                if cv is True:
-                    assert vals[tname][k] is True, (
-                        f"UNSOUND triple: ON {cond!r} TRUE on pair "
-                        f"{rows[k].rid} but target fact {t} is "
-                        f"{vals[tname][k]}")
         tree = trees[name]
         if tree is None:
             continue
-        for k, cv in enumerate(cvals):
+        for k, cv in enumerate(vals[name]):
             if cv is True:
                 assert _tree_may_match(meta, _row_add(rows[k]), tree), (
                     f"UNSOUND scope tree for ON {cond!r}: pair "
@@ -361,27 +318,29 @@ def test_between_and_never_splits():
 
     parts = split_top_and("x BETWEEN 1 AND 5 AND p = 'A'")
     assert [p.strip() for p in parts] == ["x BETWEEN 1 AND 5", "p = 'A'"]
-    triples = condition_implied_triples(
+    tree = condition_scope_tree(
         "id BETWEEN 1 AND x = 5", ["id", "x", "p"], None)
-    assert triples == [], f"BETWEEN bound leaked as a fact: {triples}"
-    triples = condition_implied_triples(
+    assert tree is None, f"BETWEEN bound leaked as a fact: {tree}"
+    tree = condition_scope_tree(
         "id BETWEEN 1 AND 5 AND p = 'A'", ["id", "x", "p"], None)
-    assert ("p", "=", "A") in triples
+    assert ("atom", ("p", "=", "A")) in tree[1]
 
 
 def test_between_is_a_first_class_conjunct():
-    """Positive BETWEEN now contributes its two implied bounds as
-    triples — the scan pruner / OCC footprint gets both ends."""
-    triples = condition_implied_triples(
+    """Positive BETWEEN contributes its two implied bounds as atoms —
+    the scan pruner / OCC footprint gets both ends."""
+    tree = condition_scope_tree(
         "id BETWEEN 1 AND 5 AND p = 'A'", ["id", "x", "p"], None)
-    assert ("id", ">=", 1) in triples and ("id", "<=", 5) in triples
+    assert tree[0] == "and"
+    assert ("atom", ("id", ">=", 1)) in tree[1]
+    assert ("atom", ("id", "<=", 5)) in tree[1]
     # alias-qualified merge shape
-    triples = condition_implied_triples(
-        "t.id BETWEEN 2 AND 7", ["id"], "t")
-    assert triples == [("id", ">=", 2), ("id", "<=", 7)]
+    tree = condition_scope_tree("t.id BETWEEN 2 AND 7", ["id"], "t")
+    assert tree == ("and", [("atom", ("id", ">=", 2)),
+                            ("atom", ("id", "<=", 7))])
     # NOT BETWEEN stays widened (never a false implied bound)
-    assert condition_implied_triples(
-        "id NOT BETWEEN 1 AND 5", ["id"], None) == []
+    assert condition_scope_tree(
+        "id NOT BETWEEN 1 AND 5", ["id"], None) is None
 
 
 def test_or_split_is_between_aware():
@@ -481,12 +440,6 @@ def test_violating_string_max_keeps_file_in_prune_and_occ(spark):
     """End-to-end: a bridge file whose stats carry a raw-prefix
     maxValues must survive driver-side read pruning for a predicate
     its hidden rows satisfy (and the scope-tree OCC lane agrees)."""
-    from sql_based_etl_spark.engine.sql_compat import condition_scope_tree
-    from sql_based_etl_spark.tables.delta_interop import (
-        _prune_adds_by_stats,
-        _tree_may_match,
-    )
-
     prefix = "x" * 32
     meta = {"schemaString": __import__("json").dumps({
         "type": "struct",
@@ -499,14 +452,12 @@ def test_violating_string_max_keeps_file_in_prune_and_occ(spark):
                "maxValues": {"v": prefix},   # raw prefix, no increment
                "nullCount": {"v": 0}})}
     # rows like prefix+"zzz" satisfy v > prefix: the file must survive
-    kept = _prune_adds_by_stats(meta, {"f1.parquet": add},
-                                [("v", ">", prefix)])
-    assert "f1.parquet" in kept
+    # the filter-list read and the SQL-predicate (OCC) reduction alike
+    assert _tree_may_match(meta, add, filters_tree([("v", ">", prefix)]))
     tree = condition_scope_tree(f"v > '{prefix}'", ["v"], None)
     assert _tree_may_match(meta, add, tree)
     # but a literal at/above the prefix-successor still prunes —
     # the hedge keeps real skipping power
     beyond = "x" * 31 + "y"
-    kept = _prune_adds_by_stats(meta, {"f1.parquet": add},
-                                [("v", ">=", beyond)])
-    assert kept == {}
+    assert not _tree_may_match(meta, add,
+                               filters_tree([("v", ">=", beyond)]))

@@ -297,6 +297,44 @@ def test_data_skipping_prunes_files_from_stats(spark, table):
     assert table.prune_files([("id", "<", 0)]) == []
 
 
+def test_data_skipping_coerces_literals_like_spark(spark, table):
+    """Manifest-stats pruning casts a literal to the column's type the
+    way Spark's comparison does: '7' prunes an int column like 7, a
+    date spelled '2024-1-5' (Spark reads it as 2024-01-05) never
+    prunes the file holding that date, a date literal compares as a
+    date, and a timestamp spelled as a string never prunes."""
+    import datetime
+
+    df = spark.createDataFrame(
+        [(i, datetime.date(2024, 1, 1 + i)) for i in range(8)],
+        "id int, d date")
+    table.write(df, num_partitions=4, cluster_by=["id"])
+    assert len(table.prune_files([("id", "=", "7")])) == 1
+    assert table.read(filters=[("d", "=", "2024-1-5")]).count() == 1
+    assert table.read(
+        filters=[("d", ">=", datetime.date(2024, 1, 7))]).count() == 2
+    # timestamp stats hold ISO text: a string literal Spark casts (a 'T'
+    # separator, a bare date) must not be compared as text
+    from sql_based_etl_spark.tables.versioned import _manifest_tree_may_match
+
+    ts = datetime.datetime(2024, 1, 5)
+    fstats = {"rows": 1, "columns": {"t": {
+        "min": "2024-01-05 00:00:00", "max": "2024-01-05 00:00:00",
+        "nulls": 0}}}
+    types = {"t": "timestamp"}
+    for lit in ("2024-01-05", "2024-01-05T00:00:00", ts):
+        assert _manifest_tree_may_match(
+            fstats, ("atom", ("t", "=", lit)), types), lit
+    assert not _manifest_tree_may_match(
+        fstats, ("atom", ("t", ">", ts)), types)
+    # MERGE ON the same spelling rewrites the matching row
+    table.merge(spark.createDataFrame([(4,)], "id int"),
+                "target.id = source.id AND target.d = '2024-1-5'",
+                when_matched_delete="true", insert_not_matched=False)
+    assert sorted(r.id for r in table.read().collect()) == [
+        0, 1, 2, 3, 5, 6, 7]
+
+
 def test_data_skipping_carries_stats_and_stays_conservative(spark, table):
     """Stats survive append/merge/compact carry-forward; files written
     before a schema evolution have no stats for the new column and must
