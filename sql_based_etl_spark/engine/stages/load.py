@@ -283,8 +283,13 @@ def versioned_table_maintenance(ctx: PipelineContext, conf: dict) -> DataFrame |
     count, ``vacuum.retentionHours`` (default 168) →
     :func:`vacuum_delta` (``retainVersions`` has no Delta meaning —
     Delta retention is time-based; ``vacuum.enforceRetentionCheck:
-    false`` permits sub-168h windows). ``restore`` raises: the bridge
-    writes no re-point commits, use time-travel reads instead."""
+    false`` permits sub-168h windows). That vacuum also deletes change
+    data files (``_change_data/``) older than the retention window, so
+    change reads reach back only that far. ``restore`` raises: the
+    bridge writes no re-point commits, use time-travel reads instead.
+
+    Both routes rewrite files as zstd parquet (see
+    ``tables/versioned.py:TABLE_FILE_COMPRESSION``)."""
     from sql_based_etl_spark.tables import delta_interop
 
     if delta_interop.is_delta_dir(ctx.spark, conf["inputURI"]):

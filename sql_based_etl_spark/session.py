@@ -19,6 +19,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's physical RAM, capped at 48g: local mode runs
+    the whole job in the driver JVM, and a heap larger than the host
+    gets the JVM OOM-killed instead of spilling."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(48, int(ram_gb // 2)))}g"
+
+
 def get_spark(
     app_name: str = "sql_based_etl_spark",
     master: str | None = None,
@@ -29,7 +37,9 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
     ``local[*]``. On a real cluster, pass master=None with
-    ``spark.master`` preset and these confs still apply.
+    ``spark.master`` preset and these confs still apply. The driver
+    heap is ``$SPARK_DRIVER_MEMORY`` when set, else half the host's
+    RAM (at most 48g).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -63,7 +73,8 @@ def get_spark(
         # construction, so reading such a table is not a hidden session
         # mutation; the bridge fail-louds if a foreign session lacks it.
         .config("spark.sql.parquet.fieldId.read.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Wide arithmetic chains (64-dim dot products, LSH signatures)

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_based_etl_spark.tables.versioned import (
+    TABLE_FILE_COMPRESSION,
     CommitRaceLostError,
     VersionedTable,
     VersionedTableError,
@@ -2834,13 +2835,18 @@ def _stage_data_files(df: DataFrame, path: str,
     ``subdir`` relocates the published files under ``<path>/<subdir>/``
     with paths recorded relative to the TABLE root — the shape change
     data files need (``_change_data/...``, underscore-prefixed so plain
-    parquet scans of the table root never see them)."""
+    parquet scans of the table root never see them).
+
+    Every file is written with ``TABLE_FILE_COMPRESSION`` (zstd) — data
+    and change files of write, merge, update, delete and compact alike —
+    whatever the session's default parquet codec."""
     import uuid
 
     spark = df.sparkSession
     fs, _, _ = _fs_and_path(spark, path)
     staging = f"{path}/.staging-{uuid.uuid4().hex[:12]}"
-    writer = df.write.mode("overwrite")
+    writer = df.write.mode("overwrite").option(
+        "compression", TABLE_FILE_COMPRESSION)
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(staging)
@@ -5613,9 +5619,9 @@ def vacuum_delta(spark: SparkSession, path: str,
     path-not-found). Tombstones are gathered from the surviving JSON
     log only — commits pruned below a checkpoint are by construction
     older than the checkpoint and their non-live files are *also*
-    vacuum candidates, but the bridge deliberately deletes only what
-    it can prove was tombstoned (never "anything unreferenced", which
-    would race in-flight writers' staged files).
+    vacuum candidates, but the bridge deliberately deletes only data
+    files it can prove were tombstoned (never "anything unreferenced",
+    which would race in-flight writers' staged files).
 
     Deletion-vector ``.bin`` sidecars are reclaimed by the same proof:
     a sidecar is deleted iff NO live add's descriptor points into it
@@ -5627,6 +5633,13 @@ def vacuum_delta(spark: SparkSession, path: str,
     so long-lived DV tables converge back to clean files AND reclaim
     their bitmap storage.
 
+    Change data files (``_change_data/``, written by CDF merges,
+    updates and deletes) belong to no snapshot and no tombstone names
+    them; like delta-spark's VACUUM, a change file is deleted iff its
+    modification time is older than ``retention_hours``. A change read
+    (:func:`read_delta_changes`) over a commit whose change files were
+    vacuumed fails loudly the same way time travel does.
+
     ``retention_hours < 168`` raises unless
     ``enforce_retention_check=False`` (Delta's own guard: a reader or
     in-flight committer may still reference recent files). ``dry_run``
@@ -5635,8 +5648,10 @@ def vacuum_delta(spark: SparkSession, path: str,
     it is observability, exactly like Delta's VACUUM START/END pair).
 
     Returns the table-relative paths of the deleted (or, dry-run,
-    deletable) files. Driver-side cost is O(tombstones) — bounded by
-    log length, the same order as the replay VACUUM already does."""
+    deletable) files, change files included; the VACUUM END commit
+    counts them all in ``numDeletedFiles``. Driver-side cost is
+    O(tombstones + change files) — bounded by log length, the same
+    order as the replay VACUUM already does."""
     import time
 
     if retention_hours < 168.0 and enforce_retention_check:
@@ -5706,6 +5721,22 @@ def vacuum_delta(spark: SparkSession, path: str,
             if not dry_run:
                 fs.delete(jfile, False)
             deleted.append(rel)
+    # change data files belong to no snapshot, so no tombstone ever
+    # names them: age them out by modification time, as delta-spark does
+    jcdc = _fs_and_path(spark, f"{path}/_change_data")[1]
+    if fs.exists(jcdc):
+        cdc_prefix = fs.getFileStatus(jcdc).getPath().toString().rstrip("/") + "/"
+        old = []
+        it = fs.listFiles(jcdc, True)
+        while it.hasNext():
+            st = it.next()
+            if st.getModificationTime() <= cutoff_ms:
+                old.append(st.getPath())
+        for jp in sorted(old, key=str):
+            if not dry_run:
+                fs.delete(jp, False)
+            rel = "_change_data/" + str(jp)[len(cdc_prefix):]
+            deleted.append(urllib.parse.quote(rel, safe="/="))
     if not dry_run:
         now_ms = int(time.time() * 1000)
         ci = {

@@ -77,6 +77,16 @@ class VersionedTableError(RuntimeError):
     pass
 
 
+# Parquet codec of every data and change file either table format
+# writes (this module and the Delta bridge). Set per writer, not in the
+# session conf, so tables stay compact under any session. zstd shrinks
+# high-entropy text such as hex digests, which snappy stores almost
+# raw; readers need zstd parquet support (Spark >= 3.2, or 3.0/3.1
+# with Hadoop's native zstd; Athena, DuckDB, pyarrow and delta-rs all
+# read it).
+TABLE_FILE_COMPRESSION = "zstd"
+
+
 class CommitRaceLostError(VersionedTableError):
     """Raised by :func:`publish_text_exclusive` when another writer
     published the same entry first. Distinct from the base class so an
@@ -905,7 +915,8 @@ class VersionedTable:
             import uuid as _uuid
 
             rel_dir += f"-{_uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("errorifexists")
+        writer = df.write.mode("errorifexists").option(
+            "compression", TABLE_FILE_COMPRESSION)
         for c in bloom_filter_columns or []:
             # parquet-level bloom filters: the reader skips whole row
             # groups on `col = x` probes that min/max stats can't prune

@@ -47,3 +47,18 @@ def duck():
             con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def parquet_codecs():
+    """Codecs of every column chunk in a parquet file, read from its
+    footer with pyarrow (e.g. ``{"ZSTD"}``)."""
+    import pyarrow.parquet as pq
+
+    def codecs(path: str) -> set[str]:
+        md = pq.ParquetFile(path).metadata
+        return {md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)}
+
+    return codecs

@@ -7760,3 +7760,131 @@ def test_version_crc_skipped_after_retried_commit(spark, tmp_path,
     assert not os.path.exists(os.path.join(log_dir, f"{2:020d}.crc")), \
         "retried commit must not emit a crc from stale reconciled state"
     assert sorted(r.id for r in read_delta(spark, t).collect()) == [1, 2, 3]
+
+
+def _commit_actions(table_dir: str, version: int | None = None) -> list[dict]:
+    """The actions of one commit (the latest when ``version`` is None)."""
+    log_dir = os.path.join(table_dir, "_delta_log")
+    if version is None:
+        version = max(int(n[:20]) for n in os.listdir(log_dir)
+                      if n.endswith(".json") and n[:20].isdigit())
+    with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
+        return [json.loads(x) for x in fh.read().splitlines()]
+
+
+@pytest.mark.parametrize("op", ["write", "merge", "update", "delete", "compact"])
+def test_every_bridge_write_path_stores_zstd_files(spark, tmp_path,
+                                                   parquet_codecs, op):
+    """The data and ``_change_data/`` files of every bridge write are
+    zstd parquet whatever the session's default codec; rows round-trip
+    through the snapshot and the change feed, and every add still
+    carries ``stats``, so file pruning is unchanged."""
+    from sql_based_etl_spark.tables.delta_interop import (
+        compact_delta,
+        delete_delta,
+        merge_delta,
+        read_delta_changes,
+        update_delta,
+        write_delta,
+    )
+
+    d = str(tmp_path / op)
+    expected = {i: f"{i:032x}" for i in range(40)}
+    write_delta(spark.createDataFrame(sorted(expected.items()), "id long, v string")
+                .repartition(2), d, mode="overwrite",
+                properties={"delta.enableChangeDataFeed": "true"})
+    changes = set()
+    if op == "merge":
+        src = spark.createDataFrame([(1, "A"), (50, "N")], "id long, v string")
+        merge_delta(src, d, condition="target.id = source.id",
+                    when_matched_update={"v": "source.v"})
+        expected.update({1: "A", 50: "N"})
+        changes = {(1, "update_preimage"), (1, "update_postimage"), (50, "insert")}
+    elif op == "update":
+        update_delta(spark, d, "id = 2", {"v": "'U'"})
+        expected[2] = "U"
+        changes = {(2, "update_preimage"), (2, "update_postimage")}
+    elif op == "delete":
+        delete_delta(spark, d, "id = 3")
+        del expected[3]
+        changes = {(3, "delete")}
+    elif op == "compact":
+        write_delta(spark.createDataFrame([(99, "z")], "id long, v string"),
+                    d, mode="append")
+        expected[99] = "z"
+        compact_delta(spark, d, target_files=1)
+    acts = _commit_actions(d)
+    adds = [a["add"] for a in acts if "add" in a]
+    cdcs = [a["cdc"] for a in acts if "cdc" in a]
+    assert adds and bool(cdcs) == bool(changes)
+    for files in (adds, cdcs):
+        codecs = [parquet_codecs(os.path.join(d, urllib_unquote(a["path"])))
+                  for a in files]
+        # a rowless file (an empty writer partition) has no column chunk
+        assert set().union(*codecs) == ({"ZSTD"} if files else set()), codecs
+    for a in adds:
+        st = json.loads(a["stats"])
+        assert st["numRecords"] > 0 and "id" in st["minValues"], a
+    assert {r.id: r.v for r in read_delta(spark, d).collect()} == expected
+    if changes:  # the change ops commit version 1
+        got = read_delta_changes(spark, d, starting_version=1).collect()
+        assert {(r.id, r._change_type) for r in got} == changes
+
+
+def test_vacuum_delta_reclaims_change_data_files(spark, tmp_path):
+    """``_change_data/`` files age out of the retention window by
+    modification time, as in delta-spark's VACUUM: fresh ones survive
+    the default 168h, a dry run past retention lists them and deletes
+    nothing, the real run deletes them and counts them in the VACUUM
+    END commit, a change read over a vacuumed commit fails naming the
+    VACUUM, and a merge committed after the vacuum is change-readable."""
+    from sql_based_etl_spark.tables.delta_interop import (
+        merge_delta,
+        read_delta_changes,
+        vacuum_delta,
+        write_delta,
+    )
+
+    d = str(tmp_path / "vac_cdf")
+    write_delta(spark.createDataFrame([(i, "a") for i in range(6)],
+                                      "id long, v string").coalesce(1),
+                d, mode="overwrite",
+                properties={"delta.enableChangeDataFeed": "true"})
+    for k in (1, 2):
+        merge_delta(spark.createDataFrame([(k, "m"), (10 + k, "n")],
+                                          "id long, v string"),
+                    d, condition="target.id = source.id",
+                    when_matched_update={"v": "source.v"})
+    cdc = {a["cdc"]["path"] for v in (1, 2) for a in _commit_actions(d, v)
+           if "cdc" in a}
+    assert len(cdc) >= 2
+
+    def on_disk():
+        return {p for p in cdc if os.path.exists(os.path.join(d, urllib_unquote(p)))}
+
+    vacuum_delta(spark, d)  # default 168h: every change file is seconds old
+    assert on_disk() == cdc
+
+    dry = vacuum_delta(spark, d, retention_hours=0,
+                       enforce_retention_check=False, dry_run=True)
+    assert {p for p in dry if p.startswith("_change_data/")} == cdc
+    assert on_disk() == cdc
+
+    gone = vacuum_delta(spark, d, retention_hours=0, enforce_retention_check=False)
+    assert sorted(gone) == sorted(dry)
+    assert on_disk() == set()
+    (end,) = [a["commitInfo"] for a in _commit_actions(d) if "commitInfo" in a]
+    assert end["operation"] == "VACUUM END"
+    assert end["operationMetrics"]["numDeletedFiles"] == str(len(gone))
+    assert {(r.id, r.v) for r in read_delta(spark, d).collect()} == (
+        {(i, "a") for i in (0, 3, 4, 5)} | {(1, "m"), (2, "m"), (11, "n"), (12, "n")})
+    with pytest.raises(VersionedTableError, match="VACUUM"):
+        read_delta_changes(spark, d, starting_version=1, ending_version=1).collect()
+
+    v = merge_delta(spark.createDataFrame([(0, "z")], "id long, v string"),
+                    d, condition="target.id = source.id",
+                    when_matched_update={"v": "source.v"})
+    vacuum_delta(spark, d)
+    got = read_delta_changes(spark, d, starting_version=v, ending_version=v)
+    assert {(r.id, r.v, r._change_type) for r in got.collect()} == {
+        (0, "a", "update_preimage"), (0, "z", "update_postimage")}

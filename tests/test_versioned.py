@@ -1195,3 +1195,41 @@ def test_merge_or_condition_stats_scoped_commutes(spark, table, monkeypatch):
         table.merge(src, on,
                     when_matched_update={"v": "source.v"},
                     insert_not_matched=False)
+
+
+@pytest.mark.parametrize("op", ["write", "append", "merge", "compact"])
+def test_every_write_path_stores_zstd_files(spark, table, parquet_codecs, op):
+    """Every data file a commit writes is zstd parquet whatever the
+    session's default codec; rows round-trip, and each new file still
+    gets manifest stats, so data skipping prunes it as before."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    def rows(lo, hi, tag):
+        return spark.createDataFrame(
+            [(i, f"{tag}{i:032x}") for i in range(lo, hi)], "id long, name string")
+
+    table.write(rows(0, 40, "a"), num_partitions=2)
+    expected = {i: f"a{i:032x}" for i in range(40)}
+    if op == "append":
+        table.write(rows(40, 60, "b"), mode="append")
+        expected.update({i: f"b{i:032x}" for i in range(40, 60)})
+    elif op == "merge":
+        table.merge(rows(30, 50, "m"), "source.id = target.id",
+                    when_matched_update={"name": "source.name"})
+        expected.update({i: f"m{i:032x}" for i in range(30, 50)})
+    elif op == "compact":
+        table.compact(num_partitions=1)
+    old = set() if op == "write" else set(table.files(0))
+    new = [f for f in table.files() if f not in old]
+    assert new and (op == "write" or table.latest_version() == 1)
+
+    stats = table.manifest(table.latest_version())["stats"]
+    for f in new:
+        local = os.path.join(table.path, f)
+        assert parquet_codecs(local) == {"ZSTD"}, f
+        assert stats[f]["rows"] == pq.ParquetFile(local).metadata.num_rows > 0
+        assert {"min", "max"} <= set(stats[f]["columns"]["id"])
+    assert table.prune_files(filters=[("id", "=", 10_000)]) == []
+    assert {r.id: r.name for r in table.read().collect()} == expected
