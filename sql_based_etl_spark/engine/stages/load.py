@@ -14,10 +14,12 @@ def versioned_table_load(ctx: PipelineContext, conf: dict) -> DataFrame | None:
     versioned table; ``numPartitions`` (:168) controls output file
     count / write parallelism, ``saveMode`` (:169) Overwrite/Append;
     ``options.mergeSchema`` allows an append to widen the table schema
-    (Delta's option of the same name); ``options.clusterBy`` range-
-    clusters the written files on the given columns so the manifest's
-    per-file stats become selective (liquid-clustering analogue);
-    ``options.statsColumns`` narrows stats collection on wide tables."""
+    (Delta's option of the same name); ``options.clusterBy`` clusters
+    the written files on the given columns (``options.clusterMethod``
+    ``range``, the default, or ``zorder``; any other value fails the
+    stage) so the manifest's per-file stats become selective
+    (liquid-clustering analogue); ``options.statsColumns`` narrows
+    stats collection on wide tables."""
     df = ctx.view(conf["inputView"])
     n = conf.get("numPartitions")
     opts = conf.get("options", {}) or {}
@@ -289,7 +291,7 @@ def versioned_table_maintenance(ctx: PipelineContext, conf: dict) -> DataFrame |
     bridge writes no re-point commits, use time-travel reads instead.
 
     Both routes rewrite files as zstd parquet (see
-    ``tables/versioned.py:TABLE_FILE_COMPRESSION``)."""
+    ``tables/files.py:TABLE_FILE_COMPRESSION``)."""
     from sql_based_etl_spark.tables import delta_interop
 
     if delta_interop.is_delta_dir(ctx.spark, conf["inputURI"]):

@@ -603,8 +603,9 @@ def q_delta_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant-bearing parquet footers), and the final state is read
     back with ``variant_get`` typed extraction and aggregated. DuckDB
     replays the same CDC algebra directly from ``orders``
-    (tables/delta_interop.py: variantType claims in write_delta,
-    _spark_stats_fallback; tables/versioned.py:build_merge_annotated).
+    (tables/delta_interop.py: variantType claims in write_delta;
+    tables/files.py:collect_files, the stats fallback;
+    tables/versioned.py:build_merge_annotated).
     """
     from sql_based_etl_spark.tables.delta_interop import (
         merge_delta,

@@ -62,11 +62,12 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_based_etl_spark.tables.files import DataFile, write_files
 from sql_based_etl_spark.tables.versioned import (
-    TABLE_FILE_COMPRESSION,
     CommitRaceLostError,
     VersionedTable,
     VersionedTableError,
+    cluster_rows,
     publish_text_exclusive,
 )
 
@@ -2631,259 +2632,69 @@ def _prune_by_tree(meta: dict, adds: dict[str, dict],
     return {k: a for k, a in adds.items() if _tree_may_match(meta, a, tree)}
 
 
-def _drop_empty_adds(adds: list[dict]) -> list[dict]:
-    """Drop staged files whose footer stats prove zero records — Spark's
-    non-partitioned writer emits a rowless part-00000 whenever partition
-    0 is empty, and on an append-per-micro-batch table those dead files
-    compound into pure scan/listing overhead. Conservative: an add
-    without stats (non-local URI, odd footer) is kept, and if EVERY add
-    is empty the list is returned unchanged (an intentionally-empty
-    commit still needs its files)."""
-    def _n(a):
-        try:
-            return json.loads(a["stats"])["numRecords"] if a.get("stats") else None
-        except (KeyError, TypeError, ValueError):
-            return None
-
-    nonempty = [a for a in adds if _n(a) != 0]
-    return nonempty if nonempty else adds
+def _add_stats(f: DataFile) -> str:
+    """Delta per-file ``stats`` JSON (numRecords / minValues /
+    maxValues / nullCount) of a written file. Column keys are the
+    file's own column names, so on column-mapped tables they are the
+    physical names — the spec's requirement."""
+    cols = f.columns.items()
+    return json.dumps({
+        "numRecords": f.rows,
+        "minValues": {c: s["min"] for c, s in cols if s["min"] is not None},
+        "maxValues": {c: s["max"] for c, s in cols if s["max"] is not None},
+        "nullCount": {c: s["nulls"] for c, s in cols if s["nulls"] is not None},
+    })
 
 
-def _footer_stats_json(spark: SparkSession, path: str,
-                       adds: list[dict]) -> None:
-    """Attach Delta per-file ``stats`` JSON (numRecords / minValues /
-    maxValues / nullCount, top-level scalar columns) to each ``add``
-    in place, from the parquet footers the writer already produced —
-    driver-side pyarrow reads of KB-scale metadata, zero Spark jobs,
-    O(files) not O(rows). Column KEYS come straight from the footers,
-    so on column-mapped tables they are the physical names — the
-    spec's requirement. Timestamps are skipped (Spark's INT96 default
-    carries no footer stats; absent stats just mean a reader keeps the
-    file conservatively). Best-effort by design: a non-local URI or an
-    odd footer leaves the add without stats, never fails the commit."""
-    from urllib.parse import urlparse
-
-    p = urlparse(path)
-    if p.scheme not in ("", "file"):
-        return
-    root = p.path or path
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return
-    import datetime
-    import os
-
-    def _enc(v):
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat()
-        if isinstance(v, (bytes, bytearray)):
-            return None
-        return v
-
-    footer_unreadable: list[dict] = []
-    for a in adds:
-        try:
-            md = pq.read_metadata(
-                os.path.join(root, urllib.parse.unquote(a["path"])))
-            mins: dict = {}
-            maxs: dict = {}
-            nulls: dict = {}
-            for i in range(md.num_columns if md.num_row_groups else 0):
-                col = md.row_group(0).column(i)
-                name = col.path_in_schema
-                if "." in name:  # nested leaves: top-level scalars only
-                    continue
-                lo = hi = None
-                nn = 0
-                minmax_ok = nulls_ok = True
-                for g in range(md.num_row_groups):
-                    c = md.row_group(g).column(i)
-                    st = c.statistics
-                    if st is None or st.null_count is None:
-                        nulls_ok = False
-                    else:
-                        nn += st.null_count
-                    if st is None or not st.has_min_max:
-                        # an all-null row group has no min/max but its
-                        # null_count (above) is still the skipping
-                        # currency for IS [NOT] NULL pruning
-                        minmax_ok = False
-                        continue
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if nulls_ok:
-                    nulls[name] = nn
-                if not minmax_ok or _enc(lo) is None or _enc(hi) is None:
-                    continue
-                mins[name] = _enc(lo)
-                maxs[name] = _enc(hi)
-            a["stats"] = json.dumps({
-                "numRecords": md.num_rows, "minValues": mins,
-                "maxValues": maxs, "nullCount": nulls,
-            })
-        except Exception:
-            # footer unreadable (e.g. pyarrow predates the VARIANT
-            # logical type) — try the one-job Spark fallback below;
-            # stats stay optional either way
-            footer_unreadable.append(a)
-            continue
-    if footer_unreadable:
-        _spark_stats_fallback(spark, root, footer_unreadable)
-
-
-def _spark_stats_fallback(spark: SparkSession, root: str,
-                          adds: list[dict]) -> None:
-    """ONE Spark aggregation synthesizing per-file ``stats`` for adds
-    whose parquet footers pyarrow cannot parse — today that is files
-    carrying Spark's VARIANT logical type, which the sandbox pyarrow
-    predates. Groups by ``_metadata.file_path`` so the whole batch
-    costs a single job over just-written (page-cache-warm) files, and
-    emits the same JSON shape the footer path does: ``numRecords``
-    always (identity + rowTracking allocation depend on it);
-    min/max for top-level numeric / boolean / date columns; nullCount
-    for every atomic non-variant column. Deliberate skips, each
-    soundness-driven: STRING min/max (Spark orders by UTF-16 code
-    units, the stats contract by UTF-8 bytes — the orders diverge on
-    supplementary characters and an unsound bound must never reach the
-    pruning/OCC lattice), TIMESTAMP min/max (parity with the footer
-    path's INT96 skip; absent stats just keep files conservatively),
-    DECIMAL (json float round-trip could widen or narrow the bound),
-    and non-finite floats. Best-effort like the footer path: any
-    failure leaves the adds without stats, never fails the commit."""
-    import datetime
-    import math
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    try:
-        rel_by_path = {
-            os.path.join(root, urllib.parse.unquote(a["path"])): a
-            for a in adds}
-        df = spark.read.parquet(*rel_by_path)
-        minmax_cols: list[str] = []
-        null_cols: list[str] = []
-        for f in df.schema.fields:
-            t = f.dataType
-            if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType,
-                              T.LongType, T.FloatType, T.DoubleType,
-                              T.BooleanType, T.DateType)):
-                minmax_cols.append(f.name)
-                null_cols.append(f.name)
-            elif isinstance(t, (T.StringType, T.TimestampType,
-                                T.DecimalType)):
-                null_cols.append(f.name)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in minmax_cols:
-            aggs.append(F.min(c).alias(f"__min__{c}"))
-            aggs.append(F.max(c).alias(f"__max__{c}"))
-        for c in null_cols:
-            aggs.append(F.sum(F.col(c).isNull().cast("long"))
-                        .alias(f"__nulls__{c}"))
-        rows = (df.groupBy(F.col("_metadata.file_path").alias("__fp"))
-                .agg(*aggs).collect())
-        # a file with no group row contributed ZERO rows to the scan —
-        # stamp it so _drop_empty_adds (and identity / rowTracking
-        # accounting) see an explicit empty, not missing stats
-        for a in adds:
-            a.setdefault("stats", json.dumps({
-                "numRecords": 0, "minValues": {}, "maxValues": {},
-                "nullCount": {}}))
-
-        def _enc(v):
-            if isinstance(v, (datetime.date, datetime.datetime)):
-                return v.isoformat()
-            if isinstance(v, float) and not math.isfinite(v):
-                return None
-            return v
-
-        for r in rows:
-            d = r.asDict()
-            fp = urllib.parse.unquote(
-                d["__fp"].removeprefix("file://").removeprefix("file:"))
-            a = rel_by_path.get(fp)
-            if a is None:
-                continue
-            mins: dict = {}
-            maxs: dict = {}
-            for c in minmax_cols:
-                lo, hi = _enc(d[f"__min__{c}"]), _enc(d[f"__max__{c}"])
-                if lo is not None and hi is not None:
-                    mins[c] = lo
-                    maxs[c] = hi
-            nulls = {c: int(d[f"__nulls__{c}"]) for c in null_cols
-                     if d[f"__nulls__{c}"] is not None}
-            a["stats"] = json.dumps({
-                "numRecords": int(d["__n"]), "minValues": mins,
-                "maxValues": maxs, "nullCount": nulls,
-            })
-    except Exception:
-        return  # stats are optional; the adds stand without them
-
-
-def _stage_data_files(df: DataFrame, path: str,
-                      part_cols: list[str],
-                      subdir: str | None = None) -> list[dict]:
-    """Write ``df`` as parquet into a dot-prefixed staging dir
-    (invisible to Delta readers — log listing matches data paths only),
-    move the files into the table root preserving hive partition dirs,
-    and return their ``add`` actions (``partitionValues`` parsed back
-    from the dir names, ``__HIVE_DEFAULT_PARTITION__`` → null).
+def _stage_files(df: DataFrame, path: str, meta: dict, mapping_mode: str,
+                 passthrough: tuple[str, ...] = (),
+                 subdir: str | None = None) -> list[dict]:
+    """Write ``df`` (logical column names) as data files of the table
+    and return their ``add`` actions. Mapped tables store data (and
+    ``partitionValues`` keys) under PHYSICAL names — the reader's
+    projection run in reverse (:func:`_project_to_physical`;
+    ``passthrough`` columns ride verbatim). The shared file writer
+    (``tables/files.py``: zstd parquet, rowless files dropped, stats
+    from the footers) writes into a dot-prefixed staging dir (invisible
+    to Delta readers — log listing matches data paths only); the files
+    then move into the table root preserving hive partition dirs. Each
+    ``add`` carries ``partitionValues`` parsed back from the dir names
+    (``__HIVE_DEFAULT_PARTITION__`` → null) and ``stats``
+    (:func:`_add_stats`; absent when no stats could be read).
 
     ``subdir`` relocates the published files under ``<path>/<subdir>/``
     with paths recorded relative to the TABLE root — the shape change
     data files need (``_change_data/...``, underscore-prefixed so plain
-    parquet scans of the table root never see them).
-
-    Every file is written with ``TABLE_FILE_COMPRESSION`` (zstd) — data
-    and change files of write, merge, update, delete and compact alike —
-    whatever the session's default parquet codec."""
+    parquet scans of the table root never see them)."""
     import uuid
 
+    if mapping_mode != "none":
+        df, part_cols = _project_to_physical(df, meta, mapping_mode,
+                                             passthrough=passthrough)
+    else:
+        part_cols = list(meta.get("partitionColumns") or [])
     spark = df.sparkSession
-    fs, _, _ = _fs_and_path(spark, path)
+    fs = _fs_and_path(spark, path)[0]
     staging = f"{path}/.staging-{uuid.uuid4().hex[:12]}"
-    writer = df.write.mode("overwrite").option(
-        "compression", TABLE_FILE_COMPRESSION)
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-
-    jstag = _fs_and_path(spark, staging)[1]
-    new_adds: list[dict] = []
-    it = fs.listFiles(jstag, True)
-    staging_prefix = fs.getFileStatus(jstag).getPath().toString().rstrip("/") + "/"
-    while it.hasNext():
-        st = it.next()
-        full = st.getPath().toString()
-        rel = full[len(staging_prefix):]
-        if not rel.endswith(".parquet") or rel.startswith("_"):
-            continue
-        pv: dict[str, str | None] = {}
-        for seg in rel.split("/")[:-1]:
-            k, _, v = seg.partition("=")
-            pv[k] = (
-                None if v == "__HIVE_DEFAULT_PARTITION__"
-                else urllib.parse.unquote(v)
-            )
-        if subdir:
-            rel = f"{subdir}/{rel}"
+    adds: list[dict] = []
+    for f in write_files(df, staging, part_cols):
+        rel = f"{subdir}/{f.path}" if subdir else f.path
         dst = _fs_and_path(spark, f"{path}/{rel}")[1]
         fs.mkdirs(dst.getParent())
-        if not fs.rename(st.getPath(), dst):
+        if not fs.rename(_fs_and_path(spark, f"{staging}/{f.path}")[1], dst):
             raise VersionedTableError(f"write_delta: cannot move {rel} into {path}")
-        dst_st = fs.getFileStatus(dst)
-        new_adds.append({
+        add = {
             "path": urllib.parse.quote(rel, safe="/="),
-            "partitionValues": {c: pv.get(c) for c in part_cols},
-            "size": int(dst_st.getLen()),
-            "modificationTime": int(dst_st.getModificationTime()),
+            "partitionValues": {c: f.partition_values.get(c) for c in part_cols},
+            "size": f.size,
+            "modificationTime": f.modification_time,
             "dataChange": True,
-        })
-    fs.delete(jstag, True)
-    return new_adds
+        }
+        if f.rows is not None:
+            add["stats"] = _add_stats(f)
+        adds.append(add)
+    fs.delete(_fs_and_path(spark, staging)[1], True)
+    return adds
 
 
 # Writer features the bridge's write shapes (blind appends, full
@@ -2948,7 +2759,7 @@ _BRIDGE_WRITER_FEATURES = {
                          # stats for variant-bearing files fall back to
                          # a one-job Spark aggregation when pyarrow
                          # cannot parse the footer's VARIANT logical
-                         # type (_footer_stats_json), so identity /
+                         # type (tables/files.py), so identity /
                          # rowTracking / stats-scoped OCC keep working.
                          # icebergCompatV2 tables refuse variant by
                          # name (Iceberg's field-id contract has no
@@ -3181,9 +2992,11 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
     deployment (scd2-job.ipynb:153's production format).
 
     ``cluster_by`` (round-11) is CREATE ... CLUSTER BY + clustered
-    writes: the batch is laid out on the clustering key (zorder by
-    default — per-file min/max narrow on every clustered column — or
-    'range' for leading-column locality incl. string keys), and table
+    writes: the batch is laid out on the clustering key by
+    :func:`~sql_based_etl_spark.tables.versioned.cluster_rows` (zorder
+    by default — per-file min/max narrow on every clustered column — or
+    'range' for leading-column locality incl. string keys; any other
+    ``cluster_method`` raises), and table
     CREATION records the columns in the ``delta.clustering`` domain
     (physical names on mapped tables) claiming the
     clustering+domainMetadata features, so ``compact_delta`` OPTIMIZE
@@ -3196,10 +3009,12 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
     which IS Delta's schema encoding) on table creation, ``add`` per
     data file (size/modificationTime from the FileSystem), ``remove``
     tombstones for every live file on overwrite. Data files are written
-    by a normal parquet job into a dot-prefixed staging dir (invisible
-    to Delta readers), then renamed into the table root preserving
-    hive-style partition dirs; ``partitionValues`` are parsed back from
-    those dir names (``__HIVE_DEFAULT_PARTITION__`` → null).
+    by the shared file writer (``tables/files.py``: zstd parquet,
+    rowless files dropped, per-file ``stats`` from the footers) into a
+    dot-prefixed staging dir (invisible to Delta readers), then renamed
+    into the table root preserving hive-style partition dirs;
+    ``partitionValues`` are parsed back from those dir names
+    (``__HIVE_DEFAULT_PARTITION__`` → null).
 
     Fail-loud contract: append with a drifted schema raises (Delta's
     own default) unless ``merge_schema=True``, which widens the table
@@ -3558,35 +3373,11 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
                                        for c in cluster_by]})
 
     df = _enforce_write_obligations(df, meta)
-    if cluster_by:
-        # clustered layout for THIS batch (logical names, before the
-        # physical projection): zorder interleaves bits so per-file
-        # min/max narrow on EVERY clustered column; 'range' gives
-        # leading-column locality and also takes string keys
-        n_out = max(1, df.rdd.getNumPartitions())
-        out_cols = list(df.columns)
-        if cluster_method == "zorder":
-            from sql_based_etl_spark.tables.versioned import zorder_key
-
-            df, zkey = zorder_key(df, cluster_by)
-            df = (df.repartitionByRange(n_out, zkey)
-                  .sortWithinPartitions(zkey).select(*out_cols))
-        elif cluster_method == "range":
-            df = (df.repartitionByRange(n_out, *cluster_by)
-                  .sortWithinPartitions(*cluster_by))
-        else:
-            raise VersionedTableError(
-                f"write_delta: unknown cluster_method {cluster_method!r}"
-                " (zorder | range)")
-    if mapping_mode != "none":
-        # mapped tables store data (and partitionValues keys) under
-        # PHYSICAL names — the reader's projection run in reverse
-        stage_df, stage_parts = _project_to_physical(df, meta, mapping_mode)
-    else:
-        stage_df, stage_parts = df, part_cols
-    new_adds = _stage_data_files(stage_df, path, stage_parts)
-    _footer_stats_json(spark, path, new_adds)
-    new_adds = _drop_empty_adds(new_adds)
+    # clustered layout for THIS batch (logical names, before the
+    # physical projection), as many files as the batch has partitions
+    df = cluster_rows(df, cluster_by, cluster_method,
+                      max(1, df.rdd.getNumPartitions()) if cluster_by else None)
+    new_adds = _stage_files(df, path, meta, mapping_mode)
     if idents:
         upd = _advance_identity_hwm(meta, idents, new_adds)
         if upd is not None:
@@ -3885,10 +3676,6 @@ def merge_delta(source: DataFrame, path: str, condition: str,
         read_tree = _condition_scope_tree(condition, t_cols, "target")
     scan_live = _prune_by_tree(meta, live, read_tree)
 
-    def _norm_uri(p: str) -> str:
-        u = urllib.parse.urlparse(p)
-        return urllib.parse.unquote(f"{u.netloc}{u.path}" if u.scheme else p)
-
     matched_keys: list[str] = []
     validated_in_scan = False
     if live and when_not_matched_by_source_delete:
@@ -3898,7 +3685,7 @@ def merge_delta(source: DataFrame, path: str, condition: str,
         for k, a in scan_live.items():
             rel = urllib.parse.unquote(a["path"])
             absolute = rel if "://" in rel or rel.startswith("/") else posixpath.join(path, rel)
-            abs2key[_norm_uri(absolute)] = k
+            abs2key[_norm_file_uri(absolute)] = k
         # fused pass (r13): matched files AND the unique-match
         # validation count in ONE inner-join job — the separate shapes
         # paid the target⋈source join twice (semi-join here, inner
@@ -3942,7 +3729,7 @@ def merge_delta(source: DataFrame, path: str, condition: str,
                 .select("__file").distinct().collect()
             ]
         for fname in matched_names:
-            key = abs2key.get(_norm_uri(fname))
+            key = abs2key.get(_norm_file_uri(fname))
             if key is None:
                 raise VersionedTableError(
                     f"merge_delta: matched file {fname!r} does not "
@@ -4041,49 +3828,24 @@ def merge_delta(source: DataFrame, path: str, condition: str,
             # coalesce(1) there would funnel millions of inserted rows
             # through one write task).
             result = result.coalesce(len(matched))
-        if mapping_mode != "none":
-            # rewritten files (and their partitionValues keys) must
-            # carry PHYSICAL names, same as every other file of the
-            # mapped table — the reader's projection run in reverse
-            stage_df, stage_parts = _project_to_physical(
-                result, meta, mapping_mode, passthrough=tuple(rt_pass))
-        else:
-            stage_df, stage_parts = result, part_cols
-        new_adds = _stage_data_files(stage_df, path, stage_parts)
-        _footer_stats_json(spark, path, new_adds)
-        new_adds = _drop_empty_adds(new_adds)
+        new_adds = _stage_files(result, path, meta, mapping_mode,
+                                passthrough=tuple(rt_pass))
         if idents:
             upd = _advance_identity_hwm(meta, idents, new_adds)
             if upd is not None:
                 meta = upd
                 emit_meta = True
 
-        cdc_adds: list[dict] = []
-        if cdf:
-            def _cdc(rows: DataFrame, ctype: str) -> DataFrame:
-                # cdc parquet stores the table's data columns under the
-                # same (physical, on mapped tables) names as data files;
-                # _change_type is not a table column and is stored
-                # verbatim — the library's shape
-                if mapping_mode != "none":
-                    rows, _ = _project_to_physical(rows, meta, mapping_mode)
-                return rows.withColumn("_change_type", F.lit(ctype))
-
-            pre = _cdc(resolved.filter("__updated").select(*[
-                F.col(f"__pre_{c}").alias(c) for c in t_cols
-            ]), "update_preimage")
-            post = _cdc(resolved.filter("__updated").select(*t_cols),
-                        "update_postimage")
-            # inserts come from the post-allocation relation so the
-            # change feed shows allocated identity values, not NULLs
-            ins = _cdc(resolved.filter("__inserted").select(*t_cols),
-                       "insert")
-            dels = _cdc(resolved.filter("__deleted").select(*[
-                F.col(f"__pre_{c}").alias(c) for c in t_cols
-            ]), "delete")
-            cdc_adds = _stage_data_files(
-                pre.unionByName(post).unionByName(ins).unionByName(dels),
-                path, stage_parts, subdir="_change_data")
+        # inserts come from the post-allocation relation so the change
+        # feed shows allocated identity values, not NULLs
+        cdc_adds = _stage_changes({
+            "update_preimage": resolved.filter("__updated").select(*[
+                F.col(f"__pre_{c}").alias(c) for c in t_cols]),
+            "update_postimage": resolved.filter("__updated").select(*t_cols),
+            "insert": resolved.filter("__inserted").select(*t_cols),
+            "delete": resolved.filter("__deleted").select(*[
+                F.col(f"__pre_{c}").alias(c) for c in t_cols]),
+        }, meta, mapping_mode, path) if cdf else []
     finally:
         annotated.unpersist()
         try:
@@ -4520,8 +4282,8 @@ def _merge_delete_dv(source: DataFrame, path: str, log_dir: str,
             return latest  # nothing deleted: commit would be pure churn
         matched, dv_descs, n_del = res
         new_adds = _dv_new_adds(spark, path, matched, dv_descs)
-        cdc_adds = (_stage_cdc_delete(hits, meta, mapping_mode, part_cols,
-                                      path, t_cols) if cdf else [])
+        cdc_adds = (_stage_changes({"delete": hits.select(*t_cols)}, meta,
+                                   mapping_mode, path) if cdf else [])
     finally:
         pairs.unpersist()
     now_ms = int(time.time() * 1000)
@@ -4708,7 +4470,6 @@ def delete_delta(spark: SparkSession, path: str,
 
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     t_cols = [f.name for f in schema.fields]
-    part_cols = list(meta.get("partitionColumns") or [])
 
     if cond is None:
         # string predicates get the same BooleanEquality coercion as
@@ -4749,16 +4510,11 @@ def delete_delta(spark: SparkSession, path: str,
             return latest  # nothing matched: commit would be pure churn
         matched, dv_descs, n_del = res
 
-        cdc_adds: list[dict] = []
-        new_adds: list[dict] = []
         removes: list[dict] = list(matched.values())
         now_ms = int(time.time() * 1000)
 
         if dv_mode:
             new_adds = _dv_new_adds(spark, path, matched, dv_descs)
-            if cdf:
-                cdc_adds = _stage_cdc_delete(
-                    hits, meta, mapping_mode, part_cols, path, t_cols)
         else:
             # copy-on-write: rewrite ONLY the touched files without
             # their matched rows (NULL predicate keeps the row — SQL
@@ -4770,18 +4526,10 @@ def delete_delta(spark: SparkSession, path: str,
             survivors = sub.filter(
                 ~F.coalesce(cond.cast("boolean"), F.lit(False))
             ).select(*t_cols, *rt_pass)
-            if mapping_mode != "none":
-                stage_df, stage_parts = _project_to_physical(
-                    survivors, meta, mapping_mode,
-                    passthrough=tuple(rt_pass))
-            else:
-                stage_df, stage_parts = survivors, part_cols
-            new_adds = _stage_data_files(stage_df, path, stage_parts)
-            _footer_stats_json(spark, path, new_adds)
-            new_adds = _drop_empty_adds(new_adds)
-            if cdf:
-                cdc_adds = _stage_cdc_delete(
-                    hits, meta, mapping_mode, part_cols, path, t_cols)
+            new_adds = _stage_files(survivors, path, meta, mapping_mode,
+                                    passthrough=tuple(rt_pass))
+        cdc_adds = (_stage_changes({"delete": hits.select(*t_cols)}, meta,
+                                   mapping_mode, path) if cdf else [])
     finally:
         hits.unpersist()
 
@@ -4855,20 +4603,19 @@ def delete_delta(spark: SparkSession, path: str,
     return next_v
 
 
-def _stage_cdc_delete(hits: DataFrame, meta: dict, mapping_mode: str,
-                      part_cols: list[str], path: str,
-                      t_cols: list[str]) -> list[dict]:
-    """Stage the matched rows as ``_change_data/`` parquet with
-    ``_change_type='delete'`` — the CDF writer obligation shared by
-    both delete routes (same shape as :func:`merge_delta`'s cdc)."""
-    rows = hits.select(*t_cols)
-    if mapping_mode != "none":
-        rows, stage_parts = _project_to_physical(rows, meta, mapping_mode)
-    else:
-        stage_parts = part_cols
-    return _stage_data_files(
-        rows.withColumn("_change_type", F.lit("delete")),
-        path, stage_parts, subdir="_change_data")
+def _stage_changes(changes: dict[str, DataFrame], meta: dict,
+                   mapping_mode: str, path: str) -> list[dict]:
+    """Stage change rows as ``_change_data/`` files — the CDF writer
+    obligation of merge, update and both delete routes. ``changes`` maps
+    a ``_change_type`` to rows of the table's data columns, stored under
+    the same (physical, on mapped tables) names as data files;
+    ``_change_type`` is not a table column and is stored verbatim — the
+    library's shape."""
+    rows = _functools.reduce(DataFrame.unionByName, [
+        df.withColumn("_change_type", F.lit(ctype))
+        for ctype, df in changes.items()])
+    return _stage_files(rows, path, meta, mapping_mode,
+                        passthrough=("_change_type",), subdir="_change_data")
 
 
 def update_delta(spark: SparkSession, path: str,
@@ -4954,7 +4701,6 @@ def update_delta(spark: SparkSession, path: str,
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     t_cols = [f.name for f in schema.fields]
     t_dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-    part_cols = list(meta.get("partitionColumns") or [])
 
     unknown = [c for c in set if c not in t_dtypes]
     if unknown:
@@ -5043,31 +4789,14 @@ def update_delta(spark: SparkSession, path: str,
             # merge treatment — an update touching 1 of N files must
             # not fan out to shuffle-partition-many small files)
             result = result.coalesce(len(matched))
-        if mapping_mode != "none":
-            stage_df, stage_parts = _project_to_physical(
-                result, meta, mapping_mode, passthrough=tuple(rt_pass))
-        else:
-            stage_df, stage_parts = result, part_cols
-        new_adds = _stage_data_files(stage_df, path, stage_parts)
-        _footer_stats_json(spark, path, new_adds)
-        new_adds = _drop_empty_adds(new_adds)
+        new_adds = _stage_files(result, path, meta, mapping_mode,
+                                passthrough=tuple(rt_pass))
 
-        cdc_adds: list[dict] = []
-        if cdf:
-            def _cdc(rows: DataFrame, ctype: str) -> DataFrame:
-                if mapping_mode != "none":
-                    rows, _ = _project_to_physical(rows, meta, mapping_mode)
-                return rows.withColumn("_change_type", F.lit(ctype))
-
-            pre = _cdc(ann.filter("__hit").select(*[
-                F.col(f"__pre_{c}").alias(c) for c in t_cols
-            ]), "update_preimage")
-            post = _cdc(ann.filter("__hit").select(*t_cols),
-                        "update_postimage")
-            cdc_adds = _stage_data_files(
-                pre.unionByName(post), path,
-                stage_parts if mapping_mode != "none" else part_cols,
-                subdir="_change_data")
+        cdc_adds = _stage_changes({
+            "update_preimage": ann.filter("__hit").select(*[
+                F.col(f"__pre_{c}").alias(c) for c in t_cols]),
+            "update_postimage": ann.filter("__hit").select(*t_cols),
+        }, meta, mapping_mode, path) if cdf else []
     finally:
         ann.unpersist()
 
@@ -5152,11 +4881,13 @@ def compact_delta(spark: SparkSession, path: str,
 
     ``cluster_by`` + ``cluster_method='zorder'`` (default) clusters the
     rewrite on an interleaved-bit key
-    (:func:`~sql_based_etl_spark.tables.versioned.zorder_key` — the
-    same machinery as VersionedTable's clustered writes), narrowing
+    (:func:`~sql_based_etl_spark.tables.versioned.cluster_rows` — the
+    one layout of every clustered write on both formats), narrowing
     per-file min/max ranges on EVERY clustered column at once;
-    ``'range'`` range-partitions + sorts for leading-column locality.
-    Either way each ``add`` carries Delta per-file ``stats`` JSON
+    ``'range'`` range-partitions + sorts for leading-column locality;
+    any other ``cluster_method`` raises. Either way the files go
+    through the shared writer (``tables/files.py``): rowless files are
+    dropped, and each ``add`` carries Delta per-file ``stats`` JSON
     (footer-derived, driver-side, O(files)) so library readers — and
     anything else that honors add.stats — actually skip files on those
     columns. This is what gives a long-lived BRIDGE table the same
@@ -5203,8 +4934,6 @@ def compact_delta(spark: SparkSession, path: str,
     through the same conditional-create protocol as any other. Returns
     the committed version."""
     import time
-
-    from sql_based_etl_spark.tables.versioned import zorder_key
 
     path = path.rstrip("/")
     log_dir = f"{path}/_delta_log"
@@ -5306,27 +5035,11 @@ def compact_delta(spark: SparkSession, path: str,
                         "cluster_by explicitly to override)",
                         path, flat, resolved,
                     )
-    part_cols = list(meta.get("partitionColumns") or [])
     df = (_snapshot_with_row_ids(spark, path, meta, live, rt_id, rt_ver)
           if rt_stable else _snapshot_df(spark, path, meta, live))
-    if cluster_by and cluster_method == "zorder":
-        out_cols = list(df.columns)
-        df, zkey = zorder_key(df, cluster_by)
-        df = (df.repartitionByRange(target_files, zkey)
-              .sortWithinPartitions(zkey).select(*out_cols))
-    elif cluster_by:
-        df = (df.repartitionByRange(target_files, *cluster_by)
-              .sortWithinPartitions(*cluster_by))
-    else:
-        df = df.repartition(target_files)
-    if mapping_mode != "none":
-        stage_df, stage_parts = _project_to_physical(
-            df, meta, mapping_mode, passthrough=tuple(rt_pass))
-    else:
-        stage_df, stage_parts = df, part_cols
-    new_adds = _stage_data_files(stage_df, path, stage_parts)
-    _footer_stats_json(spark, path, new_adds)
-    new_adds = _drop_empty_adds(new_adds)
+    df = cluster_rows(df, cluster_by, cluster_method, target_files)
+    new_adds = _stage_files(df, path, meta, mapping_mode,
+                            passthrough=tuple(rt_pass))
     now_ms = int(time.time() * 1000)
     actions: list[dict] = [{
         "commitInfo": {

@@ -1,0 +1,315 @@
+"""The data-file layer both table formats share: one writer and one
+stats reader.
+
+:func:`write_files` writes a DataFrame as zstd parquet into a fresh
+directory and returns one :class:`DataFile` per file written: its path,
+hive partition values, rows, bytes and per-column min/max/null counts.
+The native ``VersionedTable`` maps each record into its manifest
+``stats`` entry; the Delta bridge maps it into an ``add`` action and its
+``stats`` JSON (the protocol's per-file statistics,
+https://github.com/delta-io/delta/blob/master/PROTOCOL.md#per-file-statistics).
+
+Stats come from the parquet footers the writer just produced, read
+driver-side with pyarrow: KB of metadata per file and no Spark job. One
+Spark aggregate over the files stands in only for footers pyarrow
+cannot read (Spark's VARIANT type) and for directories on non-local
+URIs. Every data-skipping and conflict-scoping decision of both formats
+trusts these numbers, so both paths apply one rule per column:
+
+- only top-level scalar columns get stats;
+- an all-null row group adds to the null count and keeps the bounds;
+- binary, decimal, timestamp and non-finite float columns get a null
+  count but no bounds: binary, NaN and infinities have no JSON form,
+  decimals would round through JSON floats, Spark's default INT96
+  timestamps carry no footer stats, and parquet records a NaN as the
+  max;
+- what a footer does not record (a null count, or the bounds of a row
+  group that holds values) is None: unknown, so pruning keeps the file.
+"""
+
+from __future__ import annotations
+
+import datetime
+import math
+import os
+import urllib.parse
+from dataclasses import dataclass, field
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Parquet codec of every data and change file either table format
+# writes. Set per writer, not in the session conf, so tables stay
+# compact under any session. zstd shrinks high-entropy text such as hex
+# digests, which snappy stores almost raw; readers need zstd parquet
+# support (Spark >= 3.2, or 3.0/3.1 with Hadoop's native zstd; Athena,
+# DuckDB, pyarrow and delta-rs all read it).
+TABLE_FILE_COMPRESSION = "zstd"
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+# Spark types the fallback aggregate bounds, and the wider set it
+# counts nulls for — the same split :func:`_bound` makes on footer
+# values
+_BOUNDED = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+            T.FloatType, T.DoubleType, T.BooleanType, T.DateType,
+            T.StringType)
+_COUNTED = _BOUNDED + (T.BinaryType, T.DecimalType, T.TimestampType,
+                       T.TimestampNTZType)
+
+# session-id → fs.defaultFS (one py4j fetch per session; see local_path)
+_DEFAULT_FS_CACHE: dict[int, str] = {}
+
+
+@dataclass
+class DataFile:
+    """One written parquet file. ``path`` is relative to the written
+    directory as on disk ('/'-separated, partition directories still
+    hive-escaped); ``partition_values`` are parsed back from those
+    directories. ``rows`` is None when no stats could be read.
+    ``columns`` maps a column to ``{"min", "max", "nulls"}``, each None
+    when unknown; min and max are both set or both None."""
+
+    path: str
+    partition_values: dict[str, str | None]
+    size: int
+    modification_time: int
+    rows: int | None = None
+    columns: dict[str, dict] = field(default_factory=dict)
+
+
+def local_path(spark: SparkSession, uri: str) -> str | None:
+    """OS path of ``uri`` when it provably lives on the LOCAL
+    filesystem (explicit ``file:`` URI, or a bare path under a
+    ``file:`` defaultFS), else None.
+
+    Local metadata reads (listing, footers, manifests) then use plain
+    ``os``/``open`` instead of the Hadoop FS object via py4j, whose
+    Path/FileSystem round trips cost ~1-3 ms of driver latency each. On
+    HDFS/object stores the Hadoop path is used unchanged."""
+    if uri.startswith("file:"):
+        u = urllib.parse.urlparse(uri)
+        # a non-empty authority (file://host/…) names a REMOTE host:
+        # stripping it would silently read the wrong local path — keep
+        # the Hadoop path for anything but the local host
+        if u.netloc not in ("", "localhost"):
+            return None
+        return u.path or "/"
+    head = uri.split("/", 1)[0]
+    if "://" in uri or ":" in head:
+        return None  # non-file scheme
+    # bare path: local only when the default filesystem is file:
+    key = id(spark)
+    default = _DEFAULT_FS_CACHE.get(key)
+    if default is None:
+        default = (
+            spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+            .get("fs.defaultFS", "file:///")
+        )
+        _DEFAULT_FS_CACHE[key] = default
+    return uri if default.startswith("file:") else None
+
+
+def write_files(df: DataFrame, uri: str, partition_by: list[str] | None = None,
+                options: dict[str, str] | None = None,
+                stats_columns: list[str] | None = None) -> list[DataFile]:
+    """Write ``df`` as ``TABLE_FILE_COMPRESSION`` parquet into the fresh
+    directory ``uri`` (hive partition directories for ``partition_by``;
+    ``options`` are extra parquet writer options) and return its files
+    with stats (see :func:`collect_files`)."""
+    writer = df.write.mode("errorifexists").option(
+        "compression", TABLE_FILE_COMPRESSION)
+    for k, v in (options or {}).items():
+        writer = writer.option(k, v)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(uri)
+    return collect_files(df.sparkSession, uri, df.schema, partition_by,
+                         stats_columns)
+
+
+def collect_files(spark: SparkSession, uri: str, schema: T.StructType,
+                  partition_by: list[str] | None = None,
+                  stats_columns: list[str] | None = None) -> list[DataFile]:
+    """The parquet files under ``uri`` (sorted by path; ``_``/``.``
+    names skipped, as Spark's own listing does) with their stats, for
+    ``stats_columns`` only when given; the fallback aggregate reads the
+    files under ``schema``, the written DataFrame's. Rowless files —
+    Spark writes one per empty writer partition — are deleted and not
+    returned, unless every file is rowless: an empty write still needs
+    one file to carry its schema."""
+    partition_by = list(partition_by or [])
+    local = local_path(spark, uri)
+    files = _list_local(local) if local is not None else _list_hadoop(spark, uri)
+    want = None if stats_columns is None else set(stats_columns)
+    unread = files
+    if local is not None:
+        import pyarrow as pa
+
+        unread = []
+        for f in files:
+            try:
+                f.rows, f.columns = footer_stats(os.path.join(local, f.path), want)
+            except (OSError, ValueError, pa.ArrowException):
+                unread.append(f)  # e.g. a footer with Spark's VARIANT type
+    if unread:
+        _scan_stats(spark, uri, unread, schema, partition_by, want)
+    rowless = [f for f in files if f.rows == 0]
+    if rowless and len(rowless) < len(files):
+        fs, jvm = _hadoop_fs(spark, uri)
+        for f in rowless:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{uri}/{f.path}"), False)
+        files = [f for f in files if f.rows != 0]
+    return files
+
+
+def footer_stats(path: str, columns: set[str] | None = None
+                 ) -> tuple[int, dict[str, dict]]:
+    """``(rows, {column: {min, max, nulls}})`` of one local parquet file,
+    from its footer alone (``columns`` narrows the set). Raises OSError
+    when pyarrow cannot parse the footer (Spark's VARIANT type)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    out: dict[str, dict] = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        # a top-level scalar is a leaf whose path is its own name and
+        # that repeats nowhere (lists, maps and struct fields fail one)
+        if col.path != col.name or col.max_repetition_level:
+            continue
+        if columns is not None and col.name not in columns:
+            continue
+        nulls: int | None = 0
+        lo = hi = None
+        bounded = True
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(i).statistics
+            if st is None or not st.has_null_count:
+                nulls = None
+            elif nulls is not None:
+                nulls += st.null_count
+            if st is not None and st.has_min_max:
+                try:
+                    mn, mx = _bound(st.min), _bound(st.max)
+                except NotImplementedError:  # e.g. Spark's INT64 decimals
+                    mn = mx = None
+                if mn is None or mx is None:
+                    bounded = False
+                else:
+                    lo = mn if lo is None else min(lo, mn)
+                    hi = mx if hi is None else max(hi, mx)
+            elif st is None or not st.has_null_count or st.null_count < rg.num_rows:
+                bounded = False  # the row group holds values, unbounded
+        if not bounded:
+            lo = hi = None
+        if nulls is not None or lo is not None:
+            out[col.name] = {"min": lo, "max": hi, "nulls": nulls}
+    return md.num_rows, out
+
+
+def _bound(v: object) -> object:
+    """``v`` as a stat bound, or None when its type gets no bounds (see
+    the module rules). Numbers, booleans and strings stay as they are:
+    Python orders them as parquet footers and Spark's ``min``/``max``
+    do (strings by code point, which is UTF-8 byte order). Dates become
+    ISO text, which sorts chronologically."""
+    if isinstance(v, float):
+        return v if math.isfinite(v) else None
+    if isinstance(v, (bool, int, str)):
+        return v
+    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+        return v.isoformat()
+    return None
+
+
+def _scan_stats(spark: SparkSession, uri: str, files: list[DataFile],
+                schema: T.StructType, partition_by: list[str],
+                want: set[str] | None) -> None:
+    """Fill ``rows`` and ``columns`` of ``files`` with ONE Spark
+    aggregate over them, grouped by ``_metadata.file_path``, under the
+    same per-column rule as the footer path. A file no group row names
+    held no rows."""
+    fields = [f for f in schema.fields if f.name not in partition_by]
+    stat_fields = [f for f in fields if isinstance(f.dataType, _COUNTED)
+                   and (want is None or f.name in want)]
+    df = spark.read.schema(T.StructType(fields)).parquet(
+        *[f"{uri}/{f.path}" for f in files])
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for i, f in enumerate(stat_fields):
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        if isinstance(f.dataType, _BOUNDED):
+            aggs += [F.min(c).alias(f"min{i}"), F.max(c).alias(f"max{i}")]
+        aggs.append(F.sum(c.isNull().cast("long")).alias(f"nulls{i}"))
+    depth = len(partition_by) + 1  # path segments of a file under uri
+    by_path = {f.path: f for f in files}
+    for f in files:
+        f.rows, f.columns = 0, {}
+    for r in (df.groupBy(F.col("_metadata.file_path").alias("fp"))
+              .agg(*aggs).collect()):
+        # _metadata.file_path is URL-encoded; unquoting restores the
+        # on-disk (hive-escaped) names the listing returned
+        rel = "/".join(urllib.parse.unquote(r["fp"]).split("/")[-depth:])
+        f = by_path[rel]
+        f.rows = r["rows"]
+        for i, sf in enumerate(stat_fields):
+            lo = hi = None
+            if isinstance(sf.dataType, _BOUNDED):
+                lo, hi = _bound(r[f"min{i}"]), _bound(r[f"max{i}"])
+                if lo is None or hi is None:
+                    lo = hi = None
+            f.columns[sf.name] = {"min": lo, "max": hi, "nulls": r[f"nulls{i}"]}
+
+
+def _is_data(rel: str) -> bool:
+    """Spark's listing rule: ``.`` names, and ``_`` names other than
+    partition directories (``_c=1``), hold no data."""
+    return rel.endswith(".parquet") and not any(
+        n.startswith(".") or (n.startswith("_") and "=" not in n)
+        for n in rel.split("/"))
+
+
+def _partition_values(rel: str) -> dict[str, str | None]:
+    """Hive partition values of a relative file path
+    (``__HIVE_DEFAULT_PARTITION__`` is null)."""
+    pv: dict[str, str | None] = {}
+    for seg in rel.split("/")[:-1]:
+        k, _, v = seg.partition("=")
+        pv[urllib.parse.unquote(k)] = (
+            None if v == _HIVE_NULL else urllib.parse.unquote(v))
+    return pv
+
+
+def _list_local(root: str) -> list[DataFile]:
+    out = []
+    for d, _, names in os.walk(root):
+        for n in names:
+            rel = os.path.relpath(os.path.join(d, n), root)
+            if _is_data(rel):
+                st = os.stat(os.path.join(d, n))
+                out.append(DataFile(rel, _partition_values(rel), st.st_size,
+                                    st.st_mtime_ns // 1_000_000))
+    return sorted(out, key=lambda f: f.path)
+
+
+def _list_hadoop(spark: SparkSession, uri: str) -> list[DataFile]:
+    fs, jvm = _hadoop_fs(spark, uri)
+    jpath = jvm.org.apache.hadoop.fs.Path(uri)
+    root = fs.getFileStatus(jpath).getPath().toString().rstrip("/") + "/"
+    out = []
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        st = it.next()
+        rel = st.getPath().toString()[len(root):]
+        if _is_data(rel):
+            out.append(DataFile(rel, _partition_values(rel), int(st.getLen()),
+                                int(st.getModificationTime())))
+    return sorted(out, key=lambda f: f.path)
+
+
+def _hadoop_fs(spark: SparkSession, uri: str):
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    return jvm.org.apache.hadoop.fs.Path(uri).getFileSystem(conf), jvm

@@ -72,19 +72,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_based_etl_spark.tables.files import DataFile, local_path, write_files
+
 
 class VersionedTableError(RuntimeError):
     pass
-
-
-# Parquet codec of every data and change file either table format
-# writes (this module and the Delta bridge). Set per writer, not in the
-# session conf, so tables stay compact under any session. zstd shrinks
-# high-entropy text such as hex digests, which snappy stores almost
-# raw; readers need zstd parquet support (Spark >= 3.2, or 3.0/3.1
-# with Hadoop's native zstd; Athena, DuckDB, pyarrow and delta-rs all
-# read it).
-TABLE_FILE_COMPRESSION = "zstd"
 
 
 class CommitRaceLostError(VersionedTableError):
@@ -333,28 +325,6 @@ def _sql_literal(v: object) -> str:
     return str(v)
 
 
-# Column types that get per-file min/max stats. Arrays/maps/structs/
-# binary are excluded: range stats are meaningless or huge for them.
-_STATS_TYPES = (
-    "byte", "short", "int", "bigint", "float", "double",
-    "string", "date", "timestamp", "timestamp_ntz", "boolean",
-)
-
-
-def _stat_encode(v: object) -> object:
-    """JSON-encode a stat bound so that Python-comparing two encoded
-    values matches SQL ordering: numbers stay numbers, timestamps/dates
-    become ISO strings (space separator — lexicographic order is
-    chronological for a fixed format with no trailing fraction zeros)."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        return v.isoformat(sep=" ")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return v
-
-
 def _manifest_tree_may_match(fstats: dict | None, tree,
                              types: dict[str, str]) -> bool:
     """Scope-tree evaluation over one file's manifest stats
@@ -385,7 +355,10 @@ def _manifest_tree_may_match(fstats: dict | None, tree,
 
     def _coerce(typ: str | None, v):
         if typ is not None and typ.startswith("timestamp"):
-            return _stat_encode(v) if isinstance(v, _dt.datetime) else None
+            # manifests written before timestamps lost their bounds hold
+            # them as ISO text with a space separator
+            return (v.isoformat(sep=" ") if isinstance(v, _dt.datetime)
+                    else None)
         return prune_coerce(typ, v)
 
     def _atom(c: str, op: str, lit) -> frozenset:
@@ -565,8 +538,7 @@ def build_merge_annotated(
 def zorder_key(df: DataFrame, cols: list[str],
                bits: int = 16) -> tuple[DataFrame, str]:
     """Append an interleaved-bit Z-order key column over ``cols``
-    (shared by :meth:`VersionedTable.write`'s clustered rewrites and
-    the Delta bridge's OPTIMIZE ZORDER).
+    (the ``'zorder'`` layout of :func:`cluster_rows`).
 
     Each column is min-max scaled to a ``bits``-bit code (one 1-row
     aggregate, broadcast — no sort, no window; skewed distributions
@@ -616,9 +588,39 @@ def zorder_key(df: DataFrame, cols: list[str],
                      if c.startswith("__zmn_") or c.startswith("__zmx_")]), "__zkey"
 
 
-# session-id → fs.defaultFS (one py4j fetch per session; see
-# VersionedTable._local_root)
-_DEFAULT_FS_CACHE: dict[int, str] = {}
+def cluster_rows(df: DataFrame, cluster_by: list[str] | None,
+                 method: str, num_files: int | None) -> DataFrame:
+    """Lay ``df`` out as ``num_files`` files: the one clustering layout
+    of every write, rewrite and OPTIMIZE on both formats. ``'range'``
+    range-partitions on ``cluster_by`` and sorts within each file
+    (liquid-clustering analogue), so each file covers a narrow slice of
+    the LEADING column — string keys included; ``'zorder'`` does the
+    same on their :func:`zorder_key`, narrowing every clustered column
+    at once. Clustered, ``num_files`` None means the default
+    parallelism; unclustered, ``df`` is only repartitioned when
+    ``num_files`` is given. An unknown ``method`` raises either way."""
+    if method not in ("range", "zorder"):
+        raise VersionedTableError(
+            f"unknown cluster_method {method!r} (range | zorder)")
+    if not cluster_by:
+        return df.repartition(int(num_files)) if num_files else df
+    n = (int(num_files) if num_files
+         else df.sparkSession.sparkContext.defaultParallelism)
+    if method == "range":
+        return df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
+            *cluster_by)
+    out_cols = list(df.columns)
+    df, zkey = zorder_key(df, cluster_by)
+    return (df.repartitionByRange(n, zkey).sortWithinPartitions(zkey)
+            .select(*out_cols))
+
+
+def manifest_stats(paths: list[str], files: list[DataFile]) -> dict:
+    """Manifest ``stats`` entries ``{path: {rows, columns}}`` of written
+    files (``paths`` are their table-relative paths). A file whose
+    stats could not be read gets no entry, so pruning keeps it."""
+    return {p: {"rows": f.rows, "columns": f.columns}
+            for p, f in zip(paths, files) if f.rows is not None}
 
 
 class VersionedTable:
@@ -631,45 +633,6 @@ class VersionedTable:
     def _jpath(self, *parts: str):
         jvm = self.spark.sparkContext._jvm  # noqa: SLF001
         return jvm.org.apache.hadoop.fs.Path("/".join((self.path, *parts)))
-
-    def _local_root(self) -> str | None:
-        """OS path of the table when it provably lives on the LOCAL
-        filesystem (explicit ``file:`` URI, or a bare path under a
-        ``file:`` defaultFS) — else None.
-
-        Metadata READS (version listing, manifest fetch) then go
-        through plain ``os``/``open`` instead of the Hadoop FS object
-        via py4j: a merge makes dozens of such calls and each py4j
-        Path/FileSystem round trip costs ~1-3 ms of driver latency
-        (~0.5s per q_scd2_merge run, measured r13). On HDFS/object
-        stores this returns None and the Hadoop path is used
-        unchanged; WRITES always use the Hadoop path (the atomic
-        publish protocol lives there)."""
-        p = self.path
-        if p.startswith("file:"):
-            from urllib.parse import urlparse
-
-            u = urlparse(p)
-            # a non-empty authority (file://host/…) names a REMOTE
-            # host: stripping it would silently read the wrong local
-            # path (versions() returning [] for an existing table) —
-            # keep the Hadoop path for anything but the local host
-            if u.netloc not in ("", "localhost"):
-                return None
-            return u.path or "/"
-        head = p.split("/", 1)[0]
-        if "://" in p or ":" in head:
-            return None  # non-file scheme
-        # bare path: local only when the default filesystem is file:
-        key = id(self.spark)
-        default = _DEFAULT_FS_CACHE.get(key)
-        if default is None:
-            default = (
-                self.spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-                .get("fs.defaultFS", "file:///")
-            )
-            _DEFAULT_FS_CACHE[key] = default
-        return p if default.startswith("file:") else None
 
     def _fs(self):
         conf = self.spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
@@ -698,7 +661,7 @@ class VersionedTable:
     # --- metadata ---------------------------------------------------------
 
     def versions(self) -> list[int]:
-        local = self._local_root()
+        local = local_path(self.spark, self.path)
         if local is not None:
             try:
                 names = os.listdir(os.path.join(local, "_meta"))
@@ -724,7 +687,7 @@ class VersionedTable:
 
     def manifest(self, version: int) -> dict:
         name = f"v{version:08d}.json"
-        local = self._local_root()
+        local = local_path(self.spark, self.path)
         if local is not None:
             with open(os.path.join(local, "_meta", name), encoding="utf-8") as fh:
                 txt = fh.read()
@@ -868,189 +831,38 @@ class VersionedTable:
             df = df.filter(filters_column(filters))
         return df
 
-    _ZORDER_BITS = 16
-
-    def _zorder_key(self, df: DataFrame, cols: list[str]) -> tuple[DataFrame, str]:
-        return zorder_key(df, cols, self._ZORDER_BITS)
-
-    def _write_data_files(self, df: DataFrame, version: int,
-                          num_partitions: int | None,
-                          cluster_by: list[str] | None = None,
-                          cluster_method: str = "range",
-                          bloom_filter_columns: list[str] | None = None,
-                          unique_dir: bool = False) -> list[str]:
-        """Write ``df`` under ``data/v{version}/`` (appends:
-        ``data/v{version}-{uuid8}/`` — a unique staging dir per writer,
-        so concurrent appends that both picked the same next version
-        never collide at the data write; the manifest's explicit file
-        list makes the dir name irrelevant to readers) and return the
-        table-relative paths of the files written.
-
-        ``cluster_by`` with ``cluster_method='range'`` range-partitions
-        on the given columns and sorts within partitions
-        (liquid-clustering analogue): each output file covers a narrow,
-        mostly disjoint slice of the clustering key space, which is
-        what makes min/max data skipping selective — on the LEADING
-        column. ``cluster_method='zorder'`` clusters on an
-        interleaved-bit key instead, narrowing per-file ranges on EVERY
-        clustered column at once (multi-dimensional skipping)."""
-        if cluster_by and cluster_method == "zorder":
-            n = int(num_partitions) if num_partitions else \
-                df.sparkSession.sparkContext.defaultParallelism
-            out_cols = list(df.columns)
-            df, zkey = self._zorder_key(df, cluster_by)
-            df = (
-                df.repartitionByRange(n, zkey)
-                .sortWithinPartitions(zkey)
-                .select(*out_cols)
-            )
-        elif cluster_by:
-            n = int(num_partitions) if num_partitions else \
-                df.sparkSession.sparkContext.defaultParallelism
-            df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
-        elif num_partitions:
-            df = df.repartition(int(num_partitions))
+    def _write_files(self, df: DataFrame, version: int,
+                     num_partitions: int | None,
+                     cluster_by: list[str] | None = None,
+                     cluster_method: str = "range",
+                     stats_columns: list[str] | None = None,
+                     bloom_filter_columns: list[str] | None = None,
+                     unique_dir: bool = False) -> tuple[list[str], dict]:
+        """Write ``df``, laid out by :func:`cluster_rows`, through the
+        shared file writer under ``data/v{version}/`` — or, with
+        ``unique_dir``, ``data/v{version}-{uuid8}/``: a staging dir per
+        writer, so concurrent writers that picked the same next version
+        never collide (the manifest's explicit file list makes the dir
+        name irrelevant to readers). Returns the files' table-relative
+        paths and their manifest ``stats`` (:func:`manifest_stats`)."""
+        df = cluster_rows(df, cluster_by, cluster_method, num_partitions)
         rel_dir = f"data/v{version:08d}"
         if unique_dir:
             import uuid as _uuid
 
             rel_dir += f"-{_uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("errorifexists").option(
-            "compression", TABLE_FILE_COMPRESSION)
-        for c in bloom_filter_columns or []:
-            # parquet-level bloom filters: the reader skips whole row
-            # groups on `col = x` probes that min/max stats can't prune
-            # (high-cardinality point lookups — id fetches, digest
-            # probes). Purely additive file metadata; costs write-side
-            # space only on the named columns.
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        writer.parquet(f"{self.path}/{rel_dir}")
-        local = self._local_root()
-        if local is not None:  # see _local_root — read-side fast path
-            return sorted(
-                f"{rel_dir}/{fn}"
-                for fn in os.listdir(os.path.join(local, rel_dir))
-                if not fn.startswith("_") and not fn.startswith(".")
-            )
-        fs = self._fs()
-        out = []
-        for st in fs.listStatus(self._jpath(rel_dir)):
-            fn = st.getPath().getName()
-            if not fn.startswith("_") and not fn.startswith("."):
-                out.append(f"{rel_dir}/{fn}")
-        return sorted(out)
-
-    def _collect_stats(self, rel_files: list[str], schema,
-                       stats_columns: list[str] | None = None) -> dict:
-        """Per-file ``{rows, columns: {col: {min, max, nulls}}}`` for
-        scalar columns of the just-written files (never carried ones).
-
-        Fast path: the parquet writer already put min/max/null-count in
-        every file's footer — for local tables those footers are read
-        driver-side with pyarrow (KB of metadata, zero Spark jobs).
-        Timestamp columns are skipped there (Spark's default INT96
-        encoding carries no footer stats; absent stats just mean the
-        file is conservatively kept when pruning on that column).
-        Fallback for non-local URIs or unreadable footers: ONE Spark
-        aggregate job over the new files, stats columns only.
-        ``stats_columns`` narrows the set at wide tables."""
-        eligible = [
-            f.name for f in schema.fields
-            if f.dataType.simpleString() in _STATS_TYPES
-            and (stats_columns is None or f.name in stats_columns)
-        ]
-        if not eligible or not rel_files:
-            return {}
-        if self._local_dir() is not None:
-            # footer stats for INT96 timestamps don't exist, and footer
-            # tz normalization differs from the collect path's — skip
-            # timestamps on the fast path (absent stats ⇒ file is
-            # conservatively kept when pruning on them)
-            footer_cols = [
-                c for c in eligible
-                if not next(
-                    f.dataType.simpleString() for f in schema.fields
-                    if f.name == c
-                ).startswith("timestamp")
-            ]
-            try:
-                return self._collect_stats_footers(rel_files, footer_cols)
-            except Exception:
-                pass  # unreadable/odd footers — pay for the scan instead
-        df = (
-            self.spark.read.schema(schema)
-            .parquet(*[f"{self.path}/{f}" for f in rel_files])
-            .withColumn("__file", F.regexp_extract(F.input_file_name(), self._FILE_RE, 1))
-        )
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in eligible:
-            aggs += [
-                F.min(c).alias(f"__min_{c}"),
-                F.max(c).alias(f"__max_{c}"),
-                F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{c}"),
-            ]
-        stats: dict[str, dict] = {}
-        for r in df.groupBy("__file").agg(*aggs).collect():
-            stats[r["__file"]] = {
-                "rows": r["__rows"],
-                "columns": {
-                    c: {
-                        "min": _stat_encode(r[f"__min_{c}"]),
-                        "max": _stat_encode(r[f"__max_{c}"]),
-                        "nulls": r[f"__nulls_{c}"],
-                    }
-                    for c in eligible
-                },
-            }
-        return stats
-
-    def _local_dir(self) -> str | None:
-        """The table's plain filesystem directory, or None when it
-        lives on a non-local URI (s3a://…, hdfs://…, file://host/…).
-        Same resolution as :meth:`_local_root` (netloc-aware, bare
-        paths local only under a ``file:`` defaultFS)."""
-        return self._local_root()
-
-    def _collect_stats_footers(self, rel_files: list[str],
-                               eligible: list[str]) -> dict:
-        """Assemble per-file stats from parquet footer metadata alone —
-        driver-side pyarrow reads, no Spark job. Bounds stay
-        conservative under parquet's stats truncation (a truncated min
-        is a prefix ≤ the true min; a truncated max is bumped to remain
-        an upper bound), which only ever widens the keep-range."""
-        import pyarrow.parquet as pq
-
-        base = self._local_dir()
-        want = set(eligible)
-        stats: dict[str, dict] = {}
-        for f in rel_files:
-            md = pq.ParquetFile(f"{base}/{f}").metadata
-            per_col: dict[str, dict] = {}
-            usable = dict.fromkeys(want, True)
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                for ci in range(rg.num_columns):
-                    col = rg.column(ci)
-                    name = col.path_in_schema
-                    if name not in want or not usable[name]:
-                        continue
-                    st = col.statistics
-                    if st is None or st.null_count is None:
-                        usable[name] = False
-                        continue
-                    e = per_col.setdefault(name, {"min": None, "max": None, "nulls": 0})
-                    e["nulls"] += st.null_count
-                    if st.has_min_max:
-                        mn, mx = _stat_encode(st.min), _stat_encode(st.max)
-                        e["min"] = mn if e["min"] is None else min(e["min"], mn)
-                        e["max"] = mx if e["max"] is None else max(e["max"], mx)
-                    elif st.null_count < rg.num_rows:
-                        usable[name] = False  # values present but unbounded
-            stats[f] = {
-                "rows": md.num_rows,
-                "columns": {c: e for c, e in per_col.items() if usable[c]},
-            }
-        return stats
+        # parquet-level bloom filters: the reader skips whole row
+        # groups on `col = x` probes that min/max stats can't prune
+        # (high-cardinality point lookups — id fetches, digest probes).
+        # Purely additive file metadata; costs write-side space only on
+        # the named columns.
+        written = write_files(
+            df, f"{self.path}/{rel_dir}",
+            options={f"parquet.bloom.filter.enabled#{c}": "true"
+                     for c in bloom_filter_columns or []},
+            stats_columns=stats_columns)
+        paths = [f"{rel_dir}/{f.path}" for f in written]
+        return paths, manifest_stats(paths, written)
 
     def _carried_stats(self, prev_version: int, carried: list[str]) -> dict:
         """Stats entries for files carried by reference from the
@@ -1206,7 +1018,14 @@ class VersionedTable:
         widens the manifest schema with the new columns (existing files
         are untouched — the schema-aware scan in :meth:`read` fills
         their missing columns with NULL). Same-name columns must keep
-        their type; silent type changes corrupt every older file."""
+        their type; silent type changes corrupt every older file.
+
+        ``cluster_by`` lays the rows out with :func:`cluster_rows`
+        (``cluster_method`` 'range' or 'zorder'; any other value raises
+        before anything is written). Files go through the shared writer
+        (``tables/files.py``): zstd parquet, rowless files dropped, and
+        per-file min/max/null stats read from the footers into the
+        manifest — for ``stats_columns`` only when given."""
         from pyspark.sql.types import StructType
 
         vs = self.versions()
@@ -1234,11 +1053,11 @@ class VersionedTable:
             schema = StructType(list(old.fields) + new_fields)
 
         new_v = (vs[-1] + 1) if vs else 0
-        new_files = self._write_data_files(df, new_v, num_partitions, cluster_by,
-                                           cluster_method, bloom_filter_columns,
-                                           unique_dir=(mode == "append"))
+        new_files, new_stats = self._write_files(
+            df, new_v, num_partitions, cluster_by, cluster_method,
+            stats_columns, bloom_filter_columns,
+            unique_dir=(mode == "append"))
         carried = self.files(vs[-1]) if (mode == "append" and vs) else []
-        new_stats = self._collect_stats(new_files, df.schema, stats_columns)
         stats = dict(new_stats)
         if carried:
             stats.update(self._carried_stats(vs[-1], carried))
@@ -1344,9 +1163,8 @@ class VersionedTable:
             *[f"{self.path}/{f}" for f in small]
         )
         cur_v = self.latest_version()
-        new_files = self._write_data_files(df, cur_v + 1, num_partitions,
-                                           unique_dir=True)
-        stats = self._collect_stats(new_files, schema)
+        new_files, stats = self._write_files(df, cur_v + 1, num_partitions,
+                                             unique_dir=True)
         # COMPACT reads (and removes) exactly its small inputs and
         # preserves rows, so a racing blind APPEND commutes: the loser
         # REBASES onto the winner's snapshot and retries (the
@@ -1680,9 +1498,8 @@ class VersionedTable:
         # OCC); the manifest's explicit file list makes the dir name
         # irrelevant to readers, and vacuum's staging grace covers a
         # loser's orphaned files
-        new_files = self._write_data_files(result, cur_v + 1,
-                                           num_partitions, unique_dir=True)
-        new_stats = self._collect_stats(new_files, target_full.schema)
+        new_files, new_stats = self._write_files(
+            result, cur_v + 1, num_partitions, unique_dir=True)
         # MERGE read the stats-pruned candidate set (the whole snapshot
         # when no target conjunct was extractable); winners adding
         # files provably OUTSIDE the read predicate commute (rebase +

@@ -6933,8 +6933,9 @@ def test_variant_round_trip_claims_feature(spark, tmp_path):
     time travel / checkpoint replay, and per-file stats survive via
     the one-job Spark fallback (pyarrow cannot parse the VARIANT
     parquet logical type): numRecords + sibling-column min/max are
-    present, while the variant column itself and STRING min/max are
-    deliberately absent (UTF-16 vs UTF-8 ordering soundness)."""
+    present, STRING min/max included (Spark's min/max order strings by
+    code point, as parquet footers do), while the variant column itself
+    is absent."""
     from sql_based_etl_spark.tables.delta_interop import write_delta
 
     d = str(tmp_path / "vt")
@@ -6959,8 +6960,11 @@ def test_variant_round_trip_claims_feature(spark, tmp_path):
         assert "id" in st["minValues"] and "k" in st["maxValues"]
         assert "payload" not in st["minValues"]
         assert "payload" not in st["nullCount"]
-        # string columns: nullCount yes, min/max deliberately skipped
-        assert "s" not in st["minValues"]
+        # string columns: nullCount and the file's code-point bounds
+        vals = [r.s for r in spark.read.parquet(
+            os.path.join(d, urllib_unquote(a["path"]))).collect()]
+        assert (st["minValues"]["s"], st["maxValues"]["s"]) == (
+            min(vals), max(vals))
         assert st["nullCount"]["s"] == 0
 
     assert _payloads(read_delta(spark, d)) == [
@@ -7820,8 +7824,7 @@ def test_every_bridge_write_path_stores_zstd_files(spark, tmp_path,
     for files in (adds, cdcs):
         codecs = [parquet_codecs(os.path.join(d, urllib_unquote(a["path"])))
                   for a in files]
-        # a rowless file (an empty writer partition) has no column chunk
-        assert set().union(*codecs) == ({"ZSTD"} if files else set()), codecs
+        assert all(c == {"ZSTD"} for c in codecs), codecs
     for a in adds:
         st = json.loads(a["stats"])
         assert st["numRecords"] > 0 and "id" in st["minValues"], a

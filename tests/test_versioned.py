@@ -413,10 +413,10 @@ def test_data_skipping_via_stages(spark, tmp_path):
 def test_stats_scan_fallback_matches_footer_path(spark, table, monkeypatch):
     """Non-local tables can't read footers driver-side; the Spark-scan
     fallback must produce the same manifest stats shape and pruning."""
-    from sql_based_etl_spark.tables.versioned import VersionedTable
+    from sql_based_etl_spark.tables import files
 
     monkeypatch.setattr(
-        VersionedTable, "_collect_stats_footers",
+        files, "footer_stats",
         lambda *a, **k: (_ for _ in ()).throw(OSError("no local footers")),
     )
     df = spark.range(100).select(
