@@ -63,11 +63,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_based_etl_spark.tables.files import DataFile, write_files
-from sql_based_etl_spark.tables.versioned import (
+# the shared conflict family stays importable from this module
+from sql_based_etl_spark.tables.versioned import (  # noqa: F401
     CommitRaceLostError,
+    ConcurrentAppendError,
+    ConcurrentDeleteDeleteError,
+    ConcurrentDeleteReadError,
+    ConcurrentModificationError,
+    ConcurrentTransactionError,
+    MetadataChangedError,
+    ProtocolChangedError,
     VersionedTable,
     VersionedTableError,
+    Winner,
+    _norm_file_uri,
+    classify_winner,
     cluster_rows,
+    commit_with_retry,
+    matched_files,
     publish_text_exclusive,
 )
 
@@ -712,6 +725,14 @@ def _dv_file_rel(dv: dict | None) -> str | None:
     return f"{prefix + '/' if prefix else ''}deletion_vector_{u}.bin"
 
 
+def _file_location(path: str, rel: str) -> str:
+    """Location of a file action's ``path``: URI-encoded, and relative
+    to the table root ``path`` unless absolute."""
+    rel = urllib.parse.unquote(rel)
+    return (rel if "://" in rel or rel.startswith("/")
+            else posixpath.join(path, rel))
+
+
 def _fkey(file_action: dict) -> str:
     return file_action["path"] + "\x00" + _dv_uid(file_action.get("deletionVector"))
 
@@ -1253,13 +1274,6 @@ def _snapshot_df(
             for lf in schema.fields
         ], *tag_cols)
 
-    def _abs(rel: str) -> str:
-        # add.path is URL-encoded and relative unless absolute
-        rel = urllib.parse.unquote(rel)
-        if "://" in rel or rel.startswith("/"):
-            return rel
-        return posixpath.join(path, rel)
-
     def _read(files: list[str]) -> DataFrame:
         # DataFrameReader resolves file existence eagerly (its file
         # index lists paths up front), so a snapshot whose data files
@@ -1306,7 +1320,7 @@ def _snapshot_df(
         relation broadcasts while total cardinality stays ≤4M rows
         (≈32 MB); heavier deletes shuffle-join — and are REORG-purge
         material anyway (compact_delta purge=True)."""
-        plain = [_abs(a["path"]) for a in alist if not a.get("deletionVector")]
+        plain = [_file_location(path, a["path"]) for a in alist if not a.get("deletionVector")]
         parts = [_read(plain)] if plain else []
         dv_adds = [a for a in alist if a.get("deletionVector")]
 
@@ -1359,7 +1373,7 @@ def _snapshot_df(
             file_col = (F.col("__file") if tag_rows
                         else F.col("_metadata.file_path"))
             parts.append(
-                _read([_abs(a["path"]) for a in dv_adds])
+                _read([_file_location(path, a["path"]) for a in dv_adds])
                 .withColumn("__dv_file",
                             F.element_at(F.split(file_col, "/"), -1))
                 .withColumn("__dv_row_index",
@@ -1384,7 +1398,7 @@ def _snapshot_df(
             if 0 < card <= 4_000_000:
                 deleted = F.broadcast(deleted)
             parts.append(
-                _read([_abs(a["path"])])
+                _read([_file_location(path, a["path"])])
                 .withColumn(
                     "__dv_row_index",
                     F.col("__ridx") if tag_rows
@@ -1766,22 +1780,10 @@ def _commit_delta_log(spark: SparkSession, log_dir: str, version: int,
 # exception telling the caller which rule fired. The reference's own
 # production shape runs concurrent scheduled Spark jobs against the lake
 # (scd2-job-scheduler.yaml:15-48), and hourly-append + nightly-OPTIMIZE
-# is the normal case at 100 TB. Conflict matrix implemented (the
-# delta-spark ConflictChecker rules, conservatively):
-#
-#   winner commit carries          loser op                  outcome
-#   ---------------------------------------------------------------------
-#   protocol action                any                       ProtocolChanged
-#   metaData action                any                       MetadataChanged
-#   txn with the loser's appId     idempotent writer         ConcurrentTransaction
-#   remove of a file loser REMOVES any                       ConcurrentDeleteDelete
-#   remove of a file loser READ    merge/delete/compact      ConcurrentDeleteRead
-#   dataChange add                 op that read table data   ConcurrentAppend
-#     …scoped by the loser's read predicate when one was extractable
-#     (partition/stats-disjoint adds commute → retry; round-11)
-#   dataChange add                 blind append / compact    commute → retry
-#   dataChange=false add (compact) disjoint-file op          commute → retry
-#   commitInfo only (vacuum)       any                       commute → retry
+# is the normal case at 100 TB. The rules and the retry loop are the
+# native format's too (versioned.py:classify_winner, commit_with_retry);
+# this module supplies the winner's log actions as a Winner record and
+# the bridge's publish and re-stamp steps.
 #
 # Retry re-stamps the version-dependent pieces of the prepared actions:
 # inCommitTimestamp is recomputed against the ACTUAL predecessor (ICT
@@ -1790,108 +1792,25 @@ def _commit_delta_log(spark: SparkSession, log_dir: str, version: int,
 # rows' ids forever). Checkpoints are skipped after a retried commit —
 # the caller's reconciled state predates the winners.
 
-
-class DeltaConcurrentModificationError(VersionedTableError):
-    """A bridge commit raced a winner whose changes cannot be proven
-    disjoint from this operation (delta-spark's
-    ConcurrentModificationException family)."""
+# the bridge's name for the shared conflict family's base
+DeltaConcurrentModificationError = ConcurrentModificationError
 
 
-class ProtocolChangedError(DeltaConcurrentModificationError):
-    pass
-
-
-class MetadataChangedError(DeltaConcurrentModificationError):
-    pass
-
-
-class ConcurrentAppendError(DeltaConcurrentModificationError):
-    pass
-
-
-class ConcurrentDeleteReadError(DeltaConcurrentModificationError):
-    pass
-
-
-class ConcurrentDeleteDeleteError(DeltaConcurrentModificationError):
-    pass
-
-
-class ConcurrentTransactionError(DeltaConcurrentModificationError):
-    pass
-
-
-def _check_commit_conflict(winner: list[dict], version: int, operation: str,
-                           read_paths, removed_paths, reads_table_data: bool,
-                           txn_app_id: str | None, log_dir: str,
-                           read_meta: dict | None = None,
-                           read_tree=None) -> None:
-    """Classify ONE winner commit against the loser's declared
-    footprint; raise the named conflict or return (commute).
-
-    ``read_tree`` (with ``read_meta``) scopes the append-conflict rule
-    to the loser's READ PREDICATE, Delta's own refinement: a winner's
-    added data file whose partition values / stats PROVE no row can
-    satisfy the predicate's scope tree (:func:`_tree_may_match` — the
-    same skipping the pruned read trusts) cannot change what the loser
-    read, so it commutes. Without a tree (the predicate says nothing
-    about any file-decidable column) ANY concurrent data add conflicts
-    — the conservative rule. This is what lets the reference's
-    concurrent per-partition pipelines (scd2-job-scheduler.yaml:15-48)
-    merge partition A while an hourly append lands in partition B,
-    instead of serializing every merge behind every append at 100 TB."""
-    win_op = ""
-    for a in winner:
-        ci = a.get("commitInfo")
-        if ci:
-            win_op = ci.get("operation", "")
-    ctx = (f"{operation} at {log_dir} lost the commit race for version "
-           f"{version} to a concurrent {win_op or 'commit'}")
-    for a in winner:
-        if "protocol" in a:
-            raise ProtocolChangedError(
-                f"{ctx} that upgraded the table protocol — re-read the "
-                "table and re-run the operation")
-        if "metaData" in a:
-            raise MetadataChangedError(
-                f"{ctx} that changed table metadata (schema / properties "
-                "/ identity or column-mapping watermarks) — re-read the "
-                "table and re-run the operation")
-        txn = a.get("txn")
-        if txn and txn_app_id is not None and txn.get("appId") == txn_app_id:
-            raise ConcurrentTransactionError(
-                f"{ctx} carrying the same txn appId {txn_app_id!r} — two "
-                "instances of one idempotent writer raced; the winner's "
-                "version watermark supersedes this attempt")
-    win_removed = {a["remove"]["path"] for a in winner if "remove" in a}
-    win_added_dc = {a["add"]["path"] for a in winner
-                    if "add" in a and a["add"].get("dataChange", True)}
-    hit = win_removed & set(removed_paths)
-    if hit:
-        raise ConcurrentDeleteDeleteError(
-            f"{ctx} that already removed file(s) this operation also "
-            f"removes (e.g. {sorted(hit)[0]!r})")
-    hit = win_removed & set(read_paths)
-    if hit:
-        raise ConcurrentDeleteReadError(
-            f"{ctx} that removed file(s) this operation read "
-            f"(e.g. {sorted(hit)[0]!r})")
-    if reads_table_data and win_added_dc:
-        if read_meta is not None and read_tree is not None:
-            overlap = _prune_by_tree(
-                read_meta,
-                {a["add"]["path"]: a["add"] for a in winner
-                 if "add" in a and a["add"].get("dataChange", True)},
-                read_tree)
-            if not overlap:
-                return  # every added file provably outside the read
-            raise ConcurrentAppendError(
-                f"{ctx} that added data file(s) inside this operation's "
-                f"read predicate (e.g. {sorted(overlap)[0]!r}) — re-read "
-                "the table and re-run the operation")
-        raise ConcurrentAppendError(
-            f"{ctx} that added data file(s) this operation's predicate "
-            "may depend on — re-read the table and re-run the operation")
+def _delta_winner(version: int, actions: list[dict]) -> Winner:
+    """A winner's log actions as :func:`classify_winner` reads them."""
+    op = ""
+    for a in actions:
+        if a.get("commitInfo"):
+            op = a["commitInfo"].get("operation", "")
+    changed = ("protocol" if any("protocol" in a for a in actions)
+               else "metadata" if any("metaData" in a for a in actions)
+               else None)
+    return Winner(
+        version, op, changed,
+        frozenset(a["txn"].get("appId") for a in actions if a.get("txn")),
+        frozenset(a["remove"]["path"] for a in actions if "remove" in a),
+        {a["add"]["path"]: a["add"] for a in actions
+         if "add" in a and a["add"].get("dataChange", True)})
 
 
 def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
@@ -1905,82 +1824,59 @@ def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
                 txn_app_id: str | None = None,
                 ignore_conflicts: bool = False,
                 max_retries: int = 200) -> int:
-    """Commit ``actions`` with Delta's optimistic-concurrency retry.
+    """Commit ``actions`` with Delta's optimistic-concurrency retry
+    (:func:`~sql_based_etl_spark.tables.versioned.commit_with_retry`).
 
     ``read_version`` is the snapshot version the actions were derived
     from (None/-1 for table creation); the first attempt lands at
     ``read_version + 1``. On a lost race the winner's commit is read
-    back and classified (:func:`_check_commit_conflict`); commuting
-    winners advance the attempt version after re-stamping ICT and
-    rowTracking row-id ranges. Returns the committed version — callers
+    back and classified (:func:`classify_winner`; the append rule is
+    scoped by ``read_tree`` through :func:`_tree_may_match` on
+    ``meta``); commuting winners advance the attempt version after
+    re-stamping ICT and rowTracking row-id ranges. A raced CREATE
+    (version 0) always raises. Returns the committed version — callers
     must skip checkpoint writes when it differs from their expected
-    version (their reconciled state predates the winners).
-
-    ``max_retries`` is a LIVELOCK BACKSTOP, not a fairness bound:
-    every lost race means another writer's commit LANDED (the claimed
-    version exists), so system-wide progress is guaranteed by
-    construction and each retry costs only a winner-commit read + a
-    conditional create — no rewrite recompute. A busy table can
-    legitimately hand one writer dozens of consecutive losses (N
-    concurrent writers ⇒ up to N−1 losses even with perfect fairness),
-    which is why the default is generous; repeated losses back off
-    with growing jitter to break thundering-herd scheduling."""
-    import random as _rnd
+    version (their reconciled state predates the winners)."""
     import time as _t
 
-    attempt = (read_version if read_version is not None else -1) + 1
-    first = attempt
+    first = (read_version if read_version is not None else -1) + 1
     domains = dict(domains or {})
-    while True:
-        try:
-            _commit_delta_log(spark, log_dir, attempt,
-                              "\n".join(json.dumps(a) for a in actions))
-            if attempt != first:
-                _log.info("%s at %s: committed at version %d after "
-                          "winning a retry past %d concurrent commit(s)",
-                          operation, log_dir, attempt, attempt - first)
-            return attempt
-        except CommitRaceLostError:
-            pass
-        if attempt == 0:
+    may_match = (None if meta is None or read_tree is None
+                 else lambda add: _tree_may_match(meta, add, read_tree))
+
+    def publish(version: int) -> None:
+        _commit_delta_log(spark, log_dir, version,
+                          "\n".join(json.dumps(a) for a in actions))
+
+    def on_lost(version: int) -> int:
+        if version == 0:
             # version 0 carries protocol+metaData: a raced CREATE is
             # always a real conflict (the winner defined the table)
             raise DeltaConcurrentModificationError(
                 f"{operation} at {log_dir}: a concurrent writer created "
                 "the table first (version 0 already exists)")
-        winner = list(_log_actions(spark, f"{log_dir}/{attempt:020d}.json"))
+        winner = list(_log_actions(spark, f"{log_dir}/{version:020d}.json"))
         if not ignore_conflicts:
-            _check_commit_conflict(winner, attempt, operation, read_paths,
-                                   removed_paths, reads_table_data,
-                                   txn_app_id, log_dir,
-                                   read_meta=meta, read_tree=read_tree)
-        if attempt - first + 1 > max_retries:
-            raise DeltaConcurrentModificationError(
-                f"{operation} at {log_dir}: exhausted {max_retries} "
-                "commit retries against concurrent writers")
+            classify_winner(_delta_winner(version, winner), operation,
+                            log_dir, read_paths=read_paths,
+                            removed_paths=removed_paths,
+                            reads_table_data=reads_table_data,
+                            may_match=may_match, txn_app_id=txn_app_id)
         # fold the winner's domain watermarks (rowTracking hwm) so the
-        # re-stamp below allocates past them, then advance
+        # re-stamp below allocates past them
         for a in winner:
             dm = a.get("domainMetadata")
             if dm and not dm.get("removed"):
                 domains[dm["domain"]] = dm.get("configuration")
-        lost = attempt - first + 1
-        if lost > 4:
-            # repeated consecutive losses: thundering-herd scheduling,
-            # not bad luck — jittered exponential backoff (capped at
-            # 100 ms) lets slower writers through without meaningfully
-            # delaying the common 1-2-loss case (which never sleeps)
-            _t.sleep(min(0.1, 0.005 * (2 ** min(lost - 5, 4)))
-                     * (0.5 + _rnd.random()))
-        attempt += 1
-        now_ms = int(_t.time() * 1000)
+        version += 1
         ci = actions[0].get("commitInfo") if actions else None
         if ci is not None and meta is not None:
-            ict = _next_ict(spark, log_dir, meta, attempt - 1, now_ms)
+            ict = _next_ict(spark, log_dir, meta, version - 1,
+                            int(_t.time() * 1000))
             if ict is not None:
                 ci["inCommitTimestamp"] = ict
         if new_adds and proto is not None:
-            rt = _assign_row_ids(proto, domains, new_adds, attempt)
+            rt = _assign_row_ids(proto, domains, new_adds, version)
             if rt is not None:
                 # the add dicts are shared with `actions`, so the fresh
                 # baseRowId/defaultRowCommitVersion propagate; swap (or
@@ -1994,6 +1890,15 @@ def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
                     actions.append(rt)
                 domains[_ROW_TRACKING_DOMAIN] = (
                     rt["domainMetadata"]["configuration"])
+        return version
+
+    version = commit_with_retry(publish, on_lost, first,
+                                f"{operation} at {log_dir}", max_retries)
+    if version != first:
+        _log.info("%s at %s: committed at version %d after winning a "
+                  "retry past %d concurrent commit(s)",
+                  operation, log_dir, version, version - first)
+    return version
 
 
 def _log_actions(spark: SparkSession, path: str):
@@ -3530,10 +3435,14 @@ def merge_delta(source: DataFrame, path: str, condition: str,
     Physical shape (copy-on-write at file granularity, the same plan
     that keeps VersionedTable merges 100 TB-viable):
 
-    1. one semi-join over ``input_file_name()`` finds the live files
-       containing condition-matched rows — everything else is untouched
-       (no tombstone, no rewrite; a merge touching 1 of N files
-       rewrites ~1 file);
+    1. one join over ``input_file_name()`` (the find-files pass shared
+       with the native format,
+       :func:`~sql_based_etl_spark.tables.versioned.matched_files`)
+       finds the live files containing condition-matched rows and, with
+       ``validate_unique_match``, fails when a target row matches
+       several source rows — everything else is untouched (no
+       tombstone, no rewrite; a merge touching 1 of N files rewrites
+       ~1 file);
     2. only those files join the source (full-outer) and are rewritten
        with the update / insert branches applied — a source row
        matching nothing in the matched subset matches nothing globally,
@@ -3653,7 +3562,7 @@ def merge_delta(source: DataFrame, path: str, condition: str,
     # Spark-4 compat: rewrite boolean literals compared to non-boolean
     # columns (scd2-job.ipynb:346's `target.iscurrent = true` against an
     # INTEGER column) — needed here because the condition drives the
-    # matched-file semi-join too, not just the merge branches.
+    # matched-file join too, not just the merge branches.
     dtmap = {"target": {f.name: f.dataType.simpleString() for f in schema.fields},
              "source": dict(source.dtypes)}
     condition = coerce_condition_for_types(condition, dtmap)
@@ -3677,66 +3586,16 @@ def merge_delta(source: DataFrame, path: str, condition: str,
     scan_live = _prune_by_tree(meta, live, read_tree)
 
     matched_keys: list[str] = []
-    validated_in_scan = False
-    if live and when_not_matched_by_source_delete:
+    if scan_live and (validate_unique_match
+                      or not when_not_matched_by_source_delete):
+        # the shared find-files pass; the by-source clause rewrites every
+        # live file anyway, so there it only validates the unique match
+        matched_keys = matched_files(
+            _snapshot_df(spark, path, meta, scan_live),
+            {_file_location(path, a["path"]): k for k, a in scan_live.items()},
+            source, condition, validate_unique_match)
+    if when_not_matched_by_source_delete:
         matched_keys = sorted(live)  # clause touches every target row
-    elif scan_live:
-        abs2key = {}
-        for k, a in scan_live.items():
-            rel = urllib.parse.unquote(a["path"])
-            absolute = rel if "://" in rel or rel.startswith("/") else posixpath.join(path, rel)
-            abs2key[_norm_file_uri(absolute)] = k
-        # fused pass (r13): matched files AND the unique-match
-        # validation count in ONE inner-join job — the separate shapes
-        # paid the target⋈source join twice (semi-join here, inner
-        # join + groupBy inside build_merge_annotated), a full extra
-        # join pass per MERGE at scale. The surrogate id only needs
-        # stability within this single action; count/first are
-        # map-side combinable, and the file list comes back one ROW
-        # PER DISTINCT FILE (grouped max — never a single-row
-        # collect_set funneling ~10⁶ file names through one reduce
-        # task's row; r13 verdict #3). With validation opted out the
-        # cheaper left-semi prune short-circuits per target row
-        # instead of shuffling k joined rows per target row for a
-        # count nobody checks.
-        base = (
-            _snapshot_df(spark, path, meta, scan_live)
-            .withColumn("__file", F.input_file_name())
-        )
-        if validate_unique_match:
-            tagged = base.withColumn(
-                "__merge_rid", F.monotonically_increasing_id()
-            ).alias("target")
-            per_rid = (
-                tagged.join(source.alias("source"), F.expr(condition), "inner")
-                .groupBy("__merge_rid")
-                .agg(F.count(F.lit(1)).alias("__n"),
-                     F.first("__file").alias("__file"))
-            )
-            rows = per_rid.groupBy("__file").agg(
-                F.max("__n").alias("mx")).collect()
-            if max((int(r["mx"]) for r in rows), default=0) > 1:
-                raise VersionedTableError(
-                    "merge: multiple source rows match a single target row"
-                )
-            validated_in_scan = True
-            matched_names = [r["__file"] for r in rows]
-        else:
-            matched_names = [
-                r["__file"]
-                for r in base.alias("target")
-                .join(source.alias("source"), F.expr(condition), "left_semi")
-                .select("__file").distinct().collect()
-            ]
-        for fname in matched_names:
-            key = abs2key.get(_norm_file_uri(fname))
-            if key is None:
-                raise VersionedTableError(
-                    f"merge_delta: matched file {fname!r} does not "
-                    f"map back to a live add action at {path}"
-                )
-            matched_keys.append(key)
-        matched_keys.sort()
     matched = {k: live[k] for k in matched_keys}
 
     subset = (_snapshot_with_row_ids(spark, path, meta, matched,
@@ -3747,10 +3606,6 @@ def merge_delta(source: DataFrame, path: str, condition: str,
         when_matched_update=when_matched_update,
         matched_condition=matched_condition,
         insert_not_matched=insert_not_matched,
-        # already validated by the fused matched-file pass (one join
-        # job instead of two) except on the by-source path
-        validate_unique_match=(validate_unique_match
-                               and not validated_in_scan),
         when_matched_delete=when_matched_delete,
         when_not_matched_by_source_delete=when_not_matched_by_source_delete,
     )
@@ -4007,14 +3862,6 @@ def _dv_payload_plain(table_path: str, dv: dict) -> bytes:
     )
 
 
-def _norm_file_uri(p: str) -> str:
-    """Normalize a file URI for matching scan-reported paths
-    (``_metadata.file_path``) back to live add actions — shared by the
-    driver's key map and the executor kernel's old-DV lookup."""
-    u = urllib.parse.urlparse(p)
-    return urllib.parse.unquote(f"{u.netloc}{u.path}" if u.scheme else p)
-
-
 def _dv_partition_kernel(table_path: str, file_info: dict,
                          encode: bool = True):
     """``mapInPandas`` kernel factory for the distributed DV writer:
@@ -4137,10 +3984,7 @@ def _dv_match_payloads(spark: SparkSession, path: str,
     abs2key: dict[str, str] = {}
     file_info: dict[str, dict] = {}
     for k, a in live.items():
-        rel = urllib.parse.unquote(a["path"])
-        absolute = (rel if "://" in rel or rel.startswith("/")
-                    else posixpath.join(path, rel))
-        norm = _norm_file_uri(absolute)
+        norm = _norm_file_uri(_file_location(path, a["path"]))
         abs2key[norm] = k
         try:
             phys = (json.loads(a["stats"])["numRecords"]
@@ -4730,12 +4574,8 @@ def update_delta(spark: SparkSession, path: str,
 
     # candidate scan → files actually holding matched rows (bounded by
     # the pruned set; the rewrite below re-reads only those files)
-    abs2key: dict[str, str] = {}
-    for k, a in scan_adds.items():
-        rel = urllib.parse.unquote(a["path"])
-        absolute = (rel if "://" in rel or rel.startswith("/")
-                    else posixpath.join(path, rel))
-        abs2key[_norm_file_uri(absolute)] = k
+    abs2key = {_norm_file_uri(_file_location(path, a["path"])): k
+               for k, a in scan_adds.items()}
     tagged = _snapshot_df(spark, path, meta, scan_adds, tag_rows=True)
     hit = tagged.filter(cond).select("__file").distinct().collect()
     matched_keys = []
@@ -5152,9 +4992,7 @@ def restore_delta(spark: SparkSession, path: str,
     # serialize 50k driver→store round trips)
     by_dir: dict[str, list[tuple[str, str]]] = {}
     for a in to_add:
-        rel = urllib.parse.unquote(a["path"])
-        absolute = (rel if "://" in rel or rel.startswith("/")
-                    else f"{path}/{rel}")
+        absolute = _file_location(path, a["path"])
         by_dir.setdefault(posixpath.dirname(absolute), []).append(
             (posixpath.basename(absolute), a["path"]))
     fs, _, _ = _fs_and_path(spark, log_dir)
@@ -5261,9 +5099,7 @@ def clone_delta(spark: SparkSession, source_path: str, dest_path: str,
     adds: list[dict] = []
     for a in live_s.values():
         a = dict(a)
-        rel = urllib.parse.unquote(a["path"])
-        absolute = (rel if "://" in rel or rel.startswith("/")
-                    else f"{source_path}/{rel}")
+        absolute = _file_location(source_path, a["path"])
         a["path"] = urllib.parse.quote(absolute, safe="/:")
         dv = a.get("deletionVector")
         if dv and dv.get("storageType") == "u":

@@ -18,11 +18,12 @@ trusts these numbers, so both paths apply one rule per column:
 
 - only top-level scalar columns get stats;
 - an all-null row group adds to the null count and keeps the bounds;
-- binary, decimal, timestamp and non-finite float columns get a null
-  count but no bounds: binary, NaN and infinities have no JSON form,
-  decimals would round through JSON floats, Spark's default INT96
-  timestamps carry no footer stats, and parquet records a NaN as the
-  max;
+- binary, decimal, timestamp, non-finite float and non-binary-collated
+  string columns get a null count but no bounds: binary, NaN and
+  infinities have no JSON form, decimals would round through JSON
+  floats, Spark's default INT96 timestamps carry no footer stats,
+  parquet records a NaN as the max, and byte-ordered string bounds say
+  nothing under a collation such as ``UTF8_LCASE`` ('a' = 'A');
 - what a footer does not record (a null count, or the bounds of a row
   group that holds values) is None: unknown, so pruning keeps the file.
 """
@@ -49,9 +50,9 @@ TABLE_FILE_COMPRESSION = "zstd"
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
-# Spark types the fallback aggregate bounds, and the wider set it
-# counts nulls for — the same split :func:`_bound` makes on footer
-# values
+# Spark types the fallback aggregate bounds (see :func:`_bounded`), and
+# the wider set it counts nulls for — the same split :func:`_bound`
+# makes on footer values
 _BOUNDED = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
             T.FloatType, T.DoubleType, T.BooleanType, T.DateType,
             T.StringType)
@@ -143,6 +144,9 @@ def collect_files(spark: SparkSession, uri: str, schema: T.StructType,
     local = local_path(spark, uri)
     files = _list_local(local) if local is not None else _list_hadoop(spark, uri)
     want = None if stats_columns is None else set(stats_columns)
+    # a footer does not know the column's collation: drop the bounds the
+    # Spark type gets none of
+    unbounded = {f.name for f in schema.fields if not _bounded(f.dataType)}
     unread = files
     if local is not None:
         import pyarrow as pa
@@ -153,6 +157,9 @@ def collect_files(spark: SparkSession, uri: str, schema: T.StructType,
                 f.rows, f.columns = footer_stats(os.path.join(local, f.path), want)
             except (OSError, ValueError, pa.ArrowException):
                 unread.append(f)  # e.g. a footer with Spark's VARIANT type
+                continue
+            for c in unbounded & f.columns.keys():
+                f.columns[c].update(min=None, max=None)
     if unread:
         _scan_stats(spark, uri, unread, schema, partition_by, want)
     rowless = [f for f in files if f.rows == 0]
@@ -225,6 +232,13 @@ def _bound(v: object) -> object:
     return None
 
 
+def _bounded(dtype: T.DataType) -> bool:
+    """Whether a column of Spark type ``dtype`` gets min/max bounds
+    (the module rules; a collated string is still a ``StringType``)."""
+    return (isinstance(dtype, _BOUNDED)
+            and getattr(dtype, "collation", "UTF8_BINARY") == "UTF8_BINARY")
+
+
 def _scan_stats(spark: SparkSession, uri: str, files: list[DataFile],
                 schema: T.StructType, partition_by: list[str],
                 want: set[str] | None) -> None:
@@ -240,7 +254,7 @@ def _scan_stats(spark: SparkSession, uri: str, files: list[DataFile],
     aggs = [F.count(F.lit(1)).alias("rows")]
     for i, f in enumerate(stat_fields):
         c = F.col("`" + f.name.replace("`", "``") + "`")
-        if isinstance(f.dataType, _BOUNDED):
+        if _bounded(f.dataType):
             aggs += [F.min(c).alias(f"min{i}"), F.max(c).alias(f"max{i}")]
         aggs.append(F.sum(c.isNull().cast("long")).alias(f"nulls{i}"))
     depth = len(partition_by) + 1  # path segments of a file under uri
@@ -256,7 +270,7 @@ def _scan_stats(spark: SparkSession, uri: str, files: list[DataFile],
         f.rows = r["rows"]
         for i, sf in enumerate(stat_fields):
             lo = hi = None
-            if isinstance(sf.dataType, _BOUNDED):
+            if _bounded(sf.dataType):
                 lo, hi = _bound(r[f"min{i}"]), _bound(r[f"max{i}"])
                 if lo is None or hi is None:
                     lo = hi = None

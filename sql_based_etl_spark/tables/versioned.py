@@ -26,12 +26,11 @@ retries at the next version, staging into per-writer unique data dirs
 so racers never collide before the manifest claim, and the
 exactly-once stream sink detects a racing duplicate of the SAME
 micro-batch by its recorded stream_batch_id. MERGE and COMPACT races
-are CLASSIFIED like the Delta bridge's (round 11,
-:meth:`VersionedTable._classify_winner`): a COMPACT racing a blind
-append rebases and retries (the hourly-append + nightly-OPTIMIZE
-shape), while winners that evolved the schema or touched the loser's
-read/removed files raise the named VersionedConcurrent*Error instead
-of a raw lost-race error. OVERWRITE and RESTORE remain single-winner
+are CLASSIFIED by the same rules as the Delta bridge's
+(:func:`classify_winner`): a COMPACT racing a blind append rebases and
+retries (the hourly-append + nightly-OPTIMIZE shape), while winners
+that evolved the schema or touched the loser's read/removed files
+raise the named conflict instead of a raw lost-race error. OVERWRITE and RESTORE remain single-winner
 (they replace the snapshot wholesale — matching the reference's Argo
 DAG, scd2-job-scheduler.yaml:47-48, which serializes them behind
 their dependencies).
@@ -47,8 +46,9 @@ type — the loser's commit raises instead of silently overwriting
 conditional PUT on Hadoop ≥ 3.4.1 S3A.
 
 Scale posture: MERGE joins the source against only the target files
-that contain matching rows (detected with one semi-join over
-``input_file_name()``) and rewrites only those; untouched files are
+that contain matching rows (found by one join over
+``input_file_name()``, :func:`matched_files`) and rewrites only those;
+untouched files are
 carried forward by reference. APPEND writes only the new files. The
 ``repartitionBeforeWrite`` knob (scd2-job-scheduler.yaml:63-64) maps
 to ``num_partitions``.
@@ -68,6 +68,8 @@ from __future__ import annotations
 import json
 import os
 import time
+import urllib.parse
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,32 +98,44 @@ class ConcurrentStreamBatchError(VersionedTableError):
     already-committed rather than double-appending."""
 
 
-# Round-11: the native format's named conflict family — the manifest
-# analogue of the Delta bridge's DeltaConcurrentModificationError
-# classification (delta_interop.py:_check_commit_conflict). A winner's
-# footprint is its manifest diff against its predecessor (added =
-# win - prev, removed = prev - win); the loser declares what it read
-# and removed, and commuting winners are retried past instead of
-# raising a raw CommitRaceLostError.
-class VersionedConcurrentModificationError(VersionedTableError):
-    """A native-format commit raced a winner whose changes cannot be
-    proven disjoint from this operation."""
+# The conflict family both formats raise when a lost commit race cannot
+# be retried past (delta-spark's ConcurrentModificationException
+# family; :func:`classify_winner` picks the member).
+class ConcurrentModificationError(VersionedTableError):
+    """A commit raced a winner whose changes cannot be proven disjoint
+    from this operation."""
 
 
-class VersionedSchemaChangedError(VersionedConcurrentModificationError):
+class ProtocolChangedError(ConcurrentModificationError):
     pass
 
 
-class VersionedConcurrentAppendError(VersionedConcurrentModificationError):
+class MetadataChangedError(ConcurrentModificationError):
     pass
 
 
-class VersionedConcurrentDeleteReadError(VersionedConcurrentModificationError):
+class ConcurrentAppendError(ConcurrentModificationError):
     pass
 
 
-class VersionedConcurrentDeleteDeleteError(VersionedConcurrentModificationError):
+class ConcurrentDeleteReadError(ConcurrentModificationError):
     pass
+
+
+class ConcurrentDeleteDeleteError(ConcurrentModificationError):
+    pass
+
+
+class ConcurrentTransactionError(ConcurrentModificationError):
+    pass
+
+
+# the native format's names for the same classes
+VersionedConcurrentModificationError = ConcurrentModificationError
+VersionedSchemaChangedError = MetadataChangedError
+VersionedConcurrentAppendError = ConcurrentAppendError
+VersionedConcurrentDeleteReadError = ConcurrentDeleteReadError
+VersionedConcurrentDeleteDeleteError = ConcurrentDeleteDeleteError
 
 
 # Object stores where rename is a non-atomic copy+delete but a created
@@ -390,7 +404,6 @@ def build_merge_annotated(
     when_matched_update: dict[str, object] | None = None,
     matched_condition: str | None = None,
     insert_not_matched: bool = True,
-    validate_unique_match: bool = True,
     when_matched_delete: str | None = None,
     when_not_matched_by_source_delete: str | None = None,
 ) -> DataFrame:
@@ -401,10 +414,11 @@ def build_merge_annotated(
     subset here, so one implementation carries the reference's update /
     insert semantics (scd2-job.ipynb:337-354) for every target format.
 
-    ``subset`` is the matched slice of the target (full target schema);
-    ``condition`` must already be Spark-4-coerced by the caller (it also
-    drives the caller's matched-file semi-join, so coercion lives
-    there). Returns one row per output row of the rewritten slice —
+    ``subset`` is the matched slice of the target (full target schema),
+    as :func:`matched_files` found it — that pass also validated the
+    unique match; ``condition`` must already be Spark-4-coerced by the
+    caller (it drives that pass too, so coercion lives there). Returns
+    one row per output row of the rewritten slice —
     kept / updated target rows plus (when ``insert_not_matched``)
     unmatched source rows — with, for every target column ``c``:
 
@@ -456,33 +470,6 @@ def build_merge_annotated(
     s = source.alias("source").withColumn("__s", F.lit(1))
     joined = t.join(s, F.expr(condition), "full_outer")
 
-    if validate_unique_match:
-        # Delta always errors when one target row matches several source
-        # rows (the update would be ambiguous) — fail-loud by default to
-        # match that; opt out only when the extra job is provably wasted.
-        # The match count is keyed on a surrogate per-row id, not the
-        # row's columns: a single long shuffles instead of the whole
-        # row, unorderable column types (variant) stay mergeable, and
-        # two IDENTICAL target rows each matching one source row no
-        # longer collapse into a false ambiguity. The id only needs to
-        # be stable within this one counting action, which
-        # monotonically_increasing_id is.
-        tt = (subset.withColumn("__merge_rid",
-                                F.monotonically_increasing_id())
-              .alias("target"))
-        dup = (
-            tt.join(source.alias("source"), F.expr(condition), "inner")
-            .groupBy("__merge_rid")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise VersionedTableError(
-                "merge: multiple source rows match a single target row"
-            )
-
     matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
     delete_gate = F.lit(False)
     if when_matched_delete:
@@ -533,6 +520,185 @@ def build_merge_annotated(
         F.col("__t").isNull().alias("__inserted"),
         delete_gate.alias("__deleted"),
     )
+
+
+# --- the MERGE find-files pass and the OCC rules both formats share ----
+
+
+def _norm_file_uri(p: str) -> str:
+    """Normalize a file location for matching scan-reported paths
+    (``input_file_name()``, ``_metadata.file_path``) back to a table's
+    files. A URI loses its scheme and its percent-escapes; a path with
+    no scheme is already literal and stays as it is (a directory named
+    ``a%41`` is not ``aA``)."""
+    u = urllib.parse.urlparse(p)
+    return urllib.parse.unquote(f"{u.netloc}{u.path}") if u.scheme else p
+
+
+def matched_files(target: DataFrame, keys: dict[str, str], source: DataFrame,
+                  condition: str, validate_unique_match: bool) -> list[str]:
+    """The MERGE find-files pass of both formats: the sorted keys of the
+    ``target`` files holding a row that matches ``condition`` against
+    ``source``. ``target`` scans the files ``keys`` maps (file URI → the
+    format's file key); ``condition`` is already coerced by the caller.
+
+    With ``validate_unique_match`` it is ONE fused inner join that also
+    raises when a target row matches several source rows (Delta errors
+    on the ambiguous update): each target row gets a
+    ``monotonically_increasing_id`` tag (stable within this one action),
+    the join counts matches per tag, and a per-file max comes back one
+    row per distinct file — never a single-row ``collect_set`` that
+    funnels every file name through one task. Without validation a
+    left-semi join short-circuits per target row instead of shuffling
+    every joined row for a count nobody checks.
+
+    A scan-reported file that maps back to no key raises: dropping it
+    would silently leave its matched rows un-rewritten."""
+    if not keys:
+        return []
+    tagged = target.withColumn("__file", F.input_file_name())
+    on = F.expr(condition)
+    if validate_unique_match:
+        per_rid = (
+            tagged.withColumn("__merge_rid", F.monotonically_increasing_id())
+            .alias("target").join(source.alias("source"), on, "inner")
+            .groupBy("__merge_rid")
+            .agg(F.count(F.lit(1)).alias("__n"),
+                 F.first("__file").alias("__file"))
+        )
+        rows = per_rid.groupBy("__file").agg(F.max("__n").alias("mx")).collect()
+        if any(r["mx"] > 1 for r in rows):
+            raise VersionedTableError(
+                "merge: multiple source rows match a single target row")
+    else:
+        rows = (tagged.alias("target").join(source.alias("source"), on,
+                                            "left_semi")
+                .select("__file").distinct().collect())
+    by_uri = {_norm_file_uri(u): k for u, k in keys.items()}
+    out = []
+    for r in rows:
+        key = by_uri.get(_norm_file_uri(r["__file"]))
+        if key is None:
+            raise VersionedTableError(
+                f"merge: matched file {r['__file']!r} does not map back "
+                "to a live file of the table")
+        out.append(key)
+    return sorted(out)
+
+
+@dataclass(frozen=True)
+class Winner:
+    """A commit that won a race, as both formats describe it to
+    :func:`classify_winner`: ``changed`` is 'protocol', 'metadata' (the
+    schema included) or None; ``removed`` are the paths it removed;
+    ``added`` maps each data-changing path it added to the file record
+    the format's per-file predicate test takes (row-preserving rewrites
+    — Delta ``dataChange: false``, native COMPACT — are not listed)."""
+
+    version: int
+    operation: str
+    changed: str | None
+    txn_app_ids: frozenset
+    removed: frozenset
+    added: dict
+
+
+def classify_winner(w: Winner, operation: str, where: str, *,
+                    read_paths=frozenset(), removed_paths=frozenset(),
+                    reads_table_data: bool = False, may_match=None,
+                    txn_app_id: str | None = None) -> None:
+    """Classify one winner against the loser's footprint: raise the
+    named conflict, or return when the two commute and the loser may
+    retry. The rules, in order (delta-spark's ConflictChecker,
+    conservatively):
+
+    =================================  =====================  ==========================
+    winner                             loser                  outcome
+    =================================  =====================  ==========================
+    changed the protocol               any                    ProtocolChangedError
+    changed metadata / the schema      any                    MetadataChangedError
+    txn with the loser's app id        idempotent writer      ConcurrentTransactionError
+    removed a file the loser removes   any                    ConcurrentDeleteDeleteError
+    removed a file the loser read      any                    ConcurrentDeleteReadError
+    added data                         op reading table data  ConcurrentAppendError
+    =================================  =====================  ==========================
+
+    The append rule is scoped by the loser's read predicate when it has
+    one: ``may_match(file)`` is the format's data-skipping test of the
+    predicate's scope tree on one added file, and files it rules out
+    commute (a merge over partition A and an append into B). Without
+    it any data add conflicts. Everything else — blind appends and
+    compactions of disjoint files, commitInfo-only winners — commutes."""
+    ctx = (f"{operation} at {where} lost the commit race for version "
+           f"{w.version} to a concurrent {w.operation or 'commit'}")
+    if w.changed == "protocol":
+        raise ProtocolChangedError(
+            f"{ctx} that upgraded the table protocol — re-read the table "
+            "and re-run the operation")
+    if w.changed == "metadata":
+        raise MetadataChangedError(
+            f"{ctx} that changed table metadata (schema / properties / "
+            "identity or column-mapping watermarks) — re-read the table "
+            "and re-run the operation")
+    if txn_app_id is not None and txn_app_id in w.txn_app_ids:
+        raise ConcurrentTransactionError(
+            f"{ctx} carrying the same txn appId {txn_app_id!r} — two "
+            "instances of one idempotent writer raced; the winner's "
+            "version watermark supersedes this attempt")
+    hit = w.removed & set(removed_paths)
+    if hit:
+        raise ConcurrentDeleteDeleteError(
+            f"{ctx} that already removed file(s) this operation also "
+            f"removes (e.g. {sorted(hit)[0]!r})")
+    hit = w.removed & set(read_paths)
+    if hit:
+        raise ConcurrentDeleteReadError(
+            f"{ctx} that removed file(s) this operation read "
+            f"(e.g. {sorted(hit)[0]!r})")
+    if not (reads_table_data and w.added):
+        return
+    if may_match is None:
+        raise ConcurrentAppendError(
+            f"{ctx} that added data file(s) this operation's predicate "
+            "may depend on — re-read the table and re-run the operation")
+    overlap = sorted(p for p, f in w.added.items() if may_match(f))
+    if overlap:
+        raise ConcurrentAppendError(
+            f"{ctx} that added data file(s) inside this operation's read "
+            f"predicate (e.g. {overlap[0]!r}) — re-read the table and "
+            "re-run the operation")
+
+
+def commit_with_retry(publish, on_lost, version: int, what: str,
+                      max_retries: int = 200) -> int:
+    """Optimistic-concurrency commit of both formats; returns the
+    version that landed. ``publish(v)`` publishes the commit at ``v``
+    and raises :class:`CommitRaceLostError` when another writer got
+    there first; ``on_lost(v)`` then classifies the winner(s) — raising
+    the named conflict — rebases or re-stamps the commit, and returns
+    the version to try next.
+
+    ``max_retries`` is a LIVELOCK BACKSTOP, not a fairness bound: every
+    lost race means another writer's commit landed, so the system makes
+    progress, and N concurrent writers can hand one of them N-1
+    legitimate losses. From the sixth attempt on, each waits a jittered,
+    growing backoff (capped at 100 ms) to break thundering-herd
+    scheduling; the common one- or two-loss case never sleeps."""
+    import random as _rnd
+
+    for lost in range(max_retries):
+        if lost > 4:
+            time.sleep(min(0.1, 0.005 * (2 ** min(lost - 5, 4)))
+                       * (0.5 + _rnd.random()))
+        try:
+            publish(version)
+            return version
+        except CommitRaceLostError:
+            pass
+        version = on_lost(version)
+    raise ConcurrentModificationError(
+        f"{what}: exhausted {max_retries} commit retries against "
+        "concurrent writers")
 
 
 def zorder_key(df: DataFrame, cols: list[str],
@@ -864,12 +1030,6 @@ class VersionedTable:
         paths = [f"{rel_dir}/{f.path}" for f in written]
         return paths, manifest_stats(paths, written)
 
-    def _carried_stats(self, prev_version: int, carried: list[str]) -> dict:
-        """Stats entries for files carried by reference from the
-        previous manifest (never re-scanned)."""
-        prev = self.manifest(prev_version).get("stats", {})
-        return {f: prev[f] for f in carried if f in prev}
-
     def _commit(self, version: int, operation: str, files: list[str],
                 schema: dict, extra: dict | None = None,
                 stats: dict | None = None) -> int:
@@ -885,122 +1045,112 @@ class VersionedTable:
         self._write_text_atomic(f"v{version:08d}.json", json.dumps(manifest))
         return version
 
-    def _classify_winner(self, wv: int, operation: str,
-                         read_files: set, removed_files: set,
-                         reads_table_data: bool,
-                         read_tree=None) -> None:
-        """Classify ONE winner manifest against the loser's declared
-        footprint — raise the named conflict or return (commute). The
-        winner's changes are its manifest diff against its predecessor
-        (manifests are contiguous inside a race window: every version
-        is predecessor+1 and the loser holds the base)."""
-        wm = self.manifest(wv)
-        pm = self.manifest(wv - 1)
-        win_op = wm.get("operation", "commit")
-        ctx = (f"{operation} at {self.path} lost the commit race for "
-               f"version {wv} to a concurrent {win_op}")
-        if wm.get("schema") != pm.get("schema"):
-            # the winner EVOLVED the schema; the loser's rewritten
-            # files (and the schema it would re-commit) were derived
-            # under the old one — rebasing would silently downgrade
-            # the winner's evolution
-            raise VersionedSchemaChangedError(
-                f"{ctx} that changed the table schema — re-read the "
-                "table and re-run the operation")
-        win_files = set(wm.get("files") or [])
-        prev_files = set(pm.get("files") or [])
-        win_removed = prev_files - win_files
-        win_added = win_files - prev_files
-        hit = win_removed & removed_files
-        if hit:
-            raise VersionedConcurrentDeleteDeleteError(
-                f"{ctx} that already removed file(s) this operation "
-                f"also removes (e.g. {sorted(hit)[0]!r})")
-        hit = win_removed & read_files
-        if hit:
-            raise VersionedConcurrentDeleteReadError(
-                f"{ctx} that removed file(s) this operation read "
-                f"(e.g. {sorted(hit)[0]!r})")
-        if reads_table_data and win_added and win_op != "COMPACT":
-            # COMPACT's adds are row-preserving rewrites of files it
-            # removed (caught above when they overlap the loser's
-            # footprint); any other data-adding winner may change what
-            # a table-reading op's predicate matched — UNLESS the
-            # loser's read predicate (its ON condition's scope tree)
-            # provably excludes every added file by the winner's own
-            # manifest stats (the bridge's predicate-scoped rule, on
-            # manifests): a merge over k='A' commutes with an append
-            # whose files hold only k='B'. Missing stats keep the file
-            # → conflict.
-            if read_tree is not None:
-                wstats = wm.get("stats", {})
-                types = _schema_types(wm["schema"])
-                overlap = [f for f in win_added
-                           if _manifest_tree_may_match(wstats.get(f),
-                                                       read_tree, types)]
-                if not overlap:
-                    return
-                raise VersionedConcurrentAppendError(
-                    f"{ctx} that added data file(s) inside this "
-                    f"operation's read predicate (e.g. "
-                    f"{sorted(overlap)[0]!r}) — re-read the table and "
-                    "re-run the operation")
-            raise VersionedConcurrentAppendError(
-                f"{ctx} that added data file(s) this operation's "
-                "predicate may depend on — re-read the table and "
-                "re-run the operation")
+    def _publish_rebased(self, version: int, operation: str,
+                         new_files: list[str], new_stats: dict,
+                         schema: dict, removed: frozenset = frozenset(),
+                         extra: dict | None = None) -> None:
+        """Publish an edit of the previous snapshot at ``version``: the
+        files of ``version - 1`` minus ``removed`` (carried by reference
+        with their stats, never re-scanned) plus the staged new files.
+        After a lost race the same staged files commit verbatim at the
+        higher version — a manifest may reference any earlier version's
+        data dir."""
+        carried, stats = [], dict(new_stats)
+        if version > 0:
+            prev = self.manifest(version - 1)
+            carried = [f for f in prev["files"] if f not in removed]
+            prev_stats = prev.get("stats", {})
+            stats.update({f: prev_stats[f] for f in carried
+                          if f in prev_stats})
+        if extra is not None and "files_carried" in extra:
+            extra = {**extra, "files_carried": len(carried)}
+        self._commit(version, operation, carried + new_files, schema,
+                     extra=extra, stats=stats)
 
-    def _commit_classified(self, read_v: int, operation: str,
-                           removed_files: list[str], new_files: list[str],
-                           schema, new_stats: dict,
-                           reads_table_data: bool, read_files: set,
-                           read_tree=None,
-                           extra: dict | None = None,
-                           max_retries: int = 200) -> int:
-        """Commit a snapshot-rewriting operation (MERGE / COMPACT) with
-        the bridge's optimistic-concurrency contract on manifests: on a
-        lost race every winner is classified
-        (:meth:`_classify_winner`); commuting winners (a blind append
-        racing a COMPACT — the hourly-append + nightly-OPTIMIZE shape)
-        REBASE the loser onto the winner's snapshot (carried files and
-        stats recomputed; the staged data files commit verbatim at the
-        higher version — manifests may reference any earlier version's
-        data dir) and retry. Conflicting winners raise the named error
-        instead of a raw CommitRaceLostError."""
-        removed = set(removed_files)
+    def _winner(self, version: int) -> Winner:
+        """A winner manifest as :func:`classify_winner` reads it: its
+        diff against its predecessor (manifests are contiguous inside a
+        race window — every version is predecessor+1 and the loser
+        holds the base)."""
+        wm, pm = self.manifest(version), self.manifest(version - 1)
+        win, prev = set(wm.get("files") or []), set(pm.get("files") or [])
+        op = wm.get("operation", "commit")
+        stats = wm.get("stats", {})
+        return Winner(
+            # an evolved schema is a metadata change: the loser's rows
+            # were derived under the old one, and a rebase would
+            # silently downgrade the winner's evolution
+            version, op,
+            "metadata" if wm.get("schema") != pm.get("schema") else None,
+            frozenset(), frozenset(prev - win),
+            # COMPACT rewrites the rows of the files it removed, like a
+            # Delta dataChange=false add
+            {} if op == "COMPACT" else {f: stats.get(f) for f in win - prev})
+
+    def _commit_rebasing(self, read_v: int, operation: str,
+                           removed: list[str], new_files: list[str],
+                           schema, new_stats: dict, read_files: set,
+                           reads_table_data: bool, read_tree=None,
+                           extra: dict | None = None) -> int:
+        """Commit a snapshot-editing operation (MERGE / COMPACT) read at
+        ``read_v`` through :func:`commit_with_retry`. On a lost race
+        every winner is classified against what it read and removed;
+        commuting winners (a blind append racing a COMPACT, or one whose
+        files the read predicate ``read_tree`` rules out by their
+        manifest stats) are rebased onto, anything else raises the
+        named conflict."""
+        removed = frozenset(removed)
         schema_json = schema.jsonValue()
-        base_v, attempt = read_v, read_v + 1
-        # max_retries is a LIVELOCK BACKSTOP, not a fairness bound:
-        # every lost race means another writer's commit landed, so
-        # system progress is guaranteed; N concurrent writers can hand
-        # one of them up to N-1 legitimate losses. Repeated losses
-        # back off with growing jitter (the bridge treatment).
-        for lost in range(max_retries):
-            if lost > 4:
-                import random as _rnd
-                import time as _t
-                _t.sleep(min(0.1, 0.005 * (2 ** min(lost - 5, 4)))
-                         * (0.5 + _rnd.random()))
-            carried = [f for f in self.files(base_v) if f not in removed]
-            stats = dict(new_stats)
-            stats.update(self._carried_stats(base_v, carried))
-            if extra is not None and "files_carried" in extra:
-                extra = {**extra, "files_carried": len(carried)}
-            try:
-                return self._commit(attempt, operation,
-                                    carried + new_files, schema_json,
-                                    extra=extra, stats=stats)
-            except CommitRaceLostError:
-                pass
+        types = _schema_types(schema_json)
+        may_match = None if read_tree is None else (
+            lambda st: _manifest_tree_may_match(st, read_tree, types))
+
+        def on_lost(version: int) -> int:
             latest = self.versions()[-1]
-            for wv in range(attempt, latest + 1):
-                self._classify_winner(wv, operation, read_files, removed,
-                                      reads_table_data,
-                                      read_tree=read_tree)
-            base_v, attempt = latest, latest + 1
-        raise VersionedConcurrentModificationError(
-            f"{operation} at {self.path}: exhausted {max_retries} commit "
-            "retries against concurrent writers")
+            for wv in range(version, latest + 1):
+                classify_winner(self._winner(wv), operation, self.path,
+                                read_paths=read_files, removed_paths=removed,
+                                reads_table_data=reads_table_data,
+                                may_match=may_match)
+            return latest + 1
+
+        return commit_with_retry(
+            lambda v: self._publish_rebased(v, operation, new_files,
+                                            new_stats, schema_json,
+                                            removed, extra),
+            on_lost, read_v + 1, f"{operation} at {self.path}")
+
+    def _append_schema(self, version: int, schema, merge_schema: bool,
+                       raced: bool = False):
+        """The schema an append of rows typed ``schema`` commits on top
+        of ``version``: that version's schema, widened by the new
+        columns when ``merge_schema``; a same-name column whose type
+        changed raises. ``raced`` words the errors for a retry past a
+        winner that changed the schema under the append."""
+        from pyspark.sql.types import StructType
+
+        old = StructType.fromJson(self.manifest(version)["schema"])
+        old_types = {f.name: f.dataType for f in old.fields}
+        for f in schema.fields:
+            if f.name in old_types and f.dataType != old_types[f.name]:
+                raise VersionedTableError(
+                    f"append lost a commit race to a writer that changed "
+                    f"column {f.name!r} to "
+                    f"{old_types[f.name].simpleString()} — re-read the "
+                    "table and re-run" if raced else
+                    f"append changes type of column {f.name!r}: "
+                    f"{old_types[f.name].simpleString()} -> "
+                    f"{f.dataType.simpleString()}")
+        new_fields = [f for f in schema.fields if f.name not in old_types]
+        if new_fields and not merge_schema:
+            names = [f.name for f in new_fields]
+            raise VersionedTableError(
+                f"append lost a commit race to a writer whose schema "
+                f"lacks {names}; pass merge_schema=True to evolve, or "
+                "re-run" if raced else
+                f"append adds columns {names}; pass merge_schema=True to "
+                "evolve the table schema")
+        return StructType(list(old.fields) + new_fields)
 
     def write(self, df: DataFrame, mode: str = "overwrite", num_partitions: int | None = None,
               operation: str = "WRITE", merge_schema: bool = False,
@@ -1026,8 +1176,6 @@ class VersionedTable:
         (``tables/files.py``): zstd parquet, rowless files dropped, and
         per-file min/max/null stats read from the footers into the
         manifest — for ``stats_columns`` only when given."""
-        from pyspark.sql.types import StructType
-
         vs = self.versions()
         if mode not in ("overwrite", "append", "errorifexists"):
             raise VersionedTableError(f"unsupported saveMode {mode}")
@@ -1036,61 +1184,30 @@ class VersionedTable:
 
         schema = df.schema
         if mode == "append" and vs:
-            old = StructType.fromJson(self.manifest(vs[-1])["schema"])
-            old_types = {f.name: f.dataType for f in old.fields}
-            new_fields = [f for f in df.schema.fields if f.name not in old_types]
-            for f in df.schema.fields:
-                if f.name in old_types and f.dataType != old_types[f.name]:
-                    raise VersionedTableError(
-                        f"append changes type of column {f.name!r}: "
-                        f"{old_types[f.name].simpleString()} -> {f.dataType.simpleString()}"
-                    )
-            if new_fields and not merge_schema:
-                raise VersionedTableError(
-                    f"append adds columns {[f.name for f in new_fields]}; "
-                    "pass merge_schema=True to evolve the table schema"
-                )
-            schema = StructType(list(old.fields) + new_fields)
+            schema = self._append_schema(vs[-1], df.schema, merge_schema)
 
         new_v = (vs[-1] + 1) if vs else 0
         new_files, new_stats = self._write_files(
             df, new_v, num_partitions, cluster_by, cluster_method,
             stats_columns, bloom_filter_columns,
             unique_dir=(mode == "append"))
-        carried = self.files(vs[-1]) if (mode == "append" and vs) else []
-        stats = dict(new_stats)
-        if carried:
-            stats.update(self._carried_stats(vs[-1], carried))
         op = operation if mode != "append" else "APPEND"
         if mode != "append":
             # snapshot-replacing commits keep single-winner semantics:
             # the loser's result was computed from a stale snapshot
-            return self._commit(new_v, op, carried + new_files,
-                                schema.jsonValue(), stats=stats, extra=extra)
-        # APPEND is blind: on a lost race, re-base on the winner's
-        # snapshot (its file list + stats), re-validate the schema
-        # against the winner's, and retry at the next version — the
-        # same optimistic-concurrency contract as the Delta bridge's
-        # blind appends. A manifest may reference files written under
-        # any earlier version's data dir, so the staged files commit
-        # verbatim at the higher version.
-        attempt_v, attempt_schema = new_v, schema
-        for lost in range(200):
-            if lost > 4:  # jittered backoff past repeated losses
-                import random as _rnd
-                import time as _t
-                _t.sleep(min(0.1, 0.005 * (2 ** min(lost - 5, 4)))
-                         * (0.5 + _rnd.random()))
-            try:
-                return self._commit(attempt_v, op, carried + new_files,
-                                    attempt_schema.jsonValue(), stats=stats,
-                                    extra=extra)
-            except CommitRaceLostError:
-                pass
+            return self._commit(new_v, op, new_files, schema.jsonValue(),
+                                stats=new_stats, extra=extra)
+        # APPEND is blind: on a lost race it re-validates the schema
+        # against the winner's and rebases on the winner's snapshot —
+        # the same optimistic-concurrency contract as the Delta bridge's
+        # blind appends
+        bid = (extra or {}).get("stream_batch_id")
+
+        def on_lost(version: int) -> int:
+            nonlocal schema
             latest = self.versions()[-1]
-            bid = (extra or {}).get("stream_batch_id")
             if bid is not None:
-                for wv in range(attempt_v, latest + 1):
+                for wv in range(version, latest + 1):
                     if self.manifest(wv).get("stream_batch_id") == bid:
                         raise ConcurrentStreamBatchError(
                             f"append at {self.path}: a racing writer "
@@ -1098,33 +1215,14 @@ class VersionedTable:
                             f"at version {wv} — the batch is in the "
                             "table exactly once"
                         )
-            wm = self.manifest(latest)
-            win = StructType.fromJson(wm["schema"])
-            win_types = {f.name: f.dataType for f in win.fields}
-            fresh = [f for f in df.schema.fields if f.name not in win_types]
-            for f in df.schema.fields:
-                if f.name in win_types and f.dataType != win_types[f.name]:
-                    raise VersionedTableError(
-                        f"append lost a commit race to a writer that "
-                        f"changed column {f.name!r} to "
-                        f"{win_types[f.name].simpleString()} — re-read "
-                        "the table and re-run"
-                    )
-            if fresh and not merge_schema:
-                raise VersionedTableError(
-                    f"append lost a commit race to a writer whose schema "
-                    f"lacks {[f.name for f in fresh]}; pass "
-                    "merge_schema=True to evolve, or re-run"
-                )
-            attempt_schema = StructType(list(win.fields) + fresh)
-            carried = list(wm["files"])
-            stats = dict(new_stats)
-            stats.update(self._carried_stats(latest, carried))
-            attempt_v = latest + 1
-        raise VersionedTableError(
-            f"append at {self.path}: exhausted 200 commit retries against "
-            "concurrent writers"
-        )
+            schema = self._append_schema(latest, df.schema, merge_schema,
+                                         raced=True)
+            return latest + 1
+
+        return commit_with_retry(
+            lambda v: self._publish_rebased(v, op, new_files, new_stats,
+                                            schema.jsonValue(), extra=extra),
+            on_lost, new_v, f"{op} at {self.path}")
 
     def compact(
         self,
@@ -1171,7 +1269,7 @@ class VersionedTable:
         # hourly-append + nightly-OPTIMIZE shape, the same commute the
         # bridge's OPTIMIZE has) — while a winner that removed or
         # rewrote any input raises the named conflict
-        return self._commit_classified(
+        return self._commit_rebasing(
             cur_v, "COMPACT", small, new_files, schema, stats,
             reads_table_data=False, read_files=set(small),
             extra={"files_compacted": len(small), "files_carried": len(carried)},
@@ -1288,83 +1386,6 @@ class VersionedTable:
 
     # --- merge (the SCD2 workhorse) ----------------------------------------
 
-    _FILE_RE = r"(data/v\d{8}(?:-[0-9a-f]{8})?/[^/]+)$"
-
-    def _matched_files(self, source: DataFrame, condition: str,
-                       files: list[str] | None = None) -> list[str]:
-        """Data files containing at least one row matching the merge
-        condition — one semi-join job whose output is a (tiny) file
-        list. This is the copy-on-write pruning step: everything else
-        is carried forward untouched. ``files`` limits the scan to a
-        stats-pruned candidate subset (None = the whole snapshot)."""
-        from pyspark.sql.types import StructType
-
-        if files is None:
-            target = self.read()
-        else:
-            if not files:
-                return []
-            schema = StructType.fromJson(
-                self.manifest(self.latest_version())["schema"])
-            target = self.spark.read.schema(schema).parquet(
-                *[f"{self.path}/{f}" for f in files])
-        tagged = (
-            target
-            .withColumn("__file", F.regexp_extract(F.input_file_name(), self._FILE_RE, 1))
-            .alias("target")
-        )
-        rows = (
-            tagged.join(source.alias("source"), F.expr(condition), "left_semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        )
-        return sorted(r["__file"] for r in rows)
-
-    def _matched_files_and_max_match(
-        self, source: DataFrame, condition: str, files: list[str],
-    ) -> tuple[list[str], int]:
-        """:meth:`_matched_files` FUSED with the unique-match
-        validation count — one inner-join job computes both the
-        matched-file list and the maximum number of source rows any
-        single target row matches (Delta errors on >1). The separate
-        shapes paid the target⋈source join twice (semi-join for files,
-        inner join + groupBy for the dup count): a full extra join pass
-        at 100 TB and ~0.5s of job latency per merge at bench SF. The
-        per-row surrogate id only needs stability within this one
-        action, which monotonically_increasing_id is; ``__n`` and
-        ``first(__file)`` are map-side combinable.
-
-        The file list comes back as one ROW PER DISTINCT FILE via a
-        second grouped aggregate (``groupBy(__file).max(__n)``), never
-        as a single-row ``collect_set``: a 100 TB merge matching ~10⁶
-        files would otherwise funnel an ~O(100 MB) array through ONE
-        reduce task's row (r13 verdict #3). The collect's driver-side
-        cardinality equals the matched-file count — exactly what the
-        old separate semi-join pass collected."""
-        from pyspark.sql.types import StructType
-
-        if not files:
-            return [], 0
-        schema = StructType.fromJson(
-            self.manifest(self.latest_version())["schema"])
-        target = self.spark.read.schema(schema).parquet(
-            *[f"{self.path}/{f}" for f in files])
-        tagged = (
-            target
-            .withColumn("__file", F.regexp_extract(F.input_file_name(), self._FILE_RE, 1))
-            .withColumn("__merge_rid", F.monotonically_increasing_id())
-            .alias("target")
-        )
-        per_rid = (
-            tagged.join(source.alias("source"), F.expr(condition), "inner")
-            .groupBy("__merge_rid")
-            .agg(F.count(F.lit(1)).alias("__n"), F.first("__file").alias("__file"))
-        )
-        rows = per_rid.groupBy("__file").agg(F.max("__n").alias("mx")).collect()
-        return (sorted(r["__file"] for r in rows),
-                max((int(r["mx"]) for r in rows), default=0))
-
     def merge(
         self,
         source: DataFrame,
@@ -1396,7 +1417,10 @@ class VersionedTable:
 
         Physical shape (copy-on-write at file granularity):
 
-        1. one semi-join finds the target files containing matched rows;
+        1. one join (:func:`matched_files`, shared with the Delta
+           bridge) finds the target files containing matched rows and,
+           with ``validate_unique_match``, fails when a target row
+           matches several source rows;
         2. only those files join the source (full-outer on the
            condition) and are rewritten with update/insert branches
            applied — a source row that matches nothing in the matched
@@ -1414,7 +1438,10 @@ class VersionedTable:
         # BooleanEquality coercion Spark 4 removed — rewrite boolean
         # literals compared to known non-boolean columns (dtype-aware;
         # genuine boolean columns keep their literal).
-        from sql_based_etl_spark.engine.sql_compat import coerce_condition_for_types
+        from sql_based_etl_spark.engine.sql_compat import (
+            coerce_condition_for_types,
+            condition_scope_tree,
+        )
 
         # one snapshot construction serves the dtype probe here AND the
         # rewrite below (r14): each read() re-fetches the manifest and
@@ -1433,48 +1460,33 @@ class VersionedTable:
         # that range's files) and scopes OCC — a racing append whose
         # new files provably miss the predicate commutes. A by-source
         # clause inspects every target row and disables both.
-        from sql_based_etl_spark.engine.sql_compat import (
-            condition_scope_tree,
-        )
-
         read_tree = None
         if not when_not_matched_by_source_delete:
-            t_cols_all = [f["name"] for f in
-                          self.manifest(cur_v)["schema"]["fields"]]
-            read_tree = condition_scope_tree(condition, t_cols_all,
+            read_tree = condition_scope_tree(condition, target_full.columns,
                                              "target")
         scan_files = self._files_may_match(cur_v, read_tree)
-        validated_in_scan = False
+        matched = []
+        if scan_files and (validate_unique_match
+                           or not when_not_matched_by_source_delete):
+            # keyed as Spark's scan reports files (under the qualified
+            # root URI); with the by-source clause, which rewrites every
+            # file anyway, the pass only validates the unique match
+            root = self._fs().makeQualified(self._jpath()).toUri().toString()
+            matched = matched_files(
+                self.spark.read.schema(target_full.schema).parquet(
+                    *[f"{self.path}/{f}" for f in scan_files]),
+                {f"{root}/{f}": f for f in scan_files},
+                source, condition, validate_unique_match)
         if when_not_matched_by_source_delete:
-            matched_files = list(all_files)  # clause touches every row
-        elif validate_unique_match:
-            # fused pass: matched files + the unique-match validation
-            # count in ONE join job (see _matched_files_and_max_match)
-            matched_files, max_match = self._matched_files_and_max_match(
-                source, condition, scan_files)
-            if max_match > 1:
-                raise VersionedTableError(
-                    "merge: multiple source rows match a single target row"
-                )
-            validated_in_scan = True
-        else:
-            # validation opted out: the left-semi prune short-circuits
-            # per target row, instead of shuffling every joined row
-            # through the fused count aggregate for a count nobody
-            # checks (a high-fanout condition makes that k× the rows)
-            matched_files = self._matched_files(source, condition,
-                                                scan_files)
-        carried = [f for f in all_files if f not in set(matched_files)]
+            matched = list(all_files)
 
-        t_cols = target_full.columns
-        t_dtypes = dict(target_full.dtypes)
-        if matched_files:
+        if matched:
             # manifest schema, not footer inference: after a schema-
             # evolving append the matched files may predate the newest
             # columns — the explicit schema fills them with NULL and
             # keeps target.<col> resolvable for every manifest column
             subset = self.spark.read.schema(target_full.schema).parquet(
-                *[f"{self.path}/{f}" for f in matched_files]
+                *[f"{self.path}/{f}" for f in matched]
             )
         else:
             subset = self.spark.createDataFrame([], target_full.schema)
@@ -1484,13 +1496,9 @@ class VersionedTable:
             when_matched_update=when_matched_update,
             matched_condition=matched_condition,
             insert_not_matched=insert_not_matched,
-            # already validated by the fused matched-file pass (one
-            # join job instead of two) except on the by-source path
-            validate_unique_match=(validate_unique_match
-                                   and not validated_in_scan),
             when_matched_delete=when_matched_delete,
             when_not_matched_by_source_delete=when_not_matched_by_source_delete,
-        ).filter(~F.col("__deleted")).select(*t_cols)
+        ).filter(~F.col("__deleted")).select(*target_full.columns)
 
         # unique staging dir: racing writers that both picked the same
         # next version never collide at the data write (the round-10
@@ -1504,12 +1512,12 @@ class VersionedTable:
         # when no target conjunct was extractable); winners adding
         # files provably OUTSIDE the read predicate commute (rebase +
         # retry), anything else raises the named conflict
-        return self._commit_classified(
-            cur_v, "MERGE", matched_files, new_files, target_full.schema,
-            new_stats, reads_table_data=True, read_files=set(scan_files),
+        return self._commit_rebasing(
+            cur_v, "MERGE", matched, new_files, target_full.schema,
+            new_stats, read_files=set(scan_files), reads_table_data=True,
             read_tree=read_tree,
             extra={
-                "files_rewritten": len(matched_files),
-                "files_carried": len(carried),
+                "files_rewritten": len(matched),
+                "files_carried": len(all_files) - len(matched),
             },
         )

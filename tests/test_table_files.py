@@ -217,3 +217,23 @@ def test_unknown_cluster_method_refused(spark, tmp_path, path):
                 "options": {"clusterBy": ["a"], "clusterMethod": "zordr"}}])
     if path != "compact_delta":
         assert not os.path.exists(os.path.join(uri, "_meta"))
+
+
+def test_collated_strings_get_null_counts_but_no_bounds(
+        spark, tmp_path, monkeypatch):
+    """Footer bounds of a string are in byte order, which says nothing
+    under a non-binary collation ('a' = 'A' in UTF8_LCASE). Both stat
+    paths give such a column a null count and no bounds, while a
+    binary-collated string keeps its bounds."""
+    df = spark.sql(
+        "SELECT CAST(s AS STRING COLLATE UTF8_LCASE) AS c, s AS b FROM "
+        "VALUES ('a'), ('B'), (NULL) AS t(s)").coalesce(1)
+    want = {"c": {"min": None, "max": None, "nulls": 1},
+            "b": {"min": "B", "max": "a", "nulls": 1}}
+    footer = files.write_files(df, str(tmp_path / "footer"))
+    assert [f.columns for f in footer] == [want]
+    monkeypatch.setattr(
+        files, "footer_stats",
+        lambda *a, **k: (_ for _ in ()).throw(OSError("no local footers")))
+    scanned = files.write_files(df, str(tmp_path / "scan"))
+    assert [f.columns for f in scanned] == [want]

@@ -1233,3 +1233,21 @@ def test_every_write_path_stores_zstd_files(spark, table, parquet_codecs, op):
         assert {"min", "max"} <= set(stats[f]["columns"]["id"])
     assert table.prune_files(filters=[("id", "=", 10_000)]) == []
     assert {r.id: r.name for r in table.read().collect()} == expected
+
+
+def test_collated_key_reads_and_merges_case_insensitively(spark, table):
+    """A UTF8_LCASE column matches 'A' against a stored 'a'. Its file
+    stats carry no byte-order bounds, so neither a filtered read nor a
+    MERGE whose ON condition pins the key prunes the file away: the
+    read returns the row and the MERGE updates it instead of inserting
+    a duplicate."""
+    table.write(spark.sql(
+        "SELECT 1 AS id, CAST('a' AS STRING COLLATE UTF8_LCASE) AS s, "
+        "'x' AS v"))
+    assert table.read(filters=[("s", "=", "A")]).count() == 1
+    assert table.read().filter("s = 'A'").count() == 1
+    src = spark.createDataFrame([(1, "y")], "id int, v string")
+    table.merge(src, "target.s = 'A' AND target.id = source.id",
+                when_matched_update={"v": "source.v"})
+    assert [(r.id, r.s, r.v) for r in table.read().collect()] == [
+        (1, "a", "y")]
