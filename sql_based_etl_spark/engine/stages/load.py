@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame
 
 from sql_based_etl_spark.engine.config import substitute_sql_params
 from sql_based_etl_spark.engine.pipeline import PipelineContext, StageError
+from sql_based_etl_spark.tables import files
 from sql_based_etl_spark.tables.versioned import VersionedTable
 
 
@@ -372,7 +373,8 @@ def bucketed_table_load(ctx: PipelineContext, conf: dict) -> DataFrame | None:
         # disk with no catalog entry, and saveAsTable then fails with
         # LOCATION_ALREADY_EXISTS even in overwrite mode.  Drop any
         # catalog entry, then clear the orphaned location through the
-        # Hadoop FS API (works on any scheme, not just local disk).
+        # shared file layer (a Hadoop delete: any scheme, not just local
+        # disk).
         # Names may be database-qualified: quote each part separately
         # (a single backtick pair would make `db.tbl` one identifier)
         # and mirror the managed-table layout <warehouse>/<db>.db/<tbl>
@@ -387,12 +389,8 @@ def bucketed_table_load(ctx: PipelineContext, conf: dict) -> DataFrame | None:
         else:
             db, tbl = parts[-2], parts[-1]
         rel = tbl.lower() if db == "default" else f"{db.lower()}.db/{tbl.lower()}"
-        jvm = spark.sparkContext._jvm  # noqa: SLF001
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        loc = jvm.org.apache.hadoop.fs.Path(warehouse, rel)
-        fs = loc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())  # noqa: SLF001
-        if fs.exists(loc):
-            fs.delete(loc, True)
+        files.delete(spark, f"{warehouse.rstrip('/')}/{rel}", recursive=True)
     writer = (
         df.write.mode(mode)
         .bucketBy(int(conf.get("numBuckets", 8)), *cols)

@@ -120,27 +120,18 @@ def _parse_byte_conf(raw: object, default: int) -> int:
 
 
 def _file_size(spark: SparkSession, uri: str) -> int | None:
-    """Size in bytes of one scan input file, on ANY filesystem: local
-    paths via ``os.stat``; other schemes through the session's Hadoop
-    FileSystem (the r13 gate used ``os.path.getsize`` only, so on an
-    object store it silently never widened — exactly where one huge
-    unsplittable file needs it). None when the size can't be read
-    (caller treats the scan as not widenable)."""
-    from urllib.parse import urlparse
+    """Size in bytes of one scan input file, on ANY filesystem, through
+    the shared file layer (``os`` on local paths, the session's Hadoop
+    FileSystem elsewhere — a bare path follows ``fs.defaultFS``). None
+    when the size can't be read (caller treats the scan as not
+    widenable)."""
+    from sql_based_etl_spark.tables import files
 
-    u = urlparse(uri)
-    if u.scheme in ("", "file"):
-        try:
-            return os.path.getsize(u.path or uri)
-        except OSError:
-            return None
     try:
-        jvm = spark.sparkContext._jvm  # noqa: SLF001
-        conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-        jp = jvm.org.apache.hadoop.fs.Path(uri)
-        return int(jp.getFileSystem(conf).getFileStatus(jp).getLen())
+        st = files.stat(spark, uri)
     except Exception:
         return None
+    return None if st is None else st.size
 
 
 def _widen_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:

@@ -31,11 +31,15 @@ lifted from ``read_delta_changes``). Non-append commits are DATA here,
 not errors; the table must have ``delta.enableChangeDataFeed=true``.
 
 The planner runs in an isolated Python process WITHOUT a JVM gateway,
-so all log access here is plain-IO (``os``/``pyarrow.fs`` — the same
-executor-safe lane as the DV kernels): JSON commits are listed and
-parsed directly, and a checkpoint-pruned head falls back to the
-``_last_checkpoint`` checkpoint (classic parquet, or a v2 manifest in
-either parquet or JSON layout) for table metadata via pyarrow.
+so its log access takes the shared file layer's no-JVM lane
+(``tables/files.py`` with ``spark=None``: ``os`` on local paths,
+pyarrow filesystems for URIs — the lane the DV kernels use on executors).
+Listings and modification times follow the layer's one rule, so a
+commit's ``_commit_timestamp_ms`` here equals batch
+``read_delta_changes``'. JSON commits are listed and parsed directly,
+and a checkpoint-pruned head falls back to the ``_last_checkpoint``
+checkpoint (classic parquet, or a v2 manifest in either parquet or
+JSON layout) for table metadata via pyarrow.
 
 Column-mapped tables stream through the physical→logical rename;
 hive-partitioned tables get their partition values injected from the
@@ -65,7 +69,6 @@ scd2-job.ipynb:153's tables are Delta).
 from __future__ import annotations
 
 import json
-import os
 import re
 from dataclasses import dataclass, field
 
@@ -76,45 +79,23 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from sql_based_etl_spark.tables import files
+
 _LOG_RE = re.compile(r"^(\d{20})\.json$")
-
-
-def _plain_ls(dir_path: str) -> list[str]:
-    """List a directory's entry names with plain IO (no JVM)."""
-    if "://" in dir_path:
-        import pyarrow.fs as pafs
-
-        fs, rel = pafs.FileSystem.from_uri(dir_path)
-        try:
-            infos = fs.get_file_info(
-                pafs.FileSelector(rel, allow_not_found=True))
-        except FileNotFoundError:
-            return []
-        return [i.base_name for i in infos]
-    try:
-        return os.listdir(dir_path)
-    except FileNotFoundError:
-        return []
-
-
-def _plain_read(path: str) -> bytes:
-    from sql_based_etl_spark.tables.delta_interop import _read_bytes_plain
-
-    return _read_bytes_plain(path)
 
 
 def _plain_list_log(log_dir: str) -> dict[int, str]:
     out: dict[int, str] = {}
-    for name in _plain_ls(log_dir):
-        m = _LOG_RE.match(name)
+    for f in files.list_dir(None, log_dir) or []:
+        m = _LOG_RE.match(f.name)
         if m:
-            out[int(m.group(1))] = f"{log_dir}/{name}"
+            out[int(m.group(1))] = f"{log_dir}/{f.name}"
     return out
 
 
 def _plain_log_actions(path: str) -> list[dict]:
     acts = []
-    for line in _plain_read(path).decode("utf-8").splitlines():
+    for line in files.read_text(None, path).splitlines():
         if line.strip():
             acts.append(json.loads(line))
     return acts
@@ -134,18 +115,19 @@ def _plain_table_meta(table_path: str, logs: dict[int, str]) -> dict:
         return meta
     log_dir = f"{table_path}/_delta_log"
     try:
-        lc = json.loads(_plain_read(f"{log_dir}/_last_checkpoint"))
+        lc = json.loads(files.read_bytes(None, f"{log_dir}/_last_checkpoint"))
     except FileNotFoundError:
         raise ValueError(
             f"delta_bridge source: no metaData action in the surviving "
             f"log and no _last_checkpoint at {log_dir}"
         ) from None
     cv = int(lc["version"])
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    candidates = [n for n in _plain_ls(log_dir)
-                  if n.startswith(f"{cv:020d}.checkpoint")
-                  and n.endswith((".parquet", ".json"))]
+    candidates = [f.name for f in files.list_dir(None, log_dir) or []
+                  if f.name.startswith(f"{cv:020d}.checkpoint")
+                  and f.name.endswith((".parquet", ".json"))]
     for name in sorted(candidates):
         if name.endswith(".json"):
             # v2 checkpoint with a JSON manifest
@@ -158,7 +140,8 @@ def _plain_table_meta(table_path: str, logs: dict[int, str]) -> dict:
                 if md and md.get("id"):
                     meta = md
             continue
-        tbl = pq.read_table(f"{log_dir}/{name}")
+        tbl = pq.read_table(pa.BufferReader(
+            files.read_bytes(None, f"{log_dir}/{name}")))
         if "metaData" not in tbl.column_names:
             continue
         for row in tbl.column("metaData").to_pylist():
@@ -232,19 +215,6 @@ def _schema_readable_under(old_string: str | None,
         if name not in old and not nullable[name]:
             return False
     return True
-
-
-def _plain_mtime_ms(path: str) -> int:
-    """Modification time in epoch ms with plain IO (no JVM) — the
-    CDF ``_commit_timestamp_ms`` fallback when a commit carries no
-    ``inCommitTimestamp`` (same rule as batch CDF / timestamp travel)."""
-    if "://" in path:
-        import pyarrow.fs as pafs
-
-        fs, rel = pafs.FileSystem.from_uri(path)
-        info = fs.get_file_info([rel])[0]
-        return int(info.mtime.timestamp() * 1000)
-    return int(os.stat(path).st_mtime * 1000)
 
 
 _CDF_COLS = ("_change_type", "_commit_version", "_commit_timestamp_ms")
@@ -367,7 +337,7 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
                     if ci and ci.get("inCommitTimestamp") is not None:
                         ts = int(ci["inCommitTimestamp"])
                 if ts is None:
-                    ts = _plain_mtime_ms(logs[v])
+                    ts = files.stat(None, logs[v]).mtime_ms
                 if ts >= cutoff_ms:
                     start = v - 1
                     break
@@ -441,7 +411,7 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
                 ict = a["commitInfo"].get("inCommitTimestamp")
                 ts_ms = int(ict) if ict is not None else None
         if ts_ms is None:
-            ts_ms = _plain_mtime_ms(logs[v])
+            ts_ms = files.stat(None, logs[v]).mtime_ms
 
         def _part(action: dict, ctype: str | None) -> _FilePartition:
             import urllib.parse as _up
@@ -596,12 +566,11 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
             import numpy as np
 
             from sql_based_etl_spark.tables.delta_interop import (
-                _dv_payload_plain,
-                _roaring_array_indexes,
+                _dv_row_indexes,
             )
 
-            dead = _roaring_array_indexes(_dv_payload_plain(
-                partition.table_path, json.loads(partition.dv_desc)))
+            dead = _dv_row_indexes(None, partition.table_path,
+                                   json.loads(partition.dv_desc))
             mask = np.ones(tbl.num_rows, dtype=bool)
             mask[dead[dead < tbl.num_rows]] = False
             tbl = tbl.filter(pa.array(mask))

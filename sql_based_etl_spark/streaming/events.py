@@ -242,7 +242,11 @@ def append_stream_batch_delta(batch_df: DataFrame, batch_id: int,
     exactly-once replay skipping composes with the auto OPTIMIZE
     commits (txn watermarks survive compaction untouched). Returns
     True if a commit happened, False for an empty or replayed batch."""
-    from sql_based_etl_spark.tables.delta_interop import write_delta
+    from sql_based_etl_spark.tables.delta_interop import (
+        VersionedTableError,
+        _list_log,
+        write_delta,
+    )
 
     if batch_df.isEmpty():
         return False
@@ -250,14 +254,12 @@ def append_stream_batch_delta(batch_df: DataFrame, batch_id: int,
     if num_partitions:
         batch_df = batch_df.repartition(num_partitions)
     path = table_path.rstrip("/")
-    fs_path = f"{path}/_delta_log"
-    from sql_based_etl_spark.tables.delta_interop import _fs_and_path, _list_log
-
-    fs, jlog, _ = _fs_and_path(spark, fs_path)
-    exists = fs.exists(jlog) and bool(_list_log(spark, fs_path))
-    before = None
-    if exists:
-        before = max(_list_log(spark, fs_path))
+    try:
+        logs = _list_log(spark, f"{path}/_delta_log")
+    except VersionedTableError:
+        logs = {}
+    exists = bool(logs)
+    before = max(logs) if logs else None
     v = write_delta(batch_df, path, mode="append" if exists else "overwrite",
                     txn_app_id=app_id, txn_version=batch_id,
                     properties=(None if exists else properties))

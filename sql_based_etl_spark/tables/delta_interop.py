@@ -62,6 +62,7 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_based_etl_spark.tables import files
 from sql_based_etl_spark.tables.files import DataFile, write_files
 # the shared conflict family stays importable from this module
 from sql_based_etl_spark.tables.versioned import (  # noqa: F401
@@ -96,33 +97,13 @@ def delta_available() -> bool:
     return True
 
 
-# --- log access (Hadoop FS, so s3a:///hdfs:// work like file://) --------
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-    return jpath.getFileSystem(conf), jpath, jvm
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
-    fs, jpath, jvm = _fs_and_path(spark, path)
-    stream = fs.open(jpath)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+# --- log access (tables/files.py: os on local paths, Hadoop elsewhere) ---
 
 
 def _list_log(spark: SparkSession, log_dir: str) -> dict[int, str]:
     """Map commit version -> JSON log file path."""
-    fs, jpath, _ = _fs_and_path(spark, log_dir)
-    if not fs.exists(jpath):
-        raise VersionedTableError(f"not a Delta table: no _delta_log at {log_dir}")
     out: dict[int, str] = {}
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
+    for name, _ in _list_log_entries(spark, log_dir):
         if name.endswith(".json") and name[:-5].isdigit():
             out[int(name[:-5])] = f"{log_dir}/{name}"
     return out
@@ -133,14 +114,10 @@ def _list_log_entries(spark: SparkSession, log_dir: str) -> list[tuple[str, int]
     ``_delta_log`` — one listing serving both the metadata-cleanup age
     checks and the checkpoint scan (sidecars live under ``_sidecars/``
     and are resolved through manifest references, never by listing)."""
-    fs, jpath, _ = _fs_and_path(spark, log_dir)
-    if not fs.exists(jpath):
+    entries = files.list_dir(spark, log_dir)
+    if entries is None:
         raise VersionedTableError(f"not a Delta table: no _delta_log at {log_dir}")
-    return [
-        (st.getPath().getName(), int(st.getModificationTime()))
-        for st in fs.listStatus(jpath)
-        if st.isFile()
-    ]
+    return [(f.name, f.mtime_ms) for f in entries if not f.is_dir]
 
 
 # V2 checkpoints: target file actions per content-addressed sidecar
@@ -461,24 +438,6 @@ def _z85_encode(data: bytes) -> str:
     return "".join(out)
 
 
-def _read_bytes(spark: SparkSession, path: str) -> bytes:
-    fs, jpath, jvm = _fs_and_path(spark, path)
-    stream = fs.open(jpath)
-    try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-
-
-def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
-    fs, jpath, _ = _fs_and_path(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-
-
 def _roaring32(data: bytes, pos: int):
     """Decode one 32-bit RoaringBitmap (portable little-endian spec) at
     ``pos``; returns (sorted uint32 values as int64 ndarray, new pos)."""
@@ -630,11 +589,13 @@ def _roaring_array_serialize(idx) -> bytes:
     return b"".join(out)
 
 
-def _dv_row_indexes(spark: SparkSession, table_path: str, dv: dict):
+def _dv_row_indexes(spark: SparkSession | None, table_path: str, dv: dict):
     """Resolve a ``deletionVector`` descriptor to the deleted row
     indexes of its data file (sorted int64 ndarray). Fail-loud on any
     framing/CRC/cardinality mismatch — a half-applied DV is silent row
-    resurrection."""
+    resurrection. The driver passes its session; executor kernels pass
+    ``spark=None`` and read the sidecar on the no-JVM lane
+    (``tables/files.py``)."""
     import uuid as uuid_mod
     import zlib
 
@@ -669,7 +630,7 @@ def _dv_row_indexes(spark: SparkSession, table_path: str, dv: dict):
                      f"deletion_vector_{u}.bin")
         else:
             fpath = dv["pathOrInlineDv"]
-        raw = _read_bytes(spark, fpath)
+        raw = files.read_bytes(spark, fpath)
         off = int(dv["offset"])
         data_size = int.from_bytes(raw[off:off + 4], "big")
         if data_size != size:
@@ -731,6 +692,17 @@ def _file_location(path: str, rel: str) -> str:
     rel = urllib.parse.unquote(rel)
     return (rel if "://" in rel or rel.startswith("/")
             else posixpath.join(path, rel))
+
+
+def _file_uri(root: str, rel: str) -> str:
+    """A file action's ``path`` as Spark's scans report it, for matching
+    through :func:`_norm_file_uri`: a relative path (URI-encoded, as
+    stored) under ``root``, the table's :func:`files.qualify` URI, so a
+    relative or scheme-less table path maps back too."""
+    absolute = urllib.parse.unquote(rel)
+    if "://" in absolute or absolute.startswith("/"):
+        return absolute
+    return f"{root}/{rel}"
 
 
 def _fkey(file_action: dict) -> str:
@@ -839,7 +811,6 @@ def _replay_checkpoint(
     txns: dict[str, int] = {}
     domains: dict[str, str] = {}
     sidecars: list[str] = []
-    fs, _, _ = _fs_and_path(spark, log_dir)
 
     if parts:
         paths = [
@@ -851,7 +822,7 @@ def _replay_checkpoint(
         return meta, adds, txns, proto, domains
 
     classic = f"{log_dir}/{cp_version:020d}.checkpoint.parquet"
-    if fs.exists(_fs_and_path(spark, classic)[1]):
+    if files.stat(spark, classic) is not None:
         meta, proto, sidecars = _collect_checkpoint_df(
             spark.read.parquet(classic), meta, proto, adds, txns, domains)
     else:
@@ -864,11 +835,9 @@ def _replay_checkpoint(
         prefix = f"{cp_version:020d}.checkpoint."
         multipart = _re.compile(r"\.checkpoint\.\d{10}\.\d{10}\.parquet$")
         names = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(_fs_and_path(spark, log_dir)[1])
-            if st.getPath().getName().startswith(prefix)
-            and st.getPath().getName().endswith((".parquet", ".json"))
-            and not multipart.search(st.getPath().getName())
+            n for n, _ in _list_log_entries(spark, log_dir)
+            if n.startswith(prefix) and n.endswith((".parquet", ".json"))
+            and not multipart.search(n)
         )
         if not names:
             raise VersionedTableError(
@@ -913,7 +882,7 @@ def _replay_checkpoint(
 
 def _last_checkpoint(spark: SparkSession, log_dir: str) -> tuple[int, int | None] | None:
     try:
-        txt = _read_text(spark, f"{log_dir}/_last_checkpoint")
+        txt = files.read_text(spark, f"{log_dir}/_last_checkpoint")
     except Exception:
         return None
     d = json.loads(txt)
@@ -1003,7 +972,6 @@ def _resolve_log_version(spark: SparkSession, path: str,
             )
         return versions[idx]
     cutoff_ms = parse_timestamp_cutoff(timestamp) * 1000.0
-    fs, _, _ = _fs_and_path(spark, log_dir)
 
     def _ict_ms(v: int) -> int | None:
         for action in _log_actions(spark, logs[v]):
@@ -1013,8 +981,7 @@ def _resolve_log_version(spark: SparkSession, path: str,
         return None
 
     def _mtime_ms(v: int) -> int:
-        return fs.getFileStatus(
-            _fs_and_path(spark, logs[v])[1]).getModificationTime()
+        return files.stat(spark, logs[v]).mtime_ms
 
     ict_in_use = _ict_ms(versions[-1]) is not None
 
@@ -1142,10 +1109,11 @@ def _validate_version_crc(spark: SparkSession, log_dir: str,
     files are always legal (the sidecar is optional per delta-spark's
     own reader)."""
     try:
-        fs, p, _ = _fs_and_path(spark, f"{log_dir}/{version:020d}.crc")
-        if not fs.exists(p):
+        try:
+            crc = json.loads(files.read_text(
+                spark, f"{log_dir}/{version:020d}.crc"))
+        except FileNotFoundError:
             return
-        crc = json.loads(_read_text(spark, f"{log_dir}/{version:020d}.crc"))
         n, size = len(adds), sum(int(a.get("size") or 0)
                                  for a in adds.values())
         cn, csize = crc.get("numFiles"), crc.get("tableSizeBytes")
@@ -1186,8 +1154,8 @@ def _write_version_crc(spark: SparkSession, log_dir: str, version: int,
             "protocol": proto if proto is not None else
             {"minReaderVersion": 1, "minWriterVersion": 2},
         }
-        _write_bytes(spark, f"{log_dir}/{version:020d}.crc",
-                     json.dumps(body).encode())
+        files.write_bytes(spark, f"{log_dir}/{version:020d}.crc",
+                          json.dumps(body).encode())
     except Exception:
         _log.warning("version checksum write at %s v%d failed "
                      "(commit stands — the sidecar is advisory)",
@@ -1308,7 +1276,7 @@ def _snapshot_df(
         Scale shape (round-10): the driver ships ONLY descriptor JSON
         (O(100) bytes per file); Arrow kernels read the sidecars and
         expand the roaring bitmaps to row indexes EXECUTOR-side
-        (:func:`_dv_payload_plain` — the old driver-side decode +
+        (:func:`_dv_row_indexes` with no session — the old driver-side decode +
         ``createDataFrame`` pickled every deleted index through the
         driver: measured 9.9s of a 10.1s read at 618k deleted rows).
         When every DV'd file's basename is unique and literal (no
@@ -1324,19 +1292,14 @@ def _snapshot_df(
         parts = [_read(plain)] if plain else []
         dv_adds = [a for a in alist if a.get("deletionVector")]
 
-        def _expand_kernel(batches, _tp=path):
+        # executors resolve sidecars with no session: hand them the
+        # absolute local path (a relative one would follow their cwd)
+        def _expand_kernel(batches, _tp=files.local_path(spark, path) or path):
             import pandas as pd
 
             for pdf in batches:
                 for bn, desc in zip(pdf["__dv_file"], pdf["__dv_desc"]):
-                    d = json.loads(desc)
-                    idx = _roaring_array_indexes(_dv_payload_plain(_tp, d))
-                    card = d.get("cardinality")
-                    if card is not None and int(card) != len(idx):
-                        raise VersionedTableError(
-                            f"deletion vector: decoded {len(idx)} "
-                            "deleted rows, descriptor cardinality "
-                            f"says {card}")
+                    idx = _dv_row_indexes(None, _tp, json.loads(desc))
                     out = pd.DataFrame(
                         {"__dv_row_index": idx.astype("int64")})
                     out.insert(0, "__dv_file", bn)
@@ -1458,15 +1421,10 @@ def export_snapshot(table: VersionedTable, dest: str,
     v = table.resolve_version(version=version)
     df = table.read(version=v)
     df.write.mode("overwrite").parquet(dest)
-    fs, jpath, _ = _fs_and_path(table.spark, f"{dest.rstrip('/')}/_schema.json")
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(json.dumps(
-            {"source": table.path, "version": v,
-             "schema": json.loads(df.schema.json())}
-        ).encode("utf-8")))
-    finally:
-        out.close()
+    files.write_bytes(table.spark, f"{dest.rstrip('/')}/_schema.json",
+                      json.dumps({"source": table.path, "version": v,
+                                  "schema": json.loads(df.schema.json())}
+                                 ).encode("utf-8"))
 
 
 def convert_delta_to_versioned(spark: SparkSession, delta_path: str,
@@ -1484,8 +1442,7 @@ def convert_delta_to_versioned(spark: SparkSession, delta_path: str,
 def is_delta_dir(spark: SparkSession, path: str) -> bool:
     """True when ``path`` holds a Delta table (has a ``_delta_log``)."""
     try:
-        fs, jpath, _ = _fs_and_path(spark, f"{path.rstrip('/')}/_delta_log")
-        return bool(fs.exists(jpath))
+        return files.stat(spark, f"{path.rstrip('/')}/_delta_log") is not None
     except Exception:
         return False
 
@@ -1742,11 +1699,8 @@ def _next_ict(spark: SparkSession, log_dir: str, meta: dict,
             prev = None
         if prev is None:
             try:
-                fs, jlog, _ = _fs_and_path(spark, log_dir)
-                floor = max(
-                    (st.getModificationTime() for st in fs.listStatus(jlog)),
-                    default=0,
-                ) + 1
+                floor = max((f.mtime_ms for f in files.list_dir(spark, log_dir)),
+                            default=0) + 1
             except Exception:
                 floor = 0
     return max(now_ms, floor, prev + 1 if prev is not None else 0)
@@ -1909,7 +1863,7 @@ def _log_actions(spark: SparkSession, path: str):
     a parse failure is external corruption or a non-atomic FOREIGN
     writer's crash remnant — the error names the exact file and the
     manual remediation instead of surfacing a bare JSONDecodeError."""
-    txt = _read_text(spark, path)
+    txt = files.read_text(spark, path)
     for i, line in enumerate(txt.splitlines(), start=1):
         if not line.strip():
             continue
@@ -2085,26 +2039,20 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
         """One single-file parquet published via temp-dir + rename —
         re-running a checkpoint is content-idempotent; replace, not
         race."""
-        fs, _, _ = _fs_and_path(spark, log_dir)
         import uuid as _uuid
 
         tmp_dir = f"{log_dir}/.cptmp-{_uuid.uuid4().hex[:12]}"
         spark.createDataFrame(out_rows, out_schema).coalesce(1).write.mode(
             "overwrite").parquet(tmp_dir)
-        jtmp = _fs_and_path(spark, tmp_dir)[1]
-        part = next(
-            st.getPath() for st in fs.listStatus(jtmp)
-            if st.getPath().getName().endswith(".parquet")
-        )
-        dest = _fs_and_path(spark, f"{log_dir}/{dest_rel}")[1]
-        fs.mkdirs(dest.getParent())
-        if fs.exists(dest):
-            fs.delete(dest, False)
-        if not fs.rename(part, dest):
+        part = next(f.name for f in files.list_dir(spark, tmp_dir)
+                    if f.name.endswith(".parquet"))
+        dest = f"{log_dir}/{dest_rel}"
+        files.delete(spark, dest)
+        if not files.rename(spark, f"{tmp_dir}/{part}", dest):
             raise VersionedTableError(
                 f"cannot publish checkpoint file {dest_rel} at {log_dir}"
             )
-        fs.delete(jtmp, True)
+        files.delete(spark, tmp_dir, recursive=True)
 
     v2 = str((meta.get("configuration") or {}).get(
         "delta.checkpointPolicy", "classic")).lower() == "v2"
@@ -2203,7 +2151,6 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
             gi = int(_hashlib.md5(
                 _fr_path(r).encode()).hexdigest()[:8], 16) % k
             groups[gi].append(r)
-        fs0, _, _ = _fs_and_path(spark, log_dir)
         other_rows.append({**mf_none, "checkpointMetadata": {
             "version": version, "tags": None}})
         for g in groups:
@@ -2214,29 +2161,26 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
                 g, sort_keys=True, default=str).encode()).hexdigest()
             sc_name = (f"{digest[:8]}-{digest[8:12]}-{digest[12:16]}-"
                        f"{digest[16:20]}-{digest[20:32]}.parquet")
-            jsc = _fs_and_path(spark, f"{log_dir}/_sidecars/{sc_name}")[1]
-            if not fs0.exists(jsc):
+            sc_path = f"{log_dir}/_sidecars/{sc_name}"
+            sc_st = files.stat(spark, sc_path)
+            if sc_st is None:
                 _publish_parquet(g, sidecar_schema, f"_sidecars/{sc_name}")
-            sc_st = fs0.getFileStatus(jsc)
+                sc_st = files.stat(spark, sc_path)
             other_rows.append({**mf_none, "sidecarFile": {
                 "path": sc_name,
-                "sizeInBytes": int(sc_st.getLen()),
-                "modificationTime": int(sc_st.getModificationTime()),
+                "sizeInBytes": sc_st.size,
+                "modificationTime": sc_st.mtime_ms,
                 "tags": None,
             }})
         _publish_parquet(
             other_rows, manifest_schema,
             f"{version:020d}.checkpoint.{_uuid.uuid4()}.parquet")
 
-    fs, _, _ = _fs_and_path(spark, log_dir)
-    out = fs.create(_fs_and_path(spark, f"{log_dir}/_last_checkpoint")[1], True)
-    try:
-        pointer = {"version": version, "size": len(rows)}
-        if nparts is not None:
-            pointer["parts"] = nparts
-        out.write(bytearray(json.dumps(pointer).encode("utf-8")))
-    finally:
-        out.close()
+    pointer = {"version": version, "size": len(rows)}
+    if nparts is not None:
+        pointer["parts"] = nparts
+    files.write_bytes(spark, f"{log_dir}/_last_checkpoint",
+                      json.dumps(pointer).encode("utf-8"))
 
     # Delta's metadata-cleanup contract rides the checkpoint: once the
     # pointer is published, expire commit JSONs and aged checkpoints
@@ -2579,14 +2523,11 @@ def _stage_files(df: DataFrame, path: str, meta: dict, mapping_mode: str,
     else:
         part_cols = list(meta.get("partitionColumns") or [])
     spark = df.sparkSession
-    fs = _fs_and_path(spark, path)[0]
     staging = f"{path}/.staging-{uuid.uuid4().hex[:12]}"
     adds: list[dict] = []
     for f in write_files(df, staging, part_cols):
         rel = f"{subdir}/{f.path}" if subdir else f.path
-        dst = _fs_and_path(spark, f"{path}/{rel}")[1]
-        fs.mkdirs(dst.getParent())
-        if not fs.rename(_fs_and_path(spark, f"{staging}/{f.path}")[1], dst):
+        if not files.rename(spark, f"{staging}/{f.path}", f"{path}/{rel}"):
             raise VersionedTableError(f"write_delta: cannot move {rel} into {path}")
         add = {
             "path": urllib.parse.quote(rel, safe="/="),
@@ -2598,7 +2539,7 @@ def _stage_files(df: DataFrame, path: str, meta: dict, mapping_mode: str,
         if f.rows is not None:
             add["stats"] = _add_stats(f)
         adds.append(add)
-    fs.delete(_fs_and_path(spark, staging)[1], True)
+    files.delete(spark, staging, recursive=True)
     return adds
 
 
@@ -2983,7 +2924,6 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
                 "write_delta: cluster_by and partition_by must be "
                 "disjoint (liquid clustering replaces hive "
                 "partitioning on those columns)")
-    fs, jlog, _ = _fs_and_path(spark, log_dir)
 
     live: dict[str, dict] = {}
     txns: dict[str, int] = {}
@@ -2992,7 +2932,7 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
     # cleanup) is still an EXISTING table: treating it as new would
     # commit an invisible version 0 that replay (which prefers the
     # checkpoint) never reads — silent data loss
-    if fs.exists(jlog) and (
+    if files.stat(spark, log_dir) is not None and (
         _list_log(spark, log_dir)
         or _last_checkpoint(spark, log_dir) is not None
     ):
@@ -3590,9 +3530,10 @@ def merge_delta(source: DataFrame, path: str, condition: str,
                       or not when_not_matched_by_source_delete):
         # the shared find-files pass; the by-source clause rewrites every
         # live file anyway, so there it only validates the unique match
+        root = files.qualify(spark, path)
         matched_keys = matched_files(
             _snapshot_df(spark, path, meta, scan_live),
-            {_file_location(path, a["path"]): k for k, a in scan_live.items()},
+            {_file_uri(root, a["path"]): k for k, a in scan_live.items()},
             source, condition, validate_unique_match)
     if when_not_matched_by_source_delete:
         matched_keys = sorted(live)  # clause touches every target row
@@ -3777,99 +3718,14 @@ def merge_delta(source: DataFrame, path: str, condition: str,
     return next_v
 
 
-def _read_bytes_plain(path: str) -> bytes:
-    """Executor-safe byte read (no JVM gateway): plain ``open`` for
-    schemeless local paths, ``pyarrow.fs`` for URI schemes (local /
-    hdfs / s3 per pyarrow's bindings) — the Arrow lane's file access,
-    used by the DV kernels that run inside Python workers."""
-    if "://" in path:
-        import pyarrow.fs as pafs
-
-        fs, rel = pafs.FileSystem.from_uri(path)
-        with fs.open_input_stream(rel) as f:
-            return f.read()
-    with open(path, "rb") as f:
-        return f.read()
-
-
-def _write_bytes_plain(path: str, data: bytes) -> None:
-    """Executor-safe byte write, mirror of :func:`_read_bytes_plain`.
-    Used for per-partition DV sidecars — written whole before the log
-    commit references them, so a task retry's duplicate is an orphan
-    under a different uuid, never a torn referenced file."""
-    if "://" in path:
-        import pyarrow.fs as pafs
-
-        fs, rel = pafs.FileSystem.from_uri(path)
-        with fs.open_output_stream(rel) as f:
-            f.write(data)
-        return
-    import os
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "wb") as f:
-        f.write(data)
-
-
-def _dv_payload_plain(table_path: str, dv: dict) -> bytes:
-    """Resolve a ``deletionVector`` descriptor to its raw roaring
-    payload bytes WITHOUT the JVM gateway (executor-safe twin of the
-    extraction inside :func:`_dv_row_indexes`, same framing/CRC/pad
-    checks)."""
-    import uuid as uuid_mod
-    import zlib
-
-    st = dv.get("storageType")
-    size = int(dv["sizeInBytes"])
-    if st == "i":
-        payload = _z85_decode(dv["pathOrInlineDv"])
-        if len(payload) < size:
-            raise VersionedTableError(
-                f"deletion vector: inline payload is {len(payload)} bytes, "
-                f"descriptor says {size}"
-            )
-        if any(payload[size:]):
-            raise VersionedTableError(
-                "deletion vector: non-zero Z85 pad bytes past sizeInBytes"
-            )
-        return payload[:size]
-    if st in ("u", "p"):
-        if st == "u":
-            enc = dv["pathOrInlineDv"]
-            prefix, tail = enc[:-20], enc[-20:]
-            u = uuid_mod.UUID(bytes=_z85_decode(tail))
-            fpath = (f"{table_path}/{prefix + '/' if prefix else ''}"
-                     f"deletion_vector_{u}.bin")
-        else:
-            fpath = dv["pathOrInlineDv"]
-        raw = _read_bytes_plain(fpath)
-        off = int(dv["offset"])
-        data_size = int.from_bytes(raw[off:off + 4], "big")
-        if data_size != size:
-            raise VersionedTableError(
-                f"deletion vector: framed dataSize {data_size} != "
-                f"descriptor sizeInBytes {size} at {fpath}"
-            )
-        payload = raw[off + 4:off + 4 + size]
-        crc = int.from_bytes(raw[off + 4 + size:off + 8 + size], "big")
-        if (zlib.crc32(payload) & 0xFFFFFFFF) != crc:
-            raise VersionedTableError(
-                f"deletion vector: CRC-32 mismatch at {fpath} offset {off}"
-            )
-        return payload
-    raise VersionedTableError(
-        f"deletion vector: unrecognized storageType {st!r}"
-    )
-
-
 def _dv_partition_kernel(table_path: str, file_info: dict,
                          encode: bool = True):
     """``mapInPandas`` kernel factory for the distributed DV writer:
     input rows are hash-partitioned by ``__file`` and sorted by
     (``__file``, ``__ridx``) within each partition, so every file's
     matched row indexes arrive contiguously. Per FILE: bitmap-encode
-    the new indexes, union with the file's existing DV payload (read
-    executor-side via :func:`_dv_payload_plain` — the old DV's raw
+    the new indexes, union with the file's existing DV (decoded
+    executor-side by :func:`_dv_row_indexes` — the old DV's raw
     indexes NEVER visit the driver), fail loudly on overlap (the
     snapshot read filters dead rows, so an overlap is an invariant
     breach), and detect fully-dead files (union cardinality reaches
@@ -3913,8 +3769,7 @@ def _dv_partition_kernel(table_path: str, file_info: dict,
             info = file_info.get(_norm_file_uri(cur)) or {}
             old_dv = info.get("dv")
             if old_dv:
-                old_idx = _roaring_array_indexes(
-                    _dv_payload_plain(table_path, old_dv))
+                old_idx = _dv_row_indexes(None, table_path, old_dv)
                 union = np.union1d(old_idx, idx)
                 if len(union) != len(old_idx) + len(idx):
                     raise VersionedTableError(
@@ -3940,23 +3795,23 @@ def _dv_partition_kernel(table_path: str, file_info: dict,
             cur, chunks = None, []
 
         for pdf in batches:
-            files = pdf["__file"].to_numpy()
+            fnames = pdf["__file"].to_numpy()
             ridx = pdf["__ridx"].to_numpy()
             i = 0
-            n = len(files)
+            n = len(fnames)
             while i < n:
                 j = i
-                while j < n and files[j] == files[i]:
+                while j < n and fnames[j] == fnames[i]:
                     j += 1
-                if cur is not None and files[i] != cur:
+                if cur is not None and fnames[i] != cur:
                     flush()
-                cur = files[i]
+                cur = fnames[i]
                 chunks.append(ridx[i:j])
                 i = j
         flush()
         if any(r[4] >= 0 for r in rows_out):
-            _write_bytes_plain(
-                f"{table_path}/deletion_vector_{u}.bin", bytes(buf))
+            files.write_bytes(
+                None, f"{table_path}/deletion_vector_{u}.bin", bytes(buf))
         if rows_out:
             yield pd.DataFrame(
                 rows_out,
@@ -3983,8 +3838,9 @@ def _dv_match_payloads(spark: SparkSession, path: str,
     the file is fully dead (remove-only)."""
     abs2key: dict[str, str] = {}
     file_info: dict[str, dict] = {}
+    root = files.qualify(spark, path)
     for k, a in live.items():
-        norm = _norm_file_uri(_file_location(path, a["path"]))
+        norm = _norm_file_uri(_file_uri(root, a["path"]))
         abs2key[norm] = k
         try:
             phys = (json.loads(a["stats"])["numRecords"]
@@ -3998,7 +3854,8 @@ def _dv_match_payloads(spark: SparkSession, path: str,
         .repartition("__file")
         .sortWithinPartitions("__file", "__ridx")
         .mapInPandas(
-            _dv_partition_kernel(path, file_info, encode),
+            _dv_partition_kernel(files.local_path(spark, path) or path,
+                                 file_info, encode),
             "file string, new_card long, card long, uid string, "
             "offset long, size long")
         .collect()
@@ -4574,7 +4431,8 @@ def update_delta(spark: SparkSession, path: str,
 
     # candidate scan → files actually holding matched rows (bounded by
     # the pruned set; the rewrite below re-reads only those files)
-    abs2key = {_norm_file_uri(_file_location(path, a["path"])): k
+    root = files.qualify(spark, path)
+    abs2key = {_norm_file_uri(_file_uri(root, a["path"])): k
                for k, a in scan_adds.items()}
     tagged = _snapshot_df(spark, path, meta, scan_adds, tag_rows=True)
     hit = tagged.filter(cond).select("__file").distinct().collect()
@@ -4987,7 +4845,7 @@ def restore_delta(spark: SparkSession, path: str,
     restore_meta = meta_t != meta_c
     if not to_add and not to_remove and not restore_meta:
         return latest  # identical snapshot: a commit would be churn
-    # existence check batched per DIRECTORY (one listStatus each, not
+    # existence check batched per DIRECTORY (one listing each, not
     # one exists() RPC per file — a 50k-file restore would otherwise
     # serialize 50k driver→store round trips)
     by_dir: dict[str, list[tuple[str, str]]] = {}
@@ -4995,11 +4853,8 @@ def restore_delta(spark: SparkSession, path: str,
         absolute = _file_location(path, a["path"])
         by_dir.setdefault(posixpath.dirname(absolute), []).append(
             (posixpath.basename(absolute), a["path"]))
-    fs, _, _ = _fs_and_path(spark, log_dir)
     for d, wanted in by_dir.items():
-        jdir = _fs_and_path(spark, d)[1]
-        present = ({st.getPath().getName() for st in fs.listStatus(jdir)}
-                   if fs.exists(jdir) else set())
+        present = {f.name for f in files.list_dir(spark, d) or []}
         for base, orig in wanted:
             if base not in present:
                 raise VersionedTableError(
@@ -5087,8 +4942,7 @@ def clone_delta(spark: SparkSession, source_path: str, dest_path: str,
     meta_s, live_s, src_v, _, proto_s, domains_s = _replay_state(
         spark, source_path, version)
     dest_log = f"{dest_path}/_delta_log"
-    fs, jlog, _ = _fs_and_path(spark, dest_log)
-    if fs.exists(jlog) and (
+    if files.stat(spark, dest_log) is not None and (
         _list_log(spark, dest_log)
         or _last_checkpoint(spark, dest_log) is not None
     ):
@@ -5248,7 +5102,6 @@ def vacuum_delta(spark: SparkSession, path: str,
     dv_candidates = {rel: ts for rel, ts in dv_tomb.items()
                      if rel not in live_dvs}
     tombstones.update(dv_candidates)
-    fs, _, _ = _fs_and_path(spark, path)
     deleted: list[str] = []
     for rel in sorted(tombstones):
         if rel in live_paths or tombstones[rel] > cutoff_ms:
@@ -5263,29 +5116,20 @@ def vacuum_delta(spark: SparkSession, path: str,
             if not _norm_file_uri(target).startswith(
                     _norm_file_uri(path) + "/"):
                 continue
-            jfile = _fs_and_path(spark, target)[1]
         else:
-            jfile = _fs_and_path(spark, f"{path}/{target}")[1]
-        if fs.exists(jfile):
-            if not dry_run:
-                fs.delete(jfile, False)
+            target = f"{path}/{target}"
+        if (files.stat(spark, target) is not None if dry_run
+                else files.delete(spark, target)):
             deleted.append(rel)
     # change data files belong to no snapshot, so no tombstone ever
     # names them: age them out by modification time, as delta-spark does
-    jcdc = _fs_and_path(spark, f"{path}/_change_data")[1]
-    if fs.exists(jcdc):
-        cdc_prefix = fs.getFileStatus(jcdc).getPath().toString().rstrip("/") + "/"
-        old = []
-        it = fs.listFiles(jcdc, True)
-        while it.hasNext():
-            st = it.next()
-            if st.getModificationTime() <= cutoff_ms:
-                old.append(st.getPath())
-        for jp in sorted(old, key=str):
+    cdc = files.list_dir(spark, f"{path}/_change_data", recursive=True) or []
+    for f in sorted(cdc):
+        if f.mtime_ms <= cutoff_ms:
             if not dry_run:
-                fs.delete(jp, False)
-            rel = "_change_data/" + str(jp)[len(cdc_prefix):]
-            deleted.append(urllib.parse.quote(rel, safe="/="))
+                files.delete(spark, f"{path}/_change_data/{f.name}")
+            deleted.append(urllib.parse.quote(f"_change_data/{f.name}",
+                                              safe="/="))
     if not dry_run:
         now_ms = int(time.time() * 1000)
         ci = {
@@ -5447,16 +5291,14 @@ def _cleanup_expired_logs(spark: SparkSession, log_dir: str,
             if "://" not in p and not p.startswith("/")
         }
 
-    fs, _, _ = _fs_and_path(spark, log_dir)
     deleted: list[str] = []
     for n in sorted(deletable):
         if not dry_run:
-            fs.delete(_fs_and_path(spark, f"{log_dir}/{n}")[1], False)
+            files.delete(spark, f"{log_dir}/{n}")
         deleted.append(n)
     for rel in sorted(sidecars):
         if not dry_run:
-            fs.delete(_fs_and_path(spark, f"{log_dir}/_sidecars/{rel}")[1],
-                      False)
+            files.delete(spark, f"{log_dir}/_sidecars/{rel}")
         deleted.append(f"_sidecars/{rel}")
     return deleted
 
@@ -5682,7 +5524,6 @@ def read_delta_changes(spark: SparkSession, path: str,
              "nullable": True, "metadata": ct_md}
         ],
     })}
-    fs, _, _ = _fs_and_path(spark, log_dir)
 
     out: DataFrame | None = None
 
@@ -5721,8 +5562,7 @@ def read_delta_changes(spark: SparkSession, path: str,
                 ict = action["commitInfo"].get("inCommitTimestamp")
                 ts_ms = int(ict) if ict is not None else None
         if ts_ms is None:
-            ts_ms = int(fs.getFileStatus(
-                _fs_and_path(spark, logs[v])[1]).getModificationTime())
+            ts_ms = files.stat(spark, logs[v]).mtime_ms
 
         def _stamp(df: DataFrame) -> DataFrame:
             return df.withColumn("_commit_version", F.lit(v).cast("long")) \

@@ -1,12 +1,46 @@
-"""The data-file layer both table formats share: one writer and one
-stats reader.
+"""The file layer of both table formats: every read, listing, stat,
+write, delete and rename of a table file, plus one data-file writer and
+one stats reader.
 
-:func:`write_files` writes a DataFrame as zstd parquet into a fresh
-directory and returns one :class:`DataFile` per file written: its path,
-hive partition values, rows, bytes and per-column min/max/null counts.
-The native ``VersionedTable`` maps each record into its manifest
-``stats`` entry; the Delta bridge maps it into an ``add`` action and its
-``stats`` JSON (the protocol's per-file statistics,
+File access. Both formats, the stream source and the deletion-vector
+kernels reach table files only through these functions:
+
+- :func:`read_bytes` / :func:`read_text` — one whole file;
+- :func:`list_dir` — ``(name, size, mtime_ms, is_dir)`` entries of a
+  directory, optionally recursive, None when the directory is absent;
+- :func:`stat` — one entry, None when absent;
+- :func:`write_bytes`, :func:`delete` and :func:`rename`;
+- :func:`qualify` — the URI form Spark's scans report for a path.
+
+One set of rules picks the lane:
+
+- **Local paths** (:func:`local_path`: a ``file:`` URI, or a bare path
+  under a ``file:`` ``fs.defaultFS``): reads, listings and stats use
+  ``os``, with none of the ~1-3 ms py4j round trips of the Hadoop FS.
+  A listing hides Hadoop's checksum sidecars (``.``-prefixed ``*.crc``)
+  as ``ChecksumFileSystem.listStatus`` does, and a modification time is
+  ``st_mtime_ns // 1_000_000``, which is Hadoop's
+  ``getModificationTime``.
+- **Writes, deletes and renames stay on Hadoop for every store**: the
+  local FS writes and deletes the ``.<name>.crc`` siblings that
+  delta-spark readers verify.
+- **Other stores** (``hdfs://``, ``s3a://``, a non-``file:`` default
+  FS) go through the session's Hadoop FileSystem.
+- **``spark=None`` is the no-JVM lane** of executors and the stream
+  planner: ``os`` for local paths, ``pyarrow.fs`` for URIs.
+- **A bare relative path resolves against the Hadoop working
+  directory**, never Python's cwd, so ``os`` and Hadoop name the same
+  file. It is fetched once per session, with ``fs.defaultFS``.
+
+A missing file raises :class:`FileNotFoundError` on every lane.
+
+Data files. :func:`write_files` writes a DataFrame as zstd parquet into
+a fresh directory and returns one :class:`DataFile` per file written:
+its path, hive partition values, rows, bytes and per-column
+min/max/null counts. The native ``VersionedTable`` maps each record
+into its manifest ``stats`` entry; the Delta bridge maps it into an
+``add`` action and its ``stats`` JSON (the protocol's per-file
+statistics,
 https://github.com/delta-io/delta/blob/master/PROTOCOL.md#per-file-statistics).
 
 Stats come from the parquet footers the writer just produced, read
@@ -33,8 +67,11 @@ from __future__ import annotations
 import datetime
 import math
 import os
+import posixpath
+import stat as stat_mod
 import urllib.parse
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,8 +96,9 @@ _BOUNDED = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
 _COUNTED = _BOUNDED + (T.BinaryType, T.DecimalType, T.TimestampType,
                        T.TimestampNTZType)
 
-# session-id → fs.defaultFS (one py4j fetch per session; see local_path)
-_DEFAULT_FS_CACHE: dict[int, str] = {}
+# session-id → the local working directory when fs.defaultFS is
+# file:, else None (one py4j fetch per session; see local_path)
+_LOCAL_CWD_CACHE: dict[int, str | None] = {}
 
 
 @dataclass
@@ -80,15 +118,23 @@ class DataFile:
     columns: dict[str, dict] = field(default_factory=dict)
 
 
-def local_path(spark: SparkSession, uri: str) -> str | None:
-    """OS path of ``uri`` when it provably lives on the LOCAL
-    filesystem (explicit ``file:`` URI, or a bare path under a
-    ``file:`` defaultFS), else None.
+class FileInfo(NamedTuple):
+    """One listed file or directory. ``name`` is the base name, or the
+    '/'-separated path under the listed directory for a recursive
+    listing."""
 
-    Local metadata reads (listing, footers, manifests) then use plain
-    ``os``/``open`` instead of the Hadoop FS object via py4j, whose
-    Path/FileSystem round trips cost ~1-3 ms of driver latency each. On
-    HDFS/object stores the Hadoop path is used unchanged."""
+    name: str
+    size: int
+    mtime_ms: int
+    is_dir: bool
+
+
+def local_path(spark: SparkSession | None, uri: str) -> str | None:
+    """Absolute OS path of ``uri`` when it provably lives on the LOCAL
+    filesystem, else None: an explicit ``file:`` URI, or a bare path
+    under a ``file:`` defaultFS (with ``spark=None``, any bare path).
+    A relative path resolves against the Hadoop working directory
+    (Python's cwd without a session)."""
     if uri.startswith("file:"):
         u = urllib.parse.urlparse(uri)
         # a non-empty authority (file://host/…) names a REMOTE host:
@@ -100,16 +146,210 @@ def local_path(spark: SparkSession, uri: str) -> str | None:
     head = uri.split("/", 1)[0]
     if "://" in uri or ":" in head:
         return None  # non-file scheme
-    # bare path: local only when the default filesystem is file:
+    if spark is None:
+        return os.path.abspath(uri)
     key = id(spark)
-    default = _DEFAULT_FS_CACHE.get(key)
-    if default is None:
-        default = (
-            spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-            .get("fs.defaultFS", "file:///")
-        )
-        _DEFAULT_FS_CACHE[key] = default
-    return uri if default.startswith("file:") else None
+    if key not in _LOCAL_CWD_CACHE:
+        conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+        cwd = None
+        if conf.get("fs.defaultFS", "file:///").startswith("file:"):
+            fs = spark.sparkContext._jvm.org.apache.hadoop.fs.FileSystem  # noqa: SLF001
+            cwd = fs.getLocal(conf).getWorkingDirectory().toUri().getPath()
+        _LOCAL_CWD_CACHE[key] = cwd
+    cwd = _LOCAL_CWD_CACHE[key]
+    return None if cwd is None else posixpath.normpath(posixpath.join(cwd, uri))
+
+
+def qualify(spark: SparkSession, uri: str) -> str:
+    """``uri`` as a qualified, percent-encoded URI, the form Spark's
+    scans report for files (``input_file_name()``)."""
+    local = local_path(spark, uri)
+    if local is not None:
+        return "file:" + urllib.parse.quote(local)
+    fs, jp = _hadoop(spark, uri)
+    return fs.makeQualified(jp).toUri().toString()
+
+
+def read_bytes(spark: SparkSession | None, uri: str) -> bytes:
+    """The whole file at ``uri``."""
+    local = local_path(spark, uri)
+    if local is not None:
+        with open(local, "rb") as fh:
+            return fh.read()
+    if spark is None:
+        fs, p = _arrow(uri)
+        with fs.open_input_stream(p) as fh:
+            return fh.read()
+    fs, jp = _hadoop(spark, uri)
+    stream = _not_found(uri, fs.open, jp)
+    try:
+        return bytes(spark.sparkContext._jvm.org.apache.commons.io  # noqa: SLF001
+                     .IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def read_text(spark: SparkSession | None, uri: str) -> str:
+    """The whole UTF-8 file at ``uri``."""
+    return read_bytes(spark, uri).decode("utf-8")
+
+
+def list_dir(spark: SparkSession | None, uri: str,
+             recursive: bool = False) -> list[FileInfo] | None:
+    """The entries of directory ``uri``, or None when it is absent.
+    A recursive listing returns files only, named by their path under
+    ``uri``. Checksum sidecars are hidden on every lane."""
+    local = local_path(spark, uri)
+    if local is not None:
+        try:
+            return _list_local(local, recursive)
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+    if spark is None:
+        import pyarrow.fs as pafs
+
+        fs, p = _arrow(uri)
+        if fs.get_file_info(p).type != pafs.FileType.Directory:
+            return None
+        infos = fs.get_file_info(pafs.FileSelector(p, recursive=recursive))
+        return [FileInfo(i.path[len(p.rstrip("/")) + 1:], i.size or 0,
+                         i.mtime_ns // 1_000_000,
+                         i.type == pafs.FileType.Directory)
+                for i in infos
+                if not (recursive and i.type == pafs.FileType.Directory)
+                and not _is_checksum(i.base_name)]
+    fs, jp = _hadoop(spark, uri)
+    try:
+        if not recursive:
+            return [_info(st, st.getPath().getName())
+                    for st in _not_found(uri, fs.listStatus, jp)]
+        root = _not_found(uri, fs.getFileStatus, jp).getPath().toString()
+        it = fs.listFiles(jp, True)
+    except FileNotFoundError:
+        return None
+    cut = len(root.rstrip("/")) + 1
+    out = []
+    while it.hasNext():
+        st = it.next()
+        out.append(_info(st, st.getPath().toString()[cut:]))
+    return out
+
+
+def stat(spark: SparkSession | None, uri: str) -> FileInfo | None:
+    """The entry of ``uri`` (its base name), or None when absent."""
+    local = local_path(spark, uri)
+    if local is not None:
+        try:
+            st = os.stat(local)
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+        return FileInfo(os.path.basename(local), st.st_size,
+                        st.st_mtime_ns // 1_000_000,
+                        stat_mod.S_ISDIR(st.st_mode))
+    if spark is None:
+        import pyarrow.fs as pafs
+
+        fs, p = _arrow(uri)
+        i = fs.get_file_info(p)
+        if i.type == pafs.FileType.NotFound:
+            return None
+        return FileInfo(i.base_name, i.size or 0, i.mtime_ns // 1_000_000,
+                        i.type == pafs.FileType.Directory)
+    fs, jp = _hadoop(spark, uri)
+    try:
+        st = _not_found(uri, fs.getFileStatus, jp)
+    except FileNotFoundError:
+        return None
+    return _info(st, st.getPath().getName())
+
+
+def write_bytes(spark: SparkSession | None, uri: str, data: bytes) -> None:
+    """Create or replace the file at ``uri`` with ``data``, making its
+    parent directories."""
+    if spark is None:
+        local = local_path(None, uri)
+        if local is not None:
+            os.makedirs(os.path.dirname(local), exist_ok=True)
+            with open(local, "wb") as fh:
+                fh.write(data)
+            return
+        fs, p = _arrow(uri)
+        with fs.open_output_stream(p) as fh:
+            fh.write(data)
+        return
+    fs, jp = _hadoop(spark, uri)
+    out = fs.create(jp, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def delete(spark: SparkSession, uri: str, recursive: bool = False) -> bool:
+    """Delete ``uri`` (a directory only when ``recursive``); False when
+    nothing was there."""
+    fs, jp = _hadoop(spark, uri)
+    return bool(fs.delete(jp, recursive))
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> bool:
+    """Move ``src`` to ``dst``, making ``dst``'s parent directories;
+    False when the store refused (as Hadoop's ``rename`` reports)."""
+    fs, jsrc = _hadoop(spark, src)
+    jdst = _hadoop(spark, dst)[1]
+    fs.mkdirs(jdst.getParent())
+    return bool(fs.rename(jsrc, jdst))
+
+
+def _list_local(path: str, recursive: bool) -> list[FileInfo]:
+    out = []
+    with os.scandir(path) as it:
+        for e in it:
+            if e.is_dir():
+                if recursive:
+                    out += [f._replace(name=f"{e.name}/{f.name}")
+                            for f in _list_local(e.path, True)]
+                    continue
+            elif _is_checksum(e.name):
+                continue
+            st = e.stat()
+            out.append(FileInfo(e.name, st.st_size,
+                                st.st_mtime_ns // 1_000_000, e.is_dir()))
+    return out
+
+
+def _is_checksum(name: str) -> bool:
+    """Hadoop's checksum sidecar ``.<name>.crc`` (not Delta's
+    ``<version>.crc``)."""
+    return name.startswith(".") and name.endswith(".crc")
+
+
+def _info(st, name: str) -> FileInfo:
+    return FileInfo(name, int(st.getLen()), int(st.getModificationTime()),
+                    bool(st.isDirectory()))
+
+
+def _hadoop(spark: SparkSession, uri: str):
+    jp = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(uri)  # noqa: SLF001
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    return jp.getFileSystem(conf), jp
+
+
+def _arrow(uri: str):
+    import pyarrow.fs as pafs
+
+    return pafs.FileSystem.from_uri(uri)
+
+
+def _not_found(uri: str, call, *args):
+    """``call(*args)`` over py4j, with Hadoop's FileNotFoundException
+    raised as Python's."""
+    try:
+        return call(*args)
+    except Exception as e:
+        if "java.io.FileNotFoundException" in str(e):
+            raise FileNotFoundError(uri) from None
+        raise
 
 
 def write_files(df: DataFrame, uri: str, partition_by: list[str] | None = None,
@@ -142,7 +382,11 @@ def collect_files(spark: SparkSession, uri: str, schema: T.StructType,
     one file to carry its schema."""
     partition_by = list(partition_by or [])
     local = local_path(spark, uri)
-    files = _list_local(local) if local is not None else _list_hadoop(spark, uri)
+    files = sorted(
+        (DataFile(f.name, _partition_values(f.name), f.size, f.mtime_ms)
+         for f in list_dir(spark, uri, recursive=True) or []
+         if _is_data(f.name)),
+        key=lambda f: f.path)
     want = None if stats_columns is None else set(stats_columns)
     # a footer does not know the column's collation: drop the bounds the
     # Spark type gets none of
@@ -164,9 +408,8 @@ def collect_files(spark: SparkSession, uri: str, schema: T.StructType,
         _scan_stats(spark, uri, unread, schema, partition_by, want)
     rowless = [f for f in files if f.rows == 0]
     if rowless and len(rowless) < len(files):
-        fs, jvm = _hadoop_fs(spark, uri)
         for f in rowless:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{uri}/{f.path}"), False)
+            delete(spark, f"{uri}/{f.path}")
         files = [f for f in files if f.rows != 0]
     return files
 
@@ -294,36 +537,3 @@ def _partition_values(rel: str) -> dict[str, str | None]:
         pv[urllib.parse.unquote(k)] = (
             None if v == _HIVE_NULL else urllib.parse.unquote(v))
     return pv
-
-
-def _list_local(root: str) -> list[DataFile]:
-    out = []
-    for d, _, names in os.walk(root):
-        for n in names:
-            rel = os.path.relpath(os.path.join(d, n), root)
-            if _is_data(rel):
-                st = os.stat(os.path.join(d, n))
-                out.append(DataFile(rel, _partition_values(rel), st.st_size,
-                                    st.st_mtime_ns // 1_000_000))
-    return sorted(out, key=lambda f: f.path)
-
-
-def _list_hadoop(spark: SparkSession, uri: str) -> list[DataFile]:
-    fs, jvm = _hadoop_fs(spark, uri)
-    jpath = jvm.org.apache.hadoop.fs.Path(uri)
-    root = fs.getFileStatus(jpath).getPath().toString().rstrip("/") + "/"
-    out = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        rel = st.getPath().toString()[len(root):]
-        if _is_data(rel):
-            out.append(DataFile(rel, _partition_values(rel), int(st.getLen()),
-                                int(st.getModificationTime())))
-    return sorted(out, key=lambda f: f.path)
-
-
-def _hadoop_fs(spark: SparkSession, uri: str):
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-    return jvm.org.apache.hadoop.fs.Path(uri).getFileSystem(conf), jvm

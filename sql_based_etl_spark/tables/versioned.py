@@ -35,8 +35,9 @@ raise the named conflict instead of a raw lost-race error. OVERWRITE and RESTORE
 DAG, scd2-job-scheduler.yaml:47-48, which serializes them behind
 their dependencies).
 
-All metadata I/O goes through the Hadoop FileSystem API (via the JVM
-gateway), so a table can live on any Hadoop-supported filesystem —
+Manifest reads, listings and deletes go through the shared file layer
+(``tables/files.py``): ``os`` on local paths, the Hadoop FileSystem
+elsewhere, so a table can live on any Hadoop-supported filesystem —
 ``file://`` locally, ``hdfs://``/``s3a://`` on a cluster (the
 reference's tables are on S3, scd2-job.ipynb:42,167). Manifest commit
 goes through :func:`publish_text_exclusive`: two writers racing to the
@@ -66,7 +67,6 @@ analogue) so file stat ranges are narrow and pruning actually bites.
 from __future__ import annotations
 
 import json
-import os
 import time
 import urllib.parse
 from dataclasses import dataclass
@@ -74,7 +74,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_based_etl_spark.tables.files import DataFile, local_path, write_files
+from sql_based_etl_spark.tables import files
+from sql_based_etl_spark.tables.files import DataFile, write_files
 
 
 class VersionedTableError(RuntimeError):
@@ -794,23 +795,14 @@ class VersionedTable:
         self.spark = spark
         self.path = path.rstrip("/")
 
-    # --- Hadoop FS plumbing -----------------------------------------------
+    # raw Hadoop handles (FileSystem, Path) of the table's files, for
+    # callers that drive the FileSystem API themselves; the table's own
+    # file access goes through tables/files.py
+    def _fs(self):
+        return files._hadoop(self.spark, self.path)[0]  # noqa: SLF001
 
     def _jpath(self, *parts: str):
-        jvm = self.spark.sparkContext._jvm  # noqa: SLF001
-        return jvm.org.apache.hadoop.fs.Path("/".join((self.path, *parts)))
-
-    def _fs(self):
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-        return self._jpath("_meta").getFileSystem(conf)
-
-    def _read_text(self, jpath) -> str:
-        jvm = self.spark.sparkContext._jvm  # noqa: SLF001
-        stream = self._fs().open(jpath)
-        try:
-            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
+        return files._hadoop(self.spark, "/".join((self.path, *parts)))[1]  # noqa: SLF001
 
     def _write_text_atomic(self, name: str, data: str) -> None:
         """Commit ``_meta/<name>`` via :func:`publish_text_exclusive`:
@@ -827,38 +819,18 @@ class VersionedTable:
     # --- metadata ---------------------------------------------------------
 
     def versions(self) -> list[int]:
-        local = local_path(self.spark, self.path)
-        if local is not None:
-            try:
-                names = os.listdir(os.path.join(local, "_meta"))
-            except (FileNotFoundError, NotADirectoryError):
-                return []
-            return sorted(
-                int(fn[1:-5]) for fn in names
-                if fn.startswith("v") and fn.endswith(".json")
-            )
-        fs = self._fs()
-        meta = self._jpath("_meta")
-        if not fs.exists(meta):
-            return []
-        out = []
-        for st in fs.listStatus(meta):
-            fn = st.getPath().getName()
-            if fn.startswith("v") and fn.endswith(".json"):
-                out.append(int(fn[1:-5]))
-        return sorted(out)
+        return sorted(
+            int(f.name[1:-5])
+            for f in files.list_dir(self.spark, f"{self.path}/_meta") or []
+            if f.name.startswith("v") and f.name.endswith(".json")
+        )
 
     def exists(self) -> bool:
         return bool(self.versions())
 
     def manifest(self, version: int) -> dict:
         name = f"v{version:08d}.json"
-        local = local_path(self.spark, self.path)
-        if local is not None:
-            with open(os.path.join(local, "_meta", name), encoding="utf-8") as fh:
-                txt = fh.read()
-        else:
-            txt = self._read_text(self._jpath("_meta", name))
+        txt = files.read_text(self.spark, f"{self.path}/_meta/{name}")
         try:
             return json.loads(txt)
         except ValueError as e:
@@ -1243,11 +1215,10 @@ class VersionedTable:
         pruning) until they're packed."""
         from pyspark.sql.types import StructType
 
-        fs = self._fs()
         cur = self.files()
         small = [
             f for f in cur
-            if fs.getFileStatus(self._jpath(f)).getLen() < small_file_bytes
+            if files.stat(self.spark, f"{self.path}/{f}").size < small_file_bytes
         ]
         if len(small) <= 1:
             return self.latest_version()  # nothing to pack
@@ -1312,12 +1283,11 @@ class VersionedTable:
         vs = self.versions()
         keep_vs = vs[-retain_versions:]
         drop_vs = vs[:-retain_versions]
-        fs = self._fs()
         # manifests first: a crash mid-vacuum must never leave a listed
         # version pointing at deleted files (reads would die with raw
         # FileNotFound instead of a clean resolve error)
         for v in drop_vs:
-            fs.delete(self._jpath("_meta", f"v{v:08d}.json"), False)
+            files.delete(self.spark, f"{self.path}/_meta/v{v:08d}.json")
         # then GC by physical listing — every unreferenced data file
         # PAST THE STAGING GRACE goes, which also reclaims files
         # orphaned by an earlier crash (manifests deleted, files not)
@@ -1326,18 +1296,14 @@ class VersionedTable:
         cutoff_ms = (_time.time() - staging_grace_hours * 3600.0) * 1000.0
         live = {f for v in keep_vs for f in self.files(v)}
         dead = []
-        data_root = self._jpath("data")
-        if fs.exists(data_root):
-            for vdir in fs.listStatus(data_root):
-                vname = vdir.getPath().getName()
-                for st in fs.listStatus(vdir.getPath()):
-                    fn = st.getPath().getName()
-                    rel = f"data/{vname}/{fn}"
-                    if (rel not in live
-                            and st.getModificationTime() < cutoff_ms):
-                        dead.append(rel)
+        for vdir in files.list_dir(self.spark, f"{self.path}/data") or []:
+            for st in files.list_dir(
+                    self.spark, f"{self.path}/data/{vdir.name}") or []:
+                rel = f"data/{vdir.name}/{st.name}"
+                if rel not in live and st.mtime_ms < cutoff_ms:
+                    dead.append(rel)
         for f in sorted(dead):
-            fs.delete(self._jpath(f), False)
+            files.delete(self.spark, f"{self.path}/{f}")
         return sorted(dead)
 
     def changes(
@@ -1471,11 +1437,11 @@ class VersionedTable:
             # keyed as Spark's scan reports files (under the qualified
             # root URI); with the by-source clause, which rewrites every
             # file anyway, the pass only validates the unique match
-            root = self._fs().makeQualified(self._jpath()).toUri().toString()
+            root = files.qualify(self.spark, self.path)
             matched = matched_files(
                 self.spark.read.schema(target_full.schema).parquet(
                     *[f"{self.path}/{f}" for f in scan_files]),
-                {f"{root}/{f}": f for f in scan_files},
+                {f"{root}/{urllib.parse.quote(f)}": f for f in scan_files},
                 source, condition, validate_unique_match)
         if when_not_matched_by_source_delete:
             matched = list(all_files)
