@@ -35,8 +35,8 @@ so its log access takes the shared file layer's no-JVM lane
 (``tables/files.py`` with ``spark=None``: ``os`` on local paths,
 pyarrow filesystems for URIs — the lane the DV kernels use on executors).
 Listings and modification times follow the layer's one rule, so a
-commit's ``_commit_timestamp_ms`` here equals batch
-``read_delta_changes``'. JSON commits are listed and parsed directly,
+commit's ``_commit_timestamp_ms`` here equals the one batch
+``read_delta_changes`` gives. JSON commits are listed and parsed directly,
 and a checkpoint-pruned head falls back to the ``_last_checkpoint``
 checkpoint (classic parquet, or a v2 manifest in either parquet or
 JSON layout) for table metadata via pyarrow.
