@@ -202,7 +202,7 @@ def list_dir(spark: SparkSession | None, uri: str,
     local = local_path(spark, uri)
     if local is not None:
         try:
-            return _list_local(local, recursive)
+            return _scan_local(local, recursive)
         except (FileNotFoundError, NotADirectoryError):
             return None
     if spark is None:
@@ -301,14 +301,14 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(jsrc, jdst))
 
 
-def _list_local(path: str, recursive: bool) -> list[FileInfo]:
+def _scan_local(path: str, recursive: bool) -> list[FileInfo]:
     out = []
     with os.scandir(path) as it:
         for e in it:
             if e.is_dir():
                 if recursive:
                     out += [f._replace(name=f"{e.name}/{f.name}")
-                            for f in _list_local(e.path, True)]
+                            for f in _scan_local(e.path, True)]
                     continue
             elif _is_checksum(e.name):
                 continue
