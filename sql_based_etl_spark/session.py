@@ -10,6 +10,9 @@ so the same logical plans survive a 1000-executor cluster:
   overridden by AQE coalescing from a higher initial number
 - UTC session timezone so timestamp semantics match the DuckDB oracle
 - Arrow enabled for the Pandas-UDF slow path
+- a codegen cache large enough that a warm plan never recompiles:
+  Spark's default 100 entries hold only ~50 plans, because each
+  generated class takes two (see the conf below)
 """
 
 from __future__ import annotations
@@ -77,6 +80,15 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Static conf: the compiled-class cache is keyed on (class
+        # loader, source), and in local mode the driver's check compile
+        # and the task's compile use different loaders, so each class
+        # takes two entries. The default 100 holds ~50 plans; the
+        # sql_analytics warm-up alone fills 129 entries, and each timed
+        # query then recompiled 4-53 classes it had compiled seconds
+        # earlier (and lost their JIT code). 5000 keeps every plan a
+        # session reruns compiled once.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         # Wide arithmetic chains (64-dim dot products, LSH signatures)
         # stress both compilers: Janino's deeply-recursive compile
         # overflows the default 512k thread stack (codegen retry +

@@ -1292,7 +1292,9 @@ class VersionedTable:
         # PAST THE STAGING GRACE goes, which also reclaims files
         # orphaned by an earlier crash (manifests deleted, files not)
         # without ever racing a live appender's staged-but-uncommitted
-        # files.
+        # files. ``_`` and ``.`` names (Spark's ``_SUCCESS`` markers)
+        # are never data, as in files.collect_files, so they are
+        # neither deleted nor reported.
         cutoff_ms = (_time.time() - staging_grace_hours * 3600.0) * 1000.0
         live = {f for v in keep_vs for f in self.files(v)}
         dead = []
@@ -1300,7 +1302,8 @@ class VersionedTable:
             for st in files.list_dir(
                     self.spark, f"{self.path}/data/{vdir.name}") or []:
                 rel = f"data/{vdir.name}/{st.name}"
-                if rel not in live and st.mtime_ms < cutoff_ms:
+                if (rel not in live and st.mtime_ms < cutoff_ms
+                        and not st.name.startswith(("_", "."))):
                     dead.append(rel)
         for f in sorted(dead):
             files.delete(self.spark, f"{self.path}/{f}")

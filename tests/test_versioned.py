@@ -264,6 +264,21 @@ def test_vacuum_reclaims_crash_orphans(spark, table):
     assert table.read().count() == 50
 
 
+def test_vacuum_returns_only_dropped_data_files(spark, table):
+    """vacuum deletes and reports data files only: Spark's ``_SUCCESS``
+    markers in ``data/v*/`` are never in a manifest but are not data
+    either, so they are left alone and the returned list is exactly
+    the files the dropped manifests referenced."""
+    table.write(_clustered_df(spark, n=100, parts=2), num_partitions=None)
+    src = spark.range(10).select(
+        F.col("id").cast("int").alias("id"), F.lit("u").alias("name"))
+    table.merge(src, "source.id = target.id",
+                when_matched_update={"name": "source.name"})
+    dropped = sorted(set(table.files(0)) - set(table.files(1)))
+    assert dropped
+    assert table.vacuum(retain_versions=1, staging_grace_hours=0) == dropped
+
+
 def test_data_skipping_prunes_files_from_stats(spark, table):
     """cluster_by gives each file a narrow id range; a selective filter
     must then prune to ~1 file from manifest stats alone (no file
