@@ -81,7 +81,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Static conf: the compiled-class cache is keyed on (class
-        # loader, source), and in local mode the driver's check compile
+        # loader, source), and in local mode the planning-time compile
         # and the task's compile use different loaders, so each class
         # takes two entries. The default 100 holds ~50 plans; the
         # sql_analytics warm-up alone fills 129 entries, and each timed
