@@ -81,6 +81,7 @@ from sql_based_etl_spark.tables.versioned import (  # noqa: F401
     classify_winner,
     cluster_rows,
     commit_with_retry,
+    map_back,
     matched_files,
     publish_text_exclusive,
 )
@@ -705,6 +706,14 @@ def _file_uri(root: str, rel: str) -> str:
     return f"{root}/{rel}"
 
 
+def _uri_keys(spark: SparkSession, path: str,
+              adds: dict[str, dict]) -> dict[str, str]:
+    """File URI (under the qualified table root, as Spark's scans
+    report it) → key, for :func:`~sql_based_etl_spark.tables.versioned.map_back`."""
+    root = files.qualify(spark, path)
+    return {_file_uri(root, a["path"]): k for k, a in adds.items()}
+
+
 def _fkey(file_action: dict) -> str:
     return file_action["path"] + "\x00" + _dv_uid(file_action.get("deletionVector"))
 
@@ -1141,8 +1150,8 @@ def _write_version_crc(spark: SparkSession, log_dir: str, version: int,
     ``numMetadata``/``numProtocol``/``metadata``/``protocol``) — the
     rest are Options in the public schema and omitted. Best-effort:
     the sidecar is advisory, so a failed write never fails the commit.
-    Callers skip it after a RETRIED commit (reconciled state is stale,
-    the checkpoint treatment)."""
+    :func:`_occ_commit` skips it after a RETRIED commit (reconciled
+    state is stale, the checkpoint treatment)."""
     try:
         body = {
             "tableSizeBytes": sum(int(a.get("size") or 0)
@@ -1512,8 +1521,7 @@ def _identity_columns(meta: dict) -> list[dict]:
             "start": int(md.get("delta.identity.start", 1)),
             "step": int(md.get("delta.identity.step", 1)),
             "hwm": int(hwm) if hwm is not None else None,
-            "explicit": str(md.get("delta.identity.allowExplicitInsert",
-                                   "false")).lower() == "true",
+            "explicit": _flag(md, "delta.identity.allowExplicitInsert"),
         })
     return out
 
@@ -1678,9 +1686,7 @@ def _next_ict(spark: SparkSession, log_dir: str, meta: dict,
     authority the read side falls back to for ICT-less commits
     (:func:`_resolve_log_version`), so the floor keeps writer emission
     and reader resolution consistent."""
-    conf = meta.get("configuration") or {}
-    if str(conf.get("delta.enableInCommitTimestamps",
-                    "false")).lower() != "true":
+    if not _flag(meta.get("configuration"), "delta.enableInCommitTimestamps"):
         return None
     prev = None
     floor = 0
@@ -1725,26 +1731,31 @@ def _commit_delta_log(spark: SparkSession, log_dir: str, version: int,
                            what="Delta log entry")
 
 
-# --- optimistic concurrency (Delta's commit-retry contract) -------------
+# --- the one commit path (Delta's commit-retry contract) ----------------
 #
-# Delta's actual multi-writer contract is NOT "loser raises": the loser
-# of the put-if-absent race re-reads the winner's commit(s), classifies
-# them against its own operation, and RETRIES at the next version when
-# the two provably commute — only true conflicts raise, with a named
-# exception telling the caller which rule fired. The reference's own
-# production shape runs concurrent scheduled Spark jobs against the lake
-# (scd2-job-scheduler.yaml:15-48), and hourly-append + nightly-OPTIMIZE
-# is the normal case at 100 TB. The rules and the retry loop are the
-# native format's too (versioned.py:classify_winner, commit_with_retry);
-# this module supplies the winner's log actions as a Winner record and
-# the bridge's publish and re-stamp steps.
+# Every bridge operation commits through _occ_commit, delta-spark's
+# OptimisticTransaction.commit: it builds the commitInfo (_commit_info,
+# the one place timestamp and engineInfo are set), orders the actions
+# (commitInfo, protocol, metaData, domainMetadata, txn, row-tracking
+# domain, removes, adds, cdc), publishes them through the shared backoff
+# loop (versioned.py:commit_with_retry), and runs the post-commit steps.
 #
-# Retry re-stamps the version-dependent pieces of the prepared actions:
-# inCommitTimestamp is recomputed against the ACTUAL predecessor (ICT
-# monotonicity), and rowTracking baseRowId ranges are re-assigned from
-# the winner-advanced rowIdHighWaterMark (a stale range would alias two
-# rows' ids forever). Checkpoints are skipped after a retried commit —
-# the caller's reconciled state predates the winners.
+# Delta's multi-writer contract is NOT "loser raises": the loser of the
+# put-if-absent race re-reads the winner's commit, classifies it against
+# its own footprint (versioned.py:classify_winner over _delta_winner's
+# record) and retries at the next version when the two commute — only
+# true conflicts raise, with a named exception. Hourly appends next to a
+# nightly OPTIMIZE are the normal case (the reference's concurrent
+# scheduled jobs, scd2-job-scheduler.yaml:15-48).
+#
+# The version-dependent fields are stamped by ONE function, _stamp,
+# before EVERY attempt, the first one included: inCommitTimestamp
+# against the actual predecessor (ICT monotonicity) and fresh
+# rowTracking baseRowId ranges past the newest high watermark (a stale
+# range would alias two rows' ids forever). Only then does the attempt
+# publish. The .crc sidecar and the checkpoint are written only when
+# the commit landed at read_version + 1 — after a retry the reconciled
+# state predates the winners.
 
 # the bridge's name for the shared conflict family's base
 DeltaConcurrentModificationError = ConcurrentModificationError
@@ -1767,36 +1778,110 @@ def _delta_winner(version: int, actions: list[dict]) -> Winner:
          if "add" in a and a["add"].get("dataChange", True)})
 
 
-def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
-                actions: list[dict], *, operation: str,
-                meta: dict | None = None, proto: dict | None = None,
-                domains: dict[str, str] | None = None,
-                new_adds: list[dict] | None = None,
-                read_paths=frozenset(), removed_paths=frozenset(),
-                reads_table_data: bool = False,
-                read_tree=None,
-                txn_app_id: str | None = None,
-                ignore_conflicts: bool = False,
-                max_retries: int = 200) -> int:
-    """Commit ``actions`` with Delta's optimistic-concurrency retry
-    (:func:`~sql_based_etl_spark.tables.versioned.commit_with_retry`).
+def _commit_info(operation: str, parameters: dict,
+                 metrics: dict | None, now_ms: int) -> dict:
+    """The ``commitInfo`` of one bridge commit (before its stamp)."""
+    return {
+        "timestamp": now_ms,
+        "operation": operation,
+        "operationParameters": parameters,
+        **({"operationMetrics": metrics} if metrics is not None else {}),
+        "engineInfo": "sql-based-etl-spark delta bridge",
+    }
 
-    ``read_version`` is the snapshot version the actions were derived
-    from (None/-1 for table creation); the first attempt lands at
-    ``read_version + 1``. On a lost race the winner's commit is read
-    back and classified (:func:`classify_winner`; the append rule is
-    scoped by ``read_tree`` through :func:`_tree_may_match` on
-    ``meta``); commuting winners advance the attempt version after
-    re-stamping ICT and rowTracking row-id ranges. A raced CREATE
-    (version 0) always raises. Returns the committed version — callers
-    must skip checkpoint writes when it differs from their expected
-    version (their reconciled state predates the winners)."""
-    import time as _t
 
-    first = (read_version if read_version is not None else -1) + 1
-    domains = dict(domains or {})
-    may_match = (None if meta is None or read_tree is None
+def _stamp(spark: SparkSession, log_dir: str, version: int, now_ms: int,
+           info: dict, meta: dict, proto: dict | None,
+           domains: dict[str, str], fresh: list[dict]) -> dict | None:
+    """Stamp an attempt at ``version``: ``info`` gets the
+    inCommitTimestamp when the table enables ICT, and ``fresh`` (the
+    adds this commit staged) get baseRowId ranges past ``domains``'
+    high watermark when it tracks rows. Returns the row-tracking
+    ``domainMetadata`` action, or None."""
+    ict = _next_ict(spark, log_dir, meta, version - 1, now_ms)
+    if ict is not None:
+        info["inCommitTimestamp"] = ict
+    return _assign_row_ids(proto, domains, fresh, version) if fresh else None
+
+
+def _occ_commit(spark: SparkSession, path: str, snap: tuple,
+                operation: str, parameters: dict,
+                metrics: dict | None = None, *,
+                removes=(), adds=(), cdc=(), data_change: bool = True,
+                metadata: dict | None = None,
+                domain: tuple[str, str] | None = None,
+                txn: tuple[str, int] | None = None,
+                read=None, read_tree=None,
+                checkpoint_interval: int | None = None) -> int:
+    """Commit one bridge operation with Delta's optimistic concurrency
+    and return the committed version.
+
+    ``snap`` is the :func:`_replay_state` tuple the operation read
+    (``(meta, live, version, txns, proto, domains)``; version -1 creates
+    the table and emits its protocol). The commit tombstones
+    ``removes`` (live adds, ``dataChange`` = ``data_change``), adds
+    ``adds`` (the commit's adds; those without a ``baseRowId`` were
+    staged by it and get fresh row ids, carried ones keep theirs) and
+    ``cdc`` (staged ``_change_data/`` files), and emits ``metadata``,
+    one ``domain`` (name, configuration) and one ``txn`` (app id,
+    version) when given.
+
+    Conflicts are classified against the footprint: ``read`` is the
+    adds the operation read (None for a blind append; reading rows
+    makes a concurrent data add conflict when ``read_tree`` may match
+    it), the removes are its removed paths, and a commitInfo-only
+    commit commutes with every winner.
+
+    After a commit at ``snap``'s version + 1 that changed state, the
+    ``.crc`` of ``live − removes + adds`` is written, and the checkpoint
+    every ``checkpoint_interval`` versions. Auto-compaction follows any
+    commit with data-changing adds, except RESTORE's (its files come
+    back from an earlier version)."""
+    import time
+
+    meta, live, read_version, txns, proto, domains = snap
+    log_dir = f"{path}/_delta_log"
+    now_ms = int(time.time() * 1000)
+    info = _commit_info(operation, parameters, metrics, now_ms)
+    head: list[dict] = [{"commitInfo": info}]
+    if read_version < 0:
+        head.append({"protocol": proto})
+    if metadata is not None:
+        head.append({"metaData": metadata})
+    if domain is not None:
+        head.append({"domainMetadata": {
+            "domain": domain[0], "configuration": domain[1],
+            "removed": False}})
+    if txn is not None:
+        head.append({"txn": {"appId": txn[0], "version": int(txn[1]),
+                             "lastUpdated": now_ms}})
+    removes = sorted(removes, key=lambda a: a["path"])
+    tail = ([{"remove": _remove_action(a, now_ms, data_change)}
+             for a in removes]
+            + [{"add": a} for a in adds]
+            # AddCDCFile: dataChange is false by definition — cdc files
+            # are invisible to snapshot readers
+            + [{"cdc": {"path": a["path"],
+                        "partitionValues": dict(a.get("partitionValues") or {}),
+                        "size": a.get("size"), "dataChange": False}}
+               for a in cdc])
+    changes_state = len(head) + len(tail) > 1
+    fresh = [a for a in adds if "baseRowId" not in a]
+    domains = dict(domains)
+    if domain is not None:
+        domains[domain[0]] = domain[1]
+    removed_paths = frozenset(a["path"] for a in removes)
+    may_match = (None if read_tree is None
                  else lambda add: _tree_may_match(meta, add, read_tree))
+    actions: list[dict] = []
+
+    def attempt(version: int, ms: int) -> None:
+        rt = _stamp(spark, log_dir, version, ms, info, meta, proto,
+                    domains, fresh)
+        if rt is not None:
+            domains[_ROW_TRACKING_DOMAIN] = (
+                rt["domainMetadata"]["configuration"])
+        actions[:] = head + ([rt] if rt is not None else []) + tail
 
     def publish(version: int) -> None:
         _commit_delta_log(spark, log_dir, version,
@@ -1810,48 +1895,48 @@ def _occ_commit(spark: SparkSession, log_dir: str, read_version: int | None,
                 f"{operation} at {log_dir}: a concurrent writer created "
                 "the table first (version 0 already exists)")
         winner = list(_log_actions(spark, f"{log_dir}/{version:020d}.json"))
-        if not ignore_conflicts:
-            classify_winner(_delta_winner(version, winner), operation,
-                            log_dir, read_paths=read_paths,
-                            removed_paths=removed_paths,
-                            reads_table_data=reads_table_data,
-                            may_match=may_match, txn_app_id=txn_app_id)
+        if changes_state:
+            classify_winner(
+                _delta_winner(version, winner), operation, log_dir,
+                read_paths=frozenset(a["path"] for a in read or ()),
+                removed_paths=removed_paths,
+                reads_table_data=read is not None and data_change,
+                may_match=may_match,
+                txn_app_id=txn[0] if txn is not None else None)
         # fold the winner's domain watermarks (rowTracking hwm) so the
-        # re-stamp below allocates past them
+        # next stamp allocates past them
         for a in winner:
             dm = a.get("domainMetadata")
             if dm and not dm.get("removed"):
                 domains[dm["domain"]] = dm.get("configuration")
-        version += 1
-        ci = actions[0].get("commitInfo") if actions else None
-        if ci is not None and meta is not None:
-            ict = _next_ict(spark, log_dir, meta, version - 1,
-                            int(_t.time() * 1000))
-            if ict is not None:
-                ci["inCommitTimestamp"] = ict
-        if new_adds and proto is not None:
-            rt = _assign_row_ids(proto, domains, new_adds, version)
-            if rt is not None:
-                # the add dicts are shared with `actions`, so the fresh
-                # baseRowId/defaultRowCommitVersion propagate; swap (or
-                # append) the domainMetadata hwm action
-                for i, a in enumerate(actions):
-                    dm = a.get("domainMetadata")
-                    if dm and dm.get("domain") == _ROW_TRACKING_DOMAIN:
-                        actions[i] = rt
-                        break
-                else:
-                    actions.append(rt)
-                domains[_ROW_TRACKING_DOMAIN] = (
-                    rt["domainMetadata"]["configuration"])
-        return version
+        attempt(version + 1, int(time.time() * 1000))
+        return version + 1
 
+    first = read_version + 1
+    attempt(first, now_ms)
     version = commit_with_retry(publish, on_lost, first,
-                                f"{operation} at {log_dir}", max_retries)
+                                f"{operation} at {log_dir}")
     if version != first:
         _log.info("%s at %s: committed at version %d after winning a "
                   "retry past %d concurrent commit(s)",
                   operation, log_dir, version, version - first)
+    elif changes_state:
+        gone = {_fkey(a) for a in removes}
+        state = {k: a for k, a in live.items() if k not in gone}
+        state.update({_fkey(a): a for a in adds})
+        table_meta = metadata if metadata is not None else meta
+        _write_version_crc(spark, log_dir, version, table_meta, state, proto)
+        if (checkpoint_interval and version > 0
+                and version % checkpoint_interval == 0):
+            if txn is not None:
+                txns = {**txns, txn[0]: int(txn[1])}
+            _write_checkpoint(spark, log_dir, version, table_meta, state,
+                              txns, proto, domains)
+    grown = [a for a in adds if a.get("dataChange", True)]
+    if (grown and operation != "RESTORE"
+            and _auto_compact_enabled(meta.get("configuration") or {})):
+        # best-effort: never fails the landed commit
+        _maybe_auto_compact(spark, path, grown)
     return version
 
 
@@ -2656,8 +2741,7 @@ def _iceberg_compat_on(meta: dict) -> bool:
     ``delta.enableIcebergCompatV2=true``, or UniForm's
     ``delta.universalFormat.enabledFormats`` includes ``iceberg``."""
     conf = meta.get("configuration") or {}
-    if str(conf.get("delta.enableIcebergCompatV2",
-                    "false")).lower() == "true":
+    if _flag(conf, "delta.enableIcebergCompatV2"):
         return True
     return "iceberg" in str(conf.get(
         "delta.universalFormat.enabledFormats", "")).lower()
@@ -2697,7 +2781,7 @@ def _check_writer_allowed(proto: dict | None, meta: dict, mode: str) -> None:
             "install delta-spark to write this table"
         )
     conf = meta.get("configuration") or {}
-    if (str(conf.get("delta.appendOnly", "false")).lower() == "true"
+    if (_flag(conf, "delta.appendOnly")
             and mode in ("overwrite", "merge", "delete", "update")):
         raise VersionedTableError(
             "write: delta.appendOnly=true forbids removing data; only "
@@ -2713,8 +2797,7 @@ def _check_writer_allowed(proto: dict | None, meta: dict, mode: str) -> None:
                 "(delta.columnMapping.mode=name|id) — this table has "
                 "none, so its field-id contract cannot hold"
             )
-        if str(conf.get("delta.enableDeletionVectors",
-                        "false")).lower() == "true":
+        if _flag(conf, "delta.enableDeletionVectors"):
             raise VersionedTableError(
                 "write: icebergCompatV2 forbids deletion vectors "
                 "(Iceberg readers of the UniForm metadata cannot apply "
@@ -2925,9 +3008,7 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
                 "disjoint (liquid clustering replaces hive "
                 "partitioning on those columns)")
 
-    live: dict[str, dict] = {}
-    txns: dict[str, int] = {}
-    proto: dict | None = None
+    clustering: tuple[str, str] | None = None
     # a checkpoint-only log (every JSON commit pruned by external
     # cleanup) is still an EXISTING table: treating it as new would
     # commit an invisible version 0 that replay (which prefers the
@@ -2936,7 +3017,8 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
         _list_log(spark, log_dir)
         or _last_checkpoint(spark, log_dir) is not None
     ):
-        meta, live, latest, txns, proto, domains = _replay_state(spark, path)
+        snap = _replay_state(spark, path)
+        meta, live, latest, txns, proto, _ = snap
         _check_writer_allowed(proto, meta, mode)
         mapping_mode = (meta.get("configuration") or {}).get(
             "delta.columnMapping.mode", "none")
@@ -2971,7 +3053,6 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
             and int(txn_version) <= txns[txn_app_id]
         ):
             return latest  # replayed micro-batch: already committed
-        next_v = latest + 1
         part_cols = list(meta.get("partitionColumns") or [])
         if partition_by is not None and list(partition_by) != part_cols:
             raise VersionedTableError(
@@ -3071,11 +3152,10 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
                         }
                 meta["schemaString"] = json.dumps(new_schema)
     else:
-        next_v = 0
+        live = {}
         part_cols = list(partition_by or [])
         emit_meta = True
         mapping_mode = "none"
-        domains = {}
         idents = []
         # the protocol must CLAIM what the table's properties require:
         # delta.enableChangeDataFeed is gated behind writer version 4
@@ -3086,20 +3166,16 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
         # + explicit writerFeatures, legacy capabilities listed per the
         # spec's upgrade rule) — an unclaiming protocol would let
         # external writers commit without the monotonic timestamp.
-        cdf_on = str((properties or {}).get(
-            "delta.enableChangeDataFeed", "false")).lower() == "true"
-        ict_on = str((properties or {}).get(
-            "delta.enableInCommitTimestamps", "false")).lower() == "true"
+        cdf_on = _flag(properties, "delta.enableChangeDataFeed")
+        ict_on = _flag(properties, "delta.enableInCommitTimestamps")
         # delta.enableDeletionVectors is a reader+writer FEATURE pair
         # (reader v3 + writer v7): readers that don't decode DVs would
         # resurrect deleted rows, so the claim is mandatory at CREATE
         # for delete_delta to ever attach one.
-        dv_on = str((properties or {}).get(
-            "delta.enableDeletionVectors", "false")).lower() == "true"
+        dv_on = _flag(properties, "delta.enableDeletionVectors")
         # rowTracking rides domainMetadata (the high watermark lives in
         # a domain) — the spec requires claiming both
-        rt_on = str((properties or {}).get(
-            "delta.enableRowTracking", "false")).lower() == "true"
+        rt_on = _flag(properties, "delta.enableRowTracking")
         # v2 checkpoints are a reader+writer feature pair: a reader
         # that can't follow sidecarFile pointers would replay an
         # incomplete file list
@@ -3111,8 +3187,7 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
         # names now (the library's CREATE does the same; UniForm CREATE
         # auto-enables name mode when none was requested)
         props = dict(properties or {})
-        ic_on = (str(props.get("delta.enableIcebergCompatV2",
-                               "false")).lower() == "true"
+        ic_on = (_flag(props, "delta.enableIcebergCompatV2")
                  or "iceberg" in str(props.get(
                      "delta.universalFormat.enabledFormats", "")).lower())
         cm_mode = str(props.get("delta.columnMapping.mode",
@@ -3213,9 +3288,10 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
                     "delta.columnMapping.physicalName", f_["name"])
                 for f_ in json.loads(meta["schemaString"])["fields"]
             }
-            domains["delta.clustering"] = json.dumps(
+            clustering = ("delta.clustering", json.dumps(
                 {"clusteringColumns": [[phys_by_logical[c]]
-                                       for c in cluster_by]})
+                                       for c in cluster_by]}))
+        snap = (meta, live, -1, {}, proto, {})
 
     df = _enforce_write_obligations(df, meta)
     # clustered layout for THIS batch (logical names, before the
@@ -3229,74 +3305,24 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
             meta = upd
             emit_meta = True
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "CREATE TABLE AS SELECT" if next_v == 0 else "WRITE",
-            "operationParameters": {"mode": mode.capitalize()},
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta,
-                    next_v - 1 if next_v else None, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    if next_v == 0:
-        actions.append({"protocol": proto})
-    if emit_meta:
-        actions.append({"metaData": meta})
-    if next_v == 0 and cluster_by:
-        actions.append({"domainMetadata": {
-            "domain": "delta.clustering",
-            "configuration": domains["delta.clustering"],
-            "removed": False}})
-    if txn_app_id is not None:
-        actions.append({"txn": {"appId": txn_app_id,
-                                "version": int(txn_version),
-                                "lastUpdated": now_ms}})
-    rt = _assign_row_ids(proto, domains, new_adds, next_v)
-    if rt is not None:
-        actions.append(rt)
-        domains[_ROW_TRACKING_DOMAIN] = rt["domainMetadata"]["configuration"]
-    if mode == "overwrite":
-        actions.extend(
-            {"remove": _remove_action(a, now_ms, True)}
-            for a in sorted(live.values(), key=lambda a: a["path"])
-        )
-    actions.extend({"add": a} for a in new_adds)
     # blind append commutes with concurrent data commits; overwrite
     # read the snapshot it replaces, so any concurrent data change is a
     # real conflict (its removes/result were computed from stale state)
-    ow_paths = (frozenset(a["path"] for a in live.values())
-                if mode == "overwrite" else frozenset())
-    committed_v = _occ_commit(
-        spark, log_dir, next_v - 1, actions, operation="WRITE",
-        meta=meta, proto=proto, domains=domains, new_adds=new_adds,
-        read_paths=ow_paths, removed_paths=ow_paths,
-        reads_table_data=(mode == "overwrite"),
-        txn_app_id=txn_app_id)
-    retried = committed_v != next_v
-    next_v = committed_v
-    if txn_app_id is not None:
-        txns = {**txns, txn_app_id: int(txn_version)}
-    if not retried:
-        state = {_fkey(a): a for a in new_adds}
-        if mode == "append":
-            state = {**live, **state}
-        _write_version_crc(spark, log_dir, next_v, meta, state, proto)
-        if (checkpoint_interval and next_v > 0
-                and next_v % checkpoint_interval == 0):
-            # live deletion vectors ride the checkpoint's
-            # add.deletionVector struct (the spec's descriptor shape),
-            # so DV-table appends checkpoint like any other write — a
-            # descriptor-dropping checkpoint would resurrect deleted
-            # rows
-            _write_checkpoint(spark, log_dir, next_v, meta, state, txns,
-                              proto, domains)
-    if _auto_compact_enabled(meta.get("configuration") or {}):
-        _maybe_auto_compact(spark, path, new_adds)
-    return next_v
+    overwrite = list(live.values()) if mode == "overwrite" else None
+    return _occ_commit(
+        spark, path, snap,
+        "WRITE" if snap[2] >= 0 else "CREATE TABLE AS SELECT",
+        {"mode": mode.capitalize()},
+        removes=overwrite or (), adds=new_adds,
+        metadata=meta if emit_meta else None, domain=clustering,
+        txn=(txn_app_id, txn_version) if txn_app_id is not None else None,
+        read=overwrite, checkpoint_interval=checkpoint_interval)
+
+
+def _flag(conf: dict | None, key: str) -> bool:
+    """A boolean table property (or field-metadata flag): true only
+    when set to ``true`` in any case; absent means false."""
+    return str((conf or {}).get(key, "false")).lower() == "true"
 
 
 def _auto_compact_enabled(conf: dict) -> bool:
@@ -3427,8 +3453,6 @@ def merge_delta(source: DataFrame, path: str, condition: str,
 
     Returns the committed version (or the unchanged current version for
     a no-op merge)."""
-    import time
-
     from pyspark.sql.types import StructType
 
     from sql_based_etl_spark.engine.sql_compat import coerce_condition_for_types
@@ -3436,17 +3460,14 @@ def merge_delta(source: DataFrame, path: str, condition: str,
 
     spark = source.sparkSession
     path = path.rstrip("/")
-    log_dir = f"{path}/_delta_log"
-    meta, live, latest, txns, proto, domains = _replay_state(spark, path)
+    snap = _replay_state(spark, path)
+    meta, live, latest, _, proto, _ = snap
     _check_writer_allowed(proto, meta, "merge")
-    mapping_mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none")
-    part_cols = list(meta.get("partitionColumns") or [])
+    conf = meta.get("configuration") or {}
+    mapping_mode = conf.get("delta.columnMapping.mode", "none")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     t_cols = [f.name for f in schema.fields]
-    conf = meta.get("configuration") or {}
-    cdf = str(conf.get("delta.enableChangeDataFeed",
-                       "false")).lower() == "true"
+    cdf = _flag(conf, "delta.enableChangeDataFeed")
     # fast path: a PURE-DELETE merge (delete clause only — no update
     # map, no inserts, no by-source clause) on a DV-enabled table
     # attaches deletion vectors instead of rewriting the matched files
@@ -3455,15 +3476,13 @@ def merge_delta(source: DataFrame, path: str, condition: str,
     if (when_matched_delete is not None and when_matched_update is None
             and not insert_not_matched
             and when_not_matched_by_source_delete is None
-            and str(conf.get("delta.enableDeletionVectors",
-                             "false")).lower() == "true"
+            and _flag(conf, "delta.enableDeletionVectors")
             and "deletionVectors" in set(
                 (proto or {}).get("writerFeatures") or [])):
         return _merge_delete_dv(
-            source, path, log_dir, meta, live, latest, txns, proto,
-            domains, condition, when_matched_delete,
+            source, path, snap, condition, when_matched_delete,
             validate_unique_match, checkpoint_interval, cdf,
-            mapping_mode, part_cols, t_cols, schema)
+            mapping_mode, t_cols, schema)
 
     # enableRowTracking: the rewrite must keep every surviving row's id
     # — materialize (id, commit version) into the config-named physical
@@ -3471,8 +3490,7 @@ def merge_delta(source: DataFrame, path: str, condition: str,
     # modification IS this commit — add.defaultRowCommitVersion
     # resolves it); inserted rows get NULL both (fresh = baseRowId +
     # position). Carried rows keep both materialized.
-    rt_stable = str(conf.get("delta.enableRowTracking",
-                             "false")).lower() == "true"
+    rt_stable = _flag(conf, "delta.enableRowTracking")
     rt_pass: list[str] = []
     emit_meta = False
     if rt_stable:
@@ -3530,10 +3548,9 @@ def merge_delta(source: DataFrame, path: str, condition: str,
                       or not when_not_matched_by_source_delete):
         # the shared find-files pass; the by-source clause rewrites every
         # live file anyway, so there it only validates the unique match
-        root = files.qualify(spark, path)
         matched_keys = matched_files(
             _snapshot_df(spark, path, meta, scan_live),
-            {_file_uri(root, a["path"]): k for k, a in scan_live.items()},
+            _uri_keys(spark, path, scan_live),
             source, condition, validate_unique_match)
     if when_not_matched_by_source_delete:
         matched_keys = sorted(live)  # clause touches every target row
@@ -3649,73 +3666,31 @@ def merge_delta(source: DataFrame, path: str, condition: str,
         except NameError:
             pass
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "MERGE",
-            "operationParameters": {"predicate": condition},
-            "operationMetrics": {
-                "numTargetRowsUpdated": str(n_upd),
-                "numTargetRowsInserted": str(n_ins),
-                "numTargetRowsDeleted": str(n_del),
-                "numTargetFilesRemoved": str(len(matched)),
-                "numTargetFilesAdded": str(len(new_adds)),
-            },
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta, latest, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    if emit_meta:
-        # first rowTracking materialization records the column names in
-        # config; identity merges re-record the advanced high watermark
-        actions.append({"metaData": meta})
-    rt = _assign_row_ids(proto, domains, new_adds, latest + 1)
-    if rt is not None:
-        actions.append(rt)
-        domains[_ROW_TRACKING_DOMAIN] = rt["domainMetadata"]["configuration"]
-    actions.extend(
-        {"remove": _remove_action(a, now_ms, True)}
-        for a in sorted(matched.values(), key=lambda a: a["path"])
-    )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend(
-        # AddCDCFile: dataChange is false by definition — cdc files are
-        # invisible to snapshot readers, visible only to CDF readers
-        {"cdc": {"path": a["path"],
-                 "partitionValues": dict(a.get("partitionValues") or {}),
-                 "size": a.get("size"), "dataChange": False}}
-        for a in cdc_adds
-    )
     # MERGE read the candidate files its ON condition's scope tree
     # could touch (scan_live — all live files when the tree is
     # vacuous), so a concurrent data add conflicts only when it may
     # intersect that read predicate; commitInfo-only and disjoint
     # dataChange=false winners (vacuum, compact of untouched files)
-    # commute
-    next_v = _occ_commit(
-        spark, log_dir, latest, actions, operation="MERGE",
-        meta=meta, proto=proto, domains=domains, new_adds=new_adds,
-        read_paths=frozenset(a["path"] for a in scan_live.values()),
-        removed_paths=frozenset(a["path"] for a in matched.values()),
-        reads_table_data=True,
-        read_tree=read_tree)
-    if next_v == latest + 1:
-        state = {k: a for k, a in live.items() if k not in matched}
-        state.update({_fkey(a): a for a in new_adds})
-        _write_version_crc(spark, log_dir, next_v, meta, state, proto)
-        if checkpoint_interval and next_v % checkpoint_interval == 0:
-            _write_checkpoint(spark, log_dir, next_v, meta, state, txns,
-                              proto, domains)
-    if _auto_compact_enabled(meta.get("configuration") or {}):
-        # delta-spark runs auto compaction after DML commits too — a
-        # row-level op rewrites small slices of its touched partitions
-        # and the backlog those partitions accumulated still needs
-        # bin-packing (best-effort, never fails the landed commit)
-        _maybe_auto_compact(spark, path, new_adds)
-    return next_v
+    # commute. First rowTracking materialization records the column
+    # names in metaData; identity merges re-record the high watermark.
+    return _occ_commit(
+        spark, path, snap, "MERGE", {"predicate": condition},
+        _merge_metrics(n_upd, n_ins, n_del, len(matched), len(new_adds)),
+        removes=matched.values(), adds=new_adds, cdc=cdc_adds,
+        metadata=meta if emit_meta else None,
+        read=scan_live.values(), read_tree=read_tree,
+        checkpoint_interval=checkpoint_interval)
+
+
+def _merge_metrics(n_upd: int, n_ins: int, n_del: int, n_removed: int,
+                   n_added: int) -> dict[str, str]:
+    return {
+        "numTargetRowsUpdated": str(n_upd),
+        "numTargetRowsInserted": str(n_ins),
+        "numTargetRowsDeleted": str(n_del),
+        "numTargetFilesRemoved": str(n_removed),
+        "numTargetFilesAdded": str(n_added),
+    }
 
 
 def _dv_partition_kernel(table_path: str, file_info: dict,
@@ -3836,18 +3811,17 @@ def _dv_match_payloads(spark: SparkSession, path: str,
     returns ``(matched adds by key, [(key, descriptor-or-None)],
     n_deleted)`` or None when nothing matched; a None descriptor means
     the file is fully dead (remove-only)."""
-    abs2key: dict[str, str] = {}
+    uri_keys = _uri_keys(spark, path, live)
     file_info: dict[str, dict] = {}
-    root = files.qualify(spark, path)
-    for k, a in live.items():
-        norm = _norm_file_uri(_file_uri(root, a["path"]))
-        abs2key[norm] = k
+    for uri, k in uri_keys.items():
+        a = live[k]
         try:
             phys = (json.loads(a["stats"])["numRecords"]
                     if a.get("stats") else None)
         except (KeyError, TypeError, ValueError):
             phys = None
-        file_info[norm] = {"dv": a.get("deletionVector"), "rows": phys}
+        file_info[_norm_file_uri(uri)] = {"dv": a.get("deletionVector"),
+                                          "rows": phys}
 
     desc_rows = (
         hits.select("__file", "__ridx")
@@ -3867,13 +3841,8 @@ def _dv_match_payloads(spark: SparkSession, path: str,
     n_del = sum(int(r["new_card"]) for r in desc_rows)
     matched: dict[str, dict] = {}
     descs: list[tuple[str, dict | None]] = []
-    for r in desc_rows:
-        key = abs2key.get(_norm_file_uri(r["file"]))
-        if key is None:
-            raise VersionedTableError(
-                f"{op}: matched file {r['file']!r} does not map back to "
-                f"a live add action at {path}"
-            )
+    keys = map_back(uri_keys, (r["file"] for r in desc_rows), op)
+    for key, r in zip(keys, desc_rows):
         matched[key] = live[key]
         if not r["uid"]:
             descs.append((key, None))  # fully dead: remove only
@@ -3916,15 +3885,11 @@ def _dv_new_adds(spark: SparkSession, path: str, matched: dict[str, dict],
     return new_adds
 
 
-def _merge_delete_dv(source: DataFrame, path: str, log_dir: str,
-                     meta: dict, live: dict[str, dict], latest: int,
-                     txns: dict[str, int], proto: dict | None,
-                     domains: dict[str, str], condition: str,
-                     when_matched_delete: str,
+def _merge_delete_dv(source: DataFrame, path: str, snap: tuple,
+                     condition: str, when_matched_delete: str,
                      validate_unique_match: bool,
                      checkpoint_interval: int | None, cdf: bool,
-                     mapping_mode: str, part_cols: list[str],
-                     t_cols: list[str], schema) -> int:
+                     mapping_mode: str, t_cols: list[str], schema) -> int:
     """:func:`merge_delta`'s pure-delete fast path on DV-enabled
     tables: matched rows satisfying the delete clause become deletion
     vectors — the data files are never rewritten. Semantics match the
@@ -3934,13 +3899,12 @@ def _merge_delete_dv(source: DataFrame, path: str, log_dir: str,
     a merge deleting nothing commits nothing. ``matched_condition``
     gates only the (absent) update clause, so it is ignored — the slow
     path's behavior too."""
-    import time
-
     from sql_based_etl_spark.engine.sql_compat import (
         coerce_condition_for_types,
     )
 
     spark = source.sparkSession
+    meta, live, latest = snap[:3]
     dtmap = {"target": {f.name: f.dataType.simpleString()
                         for f in schema.fields},
              "source": dict(source.dtypes)}
@@ -3987,60 +3951,15 @@ def _merge_delete_dv(source: DataFrame, path: str, log_dir: str,
                                    mapping_mode, path) if cdf else [])
     finally:
         pairs.unpersist()
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "MERGE",
-            "operationParameters": {"predicate": condition},
-            "operationMetrics": {
-                "numTargetRowsUpdated": "0",
-                "numTargetRowsInserted": "0",
-                "numTargetRowsDeleted": str(n_del),
-                "numTargetFilesRemoved": str(len(matched)),
-                "numTargetFilesAdded": str(len(new_adds)),
-                "numTargetDeletionVectorsAdded": str(len(new_adds)),
-            },
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta, latest, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    # no _assign_row_ids: the re-added files are byte-identical, their
-    # baseRowId/defaultRowCommitVersion ride the copied action verbatim
-    actions.extend(
-        {"remove": _remove_action(a, now_ms, True)}
-        for a in sorted(matched.values(), key=lambda a: a["path"])
-    )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend(
-        {"cdc": {"path": a["path"],
-                 "partitionValues": dict(a.get("partitionValues") or {}),
-                 "size": a.get("size"), "dataChange": False}}
-        for a in cdc_adds
-    )
-    next_v = _occ_commit(
-        spark, log_dir, latest, actions, operation="MERGE",
-        meta=meta,
-        read_paths=frozenset(a["path"] for a in scan_live.values()),
-        removed_paths=frozenset(a["path"] for a in matched.values()),
-        reads_table_data=True,
-        read_tree=read_tree)
-    if next_v == latest + 1:
-        state = {k: a for k, a in live.items() if k not in matched}
-        state.update({_fkey(a): a for a in new_adds})
-        _write_version_crc(spark, log_dir, next_v, meta, state, proto)
-        if checkpoint_interval and next_v % checkpoint_interval == 0:
-            _write_checkpoint(spark, log_dir, next_v, meta, state, txns,
-                              proto, domains)
-    if _auto_compact_enabled(meta.get("configuration") or {}):
-        # delta-spark runs auto compaction after DML commits too — a
-        # row-level op rewrites small slices of its touched partitions
-        # and the backlog those partitions accumulated still needs
-        # bin-packing (best-effort, never fails the landed commit)
-        _maybe_auto_compact(spark, path, new_adds)
-    return next_v
+    # the re-added files are byte-identical: their baseRowId /
+    # defaultRowCommitVersion ride the copied action verbatim
+    return _occ_commit(
+        spark, path, snap, "MERGE", {"predicate": condition},
+        {**_merge_metrics(0, 0, n_del, len(matched), len(new_adds)),
+         "numTargetDeletionVectorsAdded": str(len(new_adds))},
+        removes=matched.values(), adds=new_adds, cdc=cdc_adds,
+        read=scan_live.values(), read_tree=read_tree,
+        checkpoint_interval=checkpoint_interval)
 
 
 def delete_delta(spark: SparkSession, path: str,
@@ -4122,25 +4041,16 @@ def delete_delta(spark: SparkSession, path: str,
     deletion vectors (scd2-job.ipynb:153's table format is Delta; this
     is the write half of the DV support the reference ecosystem
     expects)."""
-    import time
+    from pyspark.sql.types import StructType
 
     path = path.rstrip("/")
-    log_dir = f"{path}/_delta_log"
-    if isinstance(predicate, str):
-        cond = None  # built after the schema is known (dtype coercion)
-        pred_str = predicate
-    else:
-        filters = normalize_filters(predicate)
-        cond = filters_column(filters)
-        pred_str = filters_sql(filters)
-        read_tree = filters_tree(filters)
-    meta, live, latest, txns, proto, domains = _replay_state(spark, path)
+    snap = _replay_state(spark, path)
+    meta, live, latest, _, proto, _ = snap
     _check_writer_allowed(proto, meta, "delete")
     conf = meta.get("configuration") or {}
     mapping_mode = conf.get("delta.columnMapping.mode", "none")
-    cdf = str(conf.get("delta.enableChangeDataFeed", "false")).lower() == "true"
-    dv_mode = str(conf.get("delta.enableDeletionVectors",
-                           "false")).lower() == "true"
+    cdf = _flag(conf, "delta.enableChangeDataFeed")
+    dv_mode = _flag(conf, "delta.enableDeletionVectors")
     if dv_mode:
         feats = set((proto or {}).get("writerFeatures") or [])
         rfeats = set((proto or {}).get("readerFeatures") or [])
@@ -4156,8 +4066,7 @@ def delete_delta(spark: SparkSession, path: str,
     # enableRowTracking composes with both routes: the DV route never
     # rewrites a file (ids stay put by construction); the cow route
     # materializes survivors' (id, commit version) like compact does
-    rt_stable = str(conf.get("delta.enableRowTracking",
-                             "false")).lower() == "true"
+    rt_stable = _flag(conf, "delta.enableRowTracking")
     rt_pass: list[str] = []
     emit_meta = False
     if rt_stable and not dv_mode:
@@ -4166,30 +4075,9 @@ def delete_delta(spark: SparkSession, path: str,
         rt_pass = [rt_id, rt_ver]
     if not live:
         return latest
-
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    t_cols = [f.name for f in schema.fields]
-
-    if cond is None:
-        # string predicates get the same BooleanEquality coercion as
-        # merge conditions (coerce_condition_for_types) — `iscurrent =
-        # true` against an int column must behave identically between
-        # MERGE delete clauses and DELETE
-        from sql_based_etl_spark.engine.sql_compat import (
-            coerce_predicate_for_types,
-        )
-
-        pred_str = coerce_predicate_for_types(
-            pred_str,
-            {f.name: f.dataType.simpleString() for f in schema.fields})
-        cond = F.expr(pred_str)
-        # string predicates get the same driver-side file pruning and
-        # OCC predicate scoping as the list form, from the scope tree
-        # the predicate implies; the full predicate still gates every
-        # row
-        read_tree = _condition_scope_tree(pred_str, t_cols, None)
+    t_cols = schema.fieldNames()
+    cond, pred_str, read_tree = _dml_predicate(predicate, schema)
 
     # files provably excluded by stats/partition values never open —
     # the candidate scan is proportional to matching files, not table
@@ -4210,10 +4098,6 @@ def delete_delta(spark: SparkSession, path: str,
         if res is None:
             return latest  # nothing matched: commit would be pure churn
         matched, dv_descs, n_del = res
-
-        removes: list[dict] = list(matched.values())
-        now_ms = int(time.time() * 1000)
-
         if dv_mode:
             new_adds = _dv_new_adds(spark, path, matched, dv_descs)
         else:
@@ -4234,74 +4118,47 @@ def delete_delta(spark: SparkSession, path: str,
     finally:
         hits.unpersist()
 
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "DELETE",
-            "operationParameters": {"predicate": pred_str},
-            "operationMetrics": {
-                "numDeletedRows": str(n_del),
-                "numRemovedFiles": str(len(removes)),
-                "numAddedFiles": str(len(new_adds)),
-                "numDeletionVectorsAdded": str(
-                    len(new_adds) if dv_mode else 0),
-            },
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta, latest, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    if emit_meta:
-        # first rowTracking materialization names the columns in config
-        actions.append({"metaData": meta})
-    if not dv_mode:
-        rt = _assign_row_ids(proto, domains, new_adds, latest + 1)
-        if rt is not None:
-            actions.append(rt)
-            domains[_ROW_TRACKING_DOMAIN] = rt["domainMetadata"][
-                "configuration"]
-    # DV route: baseRowId/defaultRowCommitVersion ride the re-added
-    # action verbatim ({**matched[key]} copies them) — fresh assignment
-    # would break the stable-id promise the DV route exists to keep
-    actions.extend(
-        {"remove": _remove_action(a, now_ms, True)}
-        for a in sorted(removes, key=lambda a: a["path"])
-    )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend(
-        {"cdc": {"path": a["path"],
-                 "partitionValues": dict(a.get("partitionValues") or {}),
-                 "size": a.get("size"), "dataChange": False}}
-        for a in cdc_adds
-    )
     # DELETE read the candidate files its predicate could touch (the
     # pruned set — files provably excluded contain no matching rows,
     # so a winner touching only those commutes); concurrent appends
     # conflict only when the added files may fall INSIDE the predicate
-    # (its scope tree — an append to a different partition commutes)
-    next_v = _occ_commit(
-        spark, log_dir, latest, actions, operation="DELETE",
-        meta=meta, proto=proto, domains=domains,
-        new_adds=(None if dv_mode else new_adds),
-        read_paths=frozenset(a["path"] for a in scan_adds.values()),
-        removed_paths=frozenset(a["path"] for a in matched.values()),
-        reads_table_data=True,
-        read_tree=read_tree)
-    if next_v == latest + 1:
-        state = {k: a for k, a in live.items() if k not in matched}
-        state.update({_fkey(a): a for a in new_adds})
-        _write_version_crc(spark, log_dir, next_v, meta, state, proto)
-        if checkpoint_interval and next_v % checkpoint_interval == 0:
-            _write_checkpoint(spark, log_dir, next_v, meta, state, txns,
-                              proto, domains)
-    if _auto_compact_enabled(meta.get("configuration") or {}):
-        # delta-spark runs auto compaction after DML commits too — a
-        # row-level op rewrites small slices of its touched partitions
-        # and the backlog those partitions accumulated still needs
-        # bin-packing (best-effort, never fails the landed commit)
-        _maybe_auto_compact(spark, path, new_adds)
-    return next_v
+    # (its scope tree — an append to a different partition commutes).
+    # DV route: baseRowId/defaultRowCommitVersion ride the re-added
+    # action verbatim ({**matched[key]} copies them) — fresh assignment
+    # would break the stable-id promise the DV route exists to keep
+    return _occ_commit(
+        spark, path, snap, "DELETE", {"predicate": pred_str}, {
+            "numDeletedRows": str(n_del),
+            "numRemovedFiles": str(len(matched)),
+            "numAddedFiles": str(len(new_adds)),
+            "numDeletionVectorsAdded": str(len(new_adds) if dv_mode else 0),
+        },
+        removes=matched.values(), adds=new_adds, cdc=cdc_adds,
+        metadata=meta if emit_meta else None,
+        read=scan_adds.values(), read_tree=read_tree,
+        checkpoint_interval=checkpoint_interval)
+
+
+def _dml_predicate(predicate, schema) -> tuple:
+    """DELETE's and UPDATE's predicate — a SQL string or the
+    ``read_delta(where=...)`` filter list — over the table ``schema``
+    as ``(row condition, SQL text, scope tree)``. A string gets the BooleanEquality
+    coercion of merge conditions (``iscurrent = true`` against an int
+    column behaves the same in MERGE, DELETE and UPDATE); either form's
+    scope tree prunes candidate files driver-side and scopes OCC, while
+    the full condition still gates every row."""
+    from sql_based_etl_spark.engine.sql_compat import (
+        coerce_predicate_for_types,
+    )
+
+    if not isinstance(predicate, str):
+        filters = normalize_filters(predicate)
+        return (filters_column(filters), filters_sql(filters),
+                filters_tree(filters))
+    pred = coerce_predicate_for_types(
+        predicate, {f.name: f.dataType.simpleString() for f in schema.fields})
+    return (F.expr(pred), pred,
+            _condition_scope_tree(pred, schema.fieldNames(), None))
 
 
 def _stage_changes(changes: dict[str, DataFrame], meta: dict,
@@ -4365,28 +4222,18 @@ def update_delta(spark: SparkSession, path: str,
     partition/stats-scoped OCC as MERGE and DELETE).
 
     Delta-parity reference: delta-spark's UpdateCommand."""
-    import time
+    from pyspark.sql.types import StructType
 
     from sql_based_etl_spark.tables.versioned import _sql_literal
 
     path = path.rstrip("/")
-    log_dir = f"{path}/_delta_log"
-    if isinstance(predicate, str):
-        cond = None
-        pred_str = predicate
-    else:
-        filters = normalize_filters(predicate)
-        cond = filters_column(filters)
-        pred_str = filters_sql(filters)
-        read_tree = filters_tree(filters)
-    meta, live, latest, txns, proto, domains = _replay_state(spark, path)
+    snap = _replay_state(spark, path)
+    meta, live, latest, _, proto, _ = snap
     _check_writer_allowed(proto, meta, "update")
     conf = meta.get("configuration") or {}
     mapping_mode = conf.get("delta.columnMapping.mode", "none")
-    cdf = str(conf.get("delta.enableChangeDataFeed",
-                       "false")).lower() == "true"
-    rt_stable = str(conf.get("delta.enableRowTracking",
-                             "false")).lower() == "true"
+    cdf = _flag(conf, "delta.enableChangeDataFeed")
+    rt_stable = _flag(conf, "delta.enableRowTracking")
     rt_pass: list[str] = []
     emit_meta = False
     rt_id = rt_ver = None
@@ -4396,11 +4243,8 @@ def update_delta(spark: SparkSession, path: str,
         rt_pass = [rt_id, rt_ver]
     if not live:
         return latest
-
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    t_cols = [f.name for f in schema.fields]
+    t_cols = schema.fieldNames()
     t_dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
 
     unknown = [c for c in set if c not in t_dtypes]
@@ -4416,34 +4260,17 @@ def update_delta(spark: SparkSession, path: str,
             "SET (their values are engine-allocated; delta-spark "
             "refuses the same)")
 
-    if cond is None:
-        from sql_based_etl_spark.engine.sql_compat import (
-            coerce_predicate_for_types,
-        )
-
-        pred_str = coerce_predicate_for_types(pred_str, t_dtypes)
-        cond = F.expr(pred_str)
-        read_tree = _condition_scope_tree(pred_str, t_cols, None)
-
+    cond, pred_str, read_tree = _dml_predicate(predicate, schema)
     scan_adds = _prune_by_tree(meta, live, read_tree)
     if not scan_adds:
         return latest  # predicate provably matches no live file
 
     # candidate scan → files actually holding matched rows (bounded by
     # the pruned set; the rewrite below re-reads only those files)
-    root = files.qualify(spark, path)
-    abs2key = {_norm_file_uri(_file_uri(root, a["path"])): k
-               for k, a in scan_adds.items()}
     tagged = _snapshot_df(spark, path, meta, scan_adds, tag_rows=True)
     hit = tagged.filter(cond).select("__file").distinct().collect()
-    matched_keys = []
-    for r in hit:
-        key = abs2key.get(_norm_file_uri(r["__file"]))
-        if key is None:
-            raise VersionedTableError(
-                f"update_delta: matched file {r['__file']!r} does not "
-                f"map back to a live add action at {path}")
-        matched_keys.append(key)
+    matched_keys = map_back(_uri_keys(spark, path, scan_adds),
+                            (r["__file"] for r in hit), "update_delta")
     if not matched_keys:
         return latest  # no row matched: nothing to commit
     matched = {k: live[k] for k in sorted(matched_keys)}
@@ -4498,61 +4325,16 @@ def update_delta(spark: SparkSession, path: str,
     finally:
         ann.unpersist()
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "UPDATE",
-            "operationParameters": {"predicate": pred_str},
-            "operationMetrics": {
-                "numUpdatedRows": str(n_upd),
-                "numRemovedFiles": str(len(matched)),
-                "numAddedFiles": str(len(new_adds)),
-            },
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta, latest, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    if emit_meta:
-        actions.append({"metaData": meta})
-    rt = _assign_row_ids(proto, domains, new_adds, latest + 1)
-    if rt is not None:
-        actions.append(rt)
-        domains[_ROW_TRACKING_DOMAIN] = rt["domainMetadata"]["configuration"]
-    actions.extend(
-        {"remove": _remove_action(a, now_ms, True)}
-        for a in sorted(matched.values(), key=lambda a: a["path"])
-    )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend(
-        {"cdc": {"path": a["path"],
-                 "partitionValues": dict(a.get("partitionValues") or {}),
-                 "size": a.get("size"), "dataChange": False}}
-        for a in cdc_adds
-    )
-    next_v = _occ_commit(
-        spark, log_dir, latest, actions, operation="UPDATE",
-        meta=meta, proto=proto, domains=domains, new_adds=new_adds,
-        read_paths=frozenset(a["path"] for a in scan_adds.values()),
-        removed_paths=frozenset(a["path"] for a in matched.values()),
-        reads_table_data=True,
-        read_tree=read_tree)
-    if next_v == latest + 1:
-        state = {k: a for k, a in live.items() if k not in matched}
-        state.update({_fkey(a): a for a in new_adds})
-        _write_version_crc(spark, log_dir, next_v, meta, state, proto)
-        if checkpoint_interval and next_v % checkpoint_interval == 0:
-            _write_checkpoint(spark, log_dir, next_v, meta, state, txns,
-                              proto, domains)
-    if _auto_compact_enabled(meta.get("configuration") or {}):
-        # delta-spark runs auto compaction after DML commits too — a
-        # row-level op rewrites small slices of its touched partitions
-        # and the backlog those partitions accumulated still needs
-        # bin-packing (best-effort, never fails the landed commit)
-        _maybe_auto_compact(spark, path, new_adds)
-    return next_v
+    return _occ_commit(
+        spark, path, snap, "UPDATE", {"predicate": pred_str}, {
+            "numUpdatedRows": str(n_upd),
+            "numRemovedFiles": str(len(matched)),
+            "numAddedFiles": str(len(new_adds)),
+        },
+        removes=matched.values(), adds=new_adds, cdc=cdc_adds,
+        metadata=meta if emit_meta else None,
+        read=scan_adds.values(), read_tree=read_tree,
+        checkpoint_interval=checkpoint_interval)
 
 
 def compact_delta(spark: SparkSession, path: str,
@@ -4631,12 +4413,9 @@ def compact_delta(spark: SparkSession, path: str,
     Schema, metaData and txn watermarks are untouched; the commit races
     through the same conditional-create protocol as any other. Returns
     the committed version."""
-    import time
-
     path = path.rstrip("/")
-    log_dir = f"{path}/_delta_log"
-    meta, live, latest, _, proto, domains = _replay_state(spark, path)
-    full_live = dict(live)  # pre-subset copy for the version checksum
+    snap = _replay_state(spark, path)
+    meta, live, latest, _, proto, domains = snap
     _check_writer_allowed(proto, meta, "compact")
     conf = meta.get("configuration") or {}
     mapping_mode = conf.get("delta.columnMapping.mode", "none")
@@ -4675,8 +4454,7 @@ def compact_delta(spark: SparkSession, path: str,
     # keeps BOTH its id and its commit version, so both are
     # materialized into the rewritten files (a compacted file's fresh
     # baseRowId/defaultRowCommitVersion never resolve for these rows)
-    rt_stable = str(conf.get("delta.enableRowTracking",
-                             "false")).lower() == "true"
+    rt_stable = _flag(conf, "delta.enableRowTracking")
     rt_pass: list[str] = []
     emit_meta = False
     if rt_stable:
@@ -4738,53 +4516,22 @@ def compact_delta(spark: SparkSession, path: str,
     df = cluster_rows(df, cluster_by, cluster_method, target_files)
     new_adds = _stage_files(df, path, meta, mapping_mode,
                             passthrough=tuple(rt_pass))
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "REORG" if purge else "OPTIMIZE",
-            "operationParameters": {
-                "targetFiles": str(target_files),
-                **({"applyPurge": "true"} if purge else {}),
-                **({"auto": "true"} if auto else {}),
-                **({"zOrderBy": json.dumps(list(cluster_by))}
-                   if cluster_by else {}),
-            },
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta, latest, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    if emit_meta:
-        # first rowTracking materialization names the columns in config
-        actions.append({"metaData": meta})
-    rt = _assign_row_ids(proto, domains, new_adds, latest + 1)
-    if rt is not None:
-        actions.append(rt)
-        domains[_ROW_TRACKING_DOMAIN] = rt["domainMetadata"]["configuration"]
-    actions.extend(
-        {"remove": _remove_action(a, now_ms, False)}
-        for a in sorted(live.values(), key=lambda a: a["path"])
-    )
-    commit_adds = [{**a, "dataChange": False} for a in new_adds]
-    actions.extend({"add": ca} for ca in commit_adds)
     # OPTIMIZE reorganizes exactly the files it read — a concurrent
     # blind append commutes (its files are untouched and stay live); a
-    # winner that removed one of the inputs is a real conflict
-    cpaths = frozenset(a["path"] for a in live.values())
-    next_v = _occ_commit(
-        spark, log_dir, latest, actions,
-        operation="REORG" if purge else "OPTIMIZE",
-        meta=meta, proto=proto, domains=domains, new_adds=commit_adds,
-        read_paths=cpaths, removed_paths=cpaths,
-        reads_table_data=False)
-    if next_v == latest + 1:
-        rewritten = set(live)
-        state = {k: a for k, a in full_live.items() if k not in rewritten}
-        state.update({_fkey(a): a for a in commit_adds})
-        _write_version_crc(spark, log_dir, next_v, meta, state, proto)
-    return next_v
+    # winner that removed one of the inputs is a real conflict. No
+    # checkpoint: maintenance leaves that to the next data commit.
+    return _occ_commit(
+        spark, path, snap, "REORG" if purge else "OPTIMIZE", {
+            "targetFiles": str(target_files),
+            **({"applyPurge": "true"} if purge else {}),
+            **({"auto": "true"} if auto else {}),
+            **({"zOrderBy": json.dumps(list(cluster_by))}
+               if cluster_by else {}),
+        },
+        removes=live.values(),
+        adds=[{**a, "dataChange": False} for a in new_adds],
+        data_change=False, metadata=meta if emit_meta else None,
+        read=live.values())
 
 
 def restore_delta(spark: SparkSession, path: str,
@@ -4819,17 +4566,15 @@ def restore_delta(spark: SparkSession, path: str,
     classification); commitInfo-only winners commute.
 
     Delta-parity reference: delta-spark's RestoreTableCommand."""
-    import time
-
     path = path.rstrip("/")
-    log_dir = f"{path}/_delta_log"
     if (version is None) == (timestamp is None):
         raise VersionedTableError(
             "restore_delta: pass exactly one of version / timestamp")
     if timestamp is not None:
         version = _resolve_log_version(spark, path, timestamp, None)
     meta_t, live_t, _, _, _, _ = _replay_state(spark, path, version)
-    meta_c, live_c, latest, txns, proto, domains = _replay_state(spark, path)
+    snap = _replay_state(spark, path)
+    meta_c, live_c, latest, _, proto, _ = snap
     # restoring REMOVES data the later versions added — appendOnly
     # tables forbid that, same gate as overwrite
     _check_writer_allowed(proto, meta_c, "overwrite")
@@ -4861,44 +4606,15 @@ def restore_delta(spark: SparkSession, path: str,
                     f"restore_delta: data file {orig!r} of version "
                     f"{version} no longer exists (vacuumed?) — the "
                     "snapshot cannot be restored")
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "RESTORE",
-            "operationParameters": {"version": str(version)},
-            "operationMetrics": {
-                "numRestoredFiles": str(len(to_add)),
-                "numRemovedFiles": str(len(to_remove)),
-            },
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }]
-    ict = _next_ict(spark, log_dir, meta_c, latest, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
-    if restore_meta:
-        actions.append({"metaData": meta_t})
-    actions.extend(
-        {"remove": _remove_action(a, now_ms, True)}
-        for a in sorted(to_remove, key=lambda a: a["path"])
-    )
-    actions.extend({"add": a} for a in to_add)
-    next_v = _occ_commit(
-        spark, log_dir, latest, actions, operation="RESTORE",
-        meta=meta_c, proto=proto, domains=domains,
-        read_paths=frozenset(a["path"] for a in live_c.values()),
-        removed_paths=frozenset(a["path"] for a in to_remove),
-        reads_table_data=True)
-    if next_v == latest + 1:
-        _write_version_crc(spark, log_dir, next_v,
-                           meta_t if restore_meta else meta_c, live_t,
-                           proto)
-        if checkpoint_interval and next_v % checkpoint_interval == 0:
-            _write_checkpoint(spark, log_dir, next_v,
-                              meta_t if restore_meta else meta_c, live_t,
-                              txns, proto, domains)
-    return next_v
+    # the re-adds carry their stats, DVs and row ids verbatim
+    return _occ_commit(
+        spark, path, snap, "RESTORE", {"version": str(version)}, {
+            "numRestoredFiles": str(len(to_add)),
+            "numRemovedFiles": str(len(to_remove)),
+        },
+        removes=to_remove, adds=to_add,
+        metadata=meta_t if restore_meta else None,
+        read=live_c.values(), checkpoint_interval=checkpoint_interval)
 
 
 def clone_delta(spark: SparkSession, source_path: str, dest_path: str,
@@ -4975,21 +4691,14 @@ def clone_delta(spark: SparkSession, source_path: str, dest_path: str,
     now_ms = int(time.time() * 1000)
     meta_d = {**meta_s, "id": str(uuid.uuid4()), "createdTime": now_ms}
     proto_d = proto_s or {"minReaderVersion": 1, "minWriterVersion": 2}
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "CLONE",
-            "operationParameters": {
-                "sourceTable": source_path,
-                "sourceVersion": str(src_v),
-            },
-            "operationMetrics": {"numClonedFiles": str(len(adds))},
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-    }, {"protocol": proto_d}, {"metaData": meta_d}]
-    ict = _next_ict(spark, dest_log, meta_d, None, now_ms)
-    if ict is not None:
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
+    info = _commit_info("CLONE", {"sourceTable": source_path,
+                                  "sourceVersion": str(src_v)},
+                        {"numClonedFiles": str(len(adds))}, now_ms)
+    # the cloned adds keep their row ids, and the clone's version 0 is
+    # published as is: no .crc, no retry (a raced CREATE is a conflict)
+    _stamp(spark, dest_log, 0, now_ms, info, meta_d, proto_d, {}, [])
+    actions: list[dict] = [
+        {"commitInfo": info}, {"protocol": proto_d}, {"metaData": meta_d}]
     actions.extend(
         {"domainMetadata": {"domain": dom, "configuration": cfg,
                             "removed": False}}
@@ -5067,7 +4776,8 @@ def vacuum_delta(spark: SparkSession, path: str,
     path = path.rstrip("/")
     log_dir = f"{path}/_delta_log"
     logs = _list_log(spark, log_dir)
-    meta, live, latest, _, _, _ = _replay_state(spark, path)
+    snap = _replay_state(spark, path)
+    live = snap[1]
     cutoff_ms = (time.time() - retention_hours * 3600.0) * 1000.0
 
     tombstones: dict[str, int] = {}
@@ -5131,23 +4841,11 @@ def vacuum_delta(spark: SparkSession, path: str,
             deleted.append(urllib.parse.quote(f"_change_data/{f.name}",
                                               safe="/="))
     if not dry_run:
-        now_ms = int(time.time() * 1000)
-        ci = {
-            "timestamp": now_ms,
-            "operation": "VACUUM END",
-            "operationParameters": {
-                "retentionDurationHours": str(retention_hours)},
-            "operationMetrics": {"numDeletedFiles": str(len(deleted))},
-            "engineInfo": "sql-based-etl-spark delta bridge",
-        }
-        ict = _next_ict(spark, log_dir, meta, latest, now_ms)
-        if ict is not None:
-            ci["inCommitTimestamp"] = ict
         # the audit commit is commitInfo-only: it changes no state, so
-        # it commutes with every concurrent writer — retry past all
-        _occ_commit(spark, log_dir, latest, [{"commitInfo": ci}],
-                    operation="VACUUM END", meta=meta,
-                    ignore_conflicts=True)
+        # it commutes with every concurrent writer and leaves no .crc
+        _occ_commit(spark, path, snap, "VACUUM END",
+                    {"retentionDurationHours": str(retention_hours)},
+                    {"numDeletedFiles": str(len(deleted))})
     return deleted
 
 
@@ -5489,7 +5187,7 @@ def read_delta_changes(spark: SparkSession, path: str,
     logs = _list_log(spark, log_dir)
     meta, _, latest, _, _, _ = _replay_state(spark, path)
     conf = meta.get("configuration") or {}
-    if str(conf.get("delta.enableChangeDataFeed", "false")).lower() != "true":
+    if not _flag(conf, "delta.enableChangeDataFeed"):
         raise VersionedTableError(
             f"read_delta_changes: delta.enableChangeDataFeed is not set on "
             f"{path} — the log records no change data"

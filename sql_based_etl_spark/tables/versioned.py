@@ -575,16 +575,25 @@ def matched_files(target: DataFrame, keys: dict[str, str], source: DataFrame,
         rows = (tagged.alias("target").join(source.alias("source"), on,
                                             "left_semi")
                 .select("__file").distinct().collect())
+    return sorted(map_back(keys, (r["__file"] for r in rows), "merge"))
+
+
+def map_back(keys: dict[str, str], scanned, op: str) -> list[str]:
+    """The file keys of scan-reported file names (``input_file_name()``,
+    ``_metadata.file_path``), in order, through ``keys`` (file URI →
+    the format's file key; both sides compared by
+    :func:`_norm_file_uri`). A file that maps back to no key raises:
+    dropping it would silently leave its matched rows untouched."""
     by_uri = {_norm_file_uri(u): k for u, k in keys.items()}
     out = []
-    for r in rows:
-        key = by_uri.get(_norm_file_uri(r["__file"]))
+    for f in scanned:
+        key = by_uri.get(_norm_file_uri(f))
         if key is None:
             raise VersionedTableError(
-                f"merge: matched file {r['__file']!r} does not map back "
-                "to a live file of the table")
+                f"{op}: matched file {f!r} does not map back to a live "
+                "file of the table")
         out.append(key)
-    return sorted(out)
+    return out
 
 
 @dataclass(frozen=True)
