@@ -1307,15 +1307,31 @@ class VersionedTable:
         cutoff_ms = (_time.time() - staging_grace_hours * 3600.0) * 1000.0
         live = {f for v in keep_vs for f in self.files(v)}
         dead = []
+        emptied = []
         for vdir in files.list_dir(self.spark, f"{self.path}/data") or []:
-            for st in files.list_dir(
-                    self.spark, f"{self.path}/data/{vdir.name}") or []:
+            entries = files.list_dir(
+                self.spark, f"{self.path}/data/{vdir.name}") or []
+            kept = []
+            for st in entries:
                 rel = f"data/{vdir.name}/{st.name}"
                 if (rel not in live and st.mtime_ms < cutoff_ms
                         and not st.name.startswith(("_", "."))):
                     dead.append(rel)
+                else:
+                    kept.append(st)
+            # a version directory left holding only its _SUCCESS marker
+            # (past the grace, so no appender is still writing: one
+            # would hold _temporary) is dropped whole, so later vacuums
+            # stop listing it
+            if ([st.name for st in kept] == ["_SUCCESS"]
+                    and kept[0].mtime_ms < cutoff_ms
+                    and not any(f.startswith(f"data/{vdir.name}/")
+                                for f in live)):
+                emptied.append(f"data/{vdir.name}")
         for f in sorted(dead):
             files.delete(self.spark, f"{self.path}/{f}")
+        for d in emptied:
+            files.delete(self.spark, f"{self.path}/{d}", recursive=True)
         return sorted(dead)
 
     def changes(

@@ -279,6 +279,24 @@ def test_vacuum_returns_only_dropped_data_files(spark, table):
     assert table.vacuum(retain_versions=1, staging_grace_hours=0) == dropped
 
 
+def test_vacuum_removes_emptied_version_directories(spark, table):
+    """A dropped version's data directory keeps only Spark's _SUCCESS
+    marker once its files are gone; vacuum removes the directory whole,
+    so later vacuums stop listing it. A directory an appender is still
+    writing (it holds _temporary) is left alone."""
+    import os
+
+    table.write(_clustered_df(spark, n=20, parts=2))
+    table.write(_clustered_df(spark, n=20, parts=2), mode="overwrite")
+    writing = os.path.join(table.path, "data", "v00000099", "_temporary")
+    os.makedirs(writing)
+    open(os.path.join(table.path, "data", "v00000099", "_SUCCESS"), "w").close()
+    table.vacuum(retain_versions=1, staging_grace_hours=0)
+    assert not os.path.exists(os.path.join(table.path, "data", "v00000000"))
+    assert os.path.isdir(writing)
+    assert sorted(r.id for r in table.read().collect()) == list(range(20))
+
+
 def test_data_skipping_prunes_files_from_stats(spark, table):
     """cluster_by gives each file a narrow id range; a selective filter
     must then prune to ~1 file from manifest stats alone (no file
