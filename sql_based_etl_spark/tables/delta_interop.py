@@ -708,8 +708,9 @@ def _file_uri(root: str, rel: str) -> str:
 
 def _uri_keys(spark: SparkSession, path: str,
               adds: dict[str, dict]) -> dict[str, str]:
-    """File URI (under the qualified table root, as Spark's scans
-    report it) → key, for :func:`~sql_based_etl_spark.tables.versioned.map_back`."""
+    """File URI of each add (under the qualified table root, as
+    Spark's scans report it) → its key: the map
+    :func:`~sql_based_etl_spark.tables.versioned.map_back` reads."""
     root = files.qualify(spark, path)
     return {_file_uri(root, a["path"]): k for k, a in adds.items()}
 
@@ -1870,6 +1871,7 @@ def _occ_commit(spark: SparkSession, path: str, snap: tuple,
     domains = dict(domains)
     if domain is not None:
         domains[domain[0]] = domain[1]
+    read_paths = frozenset(a["path"] for a in read or ())
     removed_paths = frozenset(a["path"] for a in removes)
     may_match = (None if read_tree is None
                  else lambda add: _tree_may_match(meta, add, read_tree))
@@ -1898,8 +1900,7 @@ def _occ_commit(spark: SparkSession, path: str, snap: tuple,
         if changes_state:
             classify_winner(
                 _delta_winner(version, winner), operation, log_dir,
-                read_paths=frozenset(a["path"] for a in read or ()),
-                removed_paths=removed_paths,
+                read_paths=read_paths, removed_paths=removed_paths,
                 reads_table_data=read is not None and data_change,
                 may_match=may_match,
                 txn_app_id=txn[0] if txn is not None else None)
