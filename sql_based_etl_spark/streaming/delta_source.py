@@ -31,15 +31,15 @@ lifted from ``read_delta_changes``). Non-append commits are DATA here,
 not errors; the table must have ``delta.enableChangeDataFeed=true``.
 
 The planner runs in an isolated Python process WITHOUT a JVM gateway,
-so its log access takes the shared file layer's no-JVM lane
-(``tables/files.py`` with ``spark=None``: ``os`` on local paths,
-pyarrow filesystems for URIs — the lane the DV kernels use on executors).
-Listings and modification times follow the layer's one rule, so a
-commit's ``_commit_timestamp_ms`` here equals the one batch
-``read_delta_changes`` gives. JSON commits are listed and parsed directly,
-and a checkpoint-pruned head falls back to the ``_last_checkpoint``
-checkpoint (classic parquet, or a v2 manifest in either parquet or
-JSON layout) for table metadata via pyarrow.
+so it plans from the bridge's own log reader on the shared file
+layer's no-JVM lane (``tables/files.py`` with ``spark=None``: ``os`` on
+local paths, pyarrow filesystems for URIs — the lane the DV kernels use
+on executors): ``delta_interop._list_log`` lists the commits,
+``_replay_state`` gives the table's metaData (from any checkpoint
+layout when the log head was pruned), and ``_read_commit`` reads each
+commit with the batch readers' refusal rules and commit timestamp, so
+a commit's ``_commit_timestamp_ms`` here equals the one batch
+``read_delta_changes`` gives.
 
 Column-mapped tables stream through the physical→logical rename;
 hive-partitioned tables get their partition values injected from the
@@ -69,7 +69,7 @@ scd2-job.ipynb:153's tables are Delta).
 from __future__ import annotations
 
 import json
-import re
+import urllib.parse
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -79,90 +79,16 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from sql_based_etl_spark.tables import files
+from sql_based_etl_spark.tables.delta_interop import (
+    _dv_row_indexes,
+    _flag,
+    _list_log,
+    _read_commit,
+    _replay_state,
+    _schema_contains_type,
+)
 
-_LOG_RE = re.compile(r"^(\d{20})\.json$")
-
-
-def _plain_list_log(log_dir: str) -> dict[int, str]:
-    out: dict[int, str] = {}
-    for f in files.list_dir(None, log_dir) or []:
-        m = _LOG_RE.match(f.name)
-        if m:
-            out[int(m.group(1))] = f"{log_dir}/{f.name}"
-    return out
-
-
-def _plain_log_actions(path: str) -> list[dict]:
-    acts = []
-    for line in files.read_text(None, path).splitlines():
-        if line.strip():
-            acts.append(json.loads(line))
-    return acts
-
-
-def _plain_table_meta(table_path: str, logs: dict[int, str]) -> dict:
-    """The table's newest ``metaData`` action, from the surviving JSON
-    commits — falling back to the ``_last_checkpoint`` parquet (classic
-    single-file or v2 manifest; pyarrow read) when the log head was
-    pruned below a checkpoint."""
-    meta: dict | None = None
-    for v in sorted(logs):
-        for a in _plain_log_actions(logs[v]):
-            if "metaData" in a:
-                meta = a["metaData"]
-    if meta is not None:
-        return meta
-    log_dir = f"{table_path}/_delta_log"
-    try:
-        lc = json.loads(files.read_bytes(None, f"{log_dir}/_last_checkpoint"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"delta_bridge source: no metaData action in the surviving "
-            f"log and no _last_checkpoint at {log_dir}"
-        ) from None
-    cv = int(lc["version"])
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    candidates = [f.name for f in files.list_dir(None, log_dir) or []
-                  if f.name.startswith(f"{cv:020d}.checkpoint")
-                  and f.name.endswith((".parquet", ".json"))]
-    for name in sorted(candidates):
-        if name.endswith(".json"):
-            # v2 checkpoint with a JSON manifest
-            # ('<v>.checkpoint.<uuid>.json' — valid per the protocol,
-            # produced by some writers): newline-delimited actions,
-            # metaData carried in the manifest itself (file actions
-            # live in sidecars the metadata probe never needs)
-            for a in _plain_log_actions(f"{log_dir}/{name}"):
-                md = a.get("metaData")
-                if md and md.get("id"):
-                    meta = md
-            continue
-        tbl = pq.read_table(pa.BufferReader(
-            files.read_bytes(None, f"{log_dir}/{name}")))
-        if "metaData" not in tbl.column_names:
-            continue
-        for row in tbl.column("metaData").to_pylist():
-            if row and row.get("id"):
-                meta = {k: v for k, v in row.items() if v is not None}
-                # pyarrow materializes parquet MAP columns as
-                # [(key, value), ...] pair lists — every consumer of
-                # metaData expects the JSON-action dict shape
-                for mk in ("configuration",):
-                    if isinstance(meta.get(mk), list):
-                        meta[mk] = dict(meta[mk])
-                fmt = meta.get("format")
-                if isinstance(fmt, dict) and isinstance(
-                        fmt.get("options"), list):
-                    fmt["options"] = dict(fmt["options"])
-    if meta is None:
-        raise ValueError(
-            f"delta_bridge source: checkpoint {cv} at {log_dir} carries "
-            "no metaData action"
-        )
-    return meta
+_WHO = "delta_bridge source"
 
 
 def _phys_to_logical(meta: dict) -> dict[str, str]:
@@ -176,45 +102,6 @@ def _phys_to_logical(meta: dict) -> dict[str, str]:
         md = f.get("metadata") or {}
         out[md.get("delta.columnMapping.physicalName", f["name"])] = f["name"]
     return out
-
-
-def _type_shape(node):
-    """Structural type identity, ignoring field metadata (identity high
-    watermarks, column-mapping ids legitimately churn per commit)."""
-    if isinstance(node, dict) and node.get("type") == "struct":
-        return ("struct", tuple(
-            (f["name"], _type_shape(f["type"]))
-            for f in node.get("fields", [])))
-    if isinstance(node, dict) and node.get("type") == "array":
-        return ("array", _type_shape(node["elementType"]))
-    if isinstance(node, dict) and node.get("type") == "map":
-        return ("map", _type_shape(node["keyType"]),
-                _type_shape(node["valueType"]))
-    return node
-
-
-def _schema_readable_under(old_string: str | None,
-                           new_string: str) -> bool:
-    """True when files written under ``old_string`` can be served under
-    ``new_string``: every old column exists in the new schema with an
-    IDENTICAL type shape, and every new-only column is nullable (the
-    executor read null-fills it) — mergeSchema's additive evolution.
-    Anything else (drop, rename, retype, non-nullable add) is a real
-    schema change the stream must refuse."""
-    if old_string is None:
-        return True
-    old = {f["name"]: _type_shape(f["type"])
-           for f in json.loads(old_string).get("fields", [])}
-    newf = json.loads(new_string).get("fields", [])
-    new = {f["name"]: _type_shape(f["type"]) for f in newf}
-    nullable = {f["name"]: bool(f.get("nullable", True)) for f in newf}
-    for name, shape in old.items():
-        if new.get(name) != shape:
-            return False
-    for name in new:
-        if name not in old and not nullable[name]:
-            return False
-    return True
 
 
 _CDF_COLS = ("_change_type", "_commit_version", "_commit_timestamp_ms")
@@ -324,21 +211,15 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
             )
 
             cutoff_ms = parse_timestamp_cutoff(self._start_ts) * 1000.0
-            logs = _plain_list_log(self._log_dir)
+            logs = _list_log(None, self._log_dir)
             if not logs:
                 raise ValueError(
                     f"delta_bridge source: no Delta log at "
                     f"{self._log_dir}")
             start = max(logs)
             for v in sorted(logs):
-                ts = None
-                for a in _plain_log_actions(logs[v]):
-                    ci = a.get("commitInfo")
-                    if ci and ci.get("inCommitTimestamp") is not None:
-                        ts = int(ci["inCommitTimestamp"])
-                if ts is None:
-                    ts = files.stat(None, logs[v]).mtime_ms
-                if ts >= cutoff_ms:
+                if _read_commit(None, self._log_dir, logs, v,
+                                _WHO)[3] >= cutoff_ms:
                     start = v - 1
                     break
             self._start = start
@@ -357,7 +238,7 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
         return {"version": start}
 
     def latestOffset(self) -> dict:
-        logs = _plain_list_log(self._log_dir)
+        logs = _list_log(None, self._log_dir)
         if not logs:
             raise ValueError(
                 f"delta_bridge source: no Delta log at {self._log_dir}")
@@ -374,169 +255,62 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
             self._seen = latest
         return {"version": latest}
 
-    def _meta(self, logs: dict[int, str]) -> dict:
+    def _meta(self) -> dict:
         if self._meta_cache is None:
-            self._meta_cache = _plain_table_meta(self._path, logs)
+            self._meta_cache = _replay_state(None, self._path)[0]
         return self._meta_cache
 
-    def _cdf_commit_partitions(self, v: int, logs: dict[int, str],
-                               meta: dict, rename: dict,
-                               schema_json: str) -> list["_FilePartition"]:
-        """CDF partitions for ONE commit — batch
-        ``read_delta_changes``' derivation, per micro-batch: cdc
-        actions when present (the only faithful record of a rewrite),
-        else adds → insert rows / removes → delete rows; DV-carrying
-        adds without cdc refuse (whole-file derivation would fabricate
-        churn). ``_commit_timestamp_ms``: inCommitTimestamp else the
-        commit file's mtime."""
-        cdcs: list[dict] = []
-        adds: list[dict] = []
-        removes: list[dict] = []
-        ts_ms: int | None = None
-        for a in _plain_log_actions(logs[v]):
-            if "metaData" in a and not _schema_readable_under(
-                a["metaData"].get("schemaString"), meta["schemaString"]):
-                raise ValueError(
-                    f"delta_bridge source: commit {v} changes the table "
-                    "schema incompatibly — restart the CDF stream past "
-                    "the schema change"
-                )
-            if "cdc" in a:
-                cdcs.append(a["cdc"])
-            elif "add" in a and a["add"].get("dataChange", True):
-                adds.append(a["add"])
-            elif "remove" in a and a["remove"].get("dataChange", True):
-                removes.append(a["remove"])
-            elif "commitInfo" in a:
-                ict = a["commitInfo"].get("inCommitTimestamp")
-                ts_ms = int(ict) if ict is not None else None
-        if ts_ms is None:
-            ts_ms = files.stat(None, logs[v]).mtime_ms
-
-        def _part(action: dict, ctype: str | None) -> _FilePartition:
-            import urllib.parse as _up
-
-            rel = _up.unquote(action["path"])
-            absolute = (rel if "://" in rel or rel.startswith("/")
-                        else f"{self._path}/{rel}")
-            dv = action.get("deletionVector") if ctype == "delete" else None
-            return _FilePartition(
-                file_path=absolute, schema_json=schema_json,
-                rename=dict(rename),
-                partition_values=dict(action.get("partitionValues") or {}),
-                change_type=ctype, commit_version=v, commit_ts_ms=ts_ms,
-                cdf=True,
-                dv_desc=json.dumps(dv) if dv else None,
-                table_path=self._path)
-
-        if cdcs:
-            return [_part(c, None) for c in cdcs]
-        out: list[_FilePartition] = []
-        if any(a.get("deletionVector") for a in adds):
-            raise ValueError(
-                f"delta_bridge source: commit {v} attaches a deletion "
-                "vector without cdc actions — whole-file derivation "
-                "would fabricate row churn; enable "
-                "delta.enableChangeDataFeed on the writer"
-            )
-        out.extend(_part(a, "insert") for a in adds)
-        part_cols = meta.get("partitionColumns") or []
-        for r in removes:
-            pv = r.get("partitionValues")
-            if part_cols and (pv is None
-                              or any(c not in pv for c in part_cols)):
-                raise ValueError(
-                    f"delta_bridge source: commit {v} removes "
-                    f"{r.get('path')!r} without partitionValues — "
-                    "delete rows cannot be reconstructed"
-                )
-            out.append(_part(r, "delete"))
-        return out
-
     def partitions(self, start: dict, end: dict):
+        """One partition per data file of commits ``(start, end]``,
+        each commit read by ``delta_interop._read_commit`` — the batch
+        readers' refusal rules. Append mode: the data-changing adds.
+        CDF mode (batch ``read_delta_changes``' derivation): the cdc
+        files when the commit wrote them, else adds as insert rows and
+        removes as delete rows."""
         sv, ev = int(start["version"]), int(end["version"])
         self._seen = ev if self._seen is None else max(self._seen, ev)
-        logs = _plain_list_log(self._log_dir)
-        meta = self._meta(logs)
-        rename = _phys_to_logical(meta)
-        schema_json = meta["schemaString"]
-        if self._cdf and str((meta.get("configuration") or {}).get(
-                "delta.enableChangeDataFeed", "false")).lower() != "true":
+        logs = _list_log(None, self._log_dir)
+        meta = self._meta()
+        if self._cdf and not _flag(meta.get("configuration"),
+                                   "delta.enableChangeDataFeed"):
             raise ValueError(
                 "delta_bridge source: readChangeFeed=true but "
                 "delta.enableChangeDataFeed is not set on the table — "
                 "the log records no change data"
             )
+        rename = _phys_to_logical(meta)
+
+        def part(action: dict, **cdf) -> _FilePartition:
+            rel = urllib.parse.unquote(action["path"])
+            return _FilePartition(
+                file_path=(rel if "://" in rel or rel.startswith("/")
+                           else f"{self._path}/{rel}"),
+                schema_json=meta["schemaString"], rename=dict(rename),
+                partition_values=dict(action.get("partitionValues") or {}),
+                table_path=self._path, **cdf)
+
         parts: list[_FilePartition] = []
         for v in range(sv + 1, ev + 1):
-            if v not in logs:
-                raise ValueError(
-                    f"delta_bridge source: commit {v} missing at "
-                    f"{self._log_dir} (pruned below a checkpoint?) — "
-                    "cannot reconstruct the "
-                    + ("change" if self._cdf else "append")
-                    + " stream; restart the query from a full snapshot"
-                )
-            if self._cdf:
-                parts.extend(self._cdf_commit_partitions(
-                    v, logs, meta, rename, schema_json))
+            commit = _read_commit(None, self._log_dir, logs, v, _WHO, meta,
+                                  cdf=self._cdf,
+                                  ignore_deletes=self._ignore_deletes)
+            if commit is None:  # a pure delete under ignoreDeletes
                 continue
-            v_adds: list[dict] = []
-            v_removed: set[str] = set()
-            for a in _plain_log_actions(logs[v]):
-                if "metaData" in a and not _schema_readable_under(
-                    a["metaData"].get("schemaString"),
-                    meta["schemaString"],
-                ):
-                    # structural comparison, not byte equality:
-                    # identity tables re-emit metaData per append (the
-                    # highWaterMark lives in field metadata), and
-                    # mergeSchema's additive column adds are servable
-                    # under the newest schema (old files null-fill) —
-                    # only drops/renames/retypes/non-nullable adds
-                    # refuse
-                    raise ValueError(
-                        f"delta_bridge source: commit {v} changes the "
-                        "table schema incompatibly — restart the query "
-                        "from a full snapshot"
-                    )
-                if "add" in a and a["add"].get("dataChange", True):
-                    v_adds.append(a["add"])
-                elif ("remove" in a
-                      and a["remove"].get("dataChange", True)):
-                    v_removed.add(a["remove"]["path"])
-            if v_removed:
-                pure_delete = all(a["path"] in v_removed for a in v_adds)
-                if self._ignore_deletes and pure_delete:
-                    continue
-                raise ValueError(
-                    f"delta_bridge source: commit {v} removes data — "
-                    "the table is not append-only past the stream's "
-                    "start; "
-                    + ("its rewritten files may carry NEW rows, so "
-                       "ignoreDeletes cannot skip it safely"
-                       if self._ignore_deletes else
-                       "set ignoreDeletes=true to skip pure-delete "
-                       "commits")
-                )
-            for a in v_adds:
-                if a.get("deletionVector"):
-                    raise ValueError(
-                        f"delta_bridge source: commit {v} attaches a "
-                        "deletion vector — row-level deletes are not "
-                        "append-only"
-                    )
-                import urllib.parse as _up
-
-                rel = _up.unquote(a["path"])
-                absolute = (rel if "://" in rel or rel.startswith("/")
-                            else f"{self._path}/{rel}")
-                parts.append(_FilePartition(
-                    file_path=absolute,
-                    schema_json=schema_json,
-                    rename=dict(rename),
-                    partition_values=dict(a.get("partitionValues") or {}),
-                ))
+            adds, removes, cdcs, ts_ms = commit
+            if not self._cdf:
+                parts.extend(part(a) for a in adds.values())
+                continue
+            stamp = {"cdf": True, "commit_version": v, "commit_ts_ms": ts_ms}
+            if cdcs:
+                parts.extend(part(c, **stamp) for c in cdcs.values())
+                continue
+            parts.extend(part(a, change_type="insert", **stamp)
+                         for a in adds.values())
+            for r in removes.values():
+                dv = r.get("deletionVector")
+                parts.append(part(r, change_type="delete",
+                                  dv_desc=json.dumps(dv) if dv else None,
+                                  **stamp))
         return parts
 
     def commit(self, end: dict) -> None:
@@ -564,10 +338,6 @@ class DeltaBridgeStreamReader(DataSourceStreamReader):
             # matching batch read_delta_changes (which routes removes
             # through the DV-applying snapshot reader)
             import numpy as np
-
-            from sql_based_etl_spark.tables.delta_interop import (
-                _dv_row_indexes,
-            )
 
             dead = _dv_row_indexes(None, partition.table_path,
                                    json.loads(partition.dv_desc))
@@ -640,16 +410,7 @@ class DeltaBridgeStreamDataSource(DataSource):
         if not path:
             raise ValueError(
                 "delta_bridge source: option 'path' is required")
-        path = path.rstrip("/")
-        logs = _plain_list_log(f"{path}/_delta_log")
-        if not logs:
-            raise ValueError(
-                f"delta_bridge source: no Delta log at {path}/_delta_log")
-        meta = _plain_table_meta(path, logs)
-        from sql_based_etl_spark.tables.delta_interop import (
-            _schema_contains_type,
-        )
-
+        meta = _replay_state(None, path.rstrip("/"))[0]
         if _schema_contains_type(json.loads(meta["schemaString"]),
                                  {"variant"}):
             # batch reads serve variant natively (Spark's JVM parquet
@@ -669,9 +430,8 @@ class DeltaBridgeStreamDataSource(DataSource):
                 "readchangefeed",
                 self.options.get("readChangeFeed", "false"))
                ).lower() == "true":
-            if str((meta.get("configuration") or {}).get(
-                    "delta.enableChangeDataFeed",
-                    "false")).lower() != "true":
+            if not _flag(meta.get("configuration"),
+                         "delta.enableChangeDataFeed"):
                 raise ValueError(
                     "delta_bridge source: readChangeFeed=true but "
                     "delta.enableChangeDataFeed is not set on the table "

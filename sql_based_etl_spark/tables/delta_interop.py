@@ -43,11 +43,13 @@ it (the ICT writer feature), falling back to commit-file mtimes
 otherwise — the spec's rule. Honest limits (fail-loud,
 never-wrong-answer): reader features beyond
 {columnMapping, deletionVectors, v2Checkpoint} raise instead of
-returning rows that ignore them. Log replay happens driver-side over metadata only;
-at very large file counts (millions of adds) a production reader
-would replay the checkpoint distributed — the checkpoint parquet here
-is read through Spark already, only the surviving file LIST is
-collected.
+returning rows that ignore them. Log replay happens driver-side over
+metadata only and starts no Spark job: commit JSON and checkpoint
+parquet (read and written with pyarrow) go through the file layer
+(``tables/files.py``), so replay also runs without a JVM
+(``spark=None``, the lane of the stream source's planner). At very
+large file counts (millions of adds) a production reader would replay
+the checkpoint distributed.
 """
 
 from __future__ import annotations
@@ -101,7 +103,7 @@ def delta_available() -> bool:
 # --- log access (tables/files.py: os on local paths, Hadoop elsewhere) ---
 
 
-def _list_log(spark: SparkSession, log_dir: str) -> dict[int, str]:
+def _list_log(spark: SparkSession | None, log_dir: str) -> dict[int, str]:
     """Map commit version -> JSON log file path."""
     out: dict[int, str] = {}
     for name, _ in _list_log_entries(spark, log_dir):
@@ -110,7 +112,7 @@ def _list_log(spark: SparkSession, log_dir: str) -> dict[int, str]:
     return out
 
 
-def _list_log_entries(spark: SparkSession, log_dir: str) -> list[tuple[str, int]]:
+def _list_log_entries(spark: SparkSession | None, log_dir: str) -> list[tuple[str, int]]:
     """``(name, modification time ms)`` for every file directly under
     ``_delta_log`` — one listing serving both the metadata-cleanup age
     checks and the checkpoint scan (sidecars live under ``_sidecars/``
@@ -309,6 +311,45 @@ def _check_metadata(meta: dict) -> None:
             f"Delta column mapping mode {mode!r} is not supported by the "
             "no-jar bridge; install delta-spark"
         )
+
+
+def _type_shape(node):
+    """Structural type identity, ignoring field metadata (identity high
+    watermarks, column-mapping ids legitimately churn per commit)."""
+    if isinstance(node, dict) and node.get("type") == "struct":
+        return ("struct", tuple(
+            (f["name"], _type_shape(f["type"]))
+            for f in node.get("fields", [])))
+    if isinstance(node, dict) and node.get("type") == "array":
+        return ("array", _type_shape(node["elementType"]))
+    if isinstance(node, dict) and node.get("type") == "map":
+        return ("map", _type_shape(node["keyType"]),
+                _type_shape(node["valueType"]))
+    return node
+
+
+def _schema_readable_under(old_string: str | None,
+                           new_string: str) -> bool:
+    """True when files written under ``old_string`` can be served under
+    ``new_string``: every old column exists in the new schema with an
+    IDENTICAL type shape, and every new-only column is nullable (the
+    read null-fills it) — mergeSchema's additive evolution. Anything
+    else (drop, rename, retype, non-nullable add) is a real schema
+    change an incremental reader must refuse."""
+    if old_string is None:
+        return True
+    old = {f["name"]: _type_shape(f["type"])
+           for f in json.loads(old_string).get("fields", [])}
+    newf = json.loads(new_string).get("fields", [])
+    new = {f["name"]: _type_shape(f["type"]) for f in newf}
+    nullable = {f["name"]: bool(f.get("nullable", True)) for f in newf}
+    for name, shape in old.items():
+        if new.get(name) != shape:
+            return False
+    for name in new:
+        if name not in old and not nullable[name]:
+            return False
+    return True
 
 
 def _physical_schema_json(node, with_field_ids: bool = False):
@@ -719,93 +760,177 @@ def _fkey(file_action: dict) -> str:
     return file_action["path"] + "\x00" + _dv_uid(file_action.get("deletionVector"))
 
 
-def _collect_checkpoint_df(cp, meta: dict | None, proto: dict | None,
-                           adds: dict[str, dict], txns: dict[str, int],
-                           domains: dict[str, str] | None = None,
-                           ) -> tuple[dict | None, dict | None, list[str]]:
-    """Fold one checkpoint-shaped DataFrame (classic/multipart parts, a
-    v2 manifest, or v2 sidecars) into the replay state; returns the
-    (possibly updated) metaData, protocol, and any ``sidecarFile``
-    paths found."""
-    cols = set(cp.columns)
-    if "protocol" in cols:
-        for r in cp.filter(F.col("protocol.minReaderVersion").isNotNull()).collect():
-            p = {k: v for k, v in r["protocol"].asDict().items()
-                 if v is not None}
-            _check_protocol({"protocol": p})
-            proto = p
-    if "metaData" in cols:
-        metas = cp.filter(F.col("metaData.id").isNotNull()).collect()
-        if metas:
-            meta = metas[-1]["metaData"].asDict(recursive=True)
-    # only the surviving file list is collected (checkpoints already
-    # contain reconciled state: remove entries are vacuum tombstones,
-    # not reads). size/modificationTime ride along (when the checkpoint
-    # has them — protocol-required, but be tolerant of sparse
-    # hand-built logs) so a LATER checkpoint built on top of this state
-    # keeps the add fields external Delta readers require.
-    if "add" in cols:  # absent in a checkpoint of an empty table
-        add_fields = set(cp.schema["add"].dataType.fieldNames())
-        opt = [
-            F.col(f"add.{f}").alias(f) if f in add_fields
-            else F.lit(None).cast(t).alias(f)
-            for f, t in (("size", "long"), ("modificationTime", "long"),
-                         ("stats", "string"), ("baseRowId", "long"),
-                         ("defaultRowCommitVersion", "long"))
-        ]
-        dv_col = (
-            [F.col("add.deletionVector").alias("deletionVector")]
-            if "deletionVector" in add_fields else []
-        )
-        for r in (
-            cp.filter(F.col("add.path").isNotNull())
-            .select("add.path", "add.partitionValues", *opt, *dv_col)
-            .collect()
-        ):
-            a = {"path": r["path"],
-                 "partitionValues": dict(r["partitionValues"] or {}),
-                 "size": r["size"],
-                 "modificationTime": r["modificationTime"]}
-            for extra in ("stats", "baseRowId", "defaultRowCommitVersion"):
-                if r[extra] is not None:
-                    a[extra] = r[extra]
-            if dv_col and r["deletionVector"] is not None:
-                a["deletionVector"] = r["deletionVector"].asDict()
-            adds[_fkey(a)] = a
-    # streaming-writer watermarks survive log pruning through the
-    # checkpoint, exactly like Delta's own (bounded: one row per appId)
-    if "txn" in cols:
-        for r in cp.filter(F.col("txn.appId").isNotNull()).select(
-            "txn.appId", "txn.version"
-        ).collect():
-            txns[r["appId"]] = int(r["version"])
-    # named metadata domains (delta.rowTracking et al.) survive the
-    # checkpoint — dropping one would reset a high watermark
-    if domains is not None and "domainMetadata" in cols:
-        for r in cp.filter(F.col("domainMetadata.domain").isNotNull()).select(
-            "domainMetadata.domain", "domainMetadata.configuration",
-            "domainMetadata.removed"
-        ).collect():
-            if r["removed"]:
-                domains.pop(r["domain"], None)
-            else:
-                domains[r["domain"]] = r["configuration"]
-    sidecars: list[str] = []
-    if "sidecarFile" in cols:
-        for r in cp.filter(F.col("sidecarFile.path").isNotNull()).select(
-            "sidecarFile.path"
-        ).collect():
-            sidecars.append(r["path"])
-    return meta, proto, sidecars
+class _LogState:
+    """Table state folded from log actions in log order — the ONE fold
+    over commit JSON, checkpoint files (parquet parts, v2 manifests,
+    sidecars) alike. Fields are ``_replay_checkpoint``'s tuple, plus the
+    ``sidecarFile`` paths a v2 manifest names."""
+
+    def __init__(self, meta: dict | None = None,
+                 adds: dict[str, dict] | None = None,
+                 txns: dict[str, int] | None = None,
+                 proto: dict | None = None,
+                 domains: dict[str, str] | None = None) -> None:
+        self.meta, self.proto = meta, proto
+        self.adds = {} if adds is None else adds
+        self.txns = {} if txns is None else txns
+        self.domains = {} if domains is None else domains
+        self.sidecars: list[str] = []
+
+    def fold(self, actions) -> None:
+        for action in actions:
+            if "protocol" in action:
+                _check_protocol(action)
+                self.proto = action["protocol"]
+            elif "metaData" in action:
+                self.meta = action["metaData"]
+            elif "add" in action:
+                # keyed by (path, DV uid): an in-place delete commits
+                # remove(path, old DV) + add(path, new DV) and the spec
+                # leaves within-commit action order undefined — keying
+                # by path alone would let the remove clobber the add
+                self.adds[_fkey(action["add"])] = action["add"]
+            elif "remove" in action:
+                self.adds.pop(_fkey(action["remove"]), None)
+            elif "txn" in action:
+                # streaming-writer watermarks survive log pruning
+                # through the checkpoint, exactly like Delta's own
+                self.txns[action["txn"]["appId"]] = int(action["txn"]["version"])
+            elif "domainMetadata" in action:
+                # named domains (delta.rowTracking et al.) too: dropping
+                # one would reset a high watermark
+                dm = action["domainMetadata"]
+                if dm.get("removed"):
+                    self.domains.pop(dm["domain"], None)
+                else:
+                    self.domains[dm["domain"]] = dm.get("configuration")
+            elif "sidecarFile" in action:
+                self.sidecars.append(action["sidecarFile"]["path"])
+
+
+# --- checkpoint files: pyarrow over the file layer, never a Spark job ---
+
+# the add fields replay keeps from a checkpoint: size/modificationTime
+# ride along so a LATER checkpoint built on this state keeps the fields
+# external readers require, baseRowId/defaultRowCommitVersion keep
+# row-tracking identity, and a dropped deletionVector would resurrect
+# the deleted rows for every reader that trusts the checkpoint
+_CKPT_ADD_FIELDS = ("path", "partitionValues", "size", "modificationTime",
+                    "stats", "baseRowId", "defaultRowCommitVersion",
+                    "deletionVector")
+
+
+@_functools.cache
+def _checkpoint_schema():
+    """The checkpoint schema, as the union of the action structs: one
+    row per action, exactly one struct set. The classic file takes all
+    but ``checkpointMetadata``/``sidecarFile``; a v2 sidecar takes
+    ``add``/``remove``, its manifest the rest (:func:`_write_checkpoint`)."""
+    import pyarrow as pa
+
+    s, i32, i64, flag = pa.string(), pa.int32(), pa.int64(), pa.bool_()
+    smap = pa.map_(s, s)
+    return pa.schema([
+        ("protocol", pa.struct([
+            ("minReaderVersion", i32), ("minWriterVersion", i32),
+            ("readerFeatures", pa.list_(s)), ("writerFeatures", pa.list_(s)),
+        ])),
+        ("metaData", pa.struct([
+            ("id", s),
+            ("format", pa.struct([("provider", s), ("options", smap)])),
+            ("schemaString", s), ("partitionColumns", pa.list_(s)),
+            ("configuration", smap), ("createdTime", i64),
+        ])),
+        ("add", pa.struct([
+            ("path", s), ("partitionValues", smap), ("size", i64),
+            ("modificationTime", i64), ("dataChange", flag), ("stats", s),
+            ("baseRowId", i64), ("defaultRowCommitVersion", i64),
+            # the spec's DeletionVectorDescriptor
+            ("deletionVector", pa.struct([
+                ("storageType", s), ("pathOrInlineDv", s), ("offset", i32),
+                ("sizeInBytes", i32), ("cardinality", i64),
+            ])),
+        ])),
+        # strict external readers select `remove` even though a
+        # reconciled checkpoint never carries one — an always-null
+        # column keeps those selects valid
+        ("remove", pa.struct([
+            ("path", s), ("deletionTimestamp", i64), ("dataChange", flag),
+        ])),
+        ("txn", pa.struct([("appId", s), ("version", i64)])),
+        ("domainMetadata", pa.struct([
+            ("domain", s), ("configuration", s), ("removed", flag),
+        ])),
+        ("checkpointMetadata", pa.struct([("version", i64), ("tags", smap)])),
+        ("sidecarFile", pa.struct([
+            ("path", s), ("sizeInBytes", i64), ("modificationTime", i64),
+            ("tags", smap),
+        ])),
+    ])
+
+
+def _arrow_json(value, typ):
+    """One ``to_pylist`` value of Arrow type ``typ`` in its JSON-action
+    shape: MAP values (pair lists in pyarrow 16) become dicts and null
+    struct fields are dropped."""
+    import pyarrow.types as pat
+
+    if value is None:
+        return None
+    if pat.is_map(typ):
+        return {k: _arrow_json(v, typ.item_type) for k, v in value}
+    if pat.is_struct(typ):
+        out = {}
+        for f in typ:
+            v = _arrow_json(value.get(f.name), f.type)
+            if v is not None:
+                out[f.name] = v
+        return out
+    if pat.is_list(typ):
+        return [_arrow_json(v, typ.value_type) for v in value]
+    return value
+
+
+def _checkpoint_actions(spark: SparkSession | None, uri: str) -> list[dict]:
+    """The actions of one checkpoint file — a classic or multipart
+    parquet part, a v2 manifest (parquet or JSON) or a v2 sidecar —
+    as :meth:`_LogState.fold` takes them. Parquet is read with pyarrow
+    over :func:`files.read_bytes`. An add keeps ``_CKPT_ADD_FIELDS``;
+    ``remove`` tombstones are left out (a reconciled checkpoint's
+    removes are vacuum bookkeeping, not state)."""
+    if uri.endswith(".json"):
+        actions = list(_log_actions(spark, uri))
+    else:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(pa.BufferReader(files.read_bytes(spark, uri)))
+        types = {f.name: f.type for f in tbl.schema}
+        actions = []
+        for row in tbl.to_pylist():
+            for k, v in row.items():
+                v = _arrow_json(v, types[k])
+                if v:  # a null struct, or one with every field null
+                    actions.append({k: v})
+    out = []
+    for a in actions:
+        if "add" in a:
+            add = {k: a["add"][k] for k in _CKPT_ADD_FIELDS if k in a["add"]}
+            add.setdefault("partitionValues", {})
+            a = {"add": add}
+        if "remove" not in a:
+            out.append(a)
+    return out
 
 
 def _replay_checkpoint(
-    spark: SparkSession, log_dir: str, cp_version: int, parts: int | None
+    spark: SparkSession | None, log_dir: str, cp_version: int,
+    parts: int | None
 ) -> tuple[dict | None, dict[str, dict], dict[str, int], dict | None,
            dict[str, str]]:
     """Active state as of a checkpoint:
     ``(metaData, {(path, DV id) key: add}, {txn appId: version},
-    protocol)``.
+    protocol, {domain: configuration})``.
 
     Handles all three public checkpoint layouts: classic single-file
     ``%020d.checkpoint.parquet``, classic multipart
@@ -813,84 +938,41 @@ def _replay_checkpoint(
     ``…checkpoint.<uniqueId>.{parquet|json}`` manifests whose file
     actions live in the manifest itself and/or in ``sidecarFile``
     parquet files under ``_delta_log/_sidecars/``."""
-    import re as _re
-
-    meta: dict | None = None
-    proto: dict | None = None
-    adds: dict[str, dict] = {}
-    txns: dict[str, int] = {}
-    domains: dict[str, str] = {}
-    sidecars: list[str] = []
-
+    prefix = f"{cp_version:020d}.checkpoint."
     if parts:
-        paths = [
-            f"{log_dir}/{cp_version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet"
-            for i in range(parts)
-        ]
-        meta, proto, _ = _collect_checkpoint_df(
-            spark.read.parquet(*paths), meta, proto, adds, txns, domains)
-        return meta, adds, txns, proto, domains
-
-    classic = f"{log_dir}/{cp_version:020d}.checkpoint.parquet"
-    if files.stat(spark, classic) is not None:
-        meta, proto, sidecars = _collect_checkpoint_df(
-            spark.read.parquet(classic), meta, proto, adds, txns, domains)
+        names = [f"{prefix}{i + 1:010d}.{parts:010d}.parquet"
+                 for i in range(parts)]
+    elif files.stat(spark, f"{log_dir}/{prefix}parquet") is not None:
+        names = [f"{prefix}parquet"]
     else:
         # V2: <version>.checkpoint.<uniqueId>.{parquet|json}; any one
         # manifest for the version is complete by the spec. Multipart
-        # part files (…checkpoint.<i>.<n>.parquet) are NOT manifests —
-        # folding a single part as complete state would silently drop
-        # the other parts' adds, so they are excluded and a pointer
-        # that lost its `parts` field fails loudly instead.
-        prefix = f"{cp_version:020d}.checkpoint."
-        multipart = _re.compile(r"\.checkpoint\.\d{10}\.\d{10}\.parquet$")
+        # part files are NOT manifests — folding a single part as
+        # complete state would silently drop the other parts' adds, so
+        # they are excluded and a pointer that lost its `parts` field
+        # fails loudly instead.
         names = sorted(
             n for n, _ in _list_log_entries(spark, log_dir)
             if n.startswith(prefix) and n.endswith((".parquet", ".json"))
-            and not multipart.search(n)
-        )
+            and not _CKPT_MULTIPART_RE.match(n)
+        )[:1]
         if not names:
             raise VersionedTableError(
                 f"_last_checkpoint points at version {cp_version} but no "
                 f"usable checkpoint file exists at {log_dir} (a multipart "
                 "checkpoint needs its `parts` field in _last_checkpoint)"
             )
-        name = names[0]
-        if name.endswith(".json"):
-            for action in _log_actions(spark, f"{log_dir}/{name}"):
-                if "protocol" in action:
-                    _check_protocol(action)
-                    proto = action["protocol"]
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    adds[_fkey(action["add"])] = action["add"]
-                elif "txn" in action:
-                    txns[action["txn"]["appId"]] = int(action["txn"]["version"])
-                elif "domainMetadata" in action:
-                    dm = action["domainMetadata"]
-                    if dm.get("removed"):
-                        domains.pop(dm["domain"], None)
-                    else:
-                        domains[dm["domain"]] = dm.get("configuration")
-                elif "sidecarFile" in action:
-                    sidecars.append(action["sidecarFile"]["path"])
-        else:
-            meta, proto, sidecars = _collect_checkpoint_df(
-                spark.read.parquet(f"{log_dir}/{name}"), meta, proto,
-                adds, txns, domains)
-
-    if sidecars:
-        sc_paths = [
-            p if "://" in p or p.startswith("/") else f"{log_dir}/_sidecars/{p}"
-            for p in sidecars
-        ]
-        meta, proto, _ = _collect_checkpoint_df(
-            spark.read.parquet(*sc_paths), meta, proto, adds, txns, domains)
-    return meta, adds, txns, proto, domains
+    st = _LogState()
+    for name in names:
+        st.fold(_checkpoint_actions(spark, f"{log_dir}/{name}"))
+    for p in list(st.sidecars):
+        st.fold(_checkpoint_actions(
+            spark, p if "://" in p or p.startswith("/")
+            else f"{log_dir}/_sidecars/{p}"))
+    return st.meta, st.adds, st.txns, st.proto, st.domains
 
 
-def _last_checkpoint(spark: SparkSession, log_dir: str) -> tuple[int, int | None] | None:
+def _last_checkpoint(spark: SparkSession | None, log_dir: str) -> tuple[int, int | None] | None:
     try:
         txt = files.read_text(spark, f"{log_dir}/_last_checkpoint")
     except Exception:
@@ -1013,7 +1095,7 @@ def _resolve_log_version(spark: SparkSession, path: str,
 
 
 def _replay_state(
-    spark: SparkSession, path: str, version: int | None = None
+    spark: SparkSession | None, path: str, version: int | None = None
 ) -> tuple[dict, dict[str, dict], int, dict[str, int], dict | None,
            dict[str, str]]:
     """Replay the transaction log to ``(metaData, {path: add},
@@ -1023,16 +1105,13 @@ def _replay_state(
     schema for append drift checks, the txn watermarks for idempotent
     streaming commits, the protocol for the writer-feature gate +
     checkpoint emission, and the named metadata domains for
-    rowTracking's high watermark)."""
+    rowTracking's high watermark). ``spark=None`` replays without a
+    JVM (the file layer's no-JVM lane)."""
     path = path.rstrip("/")
     log_dir = f"{path}/_delta_log"
     logs = _list_log(spark, log_dir)
 
-    meta: dict | None = None
-    proto: dict | None = None
-    adds: dict[str, dict] = {}
-    txns: dict[str, int] = {}
-    domains: dict[str, str] = {}
+    st = _LogState()
     start = 0
     cp = _last_checkpoint(spark, log_dir)
     if cp is not None and (version is None or cp[0] <= version) and (
@@ -1040,8 +1119,7 @@ def _replay_state(
         # (cheaper for small tables and exercises nothing extra)
         0 not in logs or cp[0] >= 10
     ):
-        meta, adds, txns, proto, domains = _replay_checkpoint(
-            spark, log_dir, cp[0], cp[1])
+        st = _LogState(*_replay_checkpoint(spark, log_dir, cp[0], cp[1]))
         start = cp[0] + 1
     elif logs and min(logs) > 0:
         # log-pruned table whose _last_checkpoint pointer is unusable
@@ -1057,8 +1135,7 @@ def _replay_state(
         usable = [v for v in cps if version is None or v <= version]
         if usable:
             cv = max(usable)
-            meta, adds, txns, proto, domains = _replay_checkpoint(
-                spark, log_dir, cv, cps[cv])
+            st = _LogState(*_replay_checkpoint(spark, log_dir, cv, cps[cv]))
             start = cv + 1
 
     latest = max(logs) if logs else -1
@@ -1077,36 +1154,15 @@ def _replay_state(
     for v in range(start, version + 1):
         if v not in logs:
             raise VersionedTableError(f"Delta log missing commit {v} at {log_dir}")
-        for action in _log_actions(spark, logs[v]):
-            if "protocol" in action:
-                _check_protocol(action)
-                proto = action["protocol"]
-            elif "metaData" in action:
-                meta = action["metaData"]
-            elif "add" in action:
-                # keyed by (path, DV uid): an in-place delete commits
-                # remove(path, old DV) + add(path, new DV) and the spec
-                # leaves within-commit action order undefined — keying
-                # by path alone would let the remove clobber the add
-                adds[_fkey(action["add"])] = action["add"]
-            elif "remove" in action:
-                adds.pop(_fkey(action["remove"]), None)
-            elif "txn" in action:
-                txns[action["txn"]["appId"]] = int(action["txn"]["version"])
-            elif "domainMetadata" in action:
-                dm = action["domainMetadata"]
-                if dm.get("removed"):
-                    domains.pop(dm["domain"], None)
-                else:
-                    domains[dm["domain"]] = dm.get("configuration")
-    if meta is None:
+        st.fold(_log_actions(spark, logs[v]))
+    if st.meta is None:
         raise VersionedTableError(f"Delta log at {log_dir} has no metaData action")
-    _check_metadata(meta)
-    _validate_version_crc(spark, log_dir, version, adds)
-    return meta, adds, version, txns, proto, domains
+    _check_metadata(st.meta)
+    _validate_version_crc(spark, log_dir, version, st.adds)
+    return st.meta, st.adds, version, st.txns, st.proto, st.domains
 
 
-def _validate_version_crc(spark: SparkSession, log_dir: str,
+def _validate_version_crc(spark: SparkSession | None, log_dir: str,
                           version: int, adds: dict[str, dict]) -> None:
     """Cross-check replayed state against the version-checksum sidecar
     (``<v>.crc``, delta-spark's VersionChecksum) when one exists for
@@ -1941,7 +1997,7 @@ def _occ_commit(spark: SparkSession, path: str, snap: tuple,
     return version
 
 
-def _log_actions(spark: SparkSession, path: str):
+def _log_actions(spark: SparkSession | None, path: str):
     """Yield the action dicts of one ``_delta_log`` JSON entry.
 
     The publish protocol (:func:`_commit_delta_log`) makes a
@@ -1980,112 +2036,65 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
     struct set.
 
     Layout follows the table's ``delta.checkpointPolicy``: classic
-    (default) is the single-file ``%020d.checkpoint.parquet``; ``v2``
-    emits the v2Checkpoint feature's layout — file actions in a
-    ``_delta_log/_sidecars/<uuid>.parquet`` sidecar, and a uuid-named
+    (default) is the single-file ``%020d.checkpoint.parquet``, or the
+    multipart ``%020d.checkpoint.<i>.<n>.parquet`` parts of at most
+    ``delta.checkpoint.partSize`` actions each; ``v2`` emits the
+    v2Checkpoint feature's layout — file actions in
+    ``_delta_log/_sidecars/<uuid>.parquet`` sidecars, and a uuid-named
     manifest (``%020d.checkpoint.<uuid>.parquet``) carrying protocol /
     metaData / txn / domainMetadata plus the REQUIRED
-    ``checkpointMetadata`` action and the ``sidecarFile`` pointer.
+    ``checkpointMetadata`` action and the ``sidecarFile`` pointers.
 
-    Written via normal Spark parquet jobs into dot-prefixed temp dirs
-    (invisible to readers), renamed into place in dependency order
-    (sidecars → manifest → ``_last_checkpoint``) — the same publication
-    order Delta uses, so a crash at any point leaves a valid table
-    (readers just keep replaying JSON until the pointer lands)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        IntegerType,
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    Each file is built with pyarrow (snappy, :func:`_checkpoint_schema`),
+    written under a dot-prefixed temp name (invisible to readers) and
+    renamed into place in dependency order (sidecars → manifest →
+    ``_last_checkpoint``) — the same publication order Delta uses, so a
+    crash at any point leaves a valid table (readers just keep replaying
+    JSON until the pointer lands). No Spark job runs."""
+    import hashlib
+    import uuid
 
-    fmt_t = StructType([
-        StructField("provider", StringType()),
-        StructField("options", MapType(StringType(), StringType())),
-    ])
-    schema = StructType([
-        StructField("protocol", StructType([
-            StructField("minReaderVersion", IntegerType()),
-            StructField("minWriterVersion", IntegerType()),
-            StructField("readerFeatures", ArrayType(StringType())),
-            StructField("writerFeatures", ArrayType(StringType())),
-        ])),
-        StructField("metaData", StructType([
-            StructField("id", StringType()),
-            StructField("format", fmt_t),
-            StructField("schemaString", StringType()),
-            StructField("partitionColumns", ArrayType(StringType())),
-            StructField("configuration", MapType(StringType(), StringType())),
-            StructField("createdTime", LongType()),
-        ])),
-        StructField("add", StructType([
-            StructField("path", StringType()),
-            StructField("partitionValues", MapType(StringType(), StringType())),
-            StructField("size", LongType()),
-            StructField("modificationTime", LongType()),
-            StructField("dataChange", BooleanType()),
-            StructField("stats", StringType()),
-            # row-tracking identity must survive the checkpoint — a
-            # reader reconstructing row ids from a checkpoint that
-            # dropped baseRowId would renumber every row
-            StructField("baseRowId", LongType()),
-            StructField("defaultRowCommitVersion", LongType()),
-            # live deletion vectors must survive the checkpoint — a
-            # checkpoint that dropped a descriptor would resurrect the
-            # deleted rows for every reader that trusts it (the spec's
-            # DeletionVectorDescriptor shape)
-            StructField("deletionVector", StructType([
-                StructField("storageType", StringType()),
-                StructField("pathOrInlineDv", StringType()),
-                StructField("offset", IntegerType()),
-                StructField("sizeInBytes", IntegerType()),
-                StructField("cardinality", LongType()),
-            ])),
-        ])),
-        # the spec describes the checkpoint schema as the union of
-        # action schemas; strict external readers select `remove`
-        # even though a reconciled checkpoint never carries one —
-        # an always-null column keeps those selects valid
-        StructField("remove", StructType([
-            StructField("path", StringType()),
-            StructField("deletionTimestamp", LongType()),
-            StructField("dataChange", BooleanType()),
-        ])),
-        StructField("txn", StructType([
-            StructField("appId", StringType()),
-            StructField("version", LongType()),
-        ])),
-        # named metadata domains (rowTracking high watermark, foreign
-        # writers' domains) must survive log pruning like txn watermarks
-        StructField("domainMetadata", StructType([
-            StructField("domain", StringType()),
-            StructField("configuration", StringType()),
-            StructField("removed", BooleanType()),
-        ])),
-    ])
-    none_row = {"protocol": None, "metaData": None, "add": None,
-                "remove": None, "txn": None, "domainMetadata": None}
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    full = _checkpoint_schema()
+
+    def _publish(out_rows: list[dict], drop: set[str], dest_rel: str) -> None:
+        """One checkpoint file of the schema's columns but ``drop``;
+        re-running a checkpoint is content-idempotent — replace, not
+        race."""
+        schema = pa.schema([f for f in full if f.name not in drop])
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist(out_rows, schema=schema), buf,
+                       compression="snappy")
+        tmp = f"{log_dir}/.cptmp-{uuid.uuid4().hex[:12]}.parquet"
+        files.write_bytes(spark, tmp, buf.getvalue().to_pybytes())
+        dest = f"{log_dir}/{dest_rel}"
+        files.delete(spark, dest)
+        if not files.rename(spark, tmp, dest):
+            files.delete(spark, tmp)
+            raise VersionedTableError(
+                f"cannot publish checkpoint file {dest_rel} at {log_dir}"
+            )
+
     p = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
     rows = [
         # the checkpoint must restate the TABLE'S protocol — emitting a
         # hardcoded 1/2 for a table whose log claims more would
         # downgrade it for every reader replaying from the checkpoint
-        {**none_row, "protocol": {
+        {"protocol": {
             "minReaderVersion": p.get("minReaderVersion", 1),
             "minWriterVersion": p.get("minWriterVersion", 2),
             "readerFeatures": p.get("readerFeatures"),
             "writerFeatures": p.get("writerFeatures"),
         }},
-        {**none_row, "metaData": {
+        {"metaData": {
             k: meta.get(k)
             for k in ("id", "format", "schemaString", "partitionColumns",
                       "configuration", "createdTime")
         }},
     ]
+
     def _dv_struct(a: dict) -> dict | None:
         dv = a.get("deletionVector")
         if not dv:
@@ -2098,7 +2107,7 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
                 "cardinality": int(dv["cardinality"])}
 
     rows += [
-        {**none_row, "add": {
+        {"add": {
             "path": a["path"],
             "partitionValues": dict(a.get("partitionValues") or {}),
             "size": a.get("size"),
@@ -2112,108 +2121,53 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
         for _, a in sorted(adds.items())
     ]
     rows += [
-        {**none_row, "txn": {"appId": app, "version": int(v)}}
+        {"txn": {"appId": app, "version": int(v)}}
         for app, v in sorted((txns or {}).items())
     ]
     rows += [
-        {**none_row, "domainMetadata": {
+        {"domainMetadata": {
             "domain": dom, "configuration": conf, "removed": False,
         }}
         for dom, conf in sorted((domains or {}).items())
     ]
-    def _publish_parquet(out_rows, out_schema, dest_rel: str) -> None:
-        """One single-file parquet published via temp-dir + rename —
-        re-running a checkpoint is content-idempotent; replace, not
-        race."""
-        import uuid as _uuid
 
-        tmp_dir = f"{log_dir}/.cptmp-{_uuid.uuid4().hex[:12]}"
-        spark.createDataFrame(out_rows, out_schema).coalesce(1).write.mode(
-            "overwrite").parquet(tmp_dir)
-        part = next(f.name for f in files.list_dir(spark, tmp_dir)
-                    if f.name.endswith(".parquet"))
-        dest = f"{log_dir}/{dest_rel}"
-        files.delete(spark, dest)
-        if not files.rename(spark, f"{tmp_dir}/{part}", dest):
-            raise VersionedTableError(
-                f"cannot publish checkpoint file {dest_rel} at {log_dir}"
-            )
-        files.delete(spark, tmp_dir, recursive=True)
-
-    v2 = str((meta.get("configuration") or {}).get(
-        "delta.checkpointPolicy", "classic")).lower() == "v2"
+    cfg = meta.get("configuration") or {}
+    v2_only = {"checkpointMetadata", "sidecarFile"}
     nparts: int | None = None
-    if not v2:
+    if str(cfg.get("delta.checkpointPolicy", "classic")).lower() != "v2":
         # classic layout honors delta.checkpoint.partSize (the real
         # Delta property: max actions per checkpoint file) by writing
-        # the MULTIPART layout `<v>.checkpoint.<i>.<n>.parquet` — on a
-        # 100k-file table a single coalesce(1) parquet write is a
-        # one-task bottleneck, and multipart also lets readers
-        # parallelize the checkpoint scan (`read.parquet(*parts)`).
-        # The pointer carries `parts` as the spec requires.
+        # the MULTIPART layout `<v>.checkpoint.<i>.<n>.parquet`, which
+        # bounds each file on a 100k-file table. The pointer carries
+        # `parts` as the spec requires.
         try:
-            part_size = int((meta.get("configuration") or {}).get(
-                "delta.checkpoint.partSize", ""))
+            part_size = int(cfg.get("delta.checkpoint.partSize", ""))
         except (TypeError, ValueError):
             part_size = 0
         if part_size > 0 and len(rows) > part_size:
             nparts = -(-len(rows) // part_size)
             for i in range(nparts):
-                _publish_parquet(
-                    rows[i * part_size:(i + 1) * part_size], schema,
+                _publish(
+                    rows[i * part_size:(i + 1) * part_size], v2_only,
                     f"{version:020d}.checkpoint."
                     f"{i + 1:010d}.{nparts:010d}.parquet")
         else:
-            _publish_parquet(rows, schema,
-                             f"{version:020d}.checkpoint.parquet")
+            _publish(rows, v2_only, f"{version:020d}.checkpoint.parquet")
     else:
-        # V2 layout (the spec's v2Checkpoint feature, which the reader
-        # side has replayed since round 6): file actions live in a
-        # SIDECAR parquet under _delta_log/_sidecars/, and the
+        # V2 layout (the spec's v2Checkpoint feature): file actions
+        # live in SIDECAR parquet under _delta_log/_sidecars/, and the
         # uuid-named manifest holds everything else plus the REQUIRED
-        # checkpointMetadata action and a sidecarFile pointer —
-        # sidecars publish BEFORE the manifest that references them,
-        # and the manifest before _last_checkpoint, so a crash at any
-        # point leaves a fully valid table.
-        import uuid as _uuid
-
-        from pyspark.sql.types import MapType as _Map
-        from pyspark.sql.types import StringType as _Str
-
-        file_fields = {"add", "remove"}
-        sidecar_schema = StructType(
-            [f for f in schema.fields if f.name in file_fields])
-        manifest_schema = StructType(
-            [f for f in schema.fields if f.name not in file_fields]
-            + [
-                StructField("checkpointMetadata", StructType([
-                    StructField("version", LongType()),
-                    StructField("tags", _Map(_Str(), _Str())),
-                ])),
-                StructField("sidecarFile", StructType([
-                    StructField("path", _Str()),
-                    StructField("sizeInBytes", LongType()),
-                    StructField("modificationTime", LongType()),
-                    StructField("tags", _Map(_Str(), _Str())),
-                ])),
-            ])
-        sc_none = {f.name: None for f in sidecar_schema.fields}
-        mf_none = {f.name: None for f in manifest_schema.fields}
-        file_rows = [
-            {**sc_none, **{k: v for k, v in r.items() if k in file_fields}}
-            for r in rows if any(r.get(k) for k in file_fields)
-        ]
-        other_rows = [
-            {**mf_none, **{k: v for k, v in r.items()
-                           if k in mf_none and v is not None}}
-            for r in rows if not any(r.get(k) for k in file_fields)
-        ]
-        # INCREMENTAL sidecars (round 13): file actions are hash-
-        # partitioned by path into content-addressed groups, and a
-        # group whose content is unchanged since an earlier checkpoint
-        # is REUSED by pointer instead of rewritten — the spec allows
-        # manifests to share sidecars, and log cleanup already reclaims
-        # only exclusively-referenced ones. On the per-micro-batch
+        # checkpointMetadata action and a sidecarFile pointer per
+        # sidecar — sidecars publish BEFORE the manifest that
+        # references them, and the manifest before _last_checkpoint,
+        # so a crash at any point leaves a fully valid table.
+        #
+        # INCREMENTAL sidecars: file actions are hash-partitioned by
+        # path into content-addressed groups, and a group whose content
+        # is unchanged since an earlier checkpoint is REUSED by pointer
+        # instead of rewritten — the spec allows manifests to share
+        # sidecars, and log cleanup already reclaims only
+        # exclusively-referenced ones. On the per-micro-batch
         # streaming-sink shape this bounds checkpoint write cost at
         # O(changed groups × group size) + manifest, instead of
         # O(live files): an append touches only the group(s) its new
@@ -2222,45 +2176,37 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
         # amortized O(1) per file). The sidecar name IS the md5 of the
         # group's canonical JSON, formatted uuid-shaped: same content →
         # same name → the exists-check skips the write entirely.
-        import hashlib as _hashlib
-
-        n_actions = len(file_rows)
+        file_rows = [r for r in rows if "add" in r]
+        other_rows = [r for r in rows if "add" not in r]
         k = 1
-        while k * _SIDECAR_GROUP_SIZE < n_actions:
+        while k * _SIDECAR_GROUP_SIZE < len(file_rows):
             k *= 2
-
-        def _fr_path(r: dict) -> str:
-            return (r.get("add") or r.get("remove"))["path"]
-
         groups: list[list[dict]] = [[] for _ in range(k)]
         for r in file_rows:
-            gi = int(_hashlib.md5(
-                _fr_path(r).encode()).hexdigest()[:8], 16) % k
-            groups[gi].append(r)
-        other_rows.append({**mf_none, "checkpointMetadata": {
-            "version": version, "tags": None}})
+            groups[int(hashlib.md5(
+                r["add"]["path"].encode()).hexdigest()[:8], 16) % k].append(r)
+        other_rows.append({"checkpointMetadata": {"version": version}})
         for g in groups:
             if not g:
                 continue
-            g.sort(key=_fr_path)
-            digest = _hashlib.md5(json.dumps(
+            g.sort(key=lambda r: r["add"]["path"])
+            digest = hashlib.md5(json.dumps(
                 g, sort_keys=True, default=str).encode()).hexdigest()
             sc_name = (f"{digest[:8]}-{digest[8:12]}-{digest[12:16]}-"
                        f"{digest[16:20]}-{digest[20:32]}.parquet")
             sc_path = f"{log_dir}/_sidecars/{sc_name}"
             sc_st = files.stat(spark, sc_path)
             if sc_st is None:
-                _publish_parquet(g, sidecar_schema, f"_sidecars/{sc_name}")
+                _publish(g, set(full.names) - {"add", "remove"},
+                         f"_sidecars/{sc_name}")
                 sc_st = files.stat(spark, sc_path)
-            other_rows.append({**mf_none, "sidecarFile": {
+            other_rows.append({"sidecarFile": {
                 "path": sc_name,
                 "sizeInBytes": sc_st.size,
                 "modificationTime": sc_st.mtime_ms,
-                "tags": None,
             }})
-        _publish_parquet(
-            other_rows, manifest_schema,
-            f"{version:020d}.checkpoint.{_uuid.uuid4()}.parquet")
+        _publish(other_rows, {"add", "remove"},
+                 f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet")
 
     pointer = {"version": version, "size": len(rows)}
     if nparts is not None:
@@ -2275,7 +2221,6 @@ def _write_checkpoint(spark: SparkSession, log_dir: str, version: int,
     # table property is the owner's authorization, so no ad-hoc floor
     # here. A cleanup failure must not fail the already-committed
     # write — warn and move on (Delta does the same).
-    cfg = meta.get("configuration") or {}
     if str(cfg.get("delta.enableExpiredLogCleanup", "true")).lower() != "false":
         try:
             hours = _parse_interval_hours(cfg.get("delta.logRetentionDuration"))
@@ -4877,23 +4822,12 @@ def _parse_interval_hours(s: str | None) -> float | None:
     return int(m.group(1)) * _INTERVAL_UNIT_HOURS[m.group(2).lower()]
 
 
-def _manifest_sidecar_refs(spark: SparkSession, log_dir: str,
+def _manifest_sidecar_refs(spark: SparkSession | None, log_dir: str,
                            name: str) -> set[str]:
     """sidecarFile paths referenced by one V2 checkpoint manifest."""
-    if name.endswith(".json"):
-        return {
-            action["sidecarFile"]["path"]
-            for action in _log_actions(spark, f"{log_dir}/{name}")
-            if "sidecarFile" in action
-        }
-    df = spark.read.parquet(f"{log_dir}/{name}")
-    if "sidecarFile" not in df.columns:
-        return set()
-    return {
-        r.p for r in
-        df.select(F.col("sidecarFile.path").alias("p"))
-        .filter(F.col("p").isNotNull()).collect()
-    }
+    return {a["sidecarFile"]["path"]
+            for a in _checkpoint_actions(spark, f"{log_dir}/{name}")
+            if "sidecarFile" in a}
 
 
 def _cleanup_expired_logs(spark: SparkSession, log_dir: str,
@@ -4944,9 +4878,9 @@ def _cleanup_expired_logs(spark: SparkSession, log_dir: str,
         # loudly either way)
         if v < horizon and mtimes[n] < cutoff_ms:
             deletable.append(n)
-    # foreign writers' per-commit checksum files (%020d.crc) expire
-    # with their commit — the bridge writes none, but leaking them
-    # forever on a converted table defeats the cleanup
+    # per-commit checksum files (%020d.crc — the bridge writes one
+    # after every unraced commit, foreign writers too) expire with
+    # their commit; leaking them forever defeats the cleanup
     for n in names:
         if n.endswith(".crc") and n[:-4].isdigit():
             v = int(n[:-4])
@@ -5072,6 +5006,110 @@ def cleanup_log_metadata(spark: SparkSession, path: str,
     return _cleanup_expired_logs(spark, log_dir, retention_hours, dry_run)
 
 
+def _read_commit(spark: SparkSession | None, log_dir: str,
+                 logs: dict[int, str], v: int, who: str,
+                 meta: dict | None = None, cdf: bool = False,
+                 ignore_deletes: bool = False):
+    """Commit ``v`` as the incremental readers see it — batch
+    :func:`read_delta_appends` / :func:`read_delta_changes` and the
+    ``delta_bridge`` stream source (``who`` names the reader in
+    errors): ``(adds, removes, cdcs, ts_ms)``, the data-changing file
+    actions keyed by path and the commit timestamp
+    (``commitInfo.inCommitTimestamp``, else the commit file's mtime —
+    the timestamp time-travel rule).
+
+    Given the ``meta`` the reader serves, each refusal rule lives here
+    once:
+
+    - a ``metaData`` whose schema cannot serve the commit's files under
+      ``meta``'s (:func:`_schema_readable_under`; identity watermarks
+      and additive nullable columns can) refuses;
+    - an append reader (``cdf`` false) refuses a data-changing remove —
+      unless ``ignore_deletes`` and the commit is a pure delete
+      (removes only, or every add re-attaches a DV to a path removed in
+      the same commit), which returns None (skip) — and a
+      deletion-vector add;
+    - a change reader (``cdf``) refuses, in a commit without ``cdc``
+      actions, a deletion-vector add (whole-file derivation would
+      fabricate row churn) and a remove without the partition values
+      its delete rows need.
+
+    Without ``meta`` (start-timestamp resolution) nothing refuses."""
+    if v not in logs:
+        raise VersionedTableError(
+            f"{who}: commit {v} missing at {log_dir} — commits pruned "
+            "below a checkpoint cannot be read incrementally; re-read "
+            "the full snapshot"
+        )
+    adds: dict[str, dict] = {}
+    removes: dict[str, dict] = {}
+    cdcs: dict[str, dict] = {}
+    ts_ms = None
+    for action in _log_actions(spark, logs[v]):
+        if "metaData" in action and meta is not None and not (
+                _schema_readable_under(action["metaData"].get("schemaString"),
+                                       meta["schemaString"])):
+            raise VersionedTableError(
+                f"{who}: commit {v} changes the table schema — its files "
+                "cannot be read under the schema being served; "
+                + ("split the range at the schema change" if cdf else
+                   "re-read the full snapshot")
+            )
+        if "cdc" in action:
+            cdcs[action["cdc"]["path"]] = action["cdc"]
+        elif "add" in action and action["add"].get("dataChange", True):
+            adds[action["add"]["path"]] = action["add"]
+        elif "remove" in action and action["remove"].get("dataChange", True):
+            removes[action["remove"]["path"]] = action["remove"]
+        elif "commitInfo" in action:
+            ict = action["commitInfo"].get("inCommitTimestamp")
+            ts_ms = int(ict) if ict is not None else None
+    if ts_ms is None:
+        ts_ms = files.stat(spark, logs[v]).mtime_ms
+    if meta is None or (cdf and cdcs):
+        return adds, removes, cdcs, ts_ms
+    dv_add = any(a.get("deletionVector") for a in adds.values())
+    if cdf:
+        if dv_add:
+            raise VersionedTableError(
+                f"{who}: commit {v} attaches a deletion vector without "
+                "cdc actions — whole-file derivation would fabricate row "
+                "churn; install delta-spark"
+            )
+        # the spec lets a remove omit partitionValues when
+        # extendedFileMetadata is false (external writers emit these);
+        # its delete rows would carry NULL partition columns — a silent
+        # wrong answer on this module's fail-loud contract
+        part_cols = meta.get("partitionColumns") or []
+        for r in removes.values():
+            pv = r.get("partitionValues")
+            if part_cols and (pv is None or any(c not in pv for c in part_cols)):
+                raise VersionedTableError(
+                    f"{who}: commit {v} removes {r.get('path')!r} without "
+                    f"partitionValues for partition columns {part_cols} — "
+                    "delete rows cannot be reconstructed; install delta-spark"
+                )
+        return adds, removes, cdcs, ts_ms
+    if removes:
+        if ignore_deletes and all(p in removes for p in adds):
+            return None
+        raise VersionedTableError(
+            f"{who}: commit {v} removes data — the table is not "
+            "append-only past the start; "
+            + ("its rewritten files may carry NEW rows, so ignore_deletes "
+               "cannot skip it safely — re-read the full snapshot"
+               if ignore_deletes else
+               "pass ignore_deletes=True (the stream's ignoreDeletes) to "
+               "skip pure-delete commits, or re-read the full snapshot")
+        )
+    if dv_add:
+        raise VersionedTableError(
+            f"{who}: commit {v} attaches a deletion vector — row-level "
+            "deletes are not append-only; re-read the full snapshot"
+        )
+    return adds, removes, cdcs, ts_ms
+
+
 def read_delta_appends(spark: SparkSession, path: str,
                        since_version: int,
                        ignore_deletes: bool = False) -> DataFrame:
@@ -5107,52 +5145,10 @@ def read_delta_appends(spark: SparkSession, path: str,
         )
     new_adds: dict[str, dict] = {}
     for v in range(since_version + 1, latest + 1):
-        if v not in logs:
-            raise VersionedTableError(
-                f"read_delta_appends: commit {v} missing at {log_dir} — "
-                "cannot reconstruct the append stream"
-            )
-        v_adds: list[dict] = []
-        v_removed: set[str] = set()
-        for action in _log_actions(spark, logs[v]):
-            if "metaData" in action and (
-                action["metaData"].get("schemaString") != meta["schemaString"]
-            ):
-                raise VersionedTableError(
-                    f"read_delta_appends: commit {v} changes the table "
-                    "schema — reading its files with the latest schema "
-                    "would silently null/drop columns; re-read the full "
-                    "snapshot instead"
-                )
-            if "add" in action and action["add"].get("dataChange", True):
-                v_adds.append(action["add"])
-            elif "remove" in action and action["remove"].get("dataChange", True):
-                v_removed.add(action["remove"]["path"])
-        if v_removed:
-            # pure-delete commit: removes only, or every add re-attaches
-            # a DV to a path removed in the SAME commit (delete_delta's
-            # DV shape) — no new rows exist in it
-            pure_delete = all(a["path"] in v_removed for a in v_adds)
-            if ignore_deletes and pure_delete:
-                continue
-            raise VersionedTableError(
-                f"read_delta_appends: commit {v} removes data — table is "
-                "not append-only past since_version; "
-                + ("its rewritten files may carry NEW rows, so "
-                   "ignore_deletes cannot skip it safely — re-read the "
-                   "full snapshot instead"
-                   if ignore_deletes else
-                   "pass ignore_deletes=True to skip pure-delete commits, "
-                   "or re-read the full snapshot")
-            )
-        for a in v_adds:
-            if a.get("deletionVector"):
-                raise VersionedTableError(
-                    f"read_delta_appends: commit {v} attaches a "
-                    "deletion vector — row-level deletes are not "
-                    "append-only; re-read the full snapshot instead"
-                )
-            new_adds[a["path"]] = a
+        commit = _read_commit(spark, log_dir, logs, v, "read_delta_appends",
+                              meta, ignore_deletes=ignore_deletes)
+        if commit is not None:
+            new_adds.update(commit[0])
     return _snapshot_df(spark, path, meta, new_adds)
 
 
@@ -5231,37 +5227,8 @@ def read_delta_changes(spark: SparkSession, path: str,
         out = df if out is None else out.unionByName(df)
 
     for v in range(int(starting_version), end + 1):
-        if v not in logs:
-            raise VersionedTableError(
-                f"read_delta_changes: commit {v} missing at {log_dir} — "
-                "commits pruned below a checkpoint cannot be change-read"
-            )
-        cdcs: dict[str, dict] = {}
-        adds: dict[str, dict] = {}
-        removes: dict[str, dict] = {}
-        ts_ms = None
-        for action in _log_actions(spark, logs[v]):
-            if "metaData" in action and (
-                action["metaData"].get("schemaString") != meta["schemaString"]
-            ):
-                raise VersionedTableError(
-                    f"read_delta_changes: commit {v} changes the table "
-                    "schema — change rows from older commits cannot be "
-                    "read with the latest schema (delta-spark refuses "
-                    "CDF ranges across schema changes for the same "
-                    "reason); split the range at the schema change"
-                )
-            if "cdc" in action:
-                cdcs[action["cdc"]["path"]] = action["cdc"]
-            elif "add" in action and action["add"].get("dataChange", True):
-                adds[action["add"]["path"]] = action["add"]
-            elif "remove" in action and action["remove"].get("dataChange", True):
-                removes[action["remove"]["path"]] = action["remove"]
-            elif "commitInfo" in action:
-                ict = action["commitInfo"].get("inCommitTimestamp")
-                ts_ms = int(ict) if ict is not None else None
-        if ts_ms is None:
-            ts_ms = files.stat(spark, logs[v]).mtime_ms
+        adds, removes, cdcs, ts_ms = _read_commit(
+            spark, log_dir, logs, v, "read_delta_changes", meta, cdf=True)
 
         def _stamp(df: DataFrame) -> DataFrame:
             return df.withColumn("_commit_version", F.lit(v).cast("long")) \
@@ -5274,33 +5241,11 @@ def read_delta_changes(spark: SparkSession, path: str,
             # injection
             _emit(_stamp(_snapshot_df(spark, path, cdc_meta, cdcs)))
             continue
-        if any(a.get("deletionVector") for a in adds.values()):
-            raise VersionedTableError(
-                f"read_delta_changes: commit {v} attaches a deletion "
-                "vector without cdc actions — whole-file derivation "
-                "would fabricate row churn; install delta-spark"
-            )
         if adds:
             _emit(_stamp(
                 _snapshot_df(spark, path, meta, adds)
                 .withColumn("_change_type", F.lit("insert"))))
         if removes:
-            # the spec lets a remove omit partitionValues when
-            # extendedFileMetadata is false (external writers emit
-            # these); _snapshot_df would then inject NULL partition
-            # columns into the delete rows — a silent wrong answer on
-            # this module's own fail-loud contract. Enforce here.
-            part_cols = (meta or {}).get("partitionColumns") or []
-            for r in removes.values():
-                pv = r.get("partitionValues")
-                if part_cols and (pv is None
-                                  or any(c not in pv for c in part_cols)):
-                    raise VersionedTableError(
-                        f"read_delta_changes: commit {v} removes "
-                        f"{r.get('path')!r} without partitionValues for "
-                        f"partition columns {part_cols} — delete rows "
-                        "cannot be reconstructed; install delta-spark"
-                    )
             _emit(_stamp(
                 _snapshot_df(spark, path, meta, removes)
                 .withColumn("_change_type", F.lit("delete"))))

@@ -5303,11 +5303,12 @@ def test_delta_bridge_stream_source_v2_json_checkpoint_meta(
     protocol) must still serve schema()/partitions(): the metadata
     fallback reads the JSON manifest, not only parquet layouts."""
     from sql_based_etl_spark.streaming.delta_source import (
-        _plain_list_log,
-        _plain_table_meta,
         register_delta_bridge_source,
     )
-    from sql_based_etl_spark.tables.delta_interop import write_delta
+    from sql_based_etl_spark.tables.delta_interop import (
+        _replay_state,
+        write_delta,
+    )
 
     d = str(tmp_path / "t")
     write_delta(spark.createDataFrame([(1, "a")], "id long, v string"), d,
@@ -5327,7 +5328,7 @@ def test_delta_bridge_stream_source_v2_json_checkpoint_meta(
         json.dump({"version": 0, "size": 3}, fh)
     os.remove(os.path.join(log, f"{0:020d}.json"))  # prune below ckpt
 
-    got = _plain_table_meta(d, _plain_list_log(log))
+    got = _replay_state(None, d)[0]
     assert got["schemaString"] == meta["metaData"]["schemaString"]
 
     # end-to-end: schema() resolves through the JSON manifest and the

@@ -5,11 +5,15 @@
 - Replay from a checkpoint alone equals JSON replay of the same table:
   adds with a deletion vector and ``baseRowId``, a ``txn`` watermark and
   ``domainMetadata`` included.
-"""
+- Replay without a JVM (``spark=None``) equals replay with one, on all
+  four layouts (the v2 JSON manifest included).
+- The incremental readers serve an identity-column table, whose every
+  append re-records the identity high watermark in ``metaData``."""
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
@@ -146,3 +150,79 @@ def test_checkpoint_replay_equals_json_replay(spark, tables, tmp_path, layout):
     assert all(a.get("baseRowId") is not None for a in adds.values())
     cp = _checkpoint_only(t, str(tmp_path / layout))
     assert _comparable(_replay_state(spark, cp)) == _comparable(want)
+
+
+def _v2_json_manifest(spark, t: str, dest: str) -> str:
+    """``t`` with its checkpoint restated as a v2 JSON manifest that
+    carries the file actions itself, and the JSON commits 0-3 gone."""
+    meta, adds, _, txns, proto, domains = _replay_state(spark, t)
+    shutil.copytree(t, dest)
+    log = os.path.join(dest, "_delta_log")
+    for name in os.listdir(log):
+        if ".checkpoint." in name or (name.endswith(".json")
+                                      and int(name[:20]) <= 3):
+            os.remove(os.path.join(log, name))
+    actions = [{"checkpointMetadata": {"version": 3}}, {"protocol": proto},
+               {"metaData": meta}]
+    actions += [{"add": {**a, "dataChange": False}} for a in adds.values()]
+    actions += [{"txn": {"appId": k, "version": v}} for k, v in txns.items()]
+    actions += [{"domainMetadata": {"domain": k, "configuration": c,
+                                    "removed": False}}
+                for k, c in domains.items()]
+    with open(os.path.join(log, f"{3:020d}.checkpoint.0aa0-demo.json"),
+              "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions))
+    with open(os.path.join(log, "_last_checkpoint"), "w") as fh:
+        json.dump({"version": 3, "size": len(actions)}, fh)
+    return dest
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS) + ["v2_json"])
+def test_replay_without_jvm_equals_replay_with_spark(spark, tables, tmp_path,
+                                                     layout):
+    """``_replay_state(None, …)`` — the stream planner's no-JVM lane —
+    reads every checkpoint layout and gives Spark's replay."""
+    if layout == "v2_json":
+        cp = _v2_json_manifest(spark, tables["v2"], str(tmp_path / layout))
+    else:
+        cp = _checkpoint_only(tables[layout], str(tmp_path / layout))
+    want = _replay_state(spark, cp)
+    assert want[2] == 3 and any(a.get("deletionVector")
+                                for a in want[1].values())
+    assert _replay_state(None, cp) == want
+
+
+def test_incremental_readers_serve_identity_appends(spark, tmp_path):
+    """Every append to an identity-column table re-records the high
+    watermark in the field metadata of ``metaData``; the table's shape
+    is unchanged, so both incremental readers return both appends."""
+    from sql_based_etl_spark.tables.delta_interop import (
+        read_delta_appends,
+        read_delta_changes,
+    )
+
+    t = str(tmp_path / "ident")
+    log = os.path.join(t, "_delta_log")
+    os.makedirs(log)
+    schema_string = json.dumps({"type": "struct", "fields": [
+        {"name": "ident", "type": "long", "nullable": True, "metadata": {
+            "delta.identity.start": 1, "delta.identity.step": 1,
+            "delta.identity.allowExplicitInsert": False}},
+        {"name": "v", "type": "string", "nullable": True, "metadata": {}},
+    ]})
+    with open(os.path.join(log, f"{0:020d}.json"), "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in (
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 6}},
+            {"metaData": {
+                "id": "ident", "format": {"provider": "parquet",
+                                          "options": {}},
+                "schemaString": schema_string, "partitionColumns": [],
+                "configuration": {"delta.enableChangeDataFeed": "true"}}})))
+    for v in ("a", "b"):
+        write_delta(spark.createDataFrame([(v,)], "v string"), t,
+                    mode="append")
+    assert sorted(r.v for r in read_delta_appends(spark, t, 0).collect()) \
+        == ["a", "b"]
+    got = read_delta_changes(spark, t, 1, 2).collect()
+    assert sorted((r.v, r._change_type, r._commit_version) for r in got) \
+        == [("a", "insert", 1), ("b", "insert", 2)]
