@@ -51,10 +51,6 @@ HEADLINE = [
     "sim_semantic_dedup",
     "text_bloom_decontaminate",
     "text_lm_perplexity",
-    # round-5 codec path: the WAV synth→parse→stats round trip rides
-    # the Arrow mapInPandas lane — gate it so a regression in the
-    # Python-batch path (batch sizing, Arrow transfer) is visible
-    "mm_decode_audio",
 ]
 
 

@@ -1,46 +1,24 @@
-"""Pure-stdlib image decoders for the multimodal pipeline.
+"""Image codec for the multimodal pipeline: uncompressed BMP.
 
-Closes the "plumbing-complete, not feature-complete" codec gap
-(operators/multimodal.py): the container has no PIL/libvips, but four
-formats are decodable from their public specifications with nothing
-beyond the stdlib + numpy — netpbm (PPM/PGM, both binary and ASCII),
-uncompressed BMP (BITMAPINFOHEADER, 24/32-bit), PNG (via ``zlib``,
-all five scanline filters, 8-bit depth, grayscale/RGB/palette incl.
-tRNS transparency and Adam7 interlace), JPEG — both BASELINE sequential (SOF0/SOF1, any chroma
-sampling, restart markers) and PROGRESSIVE (SOF2: spectral selection
-+ successive approximation, DC/AC first and refinement scans, EOB
-runs) — and GIF (LZW, global/local color tables, interlace, GIF89a
-transparency; first frame of animations — frame EXTRACTION stays a
-``sample_frames`` concern). JPEG also covers LOSSLESS (SOF3, all seven
-predictors, 2-16 bit) and 12-bit sequential in BOTH grayscale and
-color (the JFIF YCbCr transform generalized to the 2^prec chroma
-center), plus 12-bit PROGRESSIVE (SOF2 at prec 12). Arithmetic and
-hierarchical JPEG and non-AVI video stay honest
-``NotImplementedError`` integration points — their codecs are
-genuinely external.
+BMP (BITMAPINFOHEADER, 24/32-bit, bottom-up or top-down rows) is the
+one image format the library decodes. ``encode_bmp_bytes`` writes the
+24-bit payloads the image near-duplicate queries synthesize, and
+``decode_image_bytes`` reads them back. Every other container the
+sniffer recognises (PNG, JPEG, GIF, netpbm) or does not raises
+``NotImplementedError``: decoding it needs an external codec.
 
-These functions run INSIDE the Arrow ``mapInPandas`` batch path
-(multimodal.decode_image): bytes in, (geometry, channel means, pixel
-digest) out — pixels never leave the executor, matching the
-digests-only-to-driver posture of the rest of the multimodal stack.
+These functions run inside the Arrow ``mapInPandas`` batch path
+(``multimodal.decode_image``, ``multimodal.image_dhash``): bytes in,
+(geometry, pixel statistics, digest) out, so pixels never leave the
+executor.
 
-Format references: the netpbm format specs (P2/P3/P5/P6 headers,
-``#`` comments, maxval), the BMP file-format layout
-(BITMAPFILEHEADER/BITMAPINFOHEADER, 4-byte row padding, bottom-up BGR
-rows), the PNG specification (chunk layout, IHDR fields, filter
-types 0-4 incl. the Paeth predictor), ITU-T T.81 (JPEG marker
-segments, canonical Huffman construction from BITS/HUFFVAL, the
-EXTEND procedure, zigzag order, the 8×8 DCT basis, and annex G's
-progressive scan procedures), and the GIF89a
-specification (logical screen/image descriptors, LZW with variable
-code width, interlace pass order, graphic-control transparency). All
-public documents.
+Format reference: the BMP file layout (BITMAPFILEHEADER and
+BITMAPINFOHEADER, 4-byte row padding, bottom-up BGR rows).
 """
 
 from __future__ import annotations
 
 import struct
-import zlib
 
 import numpy as np
 
@@ -68,83 +46,18 @@ def sniff_format(data: bytes) -> str:
 
 
 def decode_image_bytes(data: bytes) -> tuple[str, np.ndarray]:
-    """Decode image bytes to ``(format, pixels)`` where ``pixels`` is a
-    ``uint8`` array of shape (height, width, channels) — ``uint16``
-    for deep-bit lossless/12-bit (grayscale or color) JPEG. Raises
-    :class:`ImageDecodeError` for malformed supported formats and
-    ``NotImplementedError`` for formats that need external codecs
-    (arithmetic/hierarchical JPEG, video containers) or are
-    unrecognized."""
+    """Decode BMP bytes to ``("bmp", pixels)`` where ``pixels`` is a
+    ``uint8`` array of shape (height, width, channels). Raises
+    :class:`ImageDecodeError` for malformed BMP and
+    ``NotImplementedError`` for every other format, recognised or
+    not."""
     fmt = sniff_format(bytes(data))
-    if fmt in ("ppm", "pgm"):
-        return fmt, _decode_netpbm(bytes(data))
     if fmt == "bmp":
         return fmt, _decode_bmp(bytes(data))
-    if fmt == "png":
-        return fmt, _decode_png(bytes(data))
-    if fmt == "jpeg":
-        return fmt, _decode_jpeg(bytes(data))
-    if fmt == "gif":
-        return fmt, _decode_gif(bytes(data))
     raise NotImplementedError(
-        f"image format {fmt!r} needs an external codec (supported "
-        "without one: PPM/PGM, uncompressed BMP, PNG, JPEG, GIF)"
+        f"image format {fmt!r} needs an external codec (the one format "
+        "supported without one is uncompressed BMP)"
     )
-
-
-# --- netpbm (PPM P6/P3, PGM P5/P2) --------------------------------------
-
-
-def _decode_netpbm(data: bytes) -> np.ndarray:
-    magic = data[:2]
-    channels = 3 if magic in (b"P6", b"P3") else 1
-    binary = magic in (b"P6", b"P5")
-    # header tokens: width height maxval, whitespace-separated, with
-    # '#' comments running to end-of-line anywhere between tokens
-    pos = 2
-    tokens: list[int] = []
-    while len(tokens) < 3:
-        if pos >= len(data):
-            raise ImageDecodeError("netpbm: truncated header")
-        c = data[pos]
-        if c in b" \t\r\n":
-            pos += 1
-        elif c in b"#":
-            nl = data.find(b"\n", pos)
-            pos = len(data) if nl < 0 else nl + 1
-        elif c in b"0123456789":
-            end = pos
-            while end < len(data) and data[end] in b"0123456789":
-                end += 1
-            tokens.append(int(data[pos:end]))
-            pos = end
-        else:
-            raise ImageDecodeError(f"netpbm: bad header byte {c!r}")
-    w, h, maxval = tokens
-    if not (0 < maxval < 256):
-        raise ImageDecodeError(
-            f"netpbm: only 8-bit samples supported (maxval {maxval})"
-        )
-    n = w * h * channels
-    if binary:
-        pos += 1  # exactly one whitespace byte after maxval
-        raster = data[pos:pos + n]
-        if len(raster) != n:
-            raise ImageDecodeError(
-                f"netpbm: raster holds {len(raster)} bytes, need {n}"
-            )
-        px = np.frombuffer(raster, dtype=np.uint8)
-    else:  # ASCII: whitespace-separated sample values, comments allowed
-        body = b"\n".join(
-            line.split(b"#", 1)[0] for line in data[pos:].splitlines()
-        )
-        vals = body.split()
-        if len(vals) != n:
-            raise ImageDecodeError(
-                f"netpbm: ASCII raster holds {len(vals)} samples, need {n}"
-            )
-        px = np.array([int(v) for v in vals], dtype=np.uint8)
-    return px.reshape(h, w, channels)
 
 
 # --- BMP (BITMAPINFOHEADER, uncompressed 24/32-bit) ---------------------
@@ -185,9 +98,8 @@ def _decode_bmp(data: bytes) -> np.ndarray:
 
 def encode_bmp_bytes(px: np.ndarray) -> bytes:
     """24-bit BI_RGB bottom-up BMP from an (h, w, 3) uint8 RGB array —
-    the operator-side still-image encoder (companion of
-    ``encode_wav_bytes``/``encode_avi_bytes``) that lets the multimodal
-    lane synthesize real container payloads for the image-dedup path.
+    the operator-side encoder that lets the multimodal lane synthesize
+    real container payloads for the image-dedup path.
     Layout per the public BMP spec: 14-byte file header,
     BITMAPINFOHEADER, BGR rows padded to 4 bytes, bottom-up."""
     h, w, c = px.shape
@@ -206,911 +118,3 @@ def encode_bmp_bytes(px: np.ndarray) -> bytes:
     dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raw),
                       2835, 2835, 0, 0)
     return hdr + dib + raw
-
-
-# --- PNG (zlib inflate + the five scanline filters) ---------------------
-
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-# Adam7 pass geometry: (x0, y0, dx, dy) per the PNG spec
-_ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
-
-
-def _decode_png(data: bytes) -> np.ndarray:
-    pos = 8
-    ihdr: tuple | None = None
-    idat = bytearray()
-    plte: np.ndarray | None = None
-    trns: bytes | None = None
-    while pos + 8 <= len(data):
-        (length,), ctype = struct.unpack_from(">I", data, pos), data[pos + 4:pos + 8]
-        chunk = data[pos + 8:pos + 8 + length]
-        if len(chunk) != length:
-            raise ImageDecodeError("png: truncated chunk")
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", chunk)
-        elif ctype == b"IDAT":
-            idat += chunk
-        elif ctype == b"PLTE":
-            if length % 3:
-                raise ImageDecodeError("png: PLTE length not a multiple of 3")
-            plte = np.frombuffer(chunk, np.uint8).reshape(-1, 3)
-        elif ctype == b"tRNS":
-            trns = bytes(chunk)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + data + crc
-    if ihdr is None:
-        raise ImageDecodeError("png: missing IHDR")
-    w, h, depth, color, comp, filt, interlace = ihdr
-    if depth != 8:
-        raise ImageDecodeError(f"png: only bit depth 8 supported, got {depth}")
-    if color == 3:
-        if plte is None:
-            raise ImageDecodeError("png: palette image without PLTE")
-        nch = 1
-    elif color in _PNG_CHANNELS:
-        nch = _PNG_CHANNELS[color]
-    else:
-        raise ImageDecodeError(f"png: unknown color type {color}")
-    if comp != 0 or filt != 0:
-        raise ImageDecodeError("png: unknown compression/filter method")
-    if interlace not in (0, 1):
-        raise ImageDecodeError(f"png: unknown interlace method {interlace}")
-    raw = zlib.decompress(bytes(idat))
-
-    if interlace == 0:
-        out = _png_unfilter_image(raw, h, w, nch).reshape(h, w, nch)
-    else:  # Adam7: seven independently-filtered sub-images
-        out = np.zeros((h, w, nch), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            need = ph * (1 + pw * nch)
-            sub = _png_unfilter_image(raw[off:off + need], ph, pw, nch)
-            off += need
-            out[y0::dy, x0::dx] = sub.reshape(ph, pw, nch)
-        if off != len(raw):
-            raise ImageDecodeError(
-                f"png: Adam7 stream holds {len(raw)} bytes, consumed {off}")
-
-    if color != 3:
-        return out
-    idx = out[:, :, 0]
-    if int(idx.max(initial=0)) >= len(plte):
-        raise ImageDecodeError("png: palette index outside PLTE")
-    rgb = plte[idx]
-    if trns is None:
-        return rgb
-    # tRNS for palette images: per-entry alpha, 255 for entries past it
-    alpha_lut = np.full(len(plte), 255, dtype=np.uint8)
-    alpha_lut[:len(trns)] = np.frombuffer(trns, np.uint8)[:len(plte)]
-    return np.dstack([rgb, alpha_lut[idx]])
-
-
-def _png_unfilter_image(raw: bytes, h: int, w: int, nch: int) -> np.ndarray:
-    """Reverse the five scanline filters over one (sub-)image's
-    filtered byte stream; returns (h, w*nch) reconstructed bytes."""
-    stride = 1 + w * nch
-    if len(raw) != stride * h:
-        raise ImageDecodeError(
-            f"png: inflated to {len(raw)} bytes, expected {stride * h}"
-        )
-    scan = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
-    filters = scan[:, 0]
-    out = np.zeros((h, w * nch), dtype=np.uint8)
-    prev = np.zeros(w * nch, dtype=np.uint8)
-    for r in range(h):
-        line = scan[r, 1:].astype(np.int32)
-        f = int(filters[r])
-        if f == 0:  # None
-            rec = line
-        elif f == 1:  # Sub: prefix sum over pixels, per channel offset
-            rec = np.cumsum(
-                line.reshape(w, nch), axis=0, dtype=np.int64
-            ).reshape(-1) & 0xFF
-        elif f == 2:  # Up
-            rec = (line + prev) & 0xFF
-        elif f in (3, 4):  # Average / Paeth: left-dependence ⇒ scan
-            rec = _unfilter_scan(line, prev.astype(np.int32), nch, f)
-        else:
-            raise ImageDecodeError(f"png: unknown filter type {f} at row {r}")
-        prev = np.asarray(rec, dtype=np.uint8)
-        out[r] = prev
-    return out
-
-
-def _unfilter_scan(line: np.ndarray, prev: np.ndarray, bpp: int,
-                   ftype: int) -> np.ndarray:
-    """Sequential reconstruction for Average (3) / Paeth (4): each byte
-    needs the already-reconstructed byte ``bpp`` to its left, so the
-    scan is inherently serial — bounded by scanline width, and rows
-    above it stay vectorized."""
-    n = line.shape[0]
-    rec = np.zeros(n, dtype=np.int32)
-    for i in range(n):
-        a = rec[i - bpp] if i >= bpp else 0  # left
-        b = prev[i]                          # up
-        if ftype == 3:
-            pred = (a + b) >> 1
-        else:
-            c = prev[i - bpp] if i >= bpp else 0  # upper-left
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-        rec[i] = (line[i] + pred) & 0xFF
-    return rec
-
-
-# --- JPEG (baseline sequential DCT, Huffman-coded — ITU-T T.81) ----------
-#
-# Decodes what the overwhelming majority of real-world .jpg files are:
-# SOF0 (and SOF1 extended-sequential with 8-bit samples) Huffman scans,
-# any sampling factors (4:4:4, 4:2:2, 4:2:0, ...), 8- and 16-bit quant
-# tables, restart markers, progressive (SOF2) at 8 AND 12 bits, and
-# 12-bit sequential. Arithmetic coding and hierarchical mode stay an
-# honest NotImplementedError — the spec supports them, but they are a
-# different entropy/scan architecture, and the honest boundary beats a
-# wrong answer. Entropy decoding is per-bit Python
-# (correctness-grade; bounded by coefficient count), everything after
-# it — dequantization, the 2-D IDCT over all blocks at once, chroma
-# upsampling, YCbCr→RGB — is vectorized numpy.
-
-_ZIGZAG = np.array([
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-], dtype=np.int64)
-
-# DCT-III (inverse DCT-II) basis: pixels = C.T @ coeffs @ C
-_DCT_C = np.array([
-    [(np.sqrt(1.0 / 8.0) if k == 0 else np.sqrt(2.0 / 8.0))
-     * np.cos((2 * n + 1) * k * np.pi / 16.0) for n in range(8)]
-    for k in range(8)
-])
-
-
-class _HuffTable:
-    """Canonical Huffman table from a DHT segment's BITS/HUFFVAL."""
-
-    def __init__(self, bits: list[int], vals: bytes):
-        self.lookup: dict[tuple[int, int], int] = {}
-        code, k = 0, 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                self.lookup[(length, code)] = vals[k]
-                code += 1
-                k += 1
-            code <<= 1
-
-
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00 byte
-    unstuffing; stops (returns the marker) at any other 0xFF marker."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.nbits = 0
-        self.marker: int | None = None
-
-    def _fill(self) -> None:
-        if self.marker is not None:
-            raise ImageDecodeError("jpeg: entropy data exhausted at marker")
-        if self.pos >= len(self.data):
-            raise ImageDecodeError("jpeg: truncated entropy data")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos] if self.pos < len(self.data) else None
-            if nxt == 0x00:
-                self.pos += 1  # stuffed 0xFF data byte
-            else:
-                self.marker = nxt
-                # the spec pads the tail of the entropy segment with 1-bits;
-                # feed them so a read spanning the boundary still completes
-                b = 0xFF
-        self.buf = (self.buf << 8) | b
-        self.nbits += 8
-
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.buf >> self.nbits) & 1
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def decode(self, table: _HuffTable) -> int:
-        code, length = 0, 0
-        lookup = table.lookup
-        while length < 16:
-            code = (code << 1) | self.bit()
-            length += 1
-            v = lookup.get((length, code))
-            if v is not None:
-                return v
-        raise ImageDecodeError("jpeg: invalid Huffman code")
-
-    def align_and_expect_rst(self, n: int) -> None:
-        """Byte-align and consume the RSTn marker (restart interval)."""
-        self.nbits = 0
-        if self.marker is None:
-            if (self.pos + 1 < len(self.data)
-                    and self.data[self.pos] == 0xFF):
-                self.marker = self.data[self.pos + 1]
-                self.pos += 2
-        else:
-            # _fill captured the marker while draining padding bits:
-            # pos still points AT the marker id byte — step past it so
-            # the next fill resumes on entropy data
-            self.pos += 1
-        if self.marker != 0xD0 + (n & 7):
-            raise ImageDecodeError(
-                f"jpeg: expected restart marker RST{n & 7}, "
-                f"got {self.marker!r}")
-        self.marker = None
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """EXTEND (T.81 F.12): map a t-bit magnitude to its signed value."""
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
-
-
-def _decode_jpeg(data: bytes) -> np.ndarray:
-    # truncated/corrupt containers misalign the marker walk in
-    # arbitrary ways; surface every such slip as the documented
-    # fail-loud error, never a bare IndexError/struct.error
-    try:
-        return _decode_jpeg_inner(data)
-    except (IndexError, struct.error) as e:
-        raise ImageDecodeError(f"jpeg: truncated or malformed: {e}") from None
-
-
-def _decode_jpeg_inner(data: bytes) -> np.ndarray:
-    if data[:2] != b"\xff\xd8":
-        raise ImageDecodeError("jpeg: missing SOI")
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], _HuffTable] = {}
-    frame = None  # (h, w, [(comp_id, hs, vs, tq), ...])
-    restart_interval = 0
-    progressive = False
-    lossless = False
-    prec = 8
-    prog: _ProgressiveState | None = None
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ImageDecodeError(f"jpeg: expected marker at {pos}")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        seglen = struct.unpack_from(">H", data, pos + 2)[0]
-        seg = data[pos + 4:pos + 2 + seglen]
-        if marker == 0xDB:  # DQT — one or more tables per segment
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0xF
-                p += 1
-                if pq == 0:
-                    qt[tq] = np.frombuffer(
-                        seg[p:p + 64], dtype=np.uint8).astype(np.int32)
-                    p += 64
-                elif pq == 1:
-                    qt[tq] = np.frombuffer(
-                        seg[p:p + 128], dtype=">u2").astype(np.int32)
-                    p += 128
-                else:
-                    raise ImageDecodeError(f"jpeg: bad DQT precision {pq}")
-        elif marker == 0xC4:  # DHT — one or more tables per segment
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0xF
-                bits = list(seg[p + 1:p + 17])
-                n = sum(bits)
-                huff[(tc, th)] = _HuffTable(bits, seg[p + 17:p + 17 + n])
-                p += 17 + n
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3):
-            # SOF0/SOF1 sequential, SOF2 progressive, SOF3 lossless
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", seg, 0)
-            lossless = marker == 0xC3
-            if not lossless and prec not in (8, 12):
-                raise NotImplementedError(
-                    f"jpeg: {prec}-bit sample precision needs an external "
-                    "codec (DCT modes decode at 8 and 12 bits)")
-            if lossless and not 2 <= prec <= 16:
-                raise ImageDecodeError(f"jpeg: lossless precision {prec}")
-            comps = []
-            for i in range(ncomp):
-                cid, sam, tq_i = struct.unpack_from(">BBB", seg, 6 + 3 * i)
-                comps.append((cid, sam >> 4, sam & 0xF, tq_i))
-            frame = (h, w, comps)
-            progressive = marker == 0xC2
-            if progressive:
-                prog = _ProgressiveState(frame, prec)
-        elif marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"jpeg: SOF marker 0x{marker:02X} (arithmetic/"
-                "differential/hierarchical) needs an external codec")
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack_from(">H", seg, 0)[0]
-        elif marker == 0xDA:  # SOS — header, then entropy-coded data
-            if frame is None:
-                raise ImageDecodeError("jpeg: SOS before SOF")
-            ns = seg[0]
-            scan = []
-            for i in range(ns):
-                cs, tt = seg[1 + 2 * i], seg[2 + 2 * i]
-                scan.append((cs, tt >> 4, tt & 0xF))
-            if lossless:
-                predictor = seg[1 + 2 * ns]          # Ss field
-                pt = seg[3 + 2 * ns] & 0xF           # Al field
-                return _decode_jpeg_lossless_scan(
-                    data, pos + 2 + seglen, frame, scan, huff,
-                    restart_interval, predictor, pt, prec)
-            if not progressive:
-                return _decode_jpeg_scan(
-                    data, pos + 2 + seglen, frame, scan, qt, huff,
-                    restart_interval, prec)
-            ss, se, ahal = (seg[1 + 2 * ns], seg[2 + 2 * ns],
-                            seg[3 + 2 * ns])
-            pos = prog.decode_scan(
-                data, pos + 2 + seglen, scan, ss, se,
-                ahal >> 4, ahal & 0xF, huff, restart_interval)
-            continue
-        pos += 2 + seglen
-    if progressive:
-        return prog.finalize(qt, h=frame[0], w=frame[1])
-    raise ImageDecodeError("jpeg: no SOS scan found")
-
-
-class _ProgressiveState:
-    """Coefficient accumulator for progressive JPEG (T.81 annex G):
-    every SOS deposits partial coefficients — DC/AC spectral bands at
-    decreasing successive-approximation bit positions — into
-    per-component buffers; :meth:`finalize` runs the shared
-    dequant+IDCT tail once, after EOI.
-
-    Scan kinds (G.2): DC first (``Ah=0``: Huffman diffs, stored
-    ``<< Al``), DC refinement (one raw bit per block into bit ``Al``),
-    AC first (single component, non-interleaved block order, EOB-run
-    coding across blocks), AC refinement (the correction-bit walk:
-    newly-significant coefficients arrive as ±``1<<Al`` while every
-    already-nonzero coefficient in the covered run consumes one
-    correction bit). Restart markers reset DC predictors and the
-    EOB run."""
-
-    def __init__(self, frame, prec: int = 8):
-        h, w, comps = frame
-        self.h, self.w, self.comps = h, w, comps
-        self.prec = prec
-        self.hmax = max(hs for _, hs, _, _ in comps)
-        self.vmax = max(vs for _, _, vs, _ in comps)
-        self.mcux = -(-w // (8 * self.hmax))
-        self.mcuy = -(-h // (8 * self.vmax))
-        self.geom: dict[int, tuple] = {}
-        self.coefs: dict[int, np.ndarray] = {}
-        for cid, hs, vs, tq in comps:
-            bwf, bhf = self.mcux * hs, self.mcuy * vs
-            # non-interleaved scans cover only the REAL blocks of the
-            # component (ceil of its scaled dimensions), not the MCU
-            # padding — T.81's data-unit counting rule
-            bwr = -(-(-(-w * hs // self.hmax)) // 8)
-            bhr = -(-(-(-h * vs // self.vmax)) // 8)
-            self.geom[cid] = (hs, vs, tq, bwf, bhf, bwr, bhr)
-            self.coefs[cid] = np.zeros((bwf * bhf, 64), dtype=np.int64)
-        self.eobrun = 0
-
-    def decode_scan(self, data: bytes, pos: int, scan, ss: int, se: int,
-                    ah: int, al: int, huff, restart_interval: int) -> int:
-        """Decode one SOS's entropy data; returns the position of the
-        next marker's 0xFF byte."""
-        for cs, _td, _ta in scan:
-            if cs not in self.geom:
-                raise ImageDecodeError(
-                    f"jpeg: SOS names unknown component {cs}")
-        reader = _BitReader(data, pos)
-        self.eobrun = 0
-        if ss == 0:
-            if se != 0:
-                raise ImageDecodeError(
-                    "jpeg: progressive DC scan must have Se=0")
-            self._dc_scan(reader, scan, ah, al, huff, restart_interval)
-        else:
-            if len(scan) != 1:
-                raise ImageDecodeError(
-                    "jpeg: progressive AC scans are single-component")
-            if se > 63 or ss > se:
-                raise ImageDecodeError(f"jpeg: bad spectral band {ss}..{se}")
-            self._ac_scan(reader, scan[0], ss, se, ah, al, huff,
-                          restart_interval)
-        if reader.marker is not None:
-            return reader.pos - 1  # _fill left pos AT the marker id byte
-        p = reader.pos
-        while p + 1 < len(data):
-            if data[p] == 0xFF and data[p + 1] != 0x00:
-                return p
-            p += 1
-        raise ImageDecodeError("jpeg: truncated after progressive scan")
-
-    def _dc_scan(self, reader, scan, ah, al, huff, ri) -> None:
-        pred = {cs: 0 for cs, _td, _ta in scan}
-        tables = {}
-        if ah == 0:
-            for cs, td, _ta in scan:
-                if (0, td) not in huff:
-                    raise ImageDecodeError("jpeg: SOS references undefined DHT")
-                tables[cs] = huff[(0, td)]
-
-        def one_block(cs, block):
-            if ah == 0:
-                t = reader.decode(tables[cs])
-                pred[cs] += _jpeg_extend(reader.receive(t), t)
-                block[0] = pred[cs] << al
-            else:  # refinement: one raw bit into bit position Al
-                block[0] |= reader.bit() << al
-
-        n = 0
-        if len(scan) == 1:
-            cs = scan[0][0]
-            hs, vs, _tq, bwf, _bhf, bwr, bhr = self.geom[cs]
-            for by in range(bhr):
-                for bx in range(bwr):
-                    if ri and n and n % ri == 0:
-                        reader.align_and_expect_rst(n // ri - 1)
-                        pred = {cs: 0}
-                    one_block(cs, self.coefs[cs][by * bwf + bx])
-                    n += 1
-            return
-        for my in range(self.mcuy):
-            for mx in range(self.mcux):
-                if ri and n and n % ri == 0:
-                    reader.align_and_expect_rst(n // ri - 1)
-                    pred = {c: 0 for c in pred}
-                for cs, _td, _ta in scan:
-                    hs, vs, _tq, bwf, _bhf, _bwr, _bhr = self.geom[cs]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            one_block(cs, self.coefs[cs][
-                                (my * vs + by) * bwf + (mx * hs + bx)])
-                n += 1
-
-    def _ac_scan(self, reader, comp, ss, se, ah, al, huff, ri) -> None:
-        cs, _td, ta = comp
-        if (1, ta) not in huff:
-            raise ImageDecodeError("jpeg: SOS references undefined DHT")
-        ac_t = huff[(1, ta)]
-        _hs, _vs, _tq, bwf, _bhf, bwr, bhr = self.geom[cs]
-        coefs = self.coefs[cs]
-        n = 0
-        for by in range(bhr):
-            for bx in range(bwr):
-                if ri and n and n % ri == 0:
-                    reader.align_and_expect_rst(n // ri - 1)
-                    self.eobrun = 0
-                block = coefs[by * bwf + bx]
-                if ah == 0:
-                    self._ac_first(reader, block, ss, se, al, ac_t)
-                else:
-                    self._ac_refine(reader, block, ss, se, al, ac_t)
-                n += 1
-
-    def _ac_first(self, reader, block, ss, se, al, ac_t) -> None:
-        if self.eobrun > 0:
-            self.eobrun -= 1
-            return
-        k = ss
-        while k <= se:
-            rs = reader.decode(ac_t)
-            r, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if r == 15:  # ZRL
-                    k += 16
-                    continue
-                self.eobrun = (1 << r) - 1
-                if r:
-                    self.eobrun += reader.receive(r)
-                return
-            k += r
-            if k > se:
-                raise ImageDecodeError("jpeg: AC run past band end")
-            block[k] = _jpeg_extend(reader.receive(s), s) << al
-            k += 1
-
-    def _ac_refine(self, reader, block, ss, se, al, ac_t) -> None:
-        p1, m1 = 1 << al, -1 << al
-
-        def correct(k: int) -> None:
-            # an already-nonzero coefficient consumes one correction
-            # bit; a 1-bit moves its magnitude toward full precision
-            if reader.bit() and (block[k] & p1) == 0:
-                block[k] += p1 if block[k] >= 0 else m1
-
-        k = ss
-        if self.eobrun == 0:
-            while k <= se:
-                rs = reader.decode(ac_t)
-                r, s = rs >> 4, rs & 0xF
-                if s == 0:
-                    if r != 15:  # EOB run starts (this block included)
-                        self.eobrun = 1 << r
-                        if r:
-                            self.eobrun += reader.receive(r)
-                        break
-                    val = 0  # ZRL: 16 zero-history positions
-                else:
-                    if s != 1:
-                        raise ImageDecodeError(
-                            "jpeg: AC refinement size must be 1")
-                    val = p1 if reader.bit() else m1
-                while k <= se:
-                    if block[k] != 0:
-                        correct(k)
-                    else:
-                        if r == 0:
-                            break
-                        r -= 1
-                    k += 1
-                if val and k <= se:
-                    block[k] = val
-                k += 1
-        if self.eobrun > 0:
-            # rest of this block's band: corrections only
-            while k <= se:
-                if block[k] != 0:
-                    correct(k)
-                k += 1
-            self.eobrun -= 1
-
-    def finalize(self, qt, h: int, w: int) -> np.ndarray:
-        order, bw, bh, samp, q_by = [], {}, {}, {}, {}
-        for cid, hs, vs, tq in self.comps:
-            if tq not in qt:
-                raise ImageDecodeError("jpeg: SOF references undefined DQT")
-            order.append(cid)
-            _hs, _vs, _tq, bwf, bhf, _bwr, _bhr = self.geom[cid]
-            bw[cid], bh[cid] = bwf, bhf
-            samp[cid] = (hs, vs)
-            q_by[cid] = qt[tq]
-        return _jpeg_finalize(order, self.coefs, q_by, bw, bh, samp,
-                              self.hmax, self.vmax, h, w, self.prec)
-
-
-def _decode_jpeg_scan(data: bytes, pos: int, frame, scan, qt, huff,
-                      restart_interval: int, prec: int = 8) -> np.ndarray:
-    h, w, comps = frame
-    by_id = {cid: (hs, vs, tq) for cid, hs, vs, tq in comps}
-    hmax = max(hs for _, hs, _, _ in comps)
-    vmax = max(vs for _, _, vs, _ in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-
-    # scan order follows the SOS component list; each carries its tables
-    plan = []
-    for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ImageDecodeError(f"jpeg: SOS names unknown component {cs}")
-        hs, vs, tq = by_id[cs]
-        if (0, td) not in huff or (1, ta) not in huff:
-            raise ImageDecodeError("jpeg: SOS references undefined DHT")
-        if tq not in qt:
-            raise ImageDecodeError("jpeg: SOF references undefined DQT")
-        plan.append((cs, hs, vs, qt[tq], huff[(0, td)], huff[(1, ta)]))
-
-    # coefficient buffers, zigzag order, one row per 8x8 block
-    bw = {cs: mcux * hs for cs, hs, vs, *_ in plan}
-    bh = {cs: mcuy * vs for cs, hs, vs, *_ in plan}
-    coefs = {cs: np.zeros((bh[cs] * bw[cs], 64), dtype=np.int32)
-             for cs, *_ in plan}
-
-    reader = _BitReader(data, pos)
-    pred = {cs: 0 for cs, *_ in plan}
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                reader.align_and_expect_rst(
-                    mcu_count // restart_interval - 1)
-                pred = {cs: 0 for cs, *_ in plan}
-            for cs, hs, vs, _q, dc_t, ac_t in plan:
-                for by in range(vs):
-                    for bx in range(hs):
-                        block = coefs[cs][
-                            (my * vs + by) * bw[cs] + (mx * hs + bx)]
-                        t = reader.decode(dc_t)
-                        pred[cs] += _jpeg_extend(reader.receive(t), t)
-                        block[0] = pred[cs]
-                        k = 1
-                        while k < 64:
-                            rs = reader.decode(ac_t)
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:  # ZRL: 16 zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ImageDecodeError(
-                                    "jpeg: AC run past block end")
-                            block[k] = _jpeg_extend(reader.receive(s), s)
-                            k += 1
-            mcu_count += 1
-
-    order = [cs for cs, *_ in plan]
-    samp = {cs: (hs, vs) for cs, hs, vs, *_ in plan}
-    q_by = {cs: q for cs, _hs, _vs, q, *_ in plan}
-    return _jpeg_finalize(order, coefs, q_by, bw, bh, samp, hmax, vmax,
-                          h, w, prec)
-
-
-def _decode_jpeg_lossless_scan(data: bytes, pos: int, frame, scan, huff,
-                               restart_interval: int, predictor: int,
-                               pt: int, prec: int) -> np.ndarray:
-    """Lossless JPEG (T.81 SOF3, process 14): per-sample Huffman-coded
-    differences against one of the seven spatial predictors, arithmetic
-    modulo 2^16. Covers the shape DNG/DICOM actually use: 2-16 bit
-    precision, 1..4 non-subsampled components interleaved in one scan,
-    restart intervals (prediction resets to the start-of-scan default),
-    point transform (decoded value shifted left by Pt). Subsampled
-    lossless is legal-but-unseen and fails loudly."""
-    h, w, comps = frame
-    if any(hs != 1 or vs != 1 for _, hs, vs, _ in comps):
-        raise NotImplementedError(
-            "jpeg: subsampled lossless scan needs an external codec")
-    if len(scan) != len(comps):
-        raise NotImplementedError(
-            "jpeg: non-interleaved multi-scan lossless needs an "
-            "external codec")
-    if not 1 <= predictor <= 7:
-        raise ImageDecodeError(f"jpeg: lossless predictor {predictor}")
-    order = [cs for cs, _, _ in scan]
-    by_id = {cid: i for i, (cid, _, _, _) in enumerate(comps)}
-    tables = {}
-    for cs, td, _ in scan:
-        if (0, td) not in huff:
-            raise ImageDecodeError("jpeg: SOS references undefined DHT")
-        tables[cs] = huff[(0, td)]
-    ncomp = len(comps)
-    out = np.zeros((h, w, ncomp), dtype=np.int64)
-    default = 1 << (prec - pt - 1)
-    reader = _BitReader(data, pos)
-    n_rst = 0
-    since_rst = 0
-    reset = [True] * ncomp                 # next sample takes the default
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and since_rst == restart_interval:
-                reader.align_and_expect_rst(n_rst)
-                n_rst = (n_rst + 1) % 8
-                since_rst = 0
-                reset = [True] * ncomp
-            for cs in order:
-                ci = by_id[cs]
-                t = reader.decode(tables[cs])
-                if t == 16:
-                    diff = 32768           # the spec's special category
-                elif t:
-                    diff = _jpeg_extend(reader.receive(t), t)
-                else:
-                    diff = 0
-                if reset[ci]:
-                    px = default
-                    reset[ci] = False
-                elif y == 0:
-                    px = out[0, x - 1, ci]
-                elif x == 0:
-                    px = out[y - 1, 0, ci]
-                else:
-                    ra = out[y, x - 1, ci]
-                    rb = out[y - 1, x, ci]
-                    rc = out[y - 1, x - 1, ci]
-                    px = {1: ra, 2: rb, 3: rc,
-                          4: ra + rb - rc,
-                          5: ra + ((rb - rc) >> 1),
-                          6: rb + ((ra - rc) >> 1),
-                          7: (ra + rb) >> 1}[predictor]
-                out[y, x, ci] = (px + diff) & 0xFFFF
-            since_rst += 1
-    out = (out << pt) & 0xFFFF
-    arr = out.astype(np.uint16 if prec > 8 else np.uint8)
-    return arr[:, :, 0] if ncomp == 1 else arr
-
-
-def _jpeg_finalize(order, coefs, q_by, bw, bh, samp, hmax, vmax,
-                   h, w, prec: int = 8) -> np.ndarray:
-    """The vectorized tail shared by the sequential and progressive
-    decoders: dequant (zigzag order) → dezigzag → one batched IDCT per
-    component → plane assembly → nearest-neighbor chroma upsampling →
-    crop → JFIF YCbCr→RGB (or single-plane grayscale)."""
-    level, top = 1 << (prec - 1), (1 << prec) - 1
-    dtype = np.uint16 if prec > 8 else np.uint8
-    planes = {}
-    for cs in order:
-        z = coefs[cs] * q_by[cs][None, :]
-        blocks = np.zeros((z.shape[0], 64), dtype=np.float64)
-        blocks[:, _ZIGZAG] = z
-        blocks = blocks.reshape(-1, 8, 8)
-        px = np.einsum("kb,nbc,cl->nkl", _DCT_C.T, blocks, _DCT_C)
-        px = np.clip(np.round(px) + level, 0, top).astype(dtype)
-        plane = (px.reshape(bh[cs], bw[cs], 8, 8)
-                 .transpose(0, 2, 1, 3).reshape(bh[cs] * 8, bw[cs] * 8))
-        hs, vs = samp[cs]
-        plane = np.repeat(np.repeat(plane, vmax // vs, axis=0),
-                          hmax // hs, axis=1)
-        planes[cs] = plane[:h, :w]
-
-    if len(order) == 1:
-        return planes[order[0]][:, :, None]
-    if len(order) != 3:
-        raise NotImplementedError(
-            f"jpeg: {len(order)}-component images (CMYK/unknown) need an "
-            "external codec")
-    # JFIF YCbCr→RGB at ANY sample precision: the transform
-    # coefficients are ratios (precision-free); only the chroma center
-    # and the clamp scale with 2^prec — 128/255 at 8 bits, 2048/4095 at
-    # 12 (the DICOM extended-precision color shape)
-    y = planes[order[0]].astype(np.float64)
-    cb = planes[order[1]].astype(np.float64) - float(level)
-    cr = planes[order[2]].astype(np.float64) - float(level)
-    rgb = np.stack([
-        y + 1.402 * cr,
-        y - 0.344136 * cb - 0.714136 * cr,
-        y + 1.772 * cb,
-    ], axis=-1)
-    return np.clip(np.round(rgb), 0, top).astype(dtype)
-
-
-# --- GIF (LZW-compressed indexed color — GIF87a/GIF89a) ------------------
-#
-# Decodes the first image frame: logical screen descriptor, global or
-# local color table, the GIF flavor of LZW (variable code width 3..12
-# bits, clear/end codes), optional row interlacing, and the GIF89a
-# graphic-control transparency index (emitted as an alpha channel).
-# Later frames of an animation are deliberately out of scope for the
-# still-image path — frame EXTRACTION belongs to sample_frames, and a
-# first-frame decode is what every thumbnail/feature pipeline needs.
-
-
-def _gif_need(data: bytes, pos: int, n: int, what: str) -> None:
-    if pos + n > len(data):
-        raise ImageDecodeError(f"gif: truncated in {what}")
-
-
-def _decode_gif(data: bytes) -> np.ndarray:
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ImageDecodeError("gif: bad signature")
-    _gif_need(data, 6, 7, "logical screen descriptor")
-    sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", data, 6)
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        _gif_need(data, pos, 3 * n, "global color table")
-        gct = np.frombuffer(data, np.uint8, 3 * n, pos).reshape(n, 3)
-        pos += 3 * n
-    transparent = None
-    while pos < len(data):
-        b = data[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            _gif_need(data, pos, 3, "extension header")
-            label = data[pos + 1]
-            pos += 2
-            if label == 0xF9 and data[pos] >= 4:  # graphic control
-                _gif_need(data, pos, 5, "graphic control")
-                gflags = data[pos + 1]
-                if gflags & 1:
-                    transparent = data[pos + 4]
-            while data[pos]:  # skip sub-blocks
-                pos += 1 + data[pos]
-                _gif_need(data, pos, 1, "extension sub-blocks")
-            pos += 1
-            continue
-        if b != 0x2C:  # image descriptor
-            raise ImageDecodeError(f"gif: unexpected block 0x{b:02X}")
-        _gif_need(data, pos, 10, "image descriptor")
-        _ix, _iy, w, h, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
-        pos += 10
-        ct = gct
-        if iflags & 0x80:  # local color table
-            n = 2 << (iflags & 0x07)
-            _gif_need(data, pos, 3 * n, "local color table")
-            ct = np.frombuffer(data, np.uint8, 3 * n, pos).reshape(n, 3)
-            pos += 3 * n
-        if ct is None:
-            raise ImageDecodeError("gif: no color table")
-        _gif_need(data, pos, 2, "LZW header")
-        min_code = data[pos]
-        pos += 1
-        chunks = []
-        while data[pos]:
-            ln = data[pos]
-            _gif_need(data, pos, 1 + ln + 1, "image sub-blocks")
-            chunks.append(data[pos + 1:pos + 1 + ln])
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw(b"".join(chunks), min_code, w * h)
-        grid = np.array(idx, dtype=np.int32).reshape(h, w)
-        if iflags & 0x40:  # interlaced: 4-pass row order
-            order = ([*range(0, h, 8)] + [*range(4, h, 8)]
-                     + [*range(2, h, 4)] + [*range(1, h, 2)])
-            deinter = np.empty_like(grid)
-            deinter[np.array(order, dtype=np.int64)] = grid
-            grid = deinter
-        if grid.max() >= len(ct):
-            raise ImageDecodeError("gif: pixel index outside color table")
-        rgb = ct[grid]
-        if transparent is not None:
-            alpha = np.where(grid == transparent, 0, 255).astype(np.uint8)
-            return np.dstack([rgb, alpha])
-        return rgb
-    raise ImageDecodeError("gif: no image descriptor")
-
-
-def _gif_lzw(data: bytes, min_code: int, npix: int) -> list[int]:
-    """GIF-flavor LZW: LSB-first bit packing, variable code width from
-    ``min_code``+1 up to 12 bits, CLEAR resets the dictionary, EOI
-    terminates. Classic table-as-list decode (public algorithm)."""
-    clear = 1 << min_code
-    eoi = clear + 1
-    out: list[int] = []
-    table: list[list[int]] = []
-    width = prev = 0
-
-    def reset():
-        nonlocal table, width, prev
-        table = [[i] for i in range(clear)] + [[], []]
-        width = min_code + 1
-        prev = -1
-
-    reset()
-    acc = nbits = 0
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                reset()
-                continue
-            if code == eoi:
-                return out[:npix]
-            if prev < 0:
-                if code >= len(table) or not table[code]:
-                    raise ImageDecodeError("gif: bad first LZW code")
-                entry = table[code]
-            elif code < len(table) and table[code]:
-                entry = table[code]
-                table.append(table[prev] + [entry[0]])
-            elif code == len(table):  # the KwKwK case
-                entry = table[prev] + [table[prev][0]]
-                table.append(entry)
-            else:
-                raise ImageDecodeError("gif: LZW code out of range")
-            out.extend(entry)
-            prev = code
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-            if len(out) >= npix:
-                return out[:npix]
-    if len(out) < npix:
-        raise ImageDecodeError(
-            f"gif: LZW stream yielded {len(out)} pixels, need {npix}")
-    return out[:npix]

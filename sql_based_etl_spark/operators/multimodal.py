@@ -2,21 +2,14 @@
 metadata, with decode / feature-extraction as Arrow-batched Pandas
 stages over ``mapInPandas``.
 
-``decode_image`` is a REAL decoder: netpbm (PPM/PGM), uncompressed
-BMP, PNG, baseline JPEG and GIF are decodable from their public specs
-with the stdlib alone (operators/imagecodecs.py), and it runs them
-through the same Arrow batch path as everything else. ``decode_audio``
-is likewise real: RIFF/WAVE integer PCM (8/16/24/32-bit), IEEE
-float32, IMA and MS ADPCM
-(operators/audiocodecs.py), with ``synth_wav`` as the deterministic
-payload source the graded round-trip query uses. ``decode_features``
-keeps the deterministic byte-level feature stub (works on ANY
-payload, image or not). Only formats whose codecs are genuinely
-external remain ``NotImplementedError`` integration points:
-arithmetic/lossless JPEG inside ``decode_image`` (baseline AND
-progressive JPEG plus GIF decode natively), compressed audio
-(FLAC/OGG/MP3 — IMA and MS ADPCM decode natively) inside
-``decode_audio``, and video in ``sample_frames``.
+``decode_image`` and ``image_dhash`` really decode: uncompressed BMP
+(operators/imagecodecs.py), the format ``synth_bmp`` and
+``synth_bmp_variants`` write, runs through the same Arrow batch path
+as everything else; any other image format raises
+``NotImplementedError``. ``decode_features`` keeps the deterministic
+byte-level feature stub (works on ANY payload, image or not), and
+``sample_frames_stub`` / ``resize_stub`` keep the Spark plumbing of
+frame sampling and resizing with stub kernels.
 
 Scale posture: binary payloads ride parquet column chunks; metadata
 lives in a sibling struct so filters (mime, byte size) prune row
@@ -108,21 +101,18 @@ IMAGE_SCHEMA = (
 def decode_image(df: DataFrame, id_col: str = "doc_id",
                  payload_col: str = "payload") -> DataFrame:
     """REAL image decode through the same Arrow ``mapInPandas`` path as
-    :func:`decode_features` — pure-stdlib codecs
-    (operators/imagecodecs.py): netpbm PPM/PGM (binary + ASCII),
-    uncompressed 24/32-bit BMP, PNG via ``zlib`` with all five
-    scanline filters, JPEG (baseline and progressive), and GIF (LZW).
-    Emits geometry + mean pixel value + an md5 of the
-    decoded pixel bytes per image — pixels never leave the executor
-    (digests-only-to-driver, like the rest of the multimodal stack).
+    :func:`decode_features` — the uncompressed 24/32-bit BMP codec
+    (operators/imagecodecs.py). Emits geometry + mean pixel value + an
+    md5 of the decoded pixel bytes per image — pixels never leave the
+    executor (digests-only-to-driver, like the rest of the multimodal
+    stack).
 
     Decode is inherently per-payload Python, but it rides the Arrow
     batch path (one pandas batch per task, not one call per row via a
     row-at-a-time UDF) and the hot arithmetic inside each decode is
-    numpy over the whole raster. Fail-loud: malformed bytes of a
-    supported format raise ``ImageDecodeError``; formats that genuinely
-    need external codecs (arithmetic/lossless JPEG, video) raise
-    ``NotImplementedError`` — the remaining honest integration points."""
+    numpy over the whole raster. Fail-loud: malformed BMP raises
+    ``ImageDecodeError``; every other format raises
+    ``NotImplementedError``."""
     import hashlib
 
     import numpy as np
@@ -154,251 +144,6 @@ def decode_image(df: DataFrame, id_col: str = "doc_id",
             })
 
     return df.select(id_col, payload_col).mapInPandas(_decode, IMAGE_SCHEMA)
-
-
-AUDIO_SCHEMA = (
-    "doc_id bigint, sample_rate int, n_channels int, n_frames int, "
-    "duration_us bigint, peak int, sum_abs bigint, sample_md5 string"
-)
-
-
-def decode_audio(df: DataFrame, id_col: str = "doc_id",
-                 payload_col: str = "payload") -> DataFrame:
-    """REAL audio decode through the same Arrow ``mapInPandas`` path as
-    :func:`decode_image` — the pure-stdlib codecs
-    (operators/audiocodecs.py): RIFF/WAVE integer PCM 8/16/24/32-bit,
-    IMA/MS ADPCM, IEEE float32, and FLAC (operators/flaccodec.py),
-    mono or multichannel. Emits container facts
-    (rate/channels/frames), exact integer statistics (``duration_us``
-    in integer microseconds, ``peak`` = max |sample|, ``sum_abs`` =
-    Σ|sample| in int64 — both engine-reproducible, unlike float RMS)
-    and an md5 of the raw sample bytes — samples never leave the
-    executor. Fail-loud: malformed WAV raises ``AudioDecodeError``;
-    compressed codecs raise ``NotImplementedError``."""
-    import hashlib
-
-    import numpy as np
-
-    from sql_based_etl_spark.operators.audiocodecs import (
-        AudioDecodeError,
-        decode_audio_bytes,
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "n_channels",
-                                   "n_frames", "duration_us", "peak",
-                                   "sum_abs", "sample_md5")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, s = decode_audio_bytes(bytes(payload))
-                if not np.issubdtype(s.dtype, np.integer):
-                    # float32 WAVs decode fine, but these columns are
-                    # EXACT integer statistics — truncating floats
-                    # would be silently-wrong peak/sum_abs, the one
-                    # thing this stack never does
-                    raise AudioDecodeError(
-                        "decode_audio computes integer sample statistics; "
-                        "IEEE-float WAV needs a float feature stage "
-                        "(decode_wav_bytes returns its samples directly)"
-                    )
-                frames, n_ch = s.shape
-                a = np.abs(s.astype(np.int64))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(n_ch)
-                out["n_frames"].append(frames)
-                out["duration_us"].append(frames * 1_000_000 // rate)
-                out["peak"].append(int(a.max(initial=0)))
-                out["sum_abs"].append(int(a.sum()))
-                out["sample_md5"].append(
-                    hashlib.md5(np.ascontiguousarray(s).tobytes()).hexdigest()
-                )
-            yield pd.DataFrame({
-                "doc_id": np.asarray(out["doc_id"], dtype=np.int64),
-                "sample_rate": np.asarray(out["sample_rate"], dtype=np.int32),
-                "n_channels": np.asarray(out["n_channels"], dtype=np.int32),
-                "n_frames": np.asarray(out["n_frames"], dtype=np.int32),
-                "duration_us": np.asarray(out["duration_us"], dtype=np.int64),
-                "peak": np.asarray(out["peak"], dtype=np.int32),
-                "sum_abs": np.asarray(out["sum_abs"], dtype=np.int64),
-                "sample_md5": out["sample_md5"],
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(_decode, AUDIO_SCHEMA)
-
-
-def synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic WAV synthesis from ``doc_id`` — the audio analogue
-    of :func:`attach_binary`'s text payloads: every id yields a small
-    PCM16 file whose rate/channels/length/samples are pure integer
-    functions of the id (so a SQL oracle can reproduce the decoded
-    statistics analytically, see queries/multimodal.py:mm_decode_audio).
-    Sample law: channels = 1 + id%2, frames = 64 + id%191,
-    sample[c, i] = ((id*31 + i*17 + c*7) % 2001) - 1000 at 8 kHz."""
-    import numpy as np
-
-    from sql_based_etl_spark.operators.audiocodecs import encode_wav_bytes
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n_ch = 1 + d % 2
-                frames = 64 + d % 191
-                i = np.arange(frames, dtype=np.int64)[:, None]
-                c = np.arange(n_ch, dtype=np.int64)[None, :]
-                s = ((d * 31 + i * 17 + c * 7) % 2001) - 1000
-                ids.append(d)
-                blobs.append(encode_wav_bytes(s.astype(np.int16), 8000))
-            yield pd.DataFrame({
-                "doc_id": np.asarray(ids, dtype=np.int64),
-                "payload": blobs,
-            })
-
-    return df.select(id_col).mapInPandas(_synth, "doc_id bigint, payload binary")
-
-
-def synth_flac(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """The :func:`synth_wav` sample law in a FLAC container — same
-    deterministic PCM (channels = 1 + id%2, frames = 64 + id%191,
-    sample[c, i] = ((id*31 + i*17 + c*7) % 2001) - 1000 at 8 kHz),
-    losslessly compressed by the independent FLAC encoder
-    (operators/flaccodec.py:encode_flac_bytes), with the stereo ids
-    taking the mid/side decorrelation path. Decoding through
-    :func:`decode_audio` must therefore reproduce mm_decode_audio's
-    oracle bit-for-bit — a round trip that proves compression,
-    decorrelation and reconstruction all at once."""
-    import numpy as np
-
-    from sql_based_etl_spark.operators.flaccodec import encode_flac_bytes
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n_ch = 1 + d % 2
-                frames = 64 + d % 191
-                i = np.arange(frames, dtype=np.int64)[:, None]
-                c = np.arange(n_ch, dtype=np.int64)[None, :]
-                s = ((d * 31 + i * 17 + c * 7) % 2001) - 1000
-                ids.append(d)
-                blobs.append(encode_flac_bytes(
-                    s, 8000, stereo="mid-side" if n_ch == 2 else None))
-            yield pd.DataFrame({
-                "doc_id": np.asarray(ids, dtype=np.int64),
-                "payload": blobs,
-            })
-
-    return df.select(id_col).mapInPandas(_synth, "doc_id bigint, payload binary")
-
-
-VIDEO_SCHEMA = (
-    "doc_id bigint, frame_idx int, width int, height int, fps_millis int, "
-    "pix_sum bigint, pix_max int, frame_md5 string"
-)
-
-
-def decode_video(df: DataFrame, id_col: str = "doc_id",
-                 payload_col: str = "payload",
-                 every_n: int = 1) -> DataFrame:
-    """REAL video frame sampling through the same Arrow ``mapInPandas``
-    path as :func:`decode_image` / :func:`decode_audio`: the pure-stdlib
-    AVI container codec (operators/videocodecs.py) walks the RIFF tree
-    and decodes every ``every_n``-th frame — uncompressed BI_RGB
-    natively, and MJPEG through the stdlib JPEG decoder (DHT-less
-    camera frames via the T.81 Annex-K tables). One
-    output row per sampled frame — container facts (geometry,
-    integer-millis fps) plus exact integer pixel statistics and a frame
-    md5; pixels never leave the executor. Fail-loud: malformed
-    containers raise ``VideoDecodeError``; non-MJPEG compressed
-    fourccs (cinepak, h264, …) raise ``NotImplementedError`` naming
-    the codec — the external decoder integration point."""
-    import hashlib
-
-    import numpy as np
-
-    from sql_based_etl_spark.operators.videocodecs import decode_avi_frames
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_idx", "width", "height",
-                                   "fps_millis", "pix_sum", "pix_max",
-                                   "frame_md5")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                fps, frames = decode_avi_frames(bytes(payload), every_n)
-                for idx, rgb in frames:
-                    h, w, _ = rgb.shape
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(idx)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["fps_millis"].append(int(round(fps * 1000)))
-                    out["pix_sum"].append(int(rgb.astype(np.int64).sum()))
-                    out["pix_max"].append(int(rgb.max(initial=0)))
-                    out["frame_md5"].append(
-                        hashlib.md5(np.ascontiguousarray(rgb).tobytes())
-                        .hexdigest())
-            yield pd.DataFrame({
-                "doc_id": np.asarray(out["doc_id"], dtype=np.int64),
-                "frame_idx": np.asarray(out["frame_idx"], dtype=np.int32),
-                "width": np.asarray(out["width"], dtype=np.int32),
-                "height": np.asarray(out["height"], dtype=np.int32),
-                "fps_millis": np.asarray(out["fps_millis"], dtype=np.int32),
-                "pix_sum": np.asarray(out["pix_sum"], dtype=np.int64),
-                "pix_max": np.asarray(out["pix_max"], dtype=np.int32),
-                "frame_md5": out["frame_md5"],
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(_decode, VIDEO_SCHEMA)
-
-
-def synth_avi(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic AVI synthesis from ``doc_id`` — the video analogue
-    of :func:`synth_wav`: every id yields a small uncompressed AVI whose
-    geometry, frame count and pixels are pure integer functions of the
-    id, so a SQL oracle reproduces the decoded statistics analytically
-    (queries/multimodal.py:mm_decode_video). Law: frames = 2 + id%4,
-    w = 8 + (id%3)*4, h = 4 + (id%2)*3, fps 10,
-    pixel[f, y, x, c] = (id*13 + f*7 + y*5 + x*3 + c*11) % 256."""
-    import numpy as np
-
-    from sql_based_etl_spark.operators.videocodecs import encode_avi_bytes
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n = 2 + d % 4
-                w = 8 + (d % 3) * 4
-                h = 4 + (d % 2) * 3
-                f = np.arange(n, dtype=np.int64)[:, None, None, None]
-                y = np.arange(h, dtype=np.int64)[None, :, None, None]
-                x = np.arange(w, dtype=np.int64)[None, None, :, None]
-                c = np.arange(3, dtype=np.int64)[None, None, None, :]
-                px = (d * 13 + f * 7 + y * 5 + x * 3 + c * 11) % 256
-                ids.append(d)
-                blobs.append(encode_avi_bytes(px.astype(np.uint8), fps=10))
-            yield pd.DataFrame({
-                "doc_id": np.asarray(ids, dtype=np.int64),
-                "payload": blobs,
-            })
-
-    return df.select(id_col).mapInPandas(_synth, "doc_id bigint, payload binary")
-
-
-def sample_frames(df: DataFrame, payload_col: str = "payload",
-                  every_n: int = 30) -> DataFrame:
-    """Video frame sampling over arbitrary containers: uncompressed and
-    MJPEG AVI decode natively (:func:`decode_video`); everything else
-    (mp4/mkv, other codecs) needs ffmpeg/pyav — integration point only."""
-    raise NotImplementedError(
-        "sample_frames needs a video codec (pyav/ffmpeg) on the executors "
-        "for non-AVI containers; uncompressed AVI decodes natively via "
-        "decode_video"
-    )
 
 
 def synth_bmp(df: DataFrame, id_col: str = "doc_id",
@@ -523,8 +268,8 @@ def image_dhash(df: DataFrame, id_col: str = "doc_id",
     """Perceptual difference-hash over REAL decoded images — the image
     leg of the dedup family (text: MinHash/SimHash, embeddings:
     LSH/SemDeDup; this covers exact/near-duplicate IMAGES at corpus
-    scale). Per payload: container decode (BMP/PNG/GIF/JPEG via the
-    stdlib codecs) → integer grayscale ``(299R + 587G + 114B) // 1000``
+    scale). Per payload: BMP decode (operators/imagecodecs.py) →
+    integer grayscale ``(299R + 587G + 114B) // 1000``
     → a 9×8 nearest-neighbor sample grid (``gx = k*w//9``,
     ``gy = y*h//8``) → 64 horizontal-gradient bits emitted as a 64-char
     '0'/'1' string (a string survives any engine's integer width —
@@ -545,14 +290,9 @@ def image_dhash(df: DataFrame, id_col: str = "doc_id",
             ids, hashes = [], []
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 _, px = decode_image_bytes(bytes(payload))
-                if px.shape[2] <= 2:
-                    # 1 channel = grayscale; 2 = gray+alpha (PNG color
-                    # type 4) — luminance is channel 0 either way
-                    gray = px[:, :, 0].astype(np.int64)
-                else:
-                    rgb = px[:, :, :3].astype(np.int64)
-                    gray = (299 * rgb[:, :, 0] + 587 * rgb[:, :, 1]
-                            + 114 * rgb[:, :, 2]) // 1000
+                rgb = px[:, :, :3].astype(np.int64)
+                gray = (299 * rgb[:, :, 0] + 587 * rgb[:, :, 1]
+                        + 114 * rgb[:, :, 2]) // 1000
                 h, w = gray.shape
                 gy = (np.arange(8) * h) // 8
                 gx = (np.arange(9) * w) // 9
@@ -568,154 +308,6 @@ def image_dhash(df: DataFrame, id_col: str = "doc_id",
 
     return df.select(id_col, payload_col).mapInPandas(
         _hash, "doc_id bigint, dhash string")
-
-
-AUDIO_CONTAINER_SCHEMA = (
-    "doc_id bigint, container string, channels int, sample_rate int, "
-    "n_units int, payload_units bigint, duration_micros bigint, "
-    "rate_metric bigint"
-)
-
-
-def synth_mp3(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic MPEG-1 Layer III frame-stream synthesis from
-    ``doc_id`` — the MP3 analogue of :func:`synth_avi`. Law:
-    bitrate index = 1 + id%14, rate index = id%3, mono = id%2,
-    frames = 3 + id%5, per-frame padding bit = (id+i)%2, a syncsafe
-    ID3v2 tag of (id%4)*17 junk bytes prepended. Payload bytes are
-    deterministic filler — the parser's claim is FRAMING (headers,
-    lengths, duration), not audio, the same honesty boundary as the
-    metadata-only video ops."""
-    from sql_based_etl_spark.operators.audiocontainers import synth_mp3_bytes
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ids.append(d)
-                blobs.append(synth_mp3_bytes(
-                    n_frames=3 + d % 5, version=3,
-                    bitrate_index=1 + d % 14, rate_index=d % 3,
-                    mono=bool(d % 2),
-                    pad_law=lambda i, d=d: (d + i) % 2,
-                    id3_junk=(d % 4) * 17))
-            yield pd.DataFrame({
-                "doc_id": np.asarray(ids, dtype=np.int64),
-                "payload": blobs,
-            })
-
-    return df.select(id_col).mapInPandas(_synth, "doc_id bigint, payload binary")
-
-
-def synth_ogg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic single-stream OGG/Vorbis synthesis from ``doc_id``
-    (identification-header page + CRC-stamped audio pages). Law:
-    channels = 1 + id%2, rate = [8000,16000,44100][id%3],
-    nominal bitrate = 64000 + 1000*(id%8), audio pages = 1 + id%3 with
-    granule (k+1)*(500 + id*37) and payload length 64 + 16*k."""
-    from sql_based_etl_spark.operators.audiocontainers import (
-        synth_ogg_vorbis_bytes,
-    )
-
-    rates = (8000, 16000, 44100)
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n_audio = 1 + d % 3
-                ids.append(d)
-                blobs.append(synth_ogg_vorbis_bytes(
-                    channels=1 + d % 2, sample_rate=rates[d % 3],
-                    bitrate_nominal=64000 + 1000 * (d % 8),
-                    page_granules=[(k + 1) * (500 + d * 37)
-                                   for k in range(n_audio)]))
-            yield pd.DataFrame({
-                "doc_id": np.asarray(ids, dtype=np.int64),
-                "payload": blobs,
-            })
-
-    return df.select(id_col).mapInPandas(_synth, "doc_id bigint, payload binary")
-
-
-def parse_audio_container(df: DataFrame, id_col: str = "doc_id",
-                          payload_col: str = "payload") -> DataFrame:
-    """Container-level audio metadata through the Arrow ``mapInPandas``
-    lane — MP3 frame walking and OGG/Vorbis page walking
-    (operators/audiocontainers.py), sniffed per payload. One row per
-    document with EXACT integer facts: ``n_units`` = frames (mp3) /
-    pages (ogg), ``payload_units`` = frame bytes (mp3) / audio payload
-    bytes (ogg), ``rate_metric`` = bitrate-kbps sum over frames (mp3) /
-    nominal bitrate (ogg). Bytes never leave the executor; WAV/FLAC
-    payloads belong to :func:`decode_audio` (full decode), and unknown
-    containers fail loudly."""
-    from sql_based_etl_spark.operators.audiocodecs import (
-        AudioDecodeError,
-        sniff_audio,
-    )
-    from sql_based_etl_spark.operators.audiocontainers import (
-        parse_mp3_frames,
-        parse_ogg_vorbis,
-    )
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "container", "channels",
-                                   "sample_rate", "n_units",
-                                   "payload_units", "duration_micros",
-                                   "rate_metric")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                # ID3-prefixed mp3 sniffs as 'mp3' via the ID3 magic
-                kind = sniff_audio(data)
-                if kind == "unknown" and (len(data) >= 2
-                                          and data[0] == 0xFF
-                                          and data[1] & 0xE0 == 0xE0):
-                    kind = "mp3"
-                if kind == "mp3":
-                    r = parse_mp3_frames(data)
-                    row = (r["channels"], r["sample_rate"], r["n_frames"],
-                           r["frame_bytes"], r["duration_micros"],
-                           r["bitrate_kbps_sum"])
-                elif kind == "ogg":
-                    r = parse_ogg_vorbis(data)
-                    row = (r["channels"], r["sample_rate"], r["n_pages"],
-                           r["payload_bytes"], r["duration_micros"],
-                           r["bitrate_nominal"])
-                else:
-                    raise AudioDecodeError(
-                        f"parse_audio_container: {kind!r} payloads belong "
-                        "to decode_audio (wav/flac) or are unsupported")
-                out["doc_id"].append(int(doc_id))
-                out["container"].append(kind)
-                for k, v in zip(("channels", "sample_rate", "n_units",
-                                 "payload_units", "duration_micros",
-                                 "rate_metric"), row):
-                    out[k].append(int(v))
-            yield pd.DataFrame({
-                "doc_id": np.asarray(out["doc_id"], dtype=np.int64),
-                "container": out["container"],
-                "channels": np.asarray(out["channels"], dtype=np.int32),
-                "sample_rate": np.asarray(out["sample_rate"], dtype=np.int32),
-                "n_units": np.asarray(out["n_units"], dtype=np.int32),
-                "payload_units": np.asarray(out["payload_units"],
-                                            dtype=np.int64),
-                "duration_micros": np.asarray(out["duration_micros"],
-                                              dtype=np.int64),
-                "rate_metric": np.asarray(out["rate_metric"],
-                                          dtype=np.int64),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _parse, AUDIO_CONTAINER_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, n_frame_bytes int, frame_md5 string"

@@ -147,247 +147,6 @@ ORACLES["mm_resize"] = """
 """
 
 
-def mm_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV round trip, exactly oracle-checked: deterministic PCM16
-    synthesis from ``doc_id`` (operators/multimodal.py:synth_wav — the
-    encoder writes the RIFF container with ``struct``, independent of
-    the decoder) → the pure-stdlib RIFF/WAVE parser
-    (operators/audiocodecs.py:decode_wav_bytes) → exact integer
-    statistics. DuckDB reproduces the decoded stats analytically from
-    the synthesis law, so a decoder that mis-parses the container,
-    drops frames, or mixes channels hash-mismatches."""
-    from sql_based_etl_spark.operators.multimodal import decode_audio, synth_wav
-
-    wav = synth_wav(load(spark, sf_dir, "documents"))
-    return decode_audio(wav).select(
-        "doc_id", "sample_rate", "n_channels", "n_frames",
-        "duration_us", "peak", "sum_abs",
-    )
-
-
-QUERIES["mm_decode_audio"] = mm_decode_audio
-
-# the synthesis law (multimodal.py:synth_wav) replayed analytically:
-# channels = 1 + id%2, frames = 64 + id%191, rate 8000,
-# sample[c,i] = ((id*31 + i*17 + c*7) % 2001) - 1000 — all integer
-# arithmetic, so parity is bit-for-bit
-ORACLES["mm_decode_audio"] = """
-    WITH par AS (
-        SELECT doc_id,
-               1 + doc_id % 2 AS n_ch,
-               64 + doc_id % 191 AS frames
-        FROM documents
-    ),
-    ex AS (
-        SELECT doc_id, n_ch, frames,
-               unnest(generate_series(0, CAST(frames * n_ch - 1 AS BIGINT)))
-                   AS k
-        FROM par
-    ),
-    s AS (
-        SELECT doc_id, n_ch, frames,
-               ((doc_id * 31 + (k // n_ch) * 17 + (k % n_ch) * 7) % 2001)
-                   - 1000 AS v
-        FROM ex
-    )
-    SELECT doc_id,
-           CAST(8000 AS INTEGER) AS sample_rate,
-           CAST(n_ch AS INTEGER) AS n_channels,
-           CAST(frames AS INTEGER) AS n_frames,
-           CAST(frames * 1000000 // 8000 AS BIGINT) AS duration_us,
-           CAST(max(abs(v)) AS INTEGER) AS peak,
-           CAST(sum(abs(v)) AS BIGINT) AS sum_abs
-    FROM s
-    GROUP BY doc_id, n_ch, frames
-"""
-
-
-def mm_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL AVI round trip, exactly oracle-checked: deterministic
-    uncompressed-AVI synthesis from ``doc_id``
-    (operators/multimodal.py:synth_avi — the encoder composes the RIFF
-    tree with ``struct``, independent of the decoder) → the pure-stdlib
-    container parser (operators/videocodecs.py:decode_avi_frames)
-    sampling every 2nd frame → exact integer pixel statistics per
-    frame. DuckDB reproduces them analytically from the synthesis law,
-    so a decoder that mis-walks chunks, flips rows the wrong way, or
-    swaps BGR/RGB hash-mismatches."""
-    from sql_based_etl_spark.operators.multimodal import decode_video, synth_avi
-
-    avi = synth_avi(load(spark, sf_dir, "documents"))
-    return decode_video(avi, every_n=2).select(
-        "doc_id", "frame_idx", "width", "height", "fps_millis",
-        "pix_sum", "pix_max",
-    )
-
-
-QUERIES["mm_decode_video"] = mm_decode_video
-
-# the synthesis law (multimodal.py:synth_avi) replayed analytically:
-# frames = 2 + id%4, w = 8 + (id%3)*4, h = 4 + (id%2)*3, fps 10,
-# pixel[f,y,x,c] = (id*13 + f*7 + y*5 + x*3 + c*11) % 256; the query
-# samples every 2nd frame — all integer arithmetic, parity bit-for-bit
-ORACLES["mm_decode_video"] = """
-    WITH par AS (
-        SELECT doc_id,
-               2 + doc_id % 4 AS n,
-               8 + (doc_id % 3) * 4 AS w,
-               4 + (doc_id % 2) * 3 AS h
-        FROM documents
-    ),
-    fr AS (
-        SELECT doc_id, w, h,
-               unnest(generate_series(0, CAST(n - 1 AS BIGINT), 2)) AS f
-        FROM par
-    ),
-    px AS (
-        SELECT doc_id, w, h, f,
-               (doc_id * 13 + f * 7
-                + ((k // 3) // w) * 5 + ((k // 3) % w) * 3
-                + (k % 3) * 11) % 256 AS v
-        FROM (
-            SELECT doc_id, w, h, f,
-                   unnest(generate_series(0, CAST(w * h * 3 - 1 AS BIGINT)))
-                       AS k
-            FROM fr
-        )
-    )
-    SELECT doc_id,
-           CAST(f AS INTEGER) AS frame_idx,
-           CAST(w AS INTEGER) AS width,
-           CAST(h AS INTEGER) AS height,
-           CAST(10000 AS INTEGER) AS fps_millis,
-           CAST(sum(v) AS BIGINT) AS pix_sum,
-           CAST(max(v) AS INTEGER) AS pix_max
-    FROM px
-    GROUP BY doc_id, f, w, h
-"""
-
-
-def mm_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL FLAC round trip, exactly oracle-checked: the mm_decode_audio
-    PCM law losslessly compressed by the independent FLAC encoder
-    (operators/multimodal.py:synth_flac — stereo ids ride mid/side
-    decorrelation) → the pure-stdlib FLAC decoder
-    (operators/flaccodec.py: fixed/LPC subframes, Rice residuals,
-    CRC-8/16 + STREAMINFO MD5 verified) → the same exact integer
-    statistics. Identical oracle to mm_decode_audio: a codec that
-    reconstructs even one sample wrongly hash-mismatches (and fails the
-    container's own MD5 first)."""
-    from sql_based_etl_spark.operators.multimodal import decode_audio, synth_flac
-
-    flac = synth_flac(load(spark, sf_dir, "documents"))
-    return decode_audio(flac).select(
-        "doc_id", "sample_rate", "n_channels", "n_frames",
-        "duration_us", "peak", "sum_abs",
-    )
-
-
-QUERIES["mm_decode_flac"] = mm_decode_flac
-ORACLES["mm_decode_flac"] = ORACLES["mm_decode_audio"]
-
-
-def mm_audio_mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP3 frame-walk round trip, exactly oracle-checked: deterministic
-    MPEG-1 Layer III synthesis from ``doc_id``
-    (operators/multimodal.py:synth_mp3 — valid headers + ID3v2 prefix,
-    independent of the parser) → the pure-stdlib frame walker
-    (operators/audiocontainers.py:parse_mp3_frames) → exact integer
-    container facts. DuckDB replays the synthesis law analytically
-    (bitrate/rate index tables, the Layer III frame-length formula,
-    the per-frame padding parity) — a parser that mis-sizes one frame
-    or mis-skips the ID3 tag hash-mismatches."""
-    from sql_based_etl_spark.operators.multimodal import (
-        parse_audio_container,
-        synth_mp3,
-    )
-
-    mp3 = synth_mp3(load(spark, sf_dir, "documents"))
-    return parse_audio_container(mp3).select(
-        "doc_id", "channels", "sample_rate", "n_units",
-        F.col("payload_units").alias("frame_bytes"),
-        "duration_micros",
-        F.col("rate_metric").alias("kbps_sum"),
-    )
-
-
-QUERIES["mm_audio_mp3"] = mm_audio_mp3
-
-# the synthesis law replayed analytically: kbps = V1L3 table[1+id%14],
-# rate = [44100,48000,32000][id%3], n = 3+id%5, frame bytes =
-# n*(144000*kbps//rate) + padding parity sum, duration =
-# n*1152*1e6//rate — all integer arithmetic
-ORACLES["mm_audio_mp3"] = """
-    WITH par AS (
-        SELECT doc_id,
-               3 + doc_id % 5 AS n,
-               list_extract([32,40,48,56,64,80,96,112,128,160,192,224,256,320],
-                            CAST(1 + doc_id % 14 AS INT)) AS kbps,
-               list_extract([44100,48000,32000],
-                            CAST(1 + doc_id % 3 AS INT)) AS rate
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(2 - doc_id % 2 AS INTEGER) AS channels,
-           CAST(rate AS INTEGER) AS sample_rate,
-           CAST(n AS INTEGER) AS n_units,
-           CAST(n * (144000 * kbps // rate)
-                + n // 2 + (n % 2) * (doc_id % 2) AS BIGINT) AS frame_bytes,
-           CAST(n * 1152 * 1000000 // rate AS BIGINT) AS duration_micros,
-           CAST(n * kbps AS BIGINT) AS kbps_sum
-    FROM par
-"""
-
-
-def mm_audio_ogg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OGG/Vorbis page-walk round trip, exactly oracle-checked:
-    deterministic single-stream synthesis from ``doc_id``
-    (operators/multimodal.py:synth_ogg — identification header +
-    CRC-stamped pages, independent of the parser) → the page walker
-    (operators/audiocontainers.py:parse_ogg_vorbis, spec CRC-32
-    verified per page) → exact integer facts incl. the granule-derived
-    duration. DuckDB replays the law analytically."""
-    from sql_based_etl_spark.operators.multimodal import (
-        parse_audio_container,
-        synth_ogg,
-    )
-
-    ogg = synth_ogg(load(spark, sf_dir, "documents"))
-    return parse_audio_container(ogg).select(
-        "doc_id", "channels", "sample_rate",
-        F.col("n_units").alias("n_pages"),
-        F.col("payload_units").alias("audio_bytes"),
-        "duration_micros",
-        F.col("rate_metric").alias("bitrate_nominal"),
-    )
-
-
-QUERIES["mm_audio_ogg"] = mm_audio_ogg
-
-# law: channels = 1+id%2, rate = [8000,16000,44100][id%3], audio pages
-# na = 1+id%3 (total pages na+1), payload = sum(64+16k) = 64*na +
-# 16*na*(na-1)/2, last granule = na*(500+id*37), duration =
-# granule*1e6//rate, nominal bitrate = 64000+1000*(id%8)
-ORACLES["mm_audio_ogg"] = """
-    WITH par AS (
-        SELECT doc_id,
-               1 + doc_id % 3 AS na,
-               list_extract([8000,16000,44100],
-                            CAST(1 + doc_id % 3 AS INT)) AS rate
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(1 + doc_id % 2 AS INTEGER) AS channels,
-           CAST(rate AS INTEGER) AS sample_rate,
-           CAST(na + 1 AS INTEGER) AS n_pages,
-           CAST(64 * na + 16 * na * (na - 1) // 2 AS BIGINT) AS audio_bytes,
-           CAST(na * (500 + doc_id * 37) * 1000000 // rate AS BIGINT)
-               AS duration_micros,
-           CAST(64000 + 1000 * (doc_id % 8) AS BIGINT) AS bitrate_nominal
-    FROM par
-"""
-
-
 def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMAGE exact-duplicate detection via perceptual difference-hash,
     exactly oracle-checked: deterministic BMP synthesis keyed on

@@ -3258,7 +3258,13 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
     return _occ_commit(
         spark, path, snap,
         "WRITE" if snap[2] >= 0 else "CREATE TABLE AS SELECT",
-        {"mode": mode.capitalize()},
+        {"mode": mode.capitalize()}, {
+            # staged adds always carry stats
+            "numFiles": str(len(new_adds)),
+            "numOutputRows": str(sum(json.loads(a["stats"])["numRecords"]
+                                     for a in new_adds)),
+            "numOutputBytes": str(sum(a["size"] for a in new_adds)),
+        },
         removes=overwrite or (), adds=new_adds,
         metadata=meta if emit_meta else None, domain=clustering,
         txn=(txn_app_id, txn_version) if txn_app_id is not None else None,
@@ -4473,6 +4479,11 @@ def compact_delta(spark: SparkSession, path: str,
             **({"auto": "true"} if auto else {}),
             **({"zOrderBy": json.dumps(list(cluster_by))}
                if cluster_by else {}),
+        }, {
+            "numRemovedFiles": str(len(live)),
+            "numAddedFiles": str(len(new_adds)),
+            "numRemovedBytes": str(sum(a["size"] for a in live.values())),
+            "numAddedBytes": str(sum(a["size"] for a in new_adds)),
         },
         removes=live.values(),
         adds=[{**a, "dataChange": False} for a in new_adds],

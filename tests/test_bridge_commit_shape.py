@@ -36,6 +36,34 @@ def _kinds(actions: list[dict]) -> list[str]:
     return out
 
 
+# byte counts depend on the parquet writer, so EXPECTED names them BYTES
+BYTES = "<bytes>"
+
+
+def _checked_metrics(metrics: dict | None, actions: list[dict]) -> dict | None:
+    """``metrics`` after checking every file, row and byte count it
+    holds against the commit's own add and remove actions; byte counts
+    come back as :data:`BYTES`."""
+    if metrics is None:
+        return None
+    adds = [a["add"] for a in actions if "add" in a]
+    removes = [a["remove"] for a in actions if "remove" in a]
+    derived = {
+        "numFiles": len(adds),
+        "numAddedFiles": len(adds),
+        "numRemovedFiles": len(removes),
+        "numOutputRows": sum(json.loads(a["stats"])["numRecords"]
+                             for a in adds if "stats" in a),
+        "numOutputBytes": sum(a["size"] for a in adds),
+        "numAddedBytes": sum(a["size"] for a in adds),
+        "numRemovedBytes": sum(a["size"] for a in removes),
+    }
+    for k in derived.keys() & metrics.keys():
+        assert metrics[k] == str(derived[k]), (k, metrics, derived)
+    return {k: BYTES if k.endswith("Bytes") else v
+            for k, v in metrics.items()}
+
+
 def _commit(table: str, version: int) -> dict:
     log = os.path.join(table, "_delta_log")
     with open(os.path.join(log, f"{version:020d}.json")) as fh:
@@ -44,7 +72,7 @@ def _commit(table: str, version: int) -> dict:
     return {
         "kinds": _kinds(actions),
         "operation": ci["operation"],
-        "metrics": ci.get("operationMetrics"),
+        "metrics": _checked_metrics(ci.get("operationMetrics"), actions),
         "crc": os.path.exists(os.path.join(log, f"{version:020d}.crc")),
         "checkpoint": os.path.exists(
             os.path.join(log, f"{version:020d}.checkpoint.parquet")),
@@ -124,15 +152,24 @@ MERGE_METRICS = ["numTargetRowsUpdated", "numTargetRowsInserted",
                  "numTargetFilesAdded"]
 DELETE_METRICS = ["numDeletedRows", "numRemovedFiles", "numAddedFiles",
                   "numDeletionVectorsAdded"]
+OPTIMIZE_METRICS = ["numRemovedFiles", "numAddedFiles", "numRemovedBytes",
+                    "numAddedBytes"]
+
+
+def _write(files: int, rows: int) -> dict:
+    return {"numFiles": str(files), "numOutputRows": str(rows),
+            "numOutputBytes": BYTES}
+
 
 # version, operation, action kinds, operationMetrics, .crc, checkpoint
 EXPECTED = [
     (0, "CREATE TABLE AS SELECT",
      ["commitInfo", "protocol", "metaData",
-      "domainMetadata/delta.clustering", RT, "add*4"], None, True, False),
-    (1, "WRITE", ["commitInfo", "txn", RT, "add"], None, True, False),
+      "domainMetadata/delta.clustering", RT, "add*4"], _write(4, 40),
+     True, False),
+    (1, "WRITE", ["commitInfo", "txn", RT, "add"], _write(1, 1), True, False),
     (2, "WRITE", ["commitInfo", "metaData", RT, "remove*5", "add*4"],
-     None, True, False),
+     _write(4, 40), True, False),
     (3, "MERGE",
      ["commitInfo", "metaData", RT, "remove", "add", "cdc*3"],
      dict(zip(MERGE_METRICS, ["1", "1", "0", "1", "1"])), True, False),
@@ -144,8 +181,10 @@ EXPECTED = [
     (6, "UPDATE", ["commitInfo", RT, "remove", "add", "cdc*2"],
      {"numUpdatedRows": "1", "numRemovedFiles": "1", "numAddedFiles": "1"},
      True, False),
-    (7, "REORG", ["commitInfo", RT, "remove*2", "add"], None, True, False),
-    (8, "OPTIMIZE", ["commitInfo", RT, "remove*3", "add"], None, True, False),
+    (7, "REORG", ["commitInfo", RT, "remove*2", "add"],
+     dict(zip(OPTIMIZE_METRICS, ["2", "1", BYTES, BYTES])), True, False),
+    (8, "OPTIMIZE", ["commitInfo", RT, "remove*3", "add"],
+     dict(zip(OPTIMIZE_METRICS, ["3", "1", BYTES, BYTES])), True, False),
     (9, "RESTORE", ["commitInfo", "remove", "add*4"],
      {"numRestoredFiles": "4", "numRemovedFiles": "1"}, True, False),
     (10, "VACUUM END", ["commitInfo"], {"numDeletedFiles": "18"},

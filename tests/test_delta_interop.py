@@ -2190,7 +2190,8 @@ def test_dv_bitmap_container_boundary_4097():
 def test_checkpoint_carried_deletion_vector(spark, tmp_path):
     """An externally-written checkpoint whose add actions carry
     deletionVector descriptors replays with the DV applied
-    (delta_interop.py:_collect_checkpoint_df dv_col path)."""
+    (delta_interop.py:_checkpoint_actions, which keeps the
+    deletionVector field among _CKPT_ADD_FIELDS)."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,

@@ -1,14 +1,14 @@
-"""Pure-stdlib image codecs (operators/imagecodecs.py): hand-built
-fixture images decode BIT-EXACTLY (geometry + pixel digest) through the
-same Arrow mapInPandas path mm_decode_geometry grades
-(multimodal.decode_image). The encoders here are written forward from
-the public format specs, independently of the decoder's logic."""
+"""The BMP image codec (operators/imagecodecs.py): hand-built fixture
+images decode BIT-EXACTLY (geometry + pixel digest) through the same
+Arrow mapInPandas path mm_decode_geometry grades
+(multimodal.decode_image), and every other format refuses loudly. The
+encoder here is written forward from the public format spec,
+independently of the decoder's logic."""
 
 from __future__ import annotations
 
 import hashlib
 import struct
-import zlib
 
 import numpy as np
 import pytest
@@ -25,17 +25,7 @@ def _rng_pixels(h: int, w: int, c: int, seed: int = 7) -> np.ndarray:
     return rng.randint(0, 256, size=(h, w, c), dtype=np.uint8).reshape(h, w, c)
 
 
-# --- test-side encoders (format specs applied forward) ------------------
-
-
-def encode_ppm(px: np.ndarray, ascii_form: bool = False) -> bytes:
-    h, w, c = px.shape
-    magic = (b"P3" if ascii_form else b"P6") if c == 3 else (
-        b"P2" if ascii_form else b"P5")
-    head = magic + b"\n# comment line\n" + f"{w} {h}\n255\n".encode()
-    if ascii_form:
-        return head + b" ".join(str(v).encode() for v in px.reshape(-1))
-    return head + px.tobytes()
+# --- test-side encoder (format spec applied forward) ----------------
 
 
 def encode_bmp(px: np.ndarray) -> bytes:
@@ -56,564 +46,6 @@ def encode_bmp(px: np.ndarray) -> bytes:
     return filehdr + infohdr + bytes(rows)
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-
-def encode_png(px: np.ndarray, filters: list[int] | None = None) -> bytes:
-    """Forward-filter each scanline with the given filter type (cycled),
-    per the PNG spec's filter definitions."""
-    h, w, c = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    flat = px.reshape(h, w * c).astype(np.int32)
-    filters = filters or [0]
-    out = bytearray()
-    prev = np.zeros(w * c, dtype=np.int32)
-    for r in range(h):
-        f = filters[r % len(filters)]
-        line = flat[r]
-        filt = np.zeros(w * c, dtype=np.int32)
-        for i in range(w * c):
-            a = int(line[i - c]) if i >= c else 0
-            b = int(prev[i])
-            cc = int(prev[i - c]) if i >= c else 0
-            pred = {0: 0, 1: a, 2: b, 3: (a + b) >> 1,
-                    4: _paeth(a, b, cc)}[f]
-            filt[i] = (int(line[i]) - pred) & 0xFF
-        out += bytes([f]) + filt.astype(np.uint8).tobytes()
-        prev = line
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(out)))
-            + chunk(b"IEND", b""))
-
-
-_T_ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
-
-
-def _png_filter_stream(px: np.ndarray, filters: list[int]) -> bytes:
-    """Forward-filter one (sub-)image; reuses encode_png's per-line math."""
-    h, w, c = px.shape
-    flat = px.reshape(h, w * c).astype(np.int32)
-    out = bytearray()
-    prev = np.zeros(w * c, dtype=np.int32)
-    for r in range(h):
-        f = filters[r % len(filters)]
-        line = flat[r]
-        filt = np.zeros(w * c, dtype=np.int32)
-        for i in range(w * c):
-            a = int(line[i - c]) if i >= c else 0
-            b = int(prev[i])
-            cc = int(prev[i - c]) if i >= c else 0
-            pred = {0: 0, 1: a, 2: b, 3: (a + b) >> 1,
-                    4: _paeth(a, b, cc)}[f]
-            filt[i] = (int(line[i]) - pred) & 0xFF
-        out += bytes([f]) + filt.astype(np.uint8).tobytes()
-        prev = line
-    return bytes(out)
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    return (struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data)))
-
-
-def encode_png_adam7(px: np.ndarray, filters: list[int] | None = None) -> bytes:
-    """Adam7-interlaced PNG: seven independently filtered sub-images."""
-    h, w, c = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    filters = filters or [0]
-    stream = bytearray()
-    for x0, y0, dx, dy in _T_ADAM7:
-        sub = px[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        stream += _png_filter_stream(sub, filters)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 1)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(bytes(stream)))
-            + _png_chunk(b"IEND", b""))
-
-
-def encode_png_palette(idx: np.ndarray, palette: np.ndarray,
-                       trns: bytes | None = None) -> bytes:
-    h, w = idx.shape
-    stream = _png_filter_stream(idx[:, :, None], [0, 1, 2, 3, 4])
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-    out += _png_chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-    if trns is not None:
-        out += _png_chunk(b"tRNS", trns)
-    return (out + _png_chunk(b"IDAT", zlib.compress(bytes(stream)))
-            + _png_chunk(b"IEND", b""))
-
-
-# --- decoder unit tests --------------------------------------------------
-
-
-# --- test-side baseline JPEG encoder (ITU-T T.81 applied forward) -------
-#
-# Written from the spec's encoder procedures (F.1): forward 8x8 DCT,
-# quantization, zigzag, DC-difference + run/size AC Huffman coding with
-# byte stuffing — independent of the decoder's code. Huffman tables are
-# MINIMAL VALID tables (12 DC symbols at length 4; all 162 standard AC
-# run/size symbols at length 8), not the Annex K defaults: any table
-# carried in the file's own DHT is legal, and short fixed lengths keep
-# the encoder obviously correct. Quant table of all-ones makes the
-# round trip near-lossless (DCT rounding only), so the decoder is
-# tested to tight pixel tolerances rather than "looks plausible".
-
-_JPEG_ZZ = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-_JPEG_DC_BITS = [0, 0, 0, 0, 17] + [0] * 11   # categories 0-16 at length 5
-_JPEG_DC_VALS = bytes(range(17))
-_JPEG_AC_VALS = bytes([0x00, 0xF0] + [(r << 4) | s
-                                      for r in range(16)
-                                      for s in range(1, 15)]
-                      + [r << 4 for r in range(1, 15)])  # EOBn (progressive)
-_JPEG_AC_BITS = [0] * 16
-_JPEG_AC_BITS[7] = len(_JPEG_AC_VALS)  # all symbols at code length 8
-
-
-def _jpeg_codes(bits, vals):
-    codes, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[vals[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-class _JpegBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc, self.n = 0, 0
-
-    def align(self) -> None:
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)  # pad with 1s
-
-
-def _jpeg_fdct_block(block: np.ndarray, level: float = 128.0) -> np.ndarray:
-    c = np.array([
-        [(np.sqrt(1 / 8) if k == 0 else np.sqrt(2 / 8))
-         * np.cos((2 * n + 1) * k * np.pi / 16) for n in range(8)]
-        for k in range(8)
-    ])
-    return c @ (block.astype(np.float64) - level) @ c.T
-
-
-def _jpeg_pad(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
-    h, w = plane.shape
-    return np.pad(plane, ((0, (-h) % mh), (0, (-w) % mw)), mode="edge")
-
-
-def _jpeg_encode_block(zz, pred, dc_codes, ac_codes, bw) -> int:
-    diff = int(zz[0]) - pred
-    t = int(diff if diff >= 0 else -diff).bit_length()
-    length, code = dc_codes[t]
-    bw.put(code, length)
-    if t:
-        bw.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    run = 0
-    last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
-    for k in range(1, last_nz + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            length, code = ac_codes[0xF0]
-            bw.put(code, length)
-            run -= 16
-        s = int(v if v >= 0 else -v).bit_length()
-        length, code = ac_codes[(run << 4) | s]
-        bw.put(code, length)
-        bw.put(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        length, code = ac_codes[0x00]
-        bw.put(code, length)
-    return int(zz[0])
-
-
-def encode_jpeg(px: np.ndarray, subsample: bool = False,
-                quant: int = 1, restart_interval: int = 0,
-                prec: int = 8) -> bytes:
-    h, w, c = px.shape
-    if c == 3:  # JFIF RGB -> YCbCr (chroma centered at 2^(prec-1))
-        center = float(1 << (prec - 1))
-        r, g, b = (px[:, :, i].astype(np.float64) for i in range(3))
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + center,
-            0.5 * r - 0.418688 * g - 0.081312 * b + center,
-        ]
-    else:
-        planes = [px[:, :, 0].astype(np.float64)]
-        subsample = False
-    if subsample:
-        samp = [(2, 2), (1, 1), (1, 1)]
-        ev = [_jpeg_pad(p, 2, 2) for p in planes]
-        planes = [planes[0]] + [
-            (p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2]) / 4
-            for p in ev[1:]
-        ]
-    else:
-        samp = [(1, 1)] * len(planes)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    top = (1 << prec) - 1
-    padded = [_jpeg_pad(np.clip(np.round(p), 0, top),
-                        8 * mcuy * vs, 8 * mcux * hs)
-              for p, (hs, vs) in zip(planes, samp)]
-
-    q = np.full(64, quant, dtype=np.int64)
-    dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _JpegBitWriter()
-    chunks = []
-    preds = [0] * len(planes)
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                bw.align()
-                chunks.append(bytes(bw.out))
-                chunks.append(bytes([
-                    0xFF, 0xD0 + ((n_mcu // restart_interval - 1) % 8)]))
-                bw = _JpegBitWriter()
-                preds = [0] * len(planes)
-            for ci, (plane, (hs, vs)) in enumerate(zip(padded, samp)):
-                for by in range(vs):
-                    for bx in range(hs):
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        f = _jpeg_fdct_block(plane[y0:y0 + 8, x0:x0 + 8],
-                                             level=float(1 << (prec - 1)))
-                        zz = np.round(
-                            f.reshape(-1)[_JPEG_ZZ] / q).astype(np.int64)
-                        preds[ci] = _jpeg_encode_block(
-                            zz, preds[ci], dc_codes, ac_codes, bw)
-            n_mcu += 1
-    bw.align()
-    chunks.append(bytes(bw.out))
-    entropy = b"".join(chunks)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(int(v) for v in q[_np_argsort_identity()]))
-    sof = struct.pack(">BHHB", prec, h, w, len(planes))
-    for i, (hs, vs) in enumerate(samp):
-        sof += bytes([i + 1, (hs << 4) | vs, 0])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + _JPEG_DC_VALS)
-    out += seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS) + _JPEG_AC_VALS)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([len(planes)])
-    for i in range(len(planes)):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _np_argsort_identity():
-    # the DQT payload is in ZIGZAG order; an all-equal table is its own
-    # zigzag, so identity order is correct for the uniform tables used here
-    return np.arange(64)
-
-
-# --- test-side PROGRESSIVE JPEG encoder (T.81 annex G applied forward) ---
-#
-# Emits SOF2 with: one interleaved DC-first scan at Al=1 (point
-# transform — arithmetic shift per G.1.2.1), per-component AC-first
-# scans of the 1..63 band at Al=1 (sign-magnitude point transform per
-# G.1.2.2, EOB runs accumulated across blocks), a DC refinement scan
-# (raw bit 0 per block), and per-component AC refinement scans
-# (newly-significant ±1 symbols with interleaved correction bits and
-# EOB runs carrying buffered corrections) — every scan kind the
-# progressive decoder implements.
-
-
-def _jpeg_quantized_blocks(px, subsample, quant, prec: int = 8):
-    """Quantized zigzag coefficient grids per component, FULL MCU-padded
-    geometry (bhf x bwf blocks) plus the real block counts."""
-    h, w, c = px.shape
-    center = float(1 << (prec - 1))
-    if c == 3:
-        r, g, b = (px[:, :, i].astype(np.float64) for i in range(3))
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + center,
-            0.5 * r - 0.418688 * g - 0.081312 * b + center,
-        ]
-    else:
-        planes = [px[:, :, 0].astype(np.float64)]
-        subsample = False
-    if subsample:
-        samp = [(2, 2), (1, 1), (1, 1)]
-        ev = [_jpeg_pad(p, 2, 2) for p in planes]
-        planes = [planes[0]] + [
-            (p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2]) / 4
-            for p in ev[1:]
-        ]
-    else:
-        samp = [(1, 1)] * len(planes)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    q = np.full(64, quant, dtype=np.int64)
-    out = []
-    for p, (hs, vs) in zip(planes, samp):
-        plane = _jpeg_pad(np.clip(np.round(p), 0, (1 << prec) - 1),
-                          8 * mcuy * vs, 8 * mcux * hs)
-        bhf, bwf = mcuy * vs, mcux * hs
-        bwr = -(-(-(-w * hs // hmax)) // 8)
-        bhr = -(-(-(-h * vs // vmax)) // 8)
-        coefs = np.zeros((bhf * bwf, 64), dtype=np.int64)
-        for by in range(bhf):
-            for bx in range(bwf):
-                f = _jpeg_fdct_block(plane[by * 8:by * 8 + 8,
-                                           bx * 8:bx * 8 + 8],
-                                     level=center)
-                coefs[by * bwf + bx] = np.round(
-                    f.reshape(-1)[_JPEG_ZZ] / q)
-        out.append((coefs, hs, vs, bwf, bhf, bwr, bhr))
-    return out, samp, hmax, vmax, mcux, mcuy, q
-
-
-def _emit_eobrun(bw, ac_codes, eobrun, bits):
-    if eobrun <= 0:
-        return
-    nbits = eobrun.bit_length() - 1
-    length, code = ac_codes[nbits << 4]
-    bw.put(code, length)
-    if nbits:
-        bw.put(eobrun - (1 << nbits), nbits)
-    for b in bits:
-        bw.put(b, 1)
-
-
-def encode_jpeg_progressive(px: np.ndarray, subsample: bool = False,
-                            quant: int = 1, prec: int = 8) -> bytes:
-    h, w, c = px.shape
-    comps, samp, hmax, vmax, mcux, mcuy, q = _jpeg_quantized_blocks(
-        px, subsample, quant, prec)
-    dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    def sos_header(comp_ids, ss, se, ah, al):
-        p = bytes([len(comp_ids)])
-        for i in comp_ids:
-            p += bytes([i + 1, 0x00])
-        return seg(0xDA, p + bytes([ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(int(v) for v in q))
-    sof = struct.pack(">BHHB", prec, h, w, len(comps))
-    for i, (hs, vs) in enumerate(samp):
-        sof += bytes([i + 1, (hs << 4) | vs, 0])
-    out += seg(0xC2, sof)  # SOF2: progressive
-    out += seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + _JPEG_DC_VALS)
-    out += seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS) + _JPEG_AC_VALS)
-
-    # --- scan 1: DC first, all components interleaved, Al=1 ----------
-    out += sos_header(list(range(len(comps))), 0, 0, 0, 1)
-    bw = _JpegBitWriter()
-    preds = [0] * len(comps)
-    if len(comps) == 1:
-        coefs, hs, vs, bwf, bhf, bwr, bhr = comps[0]
-        for by in range(bhr):
-            for bx in range(bwr):
-                v = int(coefs[by * bwf + bx][0]) >> 1  # arithmetic
-                diff = v - preds[0]
-                preds[0] = v
-                t = int(abs(diff)).bit_length()
-                length, code = dc_codes[t]
-                bw.put(code, length)
-                if t:
-                    bw.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    else:
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, (coefs, hs, vs, bwf, bhf, _r, _h) in enumerate(comps):
-                    for by in range(vs):
-                        for bx in range(hs):
-                            v = int(coefs[(my * vs + by) * bwf
-                                          + (mx * hs + bx)][0]) >> 1
-                            diff = v - preds[ci]
-                            preds[ci] = v
-                            t = int(abs(diff)).bit_length()
-                            length, code = dc_codes[t]
-                            bw.put(code, length)
-                            if t:
-                                bw.put(diff if diff >= 0
-                                       else diff + (1 << t) - 1, t)
-    bw.align()
-    out += bytes(bw.out)
-
-    # --- AC first scans: per component, band 1..63, Al=1 --------------
-    for ci, (coefs, hs, vs, bwf, bhf, bwr, bhr) in enumerate(comps):
-        out += sos_header([ci], 1, 63, 0, 1)
-        bw = _JpegBitWriter()
-        eobrun = 0
-        for by in range(bhr):
-            for bx in range(bwr):
-                block = coefs[by * bwf + bx]
-                vals = [int(np.sign(block[k])) * (abs(int(block[k])) >> 1)
-                        for k in range(64)]
-                last = max((k for k in range(1, 64) if vals[k]), default=0)
-                if last == 0:
-                    eobrun += 1
-                    if eobrun == 4:  # exercise multi-block EOB runs
-                        _emit_eobrun(bw, ac_codes, eobrun, [])
-                        eobrun = 0
-                    continue
-                _emit_eobrun(bw, ac_codes, eobrun, [])
-                eobrun = 0
-                run = 0
-                for k in range(1, last + 1):
-                    v = vals[k]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        length, code = ac_codes[0xF0]
-                        bw.put(code, length)
-                        run -= 16
-                    s = int(abs(v)).bit_length()
-                    length, code = ac_codes[(run << 4) | s]
-                    bw.put(code, length)
-                    bw.put(v if v >= 0 else v + (1 << s) - 1, s)
-                    run = 0
-                if last < 63:
-                    eobrun = 1
-        _emit_eobrun(bw, ac_codes, eobrun, [])
-        bw.align()
-        out += bytes(bw.out)
-
-    # --- DC refinement: all components, Ah=1 Al=0 (one raw bit) ------
-    out += sos_header(list(range(len(comps))), 0, 0, 1, 0)
-    bw = _JpegBitWriter()
-    if len(comps) == 1:
-        coefs, hs, vs, bwf, bhf, bwr, bhr = comps[0]
-        for by in range(bhr):
-            for bx in range(bwr):
-                bw.put(int(coefs[by * bwf + bx][0]) & 1, 1)
-    else:
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for coefs, hs, vs, bwf, bhf, _r, _h in comps:
-                    for by in range(vs):
-                        for bx in range(hs):
-                            bw.put(int(coefs[(my * vs + by) * bwf
-                                             + (mx * hs + bx)][0]) & 1, 1)
-    bw.align()
-    out += bytes(bw.out)
-
-    # --- AC refinement scans: per component, Ah=1 Al=0 ----------------
-    for ci, (coefs, hs, vs, bwf, bhf, bwr, bhr) in enumerate(comps):
-        out += sos_header([ci], 1, 63, 1, 0)
-        bw = _JpegBitWriter()
-        eobrun, be = 0, []
-        for by in range(bhr):
-            for bx in range(bwr):
-                block = coefs[by * bwf + bx]
-                absv = [abs(int(block[k])) for k in range(64)]
-                eob = 0
-                for k in range(1, 64):
-                    if absv[k] == 1:
-                        eob = k
-                run, br = 0, []
-                for k in range(1, 64):
-                    t = absv[k]
-                    if t == 0:
-                        run += 1
-                        continue
-                    while run > 15 and k <= eob:
-                        _emit_eobrun(bw, ac_codes, eobrun, be)
-                        eobrun, be = 0, []
-                        length, code = ac_codes[0xF0]
-                        bw.put(code, length)
-                        run -= 16
-                        for b in br:
-                            bw.put(b, 1)
-                        br = []
-                    if t > 1:  # history: one correction bit (bit Al)
-                        br.append(t & 1)
-                        continue
-                    _emit_eobrun(bw, ac_codes, eobrun, be)
-                    eobrun, be = 0, []
-                    length, code = ac_codes[(run << 4) | 1]
-                    bw.put(code, length)
-                    bw.put(1 if block[k] > 0 else 0, 1)
-                    run = 0
-                    for b in br:
-                        bw.put(b, 1)
-                    br = []
-                if run > 0 or br:
-                    eobrun += 1
-                    be.extend(br)
-                    if eobrun == 4:
-                        _emit_eobrun(bw, ac_codes, eobrun, be)
-                        eobrun, be = 0, []
-        _emit_eobrun(bw, ac_codes, eobrun, be)
-        bw.align()
-        out += bytes(bw.out)
-
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def test_netpbm_binary_and_ascii_bit_exact():
-    px = _rng_pixels(5, 7, 3)
-    for ascii_form in (False, True):
-        fmt, got = decode_image_bytes(encode_ppm(px, ascii_form))
-        assert fmt == "ppm"
-        assert np.array_equal(got, px)
-    gray = _rng_pixels(4, 6, 1)
-    for ascii_form in (False, True):
-        fmt, got = decode_image_bytes(encode_ppm(gray, ascii_form))
-        assert fmt == "pgm"
-        assert np.array_equal(got, gray)
-
-
 def test_bmp_24_and_32_bit_exact():
     for c in (3, 4):
         # w=5 with c=3 exercises the 4-byte row padding (stride 16 != 15)
@@ -623,331 +55,18 @@ def test_bmp_24_and_32_bit_exact():
         assert np.array_equal(got, px)
 
 
-def test_png_all_filters_and_color_types_bit_exact():
-    # every filter type on every supported color type, incl. mixed rows
-    for c in (1, 2, 3, 4):
-        px = _rng_pixels(6, 5, c, seed=c)
-        for filters in ([0], [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-            fmt, got = decode_image_bytes(encode_png(px, filters))
-            assert fmt == "png"
-            assert np.array_equal(got, px), (c, filters)
-
-
-# --- test-side GIF encoder (GIF89a spec applied forward) ----------------
-
-
-def _gif_lzw_encode(indices, min_code: int) -> bytes:
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    codes: list[tuple[int, int]] = []
-    table = {(i,): i for i in range(clear)}
-    next_code = eoi + 1
-    width = min_code + 1
-    codes.append((clear, width))
-    buf: tuple[int, ...] = ()
-    for px in indices:
-        cand = buf + (int(px),)
-        if cand in table:
-            buf = cand
-            continue
-        codes.append((table[buf], width))
-        table[cand] = next_code
-        next_code += 1
-        # width grows one code LATER than the table crosses 2^width —
-        # the decoder adds its mirror entry only after reading the next
-        # code, so it bumps at exactly that point
-        if next_code == (1 << width) + 1 and width < 12:
-            width += 1
-        buf = (int(px),)
-    if buf:
-        codes.append((table[buf], width))
-    codes.append((eoi, width))
-    acc = nbits = 0
-    out = bytearray()
-    for value, w_ in codes:
-        acc |= value << nbits
-        nbits += w_
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def encode_gif(idx: np.ndarray, palette: np.ndarray,
-               interlace: bool = False, transparent: int | None = None,
-               local_ct: bool = False) -> bytes:
-    h, w = idx.shape
-    k = 0
-    while (2 << k) < len(palette):
-        k += 1
-    pal = np.zeros((2 << k, 3), dtype=np.uint8)
-    pal[:len(palette)] = palette
-    min_code = max(2, k + 1)
-    out = bytearray(b"GIF89a")
-    gct_flag = 0x00 if local_ct else (0x80 | k)
-    out += struct.pack("<HHBBB", w, h, gct_flag, 0, 0)
-    if not local_ct:
-        out += pal.tobytes()
-    if transparent is not None:
-        out += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
-    iflags = (0x40 if interlace else 0) | ((0x80 | k) if local_ct else 0)
-    out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, iflags)
-    if local_ct:
-        out += pal.tobytes()
-    rows = idx
-    if interlace:
-        order = ([*range(0, h, 8)] + [*range(4, h, 8)]
-                 + [*range(2, h, 4)] + [*range(1, h, 2)])
-        rows = idx[np.array(order)]
-    out += bytes([min_code])
-    lzw = _gif_lzw_encode(rows.reshape(-1), min_code)
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i:i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += bytes([0, 0x3B])
-    return bytes(out)
-
-
-def test_gif_round_trips_exact():
-    """GIF is lossless indexed color: global/local color tables,
-    interlaced row order, and GIF89a transparency all round-trip
-    byte-exactly through the LZW decoder."""
-    rng = np.random.RandomState(3)
-    palette = rng.randint(0, 256, size=(7, 3)).astype(np.uint8)
-    idx = rng.randint(0, 7, size=(13, 9)).astype(np.uint8)
-    for interlace in (False, True):
-        for local_ct in (False, True):
-            fmt, got = decode_image_bytes(
-                encode_gif(idx, palette, interlace=interlace,
-                           local_ct=local_ct))
-            assert fmt == "gif"
-            assert np.array_equal(got, palette[idx]), (interlace, local_ct)
-    # transparency: alpha 0 exactly at the transparent index
-    fmt, got = decode_image_bytes(encode_gif(idx, palette, transparent=3))
-    assert got.shape == (13, 9, 4)
-    assert np.array_equal(got[:, :, :3], palette[idx])
-    assert np.array_equal(got[:, :, 3] == 0, idx == 3)
-    # a 200-color image exercises width growth past 8->9 bits
-    big_pal = rng.randint(0, 256, size=(200, 3)).astype(np.uint8)
-    big_idx = rng.randint(0, 200, size=(40, 37)).astype(np.uint8)
-    fmt, got = decode_image_bytes(encode_gif(big_idx, big_pal))
-    assert np.array_equal(got, big_pal[big_idx])
-
-
-def test_gif_fails_loud():
-    rng = np.random.RandomState(4)
-    palette = rng.randint(0, 256, size=(4, 3)).astype(np.uint8)
-    idx = rng.randint(0, 4, size=(6, 6)).astype(np.uint8)
-    good = encode_gif(idx, palette)
-    with pytest.raises(ImageDecodeError):
-        decode_image_bytes(good[:20])  # truncated before image data
-    with pytest.raises(ImageDecodeError, match="LZW"):
-        bad = bytearray(good)
-        bad[-8] ^= 0xFF  # corrupt a byte inside the LZW stream
-        decode_image_bytes(bytes(bad))
-
-
-def test_jpeg_444_round_trip_near_lossless():
-    """4:4:4 RGB with all-ones quant tables: the only loss is DCT
-    coefficient rounding, so pixels come back within a tight bound —
-    and dimensions that are NOT block multiples exercise the crop."""
-    px = _rng_pixels(24, 17, 3, seed=11)
-    fmt, got = decode_image_bytes(encode_jpeg(px))
-    assert fmt == "jpeg"
-    assert got.shape == (24, 17, 3)
-    err = np.abs(got.astype(np.int32) - px.astype(np.int32))
-    # fdct round + idct round + RGB<->YCbCr float rounding: tiny bound
-    assert err.max() <= 6, err.max()
-    assert err.mean() < 1.5
-
-
-def test_jpeg_flat_grayscale_is_exact():
-    """A flat single-component image is DC-only: quant 1 dequantizes to
-    exactly 8*(v-128), the IDCT returns the constant exactly — byte-
-    for-byte equality, no tolerance."""
-    for v in (0, 7, 128, 130, 255):
-        px = np.full((16, 24, 1), v, dtype=np.uint8)
-        fmt, got = decode_image_bytes(encode_jpeg(px))
-        assert fmt == "jpeg"
-        assert got.shape == (16, 24, 1)
-        assert np.array_equal(got, px), v
-
-
-def test_jpeg_420_subsampled_constant_color_exact():
-    """4:2:0 chroma subsampling: a constant-color image survives the
-    downsample/upsample exactly, and the decoder reassembles the
-    2x2-sampled MCU geometry (Y 16x16, chroma 8x8) correctly even at
-    non-MCU-multiple dimensions."""
-    px = np.zeros((20, 13, 3), dtype=np.uint8)
-    px[:, :] = (200, 80, 40)
-    fmt, got = decode_image_bytes(encode_jpeg(px, subsample=True))
-    assert fmt == "jpeg"
-    assert got.shape == (20, 13, 3)
-    err = np.abs(got.astype(np.int32) - px.astype(np.int32))
-    assert err.max() <= 2, err.max()
-    # gradient + subsampling: luma detail survives, bounded chroma blur
-    grad = np.zeros((20, 13, 3), dtype=np.uint8)
-    grad[:, :, 0] = np.linspace(0, 255, 13, dtype=np.uint8)[None, :]
-    grad[:, :, 1] = np.linspace(255, 0, 20, dtype=np.uint8)[:, None]
-    grad[:, :, 2] = 90
-    _, got2 = decode_image_bytes(encode_jpeg(grad, subsample=True))
-    err2 = np.abs(got2.astype(np.int32) - grad.astype(np.int32))
-    assert err2.mean() < 12  # chroma halved: bounded, not exact
-
-
-def test_jpeg_restart_markers_and_quant_scaling():
-    """DRI/RSTn: a multi-MCU image encoded with restart_interval=2
-    decodes identically to the same image without restarts (predictor
-    resets + byte realignment round-trip); a coarser quant table
-    degrades smoothly instead of corrupting."""
-    px = _rng_pixels(16, 40, 3, seed=13)
-    plain = decode_image_bytes(encode_jpeg(px))[1]
-    rst = decode_image_bytes(encode_jpeg(px, restart_interval=2))[1]
-    assert np.array_equal(plain, rst)
-    coarse = decode_image_bytes(encode_jpeg(px, quant=16))[1]
-    err = np.abs(coarse.astype(np.int32) - px.astype(np.int32))
-    assert err.mean() < 16  # quantization loss, not corruption
-
-
-def test_jpeg_progressive_444_matches_sequential():
-    """Progressive (SOF2) decode: DC-first at Al=1 + AC spectral band
-    at Al=1 + DC refinement + AC refinement reconstruct the EXACT same
-    quantized coefficients as the sequential encoding of the same
-    image, so the decoded pixels are byte-identical to the baseline
-    decode — the strongest cross-check available without an external
-    reference codec."""
-    px = _rng_pixels(24, 17, 3, seed=21)
-    seq = decode_image_bytes(encode_jpeg(px))[1]
-    fmt, prog = decode_image_bytes(encode_jpeg_progressive(px))
-    assert fmt == "jpeg"
-    assert prog.shape == (24, 17, 3)
-    assert np.array_equal(prog, seq)
-
-
-def test_jpeg_progressive_grayscale_and_subsampled():
-    gray = _rng_pixels(19, 23, 1, seed=22)
-    seq = decode_image_bytes(encode_jpeg(gray))[1]
-    prog = decode_image_bytes(encode_jpeg_progressive(gray))[1]
-    assert np.array_equal(prog, seq)
-    # 4:2:0: non-interleaved AC scans cover only the REAL chroma blocks
-    # while DC scans walk the padded MCU grid — the geometry split
-    color = np.zeros((20, 13, 3), dtype=np.uint8)
-    color[:, :, 0] = np.linspace(10, 240, 13, dtype=np.uint8)[None, :]
-    color[:, :, 1] = np.linspace(240, 10, 20, dtype=np.uint8)[:, None]
-    color[:, :, 2] = 77
-    seq = decode_image_bytes(encode_jpeg(color, subsample=True))[1]
-    prog = decode_image_bytes(
-        encode_jpeg_progressive(color, subsample=True))[1]
-    assert np.array_equal(prog, seq)
-
-
-def test_jpeg_progressive_refinement_bit_alignment():
-    """Adversarial AC-refinement shape: a long zero run (>16) with an
-    already-nonzero (history) coefficient embedded PAST the first
-    ZRL window, followed by a newly-significant coefficient — the case
-    where correction-bit bookkeeping between ZRL emission and the
-    decoder's walk must agree bit-for-bit. Built by planting exact
-    coefficients through a high-frequency pattern at coarse quant."""
-    rng = np.random.RandomState(23)
-    # many blocks with sparse large/small coefficients at varied
-    # positions: quant=8 makes most AC zero, values 1 (newly
-    # significant at Al=0), 2-3 (history with correction bits), and
-    # sign mixes — sweeping the run/history interleavings
-    px = (128 + 60 * np.sin(np.outer(np.arange(48), np.arange(41)) / 3.0)
-          + rng.randint(-20, 20, (48, 41))).clip(0, 255).astype(
-        np.uint8)[:, :, None]
-    seq = decode_image_bytes(encode_jpeg(px, quant=8))[1]
-    prog = decode_image_bytes(
-        encode_jpeg_progressive(px, quant=8))[1]
-    assert np.array_equal(prog, seq)
-
-
-def test_jpeg_honest_boundaries():
-    """Non-Huffman-DCT SOFs stay NotImplementedError naming the
-    remediation; malformed bytes fail loudly as ImageDecodeError —
-    including a baseline scan header mislabeled as progressive (a
-    sequential Ss..Se band is not a valid progressive DC scan)."""
-    good = encode_jpeg(_rng_pixels(8, 8, 3))
-    sof_at = good.index(b"\xff\xc0")
-    mislabeled = bytearray(good)
-    mislabeled[sof_at + 1] = 0xC2
-    with pytest.raises(ImageDecodeError, match="Se=0"):
-        decode_image_bytes(bytes(mislabeled))
-    # a baseline file mislabeled SOF3: its scan header's Ss=0 is not a
-    # valid lossless predictor — fail-loud, not a garbage image
-    mislabeled_ll = bytearray(good)
-    mislabeled_ll[sof_at + 1] = 0xC3
-    with pytest.raises(ImageDecodeError, match="predictor 0"):
-        decode_image_bytes(bytes(mislabeled_ll))
-    # genuinely-unsupported processes still name the remediation
-    differential = bytearray(good)
-    differential[sof_at + 1] = 0xC7
-    with pytest.raises(NotImplementedError, match="external codec"):
-        decode_image_bytes(bytes(differential))
-    with pytest.raises(ImageDecodeError):
-        decode_image_bytes(good[:len(good) // 2])  # truncated entropy
-    with pytest.raises(ImageDecodeError, match="SOS"):
-        decode_image_bytes(b"\xff\xd8\xff\xd9")  # no scan at all
-
-
-def test_png_palette_and_trns_exact():
-    """Color type 3: PLTE-indexed pixels round-trip exactly; tRNS
-    entries become an alpha channel (255 for entries past the chunk)."""
-    rng = np.random.RandomState(31)
-    palette = rng.randint(0, 256, size=(11, 3)).astype(np.uint8)
-    idx = rng.randint(0, 11, size=(9, 14)).astype(np.uint8)
-    fmt, got = decode_image_bytes(encode_png_palette(idx, palette))
-    assert fmt == "png"
-    assert np.array_equal(got, palette[idx])
-    trns = bytes([255, 0, 128])  # entries 0..2; 3..10 default opaque
-    fmt, got = decode_image_bytes(encode_png_palette(idx, palette, trns))
-    assert got.shape == (9, 14, 4)
-    assert np.array_equal(got[:, :, :3], palette[idx])
-    expect_a = np.full(11, 255, dtype=np.uint8)
-    expect_a[:3] = [255, 0, 128]
-    assert np.array_equal(got[:, :, 3], expect_a[idx])
-    # index beyond the palette fails loudly
-    bad_idx = idx.copy()
-    bad_idx[0, 0] = 99
-    with pytest.raises(ImageDecodeError, match="PLTE"):
-        decode_image_bytes(encode_png_palette(bad_idx, palette))
-
-
-def test_png_adam7_interlace_exact():
-    """Adam7: seven independently filtered sub-images reassemble to the
-    original, across color types, filter mixes, and dimensions that
-    leave some passes empty."""
-    for c in (1, 2, 3, 4):
-        px = _rng_pixels(13, 10, c, seed=40 + c)
-        for filters in ([0], [0, 1, 2, 3, 4]):
-            fmt, got = decode_image_bytes(encode_png_adam7(px, filters))
-            assert fmt == "png"
-            assert np.array_equal(got, px), (c, filters)
-    # tiny image: several passes are empty
-    tiny = _rng_pixels(3, 2, 3, seed=50)
-    assert np.array_equal(
-        decode_image_bytes(encode_png_adam7(tiny))[1], tiny)
-
-
 def test_decoders_fail_loud():
     px = _rng_pixels(2, 2, 3)
-    with pytest.raises(ImageDecodeError):
-        decode_image_bytes(b"\xff\xd8\xff\xe0fakejpeg")  # mangled JPEG
-    with pytest.raises(ImageDecodeError, match="raster"):
-        decode_image_bytes(encode_ppm(px)[:-1])  # truncated raster
     with pytest.raises(ImageDecodeError, match="compression"):
         bad = bytearray(encode_bmp(px))
         struct.pack_into("<I", bad, 30, 1)  # BI_RLE8
         decode_image_bytes(bytes(bad))
-    with pytest.raises(ImageDecodeError, match="bit depth"):
-        good = encode_png(px)
-        ihdr_at = good.index(b"IHDR")
-        bad = bytearray(good)
-        bad[ihdr_at + 12] = 16  # depth byte inside IHDR
-        decode_image_bytes(bytes(bad))
     assert sniff_format(b"GIF89a....") == "gif"
+    # every format but BMP refuses instead of decoding garbage
+    for magic in (b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff\xe0", b"GIF89a",
+                  b"P6\n2 2\n255\n"):
+        with pytest.raises(NotImplementedError, match="BMP"):
+            decode_image_bytes(magic + bytes(12))
 
 
 # --- the Spark path: same mapInPandas shape mm_decode_geometry grades ----
@@ -956,176 +75,20 @@ def test_decoders_fail_loud():
 def test_decode_image_through_spark(spark):
     from sql_based_etl_spark.operators.multimodal import decode_image
 
-    jpeg_px = np.full((9, 6, 1), 130, dtype=np.uint8)  # flat = exact
-    imgs = {
-        1: ("ppm", _rng_pixels(4, 4, 3, seed=1)),
-        2: ("bmp", _rng_pixels(3, 5, 3, seed=2)),
-        3: ("png", _rng_pixels(5, 3, 4, seed=3)),
-        4: ("pgm", _rng_pixels(2, 8, 1, seed=4)),
-        5: ("jpeg", jpeg_px),
-    }
-    enc = {1: encode_ppm(imgs[1][1]), 2: encode_bmp(imgs[2][1]),
-           3: encode_png(imgs[3][1], [0, 1, 2, 3, 4]),
-           4: encode_ppm(imgs[4][1]),
-           5: encode_jpeg(jpeg_px)}
+    imgs = {2: ("bmp", _rng_pixels(3, 5, 3, seed=2))}
+    enc = {2: encode_bmp(imgs[2][1])}
     df = spark.createDataFrame(
         [(i, bytearray(b)) for i, b in enc.items()],
         "doc_id long, payload binary",
     ).repartition(2)
     got = {r.doc_id: r for r in decode_image(df).collect()}
-    assert len(got) == 5
+    assert len(got) == 1
     for i, (fmt, px) in imgs.items():
         r = got[i]
         h, w, c = px.shape
         assert (r.format, r.width, r.height, r.n_channels) == (fmt, w, h, c)
         assert r.pixel_md5 == hashlib.md5(px.tobytes()).hexdigest()
         assert r.mean_pixel == round(float(px.mean()), 6)
-
-
-# --- test-side LOSSLESS JPEG encoder (T.81 process 14 applied forward) ---
-
-
-def encode_jpeg_lossless(px: np.ndarray, predictor: int = 4, pt: int = 0,
-                         prec: int = 8, restart_interval: int = 0) -> bytes:
-    """SOF3 lossless JPEG: per-sample predictive differences, Huffman
-    category + extend bits, modulo-2^16 arithmetic — mirrors the spec's
-    prediction rules (first sample / first row / first column /
-    restart-reset) independently of the decoder."""
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, ncomp = px.shape
-    v = (px.astype(np.int64) >> pt)
-
-    bits = [0] * 16
-    bits[4] = 17                       # all 17 categories at length 5
-    vals = bytes(range(17))
-    codes = _jpeg_codes(bits, vals)
-
-    bw = _JpegBitWriter()
-    chunks = []
-    default = 1 << (prec - pt - 1)
-    n_rst = 0
-    since = 0
-    reset = [True] * ncomp
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and since == restart_interval:
-                bw.align()
-                chunks.append(bytes(bw.out))
-                chunks.append(bytes([0xFF, 0xD0 + (n_rst % 8)]))
-                bw = _JpegBitWriter()
-                n_rst += 1
-                since = 0
-                reset = [True] * ncomp
-            for ci in range(ncomp):
-                if reset[ci]:
-                    pred = default
-                    reset[ci] = False
-                elif y == 0:
-                    pred = v[0, x - 1, ci]
-                elif x == 0:
-                    pred = v[y - 1, 0, ci]
-                else:
-                    ra, rb, rc = (v[y, x - 1, ci], v[y - 1, x, ci],
-                                  v[y - 1, x - 1, ci])
-                    pred = {1: ra, 2: rb, 3: rc, 4: ra + rb - rc,
-                            5: ra + ((rb - rc) >> 1),
-                            6: rb + ((ra - rc) >> 1),
-                            7: (ra + rb) >> 1}[predictor]
-                d = ((int(v[y, x, ci]) - int(pred) + 32768) & 0xFFFF) - 32768
-                if d == -32768:
-                    t = 16             # special category, no extend bits
-                    length, code = codes[t]
-                    bw.put(code, length)
-                else:
-                    t = abs(d).bit_length()
-                    length, code = codes[t]
-                    bw.put(code, length)
-                    if t:
-                        bw.put(d if d >= 0 else d + (1 << t) - 1, t)
-            since += 1
-    bw.align()
-    chunks.append(bytes(bw.out))
-    entropy = b"".join(chunks)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xC4, bytes([0x00]) + bytes(bits) + vals)
-    sof = struct.pack(">BHHB", prec, h, w, ncomp)
-    for i in range(ncomp):
-        sof += bytes([i + 1, 0x11, 0])
-    out += seg(0xC3, sof)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([ncomp])
-    for i in range(ncomp):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    out += seg(0xDA, sos)
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-@pytest.mark.parametrize("predictor", [1, 2, 3, 4, 5, 6, 7])
-def test_jpeg_lossless_round_trip_every_predictor(predictor):
-    px = _rng_pixels(9, 13, 3, seed=predictor)
-    fmt, out = decode_image_bytes(encode_jpeg_lossless(px, predictor))
-    assert fmt == "jpeg"
-    assert out.dtype == np.uint8
-    assert np.array_equal(out, px)
-
-
-def test_jpeg_lossless_gray_16bit_and_point_transform():
-    rng = np.random.default_rng(20)
-    deep = rng.integers(0, 1 << 14, size=(7, 11), dtype=np.uint16)
-    _, out = decode_image_bytes(encode_jpeg_lossless(deep, prec=14))
-    assert out.dtype == np.uint16
-    assert np.array_equal(out, deep)
-    # point transform: low bits dropped at encode, restored as zeros
-    px = _rng_pixels(6, 6, 1, seed=3)[:, :, 0]
-    _, out = decode_image_bytes(encode_jpeg_lossless(px, pt=2))
-    assert np.array_equal(out, (px >> 2) << 2)
-
-
-def test_jpeg_lossless_restart_interval():
-    px = _rng_pixels(8, 8, 1, seed=5)[:, :, 0]
-    data = encode_jpeg_lossless(px, predictor=1, restart_interval=16)
-    assert b"\xff\xd0" in data or b"\xff\xd1" in data
-    _, out = decode_image_bytes(data)
-    assert np.array_equal(out, px)
-
-
-def test_jpeg_12bit_grayscale_sequential():
-    """12-bit DCT JPEG (the DICOM shape): quant=1 makes the transform
-    near-lossless, so decode must land within DCT rounding of the
-    source at 12-bit scale — and the output dtype widens to uint16."""
-    rng = np.random.default_rng(12)
-    base = rng.integers(0, 1 << 12, size=(1, 16, 1)).astype(np.float64)
-    px = np.repeat(base, 16, axis=0)        # smooth columns: tiny residuals
-    data = encode_jpeg(px.astype(np.int64), prec=12)
-    fmt, out = decode_image_bytes(data)
-    assert fmt == "jpeg" and out.dtype == np.uint16
-    assert out.shape == (16, 16, 1)
-    assert np.max(np.abs(out.astype(np.int64) - px.astype(np.int64))) <= 2
-
-
-def test_jpeg_12bit_color_sequential():
-    """12-bit COLOR DCT JPEG: the JFIF YCbCr transform generalized to
-    the 2^11 chroma center — smooth 12-bit RGB must round-trip within
-    DCT+colorspace rounding at 12-bit scale, dtype uint16, and the
-    decoded values must actually USE the extended range."""
-    rng = np.random.default_rng(7)
-    base = rng.integers(256, 1 << 12, size=(1, 16, 3)).astype(np.float64)
-    px = np.repeat(base, 16, axis=0)        # smooth columns
-    data = encode_jpeg(px.astype(np.int64), prec=12)
-    fmt, out = decode_image_bytes(data)
-    assert fmt == "jpeg" and out.dtype == np.uint16
-    assert out.shape == (16, 16, 3)
-    assert np.max(np.abs(out.astype(np.int64) - px.astype(np.int64))) <= 8
-    assert int(out.max()) > 255             # extended range exercised
 
 
 def test_bmp_encoder_round_trip_and_padding():
@@ -1138,34 +101,3 @@ def test_bmp_encoder_round_trip_and_padding():
         fmt, out = decode_image_bytes(encode_bmp_bytes(px))
         assert fmt == "bmp"
         assert np.array_equal(out, px), (w, h)
-
-
-def test_jpeg_progressive_12bit_gray_and_color():
-    """12-bit PROGRESSIVE JPEG (round-10 codec tail): the spectral-
-    selection + successive-approximation scan walk is precision-
-    agnostic; the finalize tail levels/clamps at 2^prec. A smooth
-    12-bit source must decode bit-identically to the SAME coefficients'
-    sequential encoding, and the dtype widens to uint16."""
-    y, x = np.mgrid[0:24, 0:17]
-    gray = ((y * 97 + x * 53) % 4096).astype(np.int64)[:, :, None]
-    # smooth gradient keeps AC categories inside the standard tables
-    smooth = (y * 64 + x * 32)[:, :, None].astype(np.int64)
-
-    seq = decode_image_bytes(encode_jpeg(smooth, prec=12))[1]
-    prog = decode_image_bytes(
-        encode_jpeg_progressive(smooth, prec=12))[1]
-    assert prog.dtype == np.uint16
-    assert np.array_equal(prog, seq)
-
-    color = np.stack([
-        np.clip(y * 64 + x * 16, 0, 4095),
-        np.clip(3000 - y * 32, 0, 4095),
-        np.clip(x * 48 + 500, 0, 4095),
-    ], axis=-1).astype(np.int64)
-    seq_c = decode_image_bytes(encode_jpeg(color, prec=12))[1]
-    prog_c = decode_image_bytes(
-        encode_jpeg_progressive(color, prec=12))[1]
-    assert prog_c.dtype == np.uint16
-    assert np.array_equal(prog_c, seq_c)
-    # and the decode is actually at 12-bit scale, not clamped to 255
-    assert int(prog_c.max()) > 255

@@ -1773,40 +1773,22 @@ def test_stream_materialized_aggregate_restart_from_checkpoint(spark, tmp_path):
     assert got == {("a", 4_500_000, 2), ("b", 2_000_000, 1)}
 
 
-def test_image_dhash_gray_alpha_png(spark):
-    """image_dhash on a 2-channel gray+alpha PNG (color type 4):
-    luminance is channel 0 — the alpha plane must be ignored, and the
-    hash must equal the same image encoded as plain grayscale
-    (round-10 ADVICE: `px[:, :, :3]` on a 2-channel array crashed)."""
-    import struct
-    import zlib
-
+def test_image_dhash_ignores_bmp_alpha(spark):
+    """image_dhash on a 32-bit BMP: luminance comes from the RGB
+    channels — the alpha plane must be ignored, and the hash must equal
+    the same image encoded as 24-bit RGB."""
     import numpy as np
 
     from sql_based_etl_spark.operators.multimodal import image_dhash
-
-    def png(px: np.ndarray) -> bytes:
-        h, w, c = px.shape
-        color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-        raw = b"".join(
-            b"\x00" + px[r].astype(np.uint8).tobytes() for r in range(h))
-
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + ctype + data
-                    + struct.pack(">I", zlib.crc32(ctype + data)))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw))
-                + chunk(b"IEND", b""))
+    from tests.test_imagecodecs import encode_bmp
 
     rng = np.random.RandomState(7)
-    gray = rng.randint(0, 256, size=(10, 12, 1), dtype=np.uint8)
+    rgb = rng.randint(0, 256, size=(10, 12, 3), dtype=np.uint8)
     alpha = rng.randint(0, 256, size=(10, 12, 1), dtype=np.uint8)
-    ga = np.concatenate([gray, alpha], axis=2)
+    rgba = np.concatenate([rgb, alpha], axis=2)
 
     df = spark.createDataFrame(
-        [(1, bytearray(png(ga))), (2, bytearray(png(gray)))],
+        [(1, bytearray(encode_bmp(rgba))), (2, bytearray(encode_bmp(rgb)))],
         "doc_id long, payload binary")
     got = {r.doc_id: r.dhash for r in image_dhash(df).collect()}
     assert len(got[1]) == 64 and set(got[1]) <= {"0", "1"}

@@ -34,7 +34,7 @@ AUDIT = [
     "profile_key_skew", "sketch_kmv_source_overlap",
     "sketch_hist_event_quantiles", "split_leakage_safe",
     "sim_label_outliers", "sample_top_quality_per_lang",
-    "q_scd2_point_in_time", "mm_decode_audio",
+    "q_scd2_point_in_time",
 ]
 
 
@@ -92,10 +92,9 @@ def main() -> None:
     lines += [
         "",
         "Audit notes:",
-        "- Python evaluation appears ONLY in the multimodal codec lane —",
-        "  `mm_decode_geometry` / `mm_decode_audio` (Arrow-batched",
-        "  `mapInPandas` decodes) — every dedup, text, similarity, and",
-        "  relational plan is JVM-side.",
+        "- Python evaluation appears ONLY in the multimodal decode lane —",
+        "  `mm_decode_geometry` (the Arrow-batched `mapInPandas` decode) —",
+        "  every dedup, text, similarity, and relational plan is JVM-side.",
         "- codegen spans show as 0 for AQE-wrapped plans: Spark annotates",
         "  WholeStageCodegen ids only once AQE materializes stages; the",
         "  no-CodegenFallback/no-lambda guards in tests/test_plans.py are",
