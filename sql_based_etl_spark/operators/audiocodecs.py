@@ -1,15 +1,14 @@
 """Pure-stdlib WAV (RIFF/PCM) codec for the multimodal pipeline.
 
-Companion to :mod:`.imagecodecs` — the audio half of the codec gap.
 WAV is decodable from its public specification (the RIFF container
 layout and the WAVEFORMAT ``fmt `` chunk) with nothing beyond
 ``struct`` + numpy: integer PCM at 8 (unsigned), 16, 24 and 32 bits,
 IEEE float32, IMA/DVI ADPCM (format tag 0x11 — the public
 step-table state machine) and Microsoft ADPCM (tag 0x02 — the
 published two-tap predictor), mono or multichannel. Codecs that are
-genuinely external (MP3-in-WAV, proprietary ADPCM variants, FLAC/OGG
-containers) stay honest ``NotImplementedError`` integration points,
-exactly like progressive JPEG on the image side.
+genuinely external (MP3-in-WAV, proprietary ADPCM variants, FLAC/OGG/MP3
+containers) stay honest ``NotImplementedError`` integration points;
+:mod:`.audiocontainers` reads MP3 and OGG framing metadata only.
 
 These functions run INSIDE the Arrow ``mapInPandas`` batch path
 (multimodal.decode_audio): bytes in, (rate/channels/frames, integer
@@ -51,20 +50,15 @@ def sniff_audio(data: bytes) -> str:
 
 def decode_audio_bytes(data: bytes) -> tuple[int, np.ndarray]:
     """Container-routing decode: WAV (PCM / IMA+MS ADPCM) through
-    :func:`decode_wav_bytes`, FLAC through the pure-stdlib lossless
-    codec (``flaccodec.decode_flac_bytes`` — full subframe/Rice/stereo
-    surface, CRC + MD5 verified). Remaining containers (ogg, mp3) stay
-    the external-codec integration point."""
+    :func:`decode_wav_bytes`. Every other container (flac, ogg, mp3)
+    stays the external-codec integration point."""
     data = bytes(data)
     fmt = sniff_audio(data)
     if fmt == "wav":
         return decode_wav_bytes(data)
-    if fmt == "flac":
-        from sql_based_etl_spark.operators.flaccodec import decode_flac_bytes
-        return decode_flac_bytes(data)
     raise NotImplementedError(
         f"audio container {fmt!r} needs an external codec "
-        "(RIFF/WAVE and FLAC decode stdlib-side)"
+        "(only RIFF/WAVE decodes stdlib-side)"
     )
 
 
@@ -204,8 +198,7 @@ def encode_wav_bytes(samples: np.ndarray, sample_rate: int) -> bytes:
 # 4-byte per-channel header (initial int16 predictor, step index,
 # reserved byte) whose predictor IS the block's first output sample,
 # then nibble words interleaved per channel in 4-byte groups. Decoding
-# is per-nibble Python (correctness-grade, like the JPEG entropy
-# loop); everything around it stays numpy.
+# is per-nibble Python (correctness-grade); everything around it stays numpy.
 
 _IMA_STEPS = np.array([
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,

@@ -6,7 +6,11 @@ stages over ``mapInPandas``.
 (operators/imagecodecs.py), the format ``synth_bmp`` and
 ``synth_bmp_variants`` write, runs through the same Arrow batch path
 as everything else; any other image format raises
-``NotImplementedError``. ``decode_features`` keeps the deterministic
+``NotImplementedError``. ``decode_audio`` decodes RIFF/WAVE integer
+PCM (8/16/24/32-bit), IEEE float32, IMA and MS ADPCM
+(operators/audiocodecs.py), with ``synth_wav`` as its deterministic
+payload source; compressed audio raises ``NotImplementedError``.
+``decode_features`` keeps the deterministic
 byte-level feature stub (works on ANY payload, image or not), and
 ``sample_frames_stub`` / ``resize_stub`` keep the Spark plumbing of
 frame sampling and resizing with stub kernels.
@@ -144,6 +148,108 @@ def decode_image(df: DataFrame, id_col: str = "doc_id",
             })
 
     return df.select(id_col, payload_col).mapInPandas(_decode, IMAGE_SCHEMA)
+
+
+AUDIO_SCHEMA = (
+    "doc_id bigint, sample_rate int, n_channels int, n_frames int, "
+    "duration_us bigint, peak int, sum_abs bigint, sample_md5 string"
+)
+
+
+def decode_audio(df: DataFrame, id_col: str = "doc_id",
+                 payload_col: str = "payload") -> DataFrame:
+    """REAL audio decode through the same Arrow ``mapInPandas`` path as
+    :func:`decode_image` — the pure-stdlib codecs
+    (operators/audiocodecs.py): RIFF/WAVE integer PCM 8/16/24/32-bit,
+    IMA/MS ADPCM and IEEE float32, mono or multichannel. Emits container facts
+    (rate/channels/frames), exact integer statistics (``duration_us``
+    in integer microseconds, ``peak`` = max |sample|, ``sum_abs`` =
+    Σ|sample| in int64 — both engine-reproducible, unlike float RMS)
+    and an md5 of the raw sample bytes — samples never leave the
+    executor. Fail-loud: malformed WAV raises ``AudioDecodeError``;
+    compressed codecs raise ``NotImplementedError``."""
+    import hashlib
+
+    import numpy as np
+
+    from sql_based_etl_spark.operators.audiocodecs import (
+        AudioDecodeError,
+        decode_audio_bytes,
+    )
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {k: [] for k in ("doc_id", "sample_rate", "n_channels",
+                                   "n_frames", "duration_us", "peak",
+                                   "sum_abs", "sample_md5")}
+            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+                rate, s = decode_audio_bytes(bytes(payload))
+                if not np.issubdtype(s.dtype, np.integer):
+                    # float32 WAVs decode fine, but these columns are
+                    # EXACT integer statistics — truncating floats
+                    # would be silently-wrong peak/sum_abs, the one
+                    # thing this stack never does
+                    raise AudioDecodeError(
+                        "decode_audio computes integer sample statistics; "
+                        "IEEE-float WAV needs a float feature stage "
+                        "(decode_wav_bytes returns its samples directly)"
+                    )
+                frames, n_ch = s.shape
+                a = np.abs(s.astype(np.int64))
+                out["doc_id"].append(doc_id)
+                out["sample_rate"].append(rate)
+                out["n_channels"].append(n_ch)
+                out["n_frames"].append(frames)
+                out["duration_us"].append(frames * 1_000_000 // rate)
+                out["peak"].append(int(a.max(initial=0)))
+                out["sum_abs"].append(int(a.sum()))
+                out["sample_md5"].append(
+                    hashlib.md5(np.ascontiguousarray(s).tobytes()).hexdigest()
+                )
+            yield pd.DataFrame({
+                "doc_id": np.asarray(out["doc_id"], dtype=np.int64),
+                "sample_rate": np.asarray(out["sample_rate"], dtype=np.int32),
+                "n_channels": np.asarray(out["n_channels"], dtype=np.int32),
+                "n_frames": np.asarray(out["n_frames"], dtype=np.int32),
+                "duration_us": np.asarray(out["duration_us"], dtype=np.int64),
+                "peak": np.asarray(out["peak"], dtype=np.int32),
+                "sum_abs": np.asarray(out["sum_abs"], dtype=np.int64),
+                "sample_md5": out["sample_md5"],
+            })
+
+    return df.select(id_col, payload_col).mapInPandas(_decode, AUDIO_SCHEMA)
+
+
+def synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Deterministic WAV synthesis from ``doc_id`` — the audio analogue
+    of :func:`attach_binary`'s text payloads: every id yields a small
+    PCM16 file whose rate/channels/length/samples are pure integer
+    functions of the id (so the decoded statistics can be reproduced
+    analytically, as ``tests/test_audiocodecs.py`` does).
+    Sample law: channels = 1 + id%2, frames = 64 + id%191,
+    sample[c, i] = ((id*31 + i*17 + c*7) % 2001) - 1000 at 8 kHz."""
+    import numpy as np
+
+    from sql_based_etl_spark.operators.audiocodecs import encode_wav_bytes
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, blobs = [], []
+            for doc_id in pdf[id_col]:
+                d = int(doc_id)
+                n_ch = 1 + d % 2
+                frames = 64 + d % 191
+                i = np.arange(frames, dtype=np.int64)[:, None]
+                c = np.arange(n_ch, dtype=np.int64)[None, :]
+                s = ((d * 31 + i * 17 + c * 7) % 2001) - 1000
+                ids.append(d)
+                blobs.append(encode_wav_bytes(s.astype(np.int16), 8000))
+            yield pd.DataFrame({
+                "doc_id": np.asarray(ids, dtype=np.int64),
+                "payload": blobs,
+            })
+
+    return df.select(id_col).mapInPandas(_synth, "doc_id bigint, payload binary")
 
 
 def synth_bmp(df: DataFrame, id_col: str = "doc_id",
